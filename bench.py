@@ -1,11 +1,25 @@
-"""Per-round benchmark: runs the headline declared queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+"""Benchmark of the declared queries at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]: the repo's one
+measurement loop.
+
+    python bench.py            # every declared query
+    python bench.py q1 q2 ...  # only the named queries
+
+Every query gets RUNS_PER_QUERY timed draws (query call + count()),
+and every draw is recorded.  Both modes print ONE JSON line on stdout.
+The full run prints a compact summary (``queries`` = the 10 slowest
+best draws) and writes the complete artifact
+``bench_results_sf{sf}_c{cpus}.json`` beside this file, holding
+``queries`` (best draw per query) and ``draws`` (every draw).  A subset
+run prints every best and every draw and writes no artifact.
+
+An A/B arm is ``python /path/to/checkout/bench.py q1 q2``: the script
+puts its own checkout first on ``sys.path``.
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
@@ -13,53 +27,44 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# Two back-to-back materializations per query (VERDICT r03 item 2): a
+# single draw conflates plan cost with whichever query first pays a
+# cache / codegen / Python-worker warm-up.  The best draw is the plan's
+# cost; the spread of the draws is its noise band.
+RUNS_PER_QUERY = 2
+HYGIENE_EVERY = 50
+TABLES = ("region", "nation", "customer", "supplier", "part",
+          "orders", "lineitem", "events", "documents", "embeddings")
+WARM_DIR = "/root/testdata/sf0.001"
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from simple_vector_spark.registry import _QUERIES
-    from simple_vector_spark.session import get_spark
 
-    spark = get_spark("bench")
-    # Time in FIXED REGISTRATION order, not the driver-rotation order
-    # (__spark_entry__.queries() reorders every round as recorded names
-    # move to the back).  Round-6 attribution (AUDITS_r07) showed
-    # per-query wall time in a 514-query session depends on position
-    # and neighborhood — the same query at the same HEAD moved 2-4x
-    # between the r5 and r6 rotation orders with zero code change.
-    # Pinning the timing order makes round-over-round per-query deltas
-    # measure CODE, not rotation.
-    qs = dict(_QUERIES)
+def prepare(spark, qs: dict, sf_dir: str) -> None:
+    """Untimed set-up before the first draw."""
+    from simple_vector_spark.sources.loaders import load_table
 
-    # Warm the JVM, parquet reader, and the hot codegen paths (array
-    # distance exprs, window rank, hash agg) with representative queries
-    # at the smallest scale factor, so per-query timings measure the
-    # operators rather than one-time JIT/codegen compilation.
     # Touch every fixture table at the bench sf once so the FIRST
     # measured query of each family isn't charged the cold parquet
     # scan / page-cache miss (with the fixed registration order the
     # same queries would pay it every round, biasing their deltas).
-    from simple_vector_spark.sources.loaders import load_table
-
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
+    for t in TABLES:
         if os.path.exists(os.path.join(sf_dir, f"{t}.parquet")):
             load_table(spark, sf_dir, t).count()
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir):
-        # knn_shard_topk also pre-spawns the Python worker pool for
-        # every later mapInPandas/pandas-UDF query; vocab_top100
-        # pre-compiles the tokenize/explode codegen the text family
-        # shares (~5s on first use in a session)
-        # the rotation fronts driver-unrecorded queries, so the heavy
-        # kernel families they use must be in the warm set too:
-        # cogrouped tile kNN (loo), per-cell graph kernel (navigable),
-        # token-explosion minhash, join+rank covisit
+    # Warm the JVM, parquet reader, and the hot codegen paths (array
+    # distance exprs, window rank, hash agg) at the smallest scale
+    # factor, so draws measure the operators rather than one-time
+    # JIT/codegen compilation.  knn_shard_topk also pre-spawns the
+    # Python worker pool for every later mapInPandas/pandas-UDF query;
+    # vocab_top100 pre-compiles the tokenize/explode codegen the text
+    # family shares (~5s on first use in a session); the rest cover the
+    # heavy kernel families: cogrouped tile kNN (loo), per-cell graph
+    # kernel (navigable), token-explosion minhash, join+rank covisit.
+    if os.path.isdir(WARM_DIR):
         for wq in ("knn_exact_topk", "knn_batch_join", "tpch_q1_pricing",
                    "knn_shard_topk", "vocab_top100", "dedup_simhash_pairs",
                    "embedding_knn_loo_accuracy", "knn_graph_navigable",
                    "dedup_weighted_minhash", "part_covisit_recs"):
             if wq in qs:
-                qs[wq](spark, warm_dir).count()
+                qs[wq](spark, WARM_DIR).count()
     # Index/codebook builds are OFFLINE steps (train once, serve many —
     # the reference ships a *built* index too), so build the session
     # caches for the bench corpus before timing: trained IVF centroids
@@ -71,179 +76,158 @@ def main() -> None:
         if wq in qs:
             qs[wq](spark, sf_dir).count()
 
-    import gc
 
-    # Best-of-2 per query (VERDICT r03 item 2): a single-shot timing
-    # conflates plan cost with whichever query first pays a cache /
-    # codegen / Python-worker warm-up, so rotation-induced reordering
-    # showed up as phantom regressions round-over-round.  Two
-    # back-to-back materializations, record the min — the warm number
-    # is the plan's cost.
-    RUNS_PER_QUERY = 2
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    # Per-cpus artifact name (VERDICT r08 item 3): a driver run at two
-    # core counts previously clobbered one artifact file, losing the
-    # first run's retry detail.  The canonical merged artifact
-    # (bench_results_sf{sf}.json) is still produced by
-    # tools/merge_bench_sessions.py from stashed session passes.
-    out_path = os.path.join(repo_dir, f"bench_results_sf{sf}_c{cpus}.json")
-    # Previous round's committed per-query map, read BEFORE the loop
-    # (the partial flushes below overwrite the file mid-run).  Used only
-    # to pick which queries the end-of-session re-measure pass retries —
-    # recorded values are always measurements from THIS session.  Prefer
-    # the same-cpus artifact; fall back to the canonical merged one.
-    ref: dict[str, float] = {}
-    for ref_path in (out_path, os.path.join(repo_dir, f"bench_results_sf{sf}.json")):
-        try:
-            with open(ref_path) as fh:
-                prev = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if isinstance(prev.get("queries"), dict) and not prev.get("partial"):
-            ref = {
-                k: v for k, v in prev["queries"].items()
-                if isinstance(v, (int, float)) and v > 0
-            }
-            break
-    timings: dict[str, float] = {}
-    items = list(qs.items())
+def draw(spark, fn, sf_dir: str) -> tuple[list[float], int]:
+    """RUNS_PER_QUERY timed draws of one query; returns the draw
+    seconds and the row count."""
+    draws, n = [], 0
+    for _ in range(RUNS_PER_QUERY):
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        n = df.count()  # materialize the whole plan
+        draws.append(round(time.perf_counter() - t0, 4))
+        # drop references to finished plans so the ContextCleaner can
+        # evict localCheckpoint blocks between queries — without this
+        # the checkpointed RDDs of ~20 queries pile up in storage
+        # memory and late queries pay the eviction/GC cost
+        del df
+        gc.collect()
+    return draws, n
+
+
+def hygiene(spark) -> None:
+    """Session hygiene stop (round-8, VERDICT r07 item 4): clear the
+    catalog cache, drop the temp views queries leave behind, and force
+    a JVM GC so broadcast/RDD cleanup backlogs drain BETWEEN timed
+    queries instead of inside them.  A paired same-order replay of
+    positions 300-420 measured a per-query ratio of 0.795 against no
+    stop (AUDITS_r08), at ~0.8 s per stop.  Queries re-register their
+    own views/caches, so this changes no results."""
+    spark.catalog.clearCache()
+    for tbl in spark.catalog.listTables():
+        if tbl.isTemporary:
+            spark.catalog.dropTempView(tbl.name)
+    spark.sparkContext._jvm.System.gc()
+
+
+def run(spark, items: list, sf_dir: str, out_path: str | None = None) -> dict:
+    """Draw every (name, fn) in ``items`` in order; returns
+    {name: [draw seconds, ...]}.  With ``out_path``, partial results
+    are flushed there every 25 queries so a killed run still leaves a
+    usable artifact."""
+    draws: dict[str, list[float]] = {}
     for qi, (name, fn) in enumerate(items):
-        best, n = None, 0
-        for _ in range(RUNS_PER_QUERY):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            n = df.count()  # materialize the whole plan
-            elapsed = time.perf_counter() - t0
-            best = elapsed if best is None else min(best, elapsed)
-            # drop references to finished plans so the ContextCleaner
-            # can evict localCheckpoint blocks between queries —
-            # without this the checkpointed RDDs of ~20 queries pile up
-            # in storage memory and late queries pay the eviction/GC
-            # cost
-            del df
-            gc.collect()
-        timings[name] = round(best, 4)
-        print(f"# {name}: {timings[name]:.3f}s ({n} rows)", file=sys.stderr)
-        # flush partial per-query results periodically so a killed run
-        # still leaves a usable on-disk artifact
-        if (qi + 1) % 25 == 0:
+        draws[name], n = draw(spark, fn, sf_dir)
+        print(f"# {name}: {min(draws[name]):.3f}s ({n} rows)", file=sys.stderr)
+        if out_path and (qi + 1) % 25 == 0:
             with open(out_path, "w") as fh:
                 json.dump(
-                    {"partial": True, "n_queries": len(timings),
-                     "runs_per_query": RUNS_PER_QUERY, "queries": timings},
+                    {"partial": True, "n_queries": len(draws),
+                     "runs_per_query": RUNS_PER_QUERY,
+                     "queries": best_of(draws), "draws": draws},
                     fh, indent=1, sort_keys=True,
                 )
-        # Session hygiene every 50 queries (round-8, VERDICT r07 item
-        # 4, measured with tools/replay_bench_slice.py --hygiene-every
-        # 50): clear the catalog cache, drop the temp views queries
-        # leave behind, and force a JVM GC so broadcast/RDD cleanup
-        # backlogs drain BETWEEN timed queries instead of inside them.
-        # Paired same-order replay of positions 300-420 at this HEAD:
-        # hygiene/control per-query ratio mean 0.795 (AUDITS_r08) at a
-        # cost of ~0.8 s per hygiene stop.  Queries re-register their
-        # own views/caches, so this changes no results — it removes
-        # in-session drag from the measurement, the same class of fix
-        # as round 7's fixed timing order.
-        if (qi + 1) % 50 == 0:
-            spark.catalog.clearCache()
-            for tbl in spark.catalog.listTables():
-                if tbl.isTemporary:
-                    spark.catalog.dropTempView(tbl.name)
-            spark.sparkContext._jvm.System.gc()
+        if (qi + 1) % HYGIENE_EVERY == 0:
+            hygiene(spark)
             # One untimed warm touch of the NEXT query (ADVICE r08):
-            # its first timed run would otherwise pay temp-view
-            # re-registration / cache rebuild after the hygiene stop,
-            # leaving it one clean draw instead of RUNS_PER_QUERY.
+            # its first draw would otherwise pay temp-view
+            # re-registration / cache rebuild after the hygiene stop.
+            # A failure here is left to that query's own timed draw.
             if qi + 1 < len(items):
-                items[qi + 1][1](spark, sf_dir).count()
+                try:
+                    items[qi + 1][1](spark, sf_dir).count()
+                except Exception as e:
+                    print(f"# warm touch {items[qi + 1][0]}: {e!r}", file=sys.stderr)
+    return draws
 
-    # Outlier re-measure pass (round-8): transient machine contention
-    # inflates a contiguous run of queries — the round-7 driver session
-    # had 13 CONSECUTIVE registration positions at 2-5x their
-    # quiet-session times, and a same-HEAD quiet replay of exactly that
-    # order slice matched the quiet values (AUDITS_r08) — so re-time,
-    # at the END of the session, any query whose best exceeds 1.6x its
-    # previous-round committed value.  A genuine plan regression
-    # reproduces minutes later; a contention transient does not.  The
-    # recorded value stays the min over THIS session's real runs of the
-    # same plan (same best_of_n statistic, more draws for suspects).
-    # On a quiet session nothing triggers and the pass costs ~0.
-    RETRY_FACTOR, RETRY_MIN_SEC, RETRY_CAP = 1.6, 0.3, 80
-    suspects = [
-        n for n, t in timings.items()
-        if n in ref and t > RETRY_MIN_SEC and t > RETRY_FACTOR * ref[n]
-    ][:RETRY_CAP]
-    retried: dict[str, dict[str, float]] = {}
-    for name in suspects:
-        first_pass = timings[name]
-        for _ in range(RUNS_PER_QUERY):
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            df.count()
-            elapsed = time.perf_counter() - t0
-            timings[name] = min(timings[name], round(elapsed, 4))
-            del df
-            gc.collect()
-        retried[name] = {"first_pass": first_pass, "final": timings[name]}
-        print(
-            f"# retry {name}: {first_pass:.3f}s -> {timings[name]:.3f}s"
-            f" (ref {ref[name]:.3f}s)", file=sys.stderr,
-        )
 
-    total = round(sum(timings.values()), 4)
-    ordered = sorted(timings.values())
-    median = round(ordered[len(ordered) // 2], 4) if ordered else 0.0
-    slowest = dict(
-        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
-    )
-    # stdout stays ONE COMPACT line (the driver keeps only a short
-    # stdout tail — a full 500+-query dict gets truncated and parses as
-    # null, BENCH_r01/r02).  "queries" here = the 10 slowest; the
-    # complete per-query map is in the on-disk artifact below.
-    # retry_saved_sec (VERDICT r08 item 3): how much the asymmetric
-    # end-of-session re-measure pass moved the total, visible to the
-    # driver from the stdout payload alone.
-    retry_saved = round(
-        sum(r["first_pass"] - r["final"] for r in retried.values()), 4
-    )
-    payload = {
+def best_of(draws: dict) -> dict:
+    return {name: min(d) for name, d in draws.items()}
+
+
+def sf_label(sf_dir: str) -> str:
+    return sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+
+
+def artifact_name(sf_dir: str, cpus: int) -> str:
+    """Per-cpus name (VERDICT r08 item 3), so runs at two core counts
+    do not clobber one file; tools/merge_bench_sessions.py writes the
+    canonical merged bench_results_sf{sf}.json."""
+    return f"bench_results_sf{sf_label(sf_dir)}_c{cpus}.json"
+
+
+def summary(spark, draws: dict, sf_dir: str, cpus: int) -> dict:
+    """The stdout payload.  It stays ONE COMPACT line (a reader that
+    keeps only a short stdout tail truncated a full 500+-query dict,
+    which then parsed as null, BENCH_r01/r02), so ``queries`` holds
+    the 10 slowest best draws."""
+    best = best_of(draws)
+    ordered = sorted(best.values())
+    sf = sf_label(sf_dir)
+    return {
         "metric": "declared_queries_total_wall",
-        "value": total,
+        "value": round(sum(ordered), 4),
         "unit": "sec",
-        "queries": slowest,
-        "n_queries": len(timings),
-        "median_sec": median,
+        "queries": dict(sorted(best.items(), key=lambda kv: kv[1], reverse=True)[:10]),
+        "n_queries": len(best),
+        "median_sec": ordered[len(ordered) // 2] if ordered else 0.0,
         "runs_per_query": RUNS_PER_QUERY,
-        "n_retried": len(retried),
-        "retry_saved_sec": retry_saved,
-        # cpus + defaultParallelism in the payload (VERDICT r08 item 2):
-        # proof that $SPARK_GRAFT_CPUS reaches the session.  At sf0.1
-        # per-query times are overhead-bound (median ~0.5 s: plan
-        # analysis, stage launch, 2-run materialization), so totals
-        # barely scale with cores — see SCALING.md "Core-count scaling".
-        "cpus": int(cpus),
+        # cpus + defaultParallelism (VERDICT r08 item 2): proof that
+        # $SPARK_GRAFT_CPUS reaches the session.  At sf0.1 per-query
+        # times are overhead-bound, so totals barely scale with cores —
+        # see SCALING.md "Core-count scaling".
+        "cpus": cpus,
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "timing": "best_of_n",
-        "full_results": f"bench_results_sf{sf}_c{cpus}.json",
+        "full_results": artifact_name(sf_dir, cpus),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
 
-    # The driver's stdout capture keeps only a short tail, which truncated
-    # the 176-query line in round 1 (BENCH_r01.json "parsed": null).  Write
-    # the complete artifact to disk as well so per-query timings survive
-    # independent of stdout capture.
+
+def main(names: list[str]) -> None:
+    from simple_vector_spark.registry import _QUERIES
+
+    unknown = [n for n in names if n not in _QUERIES]
+    if unknown:
+        raise SystemExit(f"bench.py: unknown query names: {', '.join(unknown)}")
+
+    from simple_vector_spark.session import get_spark, spark_cpus
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark("bench")
+    cpus = spark_cpus()
+    # Draw in FIXED REGISTRATION order, not the rotation order of
+    # __spark_entry__.queries(), which changes every round.  Round-6
+    # attribution (AUDITS_r07) showed per-query wall time in a
+    # 514-query session depends on position and neighborhood — the
+    # same query at the same HEAD moved 2-4x between two rotation
+    # orders with zero code change.
+    qs = dict(_QUERIES)
+    prepare(spark, qs, sf_dir)
+
+    if names:
+        draws = run(spark, [(n, qs[n]) for n in names], sf_dir)
+        payload = summary(spark, draws, sf_dir, cpus)
+        del payload["full_results"]  # a subset run writes no artifact
+        print(json.dumps({**payload, "queries": best_of(draws), "draws": draws},
+                         separators=(",", ":")))
+        return
+
+    out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                            artifact_name(sf_dir, cpus))
+    draws = run(spark, list(qs.items()), sf_dir, out_path)
+    payload = summary(spark, draws, sf_dir, cpus)
+    # The complete artifact goes to disk as well, so per-query timings
+    # survive independent of stdout capture.
     with open(out_path, "w") as fh:
         json.dump(
             {
                 **payload,
-                "queries": timings,  # complete per-query map on disk
-                "retried": retried,  # outlier re-measure pass detail
+                "queries": best_of(draws),
+                "draws": draws,
                 "sf_dir": sf_dir,
                 "spark_version": spark.version,
                 "wall_clock_unix": round(time.time(), 1),
-                "n_queries": len(timings),
             },
             fh,
             indent=1,
@@ -251,9 +235,8 @@ def main() -> None:
         )
         fh.write("\n")
     print(f"# wrote {out_path}", file=sys.stderr)
-
     print(json.dumps(payload, separators=(",", ":")))
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

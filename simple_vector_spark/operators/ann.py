@@ -155,7 +155,8 @@ def cells_arrow(
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     ids = [cid for cid, _ in centroids]
-    assert ids == sorted(ids), "cells_arrow needs ascending centroid ids"
+    if ids != sorted(ids):
+        raise ValueError("cells_arrow needs ascending centroid ids")
     cmat = [[float(x) for x in cv] for _, cv in centroids]
     id_arr = list(ids)
 
@@ -2217,6 +2218,10 @@ def graph_index_upsert_audit(
     repair itself touches affected cells only.  Output: one row with
     before/after edge counts, dropped/added counts, affected cells,
     batch size, and the out-degree cap check."""
+    if base_cells is not None and set(base_cells.columns) != {id_col, "cell"}:
+        raise ValueError(
+            f"base_cells must be ({id_col}, cell), got {base_cells.columns}"
+        )
     spark = emb.sparkSession
     if edges_before is None:
         edges_before = knn_graph_navigable(
@@ -2257,13 +2262,11 @@ def graph_index_upsert_audit(
     # (id_col, cell) table produced by graph_cell_assignments over THIS
     # corpus with THESE cents/assign — a table built with a different
     # centroid set or assign depth would silently corrupt the audit.
-    # Guard the cheap-to-check half in-plan: every stored cell id must
-    # be in the centroid domain (raise_error never fires on valid
-    # state, so the audited result is unchanged).
+    # Its columns are checked on entry; its cell ids are checked
+    # in-plan: every stored cell id must be in the centroid domain
+    # (raise_error never fires on valid state, so the audited result
+    # is unchanged).
     if base_cells is not None:
-        assert set(base_cells.columns) == {id_col, "cell"}, (
-            f"base_cells must be ({id_col}, cell), got {base_cells.columns}"
-        )
         cent_dom = [int(cid) for cid, _ in cents]
         base_cells = base_cells.select(
             id_col,

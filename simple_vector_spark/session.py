@@ -14,13 +14,30 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the ``simple_vector_spark`` package
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def spark_cpus() -> int:
+    """Core count from ``$SPARK_GRAFT_CPUS`` (default 32); raises
+    ``ValueError`` naming the variable unless it is a positive
+    integer."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if not (raw.isascii() and raw.isdigit() and int(raw) > 0):
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return int(raw)
+
 
 def get_spark(app_name: str = "simple-vector-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = spark_cpus()
     master = f"local[{cpus}]"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
+        # Python workers import the package by name (UDF kernels,
+        # the WAL DataSource), so they need it on their path whatever
+        # directory the application starts in.
+        .config("spark.executorEnv.PYTHONPATH", _PKG_PARENT)
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

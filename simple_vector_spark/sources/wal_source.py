@@ -45,6 +45,40 @@ def write_wal_segment(path: str, records) -> int:
     return n
 
 
+def _read_segment(path: str):
+    """Yield ``(log_id, version, op, doc)`` for every record of one
+    segment file.
+
+    Torn-tail policy: a segment that ends exactly at a record boundary
+    is valid, and reads as the records before the cut.  A record cut
+    anywhere inside itself (short header, short payload), or one whose
+    payload does not parse (fewer than 4 ``|`` fields, non-integer ids,
+    bad UTF-8), raises ``ValueError`` naming the segment path and the
+    byte offset where the record starts.  A segment is therefore only
+    readable once its writer has finished it; writers that append in
+    place must publish a segment under its ``.wal`` name when it is
+    complete."""
+    with open(path, "rb") as fh:
+        offset = 0
+        while hdr := fh.read(_LEN.size):
+            try:
+                if len(hdr) < _LEN.size:
+                    raise ValueError(f"short header ({len(hdr)} bytes)")
+                (n,) = _LEN.unpack(hdr)
+                payload = fh.read(n)
+                if len(payload) < n:
+                    raise ValueError(f"short payload ({len(payload)} of {n} bytes)")
+                line = payload.decode("utf-8").rstrip("\n")
+                log_id, version, op, doc = line.split("|", 3)
+                record = (int(log_id), int(version), op, doc)
+            except ValueError as e:
+                raise ValueError(
+                    f"torn or corrupt WAL record in {path} at byte {offset}: {e}"
+                ) from e
+            yield record
+            offset += _LEN.size + n
+
+
 def write_wal_segments(df: DataFrame, out_dir: str) -> None:
     """Distributed WAL writer: every partition writes its own segment
     file (``segment-<pid>.wal``) — the per-task append-only layout WAL
@@ -95,15 +129,7 @@ class WalReader(DataSourceReader):
         return [InputPartition(os.path.join(self.path, f)) for f in files]
 
     def read(self, partition):
-        with open(partition.value, "rb") as fh:
-            while True:
-                hdr = fh.read(8)
-                if len(hdr) < 8:
-                    break
-                (n,) = _LEN.unpack(hdr)
-                payload = fh.read(n).decode("utf-8")
-                log_id, version, op, doc = payload.rstrip("\n").split("|", 3)
-                yield (int(log_id), int(version), op, doc)
+        return _read_segment(partition.value)
 
 
 class WalStreamReader(DataSourceStreamReader):
@@ -166,15 +192,7 @@ class WalStreamReader(DataSourceStreamReader):
         ]
 
     def read(self, partition):
-        with open(partition.value, "rb") as fh:
-            while True:
-                hdr = fh.read(8)
-                if len(hdr) < 8:
-                    break
-                (n,) = _LEN.unpack(hdr)
-                payload = fh.read(n).decode("utf-8")
-                log_id, version, op, doc = payload.rstrip("\n").split("|", 3)
-                yield (int(log_id), int(version), op, doc)
+        return _read_segment(partition.value)
 
     def commit(self, end):
         pass

@@ -165,6 +165,12 @@ def test_cells_arrow_parity_with_expression(spark, sf_dir):
     )["__cell"]
 
 
+def test_cells_arrow_rejects_unsorted_centroid_ids(spark):
+    emb = spark.createDataFrame([(0, [0.0, 0.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="ascending centroid ids"):
+        A.cells_arrow(emb, [(7, [2.0, 0.0]), (0, [0.0, 0.0])])
+
+
 def test_cells_arrow_tie_and_margin_rows(spark):
     """Adversarial rows: exact ties (must go to the smaller cid) and
     sub-1e-6 margins (must follow the rounded compare, i.e. agree with

@@ -553,7 +553,7 @@ def _orderby_only_window_sites():
     import ast
     import pathlib
 
-    root = pathlib.Path("/root/repo/simple_vector_spark")
+    root = pathlib.Path(__file__).resolve().parent.parent / "simple_vector_spark"
     sites = set()
     for f in sorted(root.rglob("*.py")):
         tree = ast.parse(f.read_text())

@@ -5,10 +5,14 @@ doc/wal.md:4-6)."""
 from __future__ import annotations
 
 import os
+import re
 import struct
+
+import pytest
 
 from simple_vector_spark.sources.wal_source import (
     WalDataSource,
+    _read_segment,
     write_wal_segment,
     write_wal_segments,
 )
@@ -30,6 +34,43 @@ def test_segment_framing_is_reference_format(tmp_path):
     assert line1 == b'1|0|upsert|{"id":1}\n'
     (n2,) = struct.unpack("<Q", raw[8 + n1 : 16 + n1])
     assert raw[16 + n1 : 16 + n1 + n2] == b'2|1|delete|{"id":1}\n'
+
+
+def test_torn_tail_at_every_byte_of_last_record(tmp_path):
+    """A cut at a record boundary reads as the shorter segment; a cut
+    anywhere inside the last record raises, naming the segment and the
+    record's byte offset."""
+    recs = [
+        (1, 0, "upsert", '{"id":1}'),
+        (2, 0, "upsert", '{"id":2,"t":"a|b"}'),
+        (3, 1, "delete", '{"id":1,"t":"\u00e9"}'),
+    ]
+    p = tmp_path / "segment-00000.wal"
+    write_wal_segment(str(p), recs[:2])
+    last = p.stat().st_size
+    write_wal_segment(str(p), recs)
+    raw = p.read_bytes()
+    for cut in range(last, len(raw) + 1):
+        p.write_bytes(raw[:cut])
+        if cut in (last, len(raw)):
+            assert list(_read_segment(str(p))) == recs[: 2 if cut == last else 3]
+        else:
+            with pytest.raises(ValueError, match=rf"{re.escape(str(p))} at byte {last}:"):
+                list(_read_segment(str(p)))
+
+
+@pytest.mark.parametrize(
+    "payload",
+    [b"2|0|upsert\n", b"x|0|upsert|{}\n", b"2|y|upsert|{}\n", b"2|0|upsert|\xff\n"],
+)
+def test_corrupt_record_fails_by_path_and_offset(tmp_path, payload):
+    p = tmp_path / "segment-00000.wal"
+    write_wal_segment(str(p), [(1, 0, "upsert", "{}")])
+    first = p.stat().st_size
+    with open(p, "ab") as fh:
+        fh.write(struct.pack("<Q", len(payload)) + payload)
+    with pytest.raises(ValueError, match=rf"{re.escape(str(p))} at byte {first}:"):
+        list(_read_segment(str(p)))
 
 
 def test_wal_roundtrip_and_partition_per_segment(spark, tmp_path):

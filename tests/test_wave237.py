@@ -67,6 +67,15 @@ def test_graph_upsert_audit_accounting(spark):
     assert row["max_out_degree"] <= A.GRAPH_DEGREE
 
 
+def test_graph_upsert_audit_rejects_misshapen_base_cells(spark):
+    import pytest
+
+    emb = _clustered_emb(spark, per=2)
+    bad = spark.createDataFrame([(0, 0)], "vec_id long, cell_id int")
+    with pytest.raises(ValueError, match=r"base_cells must be \(vec_id, cell\)"):
+        A.graph_index_upsert_audit(emb, [(0, [0.0] * 8)], base_cells=bad)
+
+
 def test_graph_upsert_inserts_present_in_graph(spark):
     # after the audit's merge rules, inserted ids must appear as edge
     # sources: rebuild the after-edges the same way and look for them

@@ -16,11 +16,13 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 import time
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def canon(v):

@@ -17,7 +17,8 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SRC = "/root/testdata/sf0.001"
 DST = "/tmp/sfmini"

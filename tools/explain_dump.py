@@ -5,9 +5,11 @@ anything.  Usage: python tools/explain_dump.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 HEADLINERS = [
     ("knn_filtered_eq", "pre-filter pushed to scan; TakeOrderedAndProject top-k"),
@@ -111,7 +113,7 @@ def main() -> None:
         plan = qs[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         out += [f"## {name}", "", f"*{note}*", "", "```", plan.rstrip(), "```", ""]
 
-    with open("/root/repo/EXPLAIN.md", "w") as f:
+    with open(os.path.join(ROOT, "EXPLAIN.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote EXPLAIN.md ({len(HEADLINERS)} plans)")
 

@@ -33,6 +33,11 @@ def main() -> None:
             n: round(min(d["queries"][n] for d in datas), 4) for n in names
         }
         merged["value"] = round(sum(merged["queries"].values()), 4)
+        # every session's draws, so each best stays the min of its draws
+        if all("draws" in d for d in datas):
+            merged["draws"] = {n: [x for d in datas for x in d["draws"][n]] for n in names}
+        else:
+            merged.pop("draws", None)
         merged["n_sessions"] = len(passes)
         merged["timing"] = f"best_of_{merged.get('runs_per_query', 2)}_x_{len(passes)}_sessions"
         ordered = sorted(merged["queries"].values())

@@ -19,7 +19,8 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -35,7 +36,7 @@ def main() -> None:
 
     spark = get_spark("plan-dump")
     qs = queries()
-    out_dir = os.path.join("/root/repo/plans", args.round)
+    out_dir = os.path.join(ROOT, "plans", args.round)
     os.makedirs(out_dir, exist_ok=True)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
