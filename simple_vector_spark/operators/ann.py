@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import as_double_array, squared_l2
+from ..sources.loaders import local_frame
 
 PLANE_IDS = [0, 1, 2, 3]
 CENTROID_IDS = [0, 50, 100, 150, 200, 250, 300, 350, 400, 450]
@@ -253,6 +254,29 @@ def with_cells(
     )
 
 
+def _cell_dists(q: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
+    """``(__cell, cdist)``: the oracle's rounded squared-L2 from the
+    broadcast query ``q`` (column ``__q_vec``) to every centroid."""
+    cdf = local_frame(q.sparkSession, centroids, "cid int, cvec array<double>")
+    return cdf.crossJoin(q).select(
+        F.col("cid").alias("__cell"),
+        F.round(squared_l2(F.col("cvec"), F.col("__q_vec")), 6).alias("cdist"),
+    )
+
+
+def _probe_cells(
+    q: DataFrame, centroids: list[tuple[int, list[float]]], nprobe: int
+) -> DataFrame:
+    """The ``nprobe`` cells nearest the query (ties by cell id), as a
+    broadcast one-column ``__cell`` relation."""
+    return F.broadcast(
+        _cell_dists(q, centroids)
+        .orderBy(F.col("cdist").asc(), F.col("__cell").asc())
+        .limit(nprobe)
+        .select("__cell")
+    )
+
+
 def ivf_search(
     corpus: DataFrame,
     query: DataFrame,
@@ -264,24 +288,11 @@ def ivf_search(
 ) -> DataFrame:
     """IVF ANN search: rank cells by centroid distance to the query,
     take nprobe cells, exact re-rank within them.  The probe-cell
-    selection is computed distributed (tiny DF) with the same rounded
+    selection stays in the plan (``_probe_cells``) with the same rounded
     arithmetic as the oracle — nothing order-dependent crosses the
     engine boundary."""
-    spark = corpus.sparkSession
-    cdf = spark.createDataFrame(
-        [(cid, cv) for cid, cv in centroids], f"cid int, cvec array<double>"
-    )
     q = F.broadcast(query.select(as_double_array(F.col(vec_col)).alias("__q_vec")))
-    probe = F.broadcast(
-        cdf.crossJoin(q)
-        .select(
-            F.col("cid").alias("__cell"),
-            F.round(squared_l2(F.col("cvec"), F.col("__q_vec")), 6).alias("cdist"),
-        )
-        .orderBy(F.col("cdist").asc(), F.col("__cell").asc())
-        .limit(nprobe)
-        .select("__cell")
-    )
+    probe = _probe_cells(q, centroids, nprobe)
     c = with_cells(corpus, centroids, vec_col)
     return (
         c.join(probe, "__cell")
@@ -324,22 +335,14 @@ def ivf_probe_partitioned(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Probe a built IVF index: rank cells by centroid distance to the
-    query (driver-side over the model-sized centroid list), then scan
-    ONLY those `cell=` directories — the literal IN-filter reaches the
-    scan as PartitionFilters, so IO is nprobe/ncells of the corpus.
-    Exact re-rank within the probed cells; same output as ivf_search."""
-    qrow = query.select(vec_col).head()
-    qv = [float(x) for x in qrow[0]]
-
-    def sq(a: list[float], b: list[float]) -> float:
-        return round(sum((x - y) * (x - y) for x, y in zip(a, b)), 6)
-
-    probe = [
-        cid for cid, _ in sorted(centroids, key=lambda c: (sq(c[1], qv), c[0]))[:nprobe]
-    ]
-    idx = spark.read.parquet(path).filter(F.col("cell").isin(probe))
+    """Probe a built IVF index: collect the ``_probe_cells`` ids (the
+    same cells ivf_search probes), then scan ONLY those `cell=`
+    directories — the literal IN-filter reaches the scan as
+    PartitionFilters, so IO is nprobe/ncells of the corpus.  Exact
+    re-rank within the probed cells; same output as ivf_search."""
     q = F.broadcast(query.select(as_double_array(F.col(vec_col)).alias("__q_vec")))
+    probe = [r["__cell"] for r in _probe_cells(q, centroids, nprobe).collect()]
+    idx = spark.read.parquet(path).filter(F.col("cell").isin(probe))
     return (
         idx.crossJoin(q)
         .select(
@@ -772,21 +775,8 @@ def ivfpq_rerank_search(
     touches.  Stage 2 fetches `shortlist` full vectors by id (a
     broadcast semi-join against a request-sized id list) — float
     vectors for exactly R rows, never the corpus."""
-    spark = corpus.sparkSession
-    cdf = spark.createDataFrame(
-        [(cid, cv) for cid, cv in centroids], "cid int, cvec array<double>"
-    )
     q = F.broadcast(query.select(as_double_array(F.col(vec_col)).alias("__q_vec")))
-    probe = F.broadcast(
-        cdf.crossJoin(q)
-        .select(
-            F.col("cid").alias("__cell"),
-            F.round(squared_l2(F.col("cvec"), F.col("__q_vec")), 6).alias("cdist"),
-        )
-        .orderBy(F.col("cdist").asc(), F.col("__cell").asc())
-        .limit(nprobe)
-        .select("__cell")
-    )
+    probe = _probe_cells(q, centroids, nprobe)
     tab = adc_distance_table(query, codebooks, vec_col)
     m = len(codebooks)
     # Stage 1: codes-only ADC over probed cells.
@@ -964,21 +954,12 @@ def ivf_recall_curve(
     for the largest budget (localCheckpoint) and each curve point is
     just a filter on the cell's probe rank + top-k + intersect with
     the exact answer — no re-scan per point."""
-    spark = corpus.sparkSession
-    max_np = max(nprobes)
-    cdf = spark.createDataFrame(
-        [(cid, cv) for cid, cv in centroids], "cid int, cvec array<double>"
-    )
     q = F.broadcast(query.select(as_double_array(F.col(vec_col)).alias("__q_vec")))
     w = Window.orderBy(F.col("cdist").asc(), F.col("__cell").asc())
     cellrank = F.broadcast(
-        cdf.crossJoin(q)
-        .select(
-            F.col("cid").alias("__cell"),
-            F.round(squared_l2(F.col("cvec"), F.col("__q_vec")), 6).alias("cdist"),
-        )
+        _cell_dists(q, centroids)
         .withColumn("pr", F.row_number().over(w))
-        .filter(F.col("pr") <= max_np)
+        .filter(F.col("pr") <= max(nprobes))
         .select("__cell", "pr")
     )
     cand = (
@@ -1036,7 +1017,8 @@ def kmeans_drift(
     step = kmeans_step(emb, ids, report_dims)
     cents = fit_vectors(emb, ids)
     spark = emb.sparkSession
-    cdf = spark.createDataFrame(
+    cdf = local_frame(
+        spark,
         [
             (cid, *[round(float(v), 6) for v in vec[:report_dims]])
             for cid, vec in cents
@@ -1152,21 +1134,8 @@ def adaptive_filtered_search(
         return knn_topk(corpus, query, k, "sqL2", pred=pred).select(
             id_col, "dist", F.lit("prefilter_exact").alias("strategy")
         )
-    spark = corpus.sparkSession
-    cdf = spark.createDataFrame(
-        [(cid, cv) for cid, cv in centroids], "cid int, cvec array<double>"
-    )
     q = F.broadcast(query.select(as_double_array(F.col(vec_col)).alias("__q_vec")))
-    probe = F.broadcast(
-        cdf.crossJoin(q)
-        .select(
-            F.col("cid").alias("__cell"),
-            F.round(squared_l2(F.col("cvec"), F.col("__q_vec")), 6).alias("cdist"),
-        )
-        .orderBy(F.col("cdist").asc(), F.col("__cell").asc())
-        .limit(nprobe)
-        .select("__cell")
-    )
+    probe = _probe_cells(q, centroids, nprobe)
     c = with_cells(corpus, centroids, vec_col)
     return (
         c.join(probe, "__cell")
@@ -1732,7 +1701,8 @@ def knn_graph_navigable(
 
     spark = emb.sparkSession
     cdf = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(cid), [float(x) for x in cv]) for cid, cv in cents],
             "cid int, cv array<double>",
         )
@@ -1864,9 +1834,7 @@ def knn_graph_greedy_search(
         )
 
     spark = emb.sparkSession
-    seed_ids = spark.createDataFrame(
-        [(int(cid),) for cid, _ in cents], "_id long"
-    )
+    seed_ids = local_frame(spark, [(int(cid),) for cid, _ in cents], "_id long")
     seed_scored = score(seed_ids).localCheckpoint()
     frontier = (
         seed_scored.orderBy(F.col("dist").asc(), F.col("_id").asc())
@@ -1964,6 +1932,18 @@ def knn_graph_health(
     )
 
 
+def graph_ball(edges: DataFrame, seeds: list[int], hops: int) -> DataFrame:
+    """The ``hops``-hop BFS ball (one ``_id`` column) of ``seeds`` over
+    the ``(_src, _dst)`` edge table."""
+    ball = local_frame(edges.sparkSession, [(int(s),) for s in seeds], "_id long")
+    for _ in range(hops):
+        nbrs = edges.join(
+            F.broadcast(ball), F.col("_src") == F.col("_id")
+        ).select(F.col("_dst").alias("_id"))
+        ball = ball.unionByName(nbrs).distinct()
+    return ball
+
+
 GRAPH_RECALL_BEAMS = (4, 8, 16)  # ef_search sweep for the recall curve
 
 
@@ -2045,22 +2025,14 @@ def graph_recall_vs_beam(
         .select(F.col("_id").alias("vec_id"))
     )
 
-    beams_df = spark.createDataFrame([(int(b),) for b in beams], "beam int")
-    seed_ids = spark.createDataFrame(
-        [(int(cid),) for cid, _ in cents], "_id long"
-    )
+    beams_df = local_frame(spark, [(int(b),) for b in beams], "beam int")
     # The hops-hop BFS ball of the FULL seed set: a superset of every
     # node any beam's walk can score (frontiers are subsets of the
     # unpruned expansion).  Query-independent, so callers that search
     # the same index repeatedly pass it in precomputed (the registry
     # session-caches it next to the edge table).
     if ball is None:
-        ball = seed_ids
-        for _ in range(hops):
-            nbrs = edges.join(
-                F.broadcast(ball), F.col("_src") == F.col("_id")
-            ).select(F.col("_dst").alias("_id"))
-            ball = ball.unionByName(nbrs).distinct()
+        ball = graph_ball(edges, [cid for cid, _ in cents], hops)
     nodes = qd.join(F.broadcast(ball), "_id")
     sub_edges = edges.join(
         F.broadcast(ball), F.col("_src") == F.col("_id")

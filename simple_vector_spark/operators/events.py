@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.loaders import local_frame
+
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
 
@@ -781,7 +783,8 @@ def markov_stationary(events: DataFrame, iters: int = 10) -> DataFrame:
             for t in states
         }
     spark = events.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(s, round(mass[s] / 1e6, 6)) for s in states],
         "state string, stationary double",
     )
@@ -3635,7 +3638,8 @@ def absorbing_chain_funnel(events: DataFrame, iters: int = ABSORB_ITERS) -> Data
     t_exp = iterate({s_: 1.0 for s_ in states})
     b_pur = iterate(r_pur)
     spark = events.sparkSession
-    model = spark.createDataFrame(
+    model = local_frame(
+        spark,
         [
             (s_, float(t_exp[s_]), float(b_pur[s_]))
             for s_ in states
@@ -3644,7 +3648,8 @@ def absorbing_chain_funnel(events: DataFrame, iters: int = ABSORB_ITERS) -> Data
     )
     out = outs.join(F.broadcast(model), "s")
     if p_exit:
-        pe = spark.createDataFrame(
+        pe = local_frame(
+            spark,
             [(s_, float(v)) for s_, v in sorted(p_exit.items())],
             "s string, pe double",
         )

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.loaders import local_frame
 from .ranking import grouped_ntile, ranked_global
 
 # Exact money type: double -> DECIMAL(15,2)/(8,6) casts are tie-free
@@ -5324,7 +5325,8 @@ def lines_poisson_fit(lineitem: DataFrame, cells: int = POISSON_CELLS) -> DataFr
     ).agg(F.count(F.lit(1)).alias("o")).localCheckpoint()
     lam = F.col("_sk").cast("double") / F.col("_n")
     spark = lineitem.sparkSession
-    cdf = spark.createDataFrame(
+    cdf = local_frame(
+        spark,
         [(j, float(math.factorial(j))) for j in range(cells - 1)],
         "cell long, fact double",
     )
@@ -6665,7 +6667,8 @@ def observed_quality_metrics(orders: DataFrame) -> DataFrame:
         .collect()
     )
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 m["n_rows"],
@@ -7055,7 +7058,8 @@ def nation_trade_hits(
         a = halfstep(h, 0, 1)
         h = halfstep(a, 1, 0)
     spark = nation.sparkSession
-    model = spark.createDataFrame(
+    model = local_frame(
+        spark,
         [(int(n), h[n], a[n]) for n in node_ids],
         "node int, hub double, authority double",
     )
@@ -7579,8 +7583,8 @@ def leontief_multipliers(
             for n in node_ids
         }
     spark = nation.sparkSession
-    acc = spark.createDataFrame(
-        [(int(n), accd[n]) for n in node_ids], "node int, s double"
+    acc = local_frame(
+        spark, [(int(n), accd[n]) for n in node_ids], "node int, s double"
     )
     return (
         acc.join(

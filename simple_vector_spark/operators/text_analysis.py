@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import md5_int, tokens
+from ..sources.loaders import local_frame
 
 ROLL_P = 2_147_483_647
 PUNCT_CLASS = "[.,!?;:]"
@@ -1016,8 +1017,10 @@ def bpe_train_merges(
             ).alias("w"),
             "n",
         ).localCheckpoint()
-    return spark.createDataFrame(
-        merges, "rank int, left_sym string, right_sym string, merged string, cnt long"
+    return local_frame(
+        spark,
+        merges,
+        "rank int, left_sym string, right_sym string, merged string, cnt long",
     )
 
 
@@ -1378,9 +1381,7 @@ def saved_search_percolate(docs: DataFrame) -> DataFrame:
         for name, terms in PERCOLATE_QUERIES
         for term in terms
     ]
-    qterms = spark.createDataFrame(
-        qrows, "query_name string, term string, arity int"
-    )
+    qterms = local_frame(spark, qrows, "query_name string, term string, arity int")
     tk = docs.select(
         "doc_id", F.explode(F.array_distinct(tokens(F.col("text")))).alias("term")
     )
@@ -1393,8 +1394,8 @@ def saved_search_percolate(docs: DataFrame) -> DataFrame:
     counts = fired.groupBy("query_name").agg(
         F.count("*").cast("long").alias("n_docs_fired")
     )
-    all_q = spark.createDataFrame(
-        [(name,) for name, _ in PERCOLATE_QUERIES], "query_name string"
+    all_q = local_frame(
+        spark, [(name,) for name, _ in PERCOLATE_QUERIES], "query_name string"
     )
     return all_q.join(counts, "query_name", "left").select(
         "query_name",
@@ -2547,7 +2548,7 @@ def symspell_candidates(
     vvar = vocab.select(
         "term", "freq", F.explode(variants(F.col("term"))).alias("v")
     )
-    qdf = spark.createDataFrame([(q,) for q in qs], "query string")
+    qdf = local_frame(spark, [(q,) for q in qs], "query string")
     qvar = F.broadcast(
         qdf.select("query", F.explode(variants(F.col("query"))).alias("v"))
     )
@@ -2891,7 +2892,7 @@ def bigram_lambda_sweep(docs: DataFrame, text_col: str = "text") -> DataFrame:
         .crossJoin(tot)
     )
     lam_df = F.broadcast(
-        spark.createDataFrame([(l,) for l in LM_LAMBDA_GRID], "lam double")
+        local_frame(spark, [(l,) for l in LM_LAMBDA_GRID], "lam double")
     )
     pb = F.coalesce(
         F.try_divide(

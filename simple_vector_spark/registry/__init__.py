@@ -274,6 +274,29 @@ _DRIVER_RECORDED: frozenset[str] = frozenset({
     "replica_bucket_diff", "revenue_share_hierarchy", "sql_param_filter",
     "sql_udf_price_band", "supplier_hhi_concentration", "vocab_hapax_ratio",
     "vocab_term_burstiness",
+    # -- recorded green in CORRECTNESS_r09.json (round 9) --
+    "customers_division", "customers_rfm_kmeans", "customers_segment_kappa",
+    "customers_skyline", "customers_subscription_detect",
+    "dedup_graph_assortativity", "dedup_lsh_scurve",
+    "dedup_simhash_bit_balance", "doc_code_detect", "doc_lsa_topic_axis",
+    "doc_sentence_stats", "events_activation_analysis",
+    "events_cuped_adjustment", "events_daily_forward_fill",
+    "events_error_budget", "events_error_pchart", "events_markov_accuracy",
+    "events_markov_entropy", "events_props_schema_drift",
+    "events_retention_halflife", "events_retry_collapse",
+    "events_session_fatigue", "events_session_gap_tuning",
+    "events_session_type_pmi", "events_time_axis_gaps",
+    "events_touch_decay_attribution", "events_user_zipf",
+    "join_strategy_advisor", "lineitem_linenumber_audit",
+    "lineitem_trimmed_mean", "lineitem_unit_price_audit",
+    "multimodal_mime_sniff", "multimodal_shard_pack",
+    "nation_trade_reciprocity", "orders_bootstrap_ci", "orders_dp_release",
+    "orders_gini_trend", "orders_hash_partition_balance",
+    "orders_latency_inversion_mw", "orders_runs_test", "orders_sla_trend",
+    "orders_theil_decomposition", "orders_velocity_screen",
+    "part_brand_type_mi", "part_repeat_purchase", "revenue_cell_provenance",
+    "source_lang_entropy", "source_oov_rate", "vocab_freq_spectrum",
+    "vocab_textrank_keywords",
 })
 
 # Green artifact rows that no longer certify the current code (output

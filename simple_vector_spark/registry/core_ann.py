@@ -102,15 +102,7 @@ def _graph_ball(spark, sf_dir: str) -> DataFrame:
         edges = _graph_edges(spark, sf_dir).select(
             F.col("vec_id").alias("_src"), F.col("nbr_id").alias("_dst")
         )
-        ball = spark.createDataFrame(
-            [(int(c),) for c in A.CENTROID_IDS], "_id long"
-        )
-        for _ in range(A.GRAPH_HOPS):
-            nbrs = edges.join(
-                F.broadcast(ball), F.col("_src") == F.col("_id")
-            ).select(F.col("_dst").alias("_id"))
-            ball = ball.unionByName(nbrs).distinct()
-        return ball
+        return A.graph_ball(edges, A.CENTROID_IDS, A.GRAPH_HOPS)
 
     return _cached_index(spark, sf_dir, "graph_ball", build)
 

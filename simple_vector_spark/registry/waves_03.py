@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table
+from ..sources.loaders import load_table, local_frame
 
 from . import _ORACLES, finalize_double, query
 from .core_knn import KNN_K
@@ -997,9 +997,7 @@ def events_collated_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     and index pushdown on a collated column at scale).  Oracle models
     the collation with lower()= since DuckDB compares binary."""
     ev = load_table(spark, sf_dir, "events")
-    pats = spark.createDataFrame(
-        [(p,) for p in COLLATION_PATTERNS], "pattern string"
-    )
+    pats = local_frame(spark, [(p,) for p in COLLATION_PATTERNS], "pattern string")
     j = ev.crossJoin(F.broadcast(pats))
     ci = F.collate(F.col("event_type"), "UTF8_LCASE") == F.collate(
         F.col("pattern"), "UTF8_LCASE"

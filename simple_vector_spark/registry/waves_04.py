@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table
+from ..sources.loaders import load_table, local_frame
 
 from . import _ORACLES, finalize_double, query
 from .core_knn import PLANT_MOD, PLANT_SHIFT
@@ -2406,8 +2406,8 @@ def table_storage_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_bytes = sum(os.path.getsize(f) for f in files)
         n_rows = load_table(spark, sf_dir, t).count()
         rows.append((t, len(files), n_bytes, n_rows))
-    out = spark.createDataFrame(
-        rows, "table_name string, n_files int, total_bytes long, n_rows long"
+    out = local_frame(
+        spark, rows, "table_name string, n_files int, total_bytes long, n_rows long"
     )
     return out.select(
         "table_name",

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table
+from ..sources.loaders import load_table, local_frame
 
 from . import finalize_double, query
 from .core_relational import E, R
@@ -1496,7 +1496,8 @@ def dpp_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(path)
         )
     fact = spark.read.parquet(path)
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [
             (f"{y}-{m:02d}", f"{y}Q{(m - 1) // 3 + 1}")
             for y in range(1992, 1999)

@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -93,6 +94,27 @@ def fan_out(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
     if df.rdd.getNumPartitions() >= max(1, int(target * min_ratio)):
         return df
     return df.repartition(target)
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | StructType
+) -> DataFrame:
+    """A small driver-side literal table (centroids, grids, model
+    parameters, report rows) typed by ``schema`` (DDL or StructType).
+
+    ``createDataFrame`` on a Python list parallelizes the rows through an
+    identity map, so every execution of the literal runs
+    ``defaultParallelism`` Python-worker tasks.  An Arrow table goes to the JVM as a local
+    relation instead: no Python task.  It is built per column, not via
+    pandas, so an int column holding ``None`` stays an int column."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)]
+    return spark.createDataFrame(pa.table(arrays, schema=arrow_schema), struct)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

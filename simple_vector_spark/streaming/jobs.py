@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.events import TS_FMT
+from ..sources.loaders import local_frame
 
 def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan of the events table.  Same ts handling as the
@@ -279,6 +280,51 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _foreach_batch(stream: DataFrame, fn) -> None:
+    """Run ``stream`` to completion (availableNow) through the
+    foreachBatch sink ``fn(batch_df, batch_id)``, against a throwaway
+    checkpoint dir that is removed afterwards."""
+    ckpt = tempfile.mkdtemp(prefix="svs_ckpt_")
+    try:
+        q = (
+            stream.writeStream.foreachBatch(fn)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _merge_sink(ev: DataFrame) -> str:
+    """Merge each micro-batch of ``ev`` latest-wins per ``user_id`` on
+    ``(ts, event_id)`` into the previous snapshot (the first batch has
+    none: it is its own latest-wins), written to a NEW versioned dir
+    that becomes current once its write commits.  Returns the final
+    snapshot's path."""
+    import os
+
+    from ..operators.mutation import apply_upserts, latest_wins, restore, snapshot
+
+    keys, seq = ["user_id"], ["ts", "event_id"]
+    base = tempfile.mkdtemp(prefix="svs_merge_")
+    state = {"path": None}
+
+    def merge(batch_df, batch_id):
+        if state["path"] is None:
+            cur = latest_wins(batch_df, keys, seq)
+        else:
+            prev = restore(batch_df.sparkSession, state["path"])
+            cur = apply_upserts(prev, batch_df, keys, seq)
+        nxt = os.path.join(base, f"v{batch_id}")
+        snapshot(cur, nxt)
+        state["path"] = nxt
+
+    _foreach_batch(ev, merge)
+    return state["path"]
+
+
 def foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming WAL consumption into a materialized snapshot table:
     each micro-batch is MERGEd (union + latest-wins window, O13) into a
@@ -288,38 +334,12 @@ def foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     write commits (the atomic-swap the reference's full-rewrite
     snapshot lacks, src/index_factory.cc:44-63 / doc/persistence.md
     todo).  Final state = latest event per user — the batch oracle."""
-    import os
-
-    from ..operators.mutation import apply_upserts, restore, snapshot
+    from ..operators.mutation import restore
 
     ev = _read_events_stream(spark, sf_dir).select(
         "user_id", "event_id", "ts", "value"
     )
-    base = tempfile.mkdtemp(prefix="svs_fbmerge_")
-    state = {"path": None}
-
-    def merge(batch_df, batch_id):
-        sess = batch_df.sparkSession
-        if state["path"] is None:
-            cur = sess.createDataFrame([], batch_df.schema)
-        else:
-            cur = restore(sess, state["path"])
-        nxt = os.path.join(base, f"v{batch_id}")
-        snapshot(apply_upserts(cur, batch_df, ["user_id"], ["ts", "event_id"]), nxt)
-        state["path"] = nxt
-
-    ckpt = tempfile.mkdtemp(prefix="svs_ckpt_")
-    try:
-        q = (
-            ev.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return restore(spark, state["path"]).select(
+    return restore(spark, _merge_sink(ev)).select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
         F.round(F.col("value"), 6).alias("last_value"),
@@ -654,9 +674,7 @@ def cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Deterministic: latest-wins on (ts, event_id) is associative across
     any batch split, so availableNow equals the batch oracle."""
-    import os
-
-    from ..operators.mutation import apply_upserts, restore, snapshot
+    from ..operators.mutation import restore
 
     ev = _read_events_stream(spark, sf_dir).select(
         "user_id",
@@ -667,34 +685,8 @@ def cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("u"))
         .alias("op"),
     )
-    base = tempfile.mkdtemp(prefix="svs_cdc_")
-    state = {"path": None}
-
-    def merge(batch_df, batch_id):
-        sess = batch_df.sparkSession
-        if state["path"] is None:
-            cur = sess.createDataFrame([], batch_df.schema)
-        else:
-            cur = restore(sess, state["path"])
-        nxt = os.path.join(base, f"v{batch_id}")
-        snapshot(
-            apply_upserts(cur, batch_df, ["user_id"], ["ts", "event_id"]), nxt
-        )
-        state["path"] = nxt
-
-    ckpt = tempfile.mkdtemp(prefix="svs_ckpt_")
-    try:
-        q = (
-            ev.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     return (
-        restore(spark, state["path"])
+        restore(spark, _merge_sink(ev))
         .filter(F.col("op") != "d")
         .select(
             "user_id",
@@ -756,17 +748,7 @@ def dead_letter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         per_batch[batch_id] = counts  # last-write-wins per batch_id
 
-    ckpt = tempfile.mkdtemp(prefix="svs_dlq_")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(split)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    _foreach_batch(parsed, split)
     acc: dict = {"valid": {}, "dlq": {}}
     for counts in per_batch.values():
         for side in ("valid", "dlq"):
@@ -781,8 +763,8 @@ def dead_letter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for t in types
     ]
-    out = spark.createDataFrame(
-        data, "event_type string, n_valid long, n_quarantined long"
+    out = local_frame(
+        spark, data, "event_type string, n_valid long, n_quarantined long"
     )
     return out.select(
         "event_type",
