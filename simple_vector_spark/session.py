@@ -5,7 +5,9 @@ so the same code is correct on a real cluster: AQE on (runtime re-plan,
 skew-join handling), shuffle partitions sized to cores locally (on a
 cluster you would size to ~2-3x total cores), UTC session timezone so
 timestamps compare exactly against the DuckDB oracle, and Arrow enabled
-for the Pandas-UDF paths.
+for the Pandas-UDF paths.  Python workers fork from
+``worker_daemon`` (``spark.python.daemon.module``), which imports the
+interpreter's unpacked pyspark instead of Spark's ``pyspark.zip``.
 """
 
 from __future__ import annotations
@@ -38,6 +40,7 @@ def get_spark(app_name: str = "simple-vector-spark") -> SparkSession:
         # the WAL DataSource), so they need it on their path whatever
         # directory the application starts in.
         .config("spark.executorEnv.PYTHONPATH", _PKG_PARENT)
+        .config("spark.python.daemon.module", "simple_vector_spark.worker_daemon")
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
