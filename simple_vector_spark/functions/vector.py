@@ -15,14 +15,26 @@ reading the Parquet corpus.  All arithmetic is double-precision so the
 DuckDB oracle (which casts ``FLOAT[] -> DOUBLE[]``) computes bit-equal
 terms; results are compared rounded to 6 decimals (FIXTURES.md §C).
 
+The distance expressions and ``ROUND(x, 6)`` have NumPy twins
+(``*_np``, :func:`round6`; :func:`vector_matrix` stacks their input)
+for the Arrow/pandas kernels.  The twins repeat the expressions'
+arithmetic exactly: one f64 term per dimension, added left to right
+from 0.0 as ``aggregate`` does, and Spark's ``ROUND`` (HALF_UP on the
+shortest decimal repr).  A NumPy value that the oracle sees, or that a
+ranking uses, goes through them.  ``np.round`` rounds ties to even on
+the binary value, and ``einsum``, ``linalg.norm`` and
+``.sum(axis=...)`` add in other orders; ``tests/test_vector_np.py``
+fails on the first three anywhere in the package.
+
 Scale note: at 100 TB the distance expression is evaluated inside the
-corpus scan stage (map-side); nothing here shuffles.  If expression
-evaluation ever dominates, the drop-in fast path is a Pandas UDF doing
-a NumPy matmul per Arrow batch — same signature, same output schema.
+corpus scan stage (map-side); nothing here shuffles.
 """
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -63,15 +75,89 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _fold_np(term, X: np.ndarray, Y: np.ndarray) -> np.ndarray:
+    """``aggregate(zip_with(X, Y, term), 0.0, acc + v)`` over the last
+    axis: one f64 term per dimension, added left to right.  Leading
+    axes broadcast, so ``X[:, None]`` against ``Y[None]`` gives the
+    (n, m) pair block and ``X`` against ``X`` a per-row value."""
+    acc = np.zeros(np.broadcast_shapes(X.shape[:-1], Y.shape[:-1]))
+    for j in range(X.shape[-1]):
+        acc += term(X[..., j], Y[..., j])
+    return acc
+
+
+def _sq_diff(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    d = x - y
+    return d * d
+
+
+def squared_l2_np(X: np.ndarray, Y: np.ndarray) -> np.ndarray:
+    """NumPy twin of :func:`squared_l2`, bit for bit."""
+    return _fold_np(_sq_diff, X, Y)
+
+
+def dot_product_np(X: np.ndarray, Y: np.ndarray) -> np.ndarray:
+    """NumPy twin of :func:`dot_product`, bit for bit."""
+    return _fold_np(np.multiply, X, Y)
+
+
+def l2_norm_np(X: np.ndarray) -> np.ndarray:
+    """NumPy twin of :func:`l2_norm`, bit for bit."""
+    return np.sqrt(dot_product_np(X, X))
+
+
+def cosine_similarity_np(X: np.ndarray, Y: np.ndarray) -> np.ndarray:
+    """NumPy twin of :func:`cosine_similarity`, bit for bit."""
+    return dot_product_np(X, Y) / (l2_norm_np(X) * l2_norm_np(Y))
+
+
+_Q6 = Decimal("0.000001")
+
+
+def round6(D) -> np.ndarray:
+    """Spark's ``ROUND(x, 6)`` over a float64 array: HALF_UP on the
+    shortest decimal repr (``BigDecimal.valueOf``), ties away from zero.
+
+    Fast path ``floor(x*1e6 + 0.5) / 1e6``; an entry whose scaled
+    fraction lies near .5 takes the exact ``Decimal(repr(x))`` path.
+    The margin grows with the magnitude: ``x*1e6`` and the repr each
+    err by up to ~|x|*1e6*2^-53, so a fixed margin misrounds ties from
+    about 128 up (131.1362395 -> 131.136239, where ROUND gives
+    131.13624).  Negative ties always land in the margin, where the
+    exact path rounds them away from zero."""
+    D = np.asarray(D, dtype=np.float64)
+    scaled = D * 1e6
+    R = np.floor(scaled + 0.5) / 1e6
+    margin = 1e-8 + np.abs(scaled) * 1e-15
+    with np.errstate(invalid="ignore"):  # inf - inf: not risky
+        risky = np.abs(scaled - np.floor(scaled) - 0.5) < margin
+    for i in zip(*np.nonzero(risky)):
+        R[i] = float(Decimal(repr(float(D[i]))).quantize(_Q6, ROUND_HALF_UP))
+    return R
+
+
+def vector_matrix(vectors) -> np.ndarray:
+    """A column of equal-length vectors as one float64 (n, d) matrix: a
+    pandas Series of arrays (pandas UDFs) or an Arrow list array
+    (``mapInArrow``, flattened without a per-row copy)."""
+    if len(vectors) == 0:
+        return np.empty((0, 0))
+    if hasattr(vectors, "combine_chunks"):  # pyarrow ChunkedArray
+        vectors = vectors.combine_chunks()
+    if hasattr(vectors, "flatten"):  # pyarrow ListArray
+        flat = vectors.flatten().to_numpy(zero_copy_only=False)
+        return flat.astype(np.float64).reshape(len(vectors), -1)
+    return np.stack(list(vectors)).astype(np.float64)
+
+
 def cosine_pandas_udf():
     """Arrow-batched cosine kernel for the SQL UDF surface (the
     reference has no extension point at all — SURVEY.md §2.2 UDF row).
     Whole batches cross the JVM/Python boundary as Arrow arrays and the
-    math is one stacked NumPy einsum per batch, never a per-row Python
-    call.  Built-in zip_with/aggregate (cosine_similarity above) stays
-    the default hot path; this is the escape hatch users register for
-    kernels Catalyst can't express."""
-    import numpy as np
+    math is :func:`cosine_similarity_np` over the stacked batch, never a
+    per-row Python call.  Built-in zip_with/aggregate (cosine_similarity
+    above) stays the default hot path; this is the escape hatch users
+    register for kernels Catalyst can't express."""
     import pandas
     from pyspark.sql.functions import pandas_udf
 
@@ -83,10 +169,8 @@ def cosine_pandas_udf():
 
     @pandas_udf("double")
     def cos_sim(a: pandas.Series, b: pandas.Series) -> pandas.Series:
-        A = np.stack(a.to_numpy()).astype(np.float64)
-        B = np.stack(b.to_numpy()).astype(np.float64)
-        num = np.einsum("ij,ij->i", A, B)
-        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        return pandas.Series(num / den)
+        return pandas.Series(
+            cosine_similarity_np(vector_matrix(a), vector_matrix(b))
+        )
 
     return cos_sim

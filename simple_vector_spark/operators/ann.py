@@ -35,8 +35,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import as_double_array, squared_l2
+from ..functions.vector import (
+    as_double_array,
+    round6,
+    squared_l2,
+    squared_l2_np,
+    vector_matrix,
+)
 from ..sources.loaders import local_frame
+from .knn import exact_rerank, exact_scores, knn_topk, query_vec, rank_order, topk_np
 
 PLANE_IDS = [0, 1, 2, 3]
 CENTROID_IDS = [0, 50, 100, 150, 200, 250, 300, 350, 400, 450]
@@ -136,19 +143,12 @@ def cells_arrow(
 
     Exact-parity contract with ivf_cell, bit for bit:
 
-    - distance: Spark's aggregate() fold sums (x_d - y_d)^2 LEFT TO
-      RIGHT in f64; the kernel accumulates dimension-by-dimension in
-      the same order (one vectorized add per dimension), so every
-      distance is the identical double.
-    - argmin on ROUND(dist, 6) with ties to the smaller cid: rounding
-      only changes the winner when two distances sit within 1e-6, so
-      the kernel takes the plain argmin (first minimum = smallest cid;
-      centroid ids must be ascending, asserted) unless a row has a
-      competitor within 1.5e-6 of the minimum — |round(x)-x| <= 5e-7,
-      so beyond that margin the unrounded winner IS the rounded winner
-      — and resolves only those rare rows with the exact decimal
-      HALF_UP recipe (Decimal(repr(x)), the same shortest-repr value
-      java.math.BigDecimal.valueOf rounds).
+    - distance: ``squared_l2_np`` adds (x_d - y_d)^2 left to right in
+      f64, the order of Spark's aggregate() fold, so every distance is
+      the identical double.
+    - argmin on ROUND(dist, 6) (``round6``) with ties to the smaller
+      cid: the first minimum, so centroid ids must be ascending
+      (checked).
     """
     import numpy as np
     import pyarrow as pa
@@ -167,33 +167,11 @@ def cells_arrow(
     vec_idx = corpus.columns.index(vec_col)
 
     def assign(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q6 = Decimal("0.000001")
-
-        def r6(x: float) -> Decimal:
-            return Decimal(repr(float(x))).quantize(q6, ROUND_HALF_UP)
-
-        C = np.asarray(cmat, dtype=np.float64)  # (k, dim)
-        k, dim = C.shape
+        C = np.asarray(cmat, dtype=np.float64)[None]  # (1, k, dim)
         for batch in batches:
-            arr = batch.column(vec_idx)
-            if isinstance(arr, pa.ChunkedArray):
-                arr = arr.combine_chunks()
-            flat = arr.flatten().to_numpy(zero_copy_only=False)
-            n = len(arr)
-            X = flat.astype(np.float64).reshape(n, dim)
-            # left-to-right fold, one vectorized add per dimension
-            D = np.zeros((n, k), dtype=np.float64)
-            for d in range(dim):
-                diff = X[:, d : d + 1] - C[None, :, d]
-                D += diff * diff
-            dmin = D.min(axis=1)
-            pick = D.argmin(axis=1)  # first minimum -> smallest cid
-            close = (D - dmin[:, None]) < 1.5e-6
-            for i in np.flatnonzero(close.sum(axis=1) > 1):
-                cand = np.flatnonzero(close[i])
-                pick[i] = min(cand, key=lambda j: (r6(D[i, j]), j))
+            X = vector_matrix(batch.column(vec_idx))[:, None, :]
+            # first minimum -> smallest cid
+            pick = round6(squared_l2_np(X, C)).argmin(axis=1)
             cells = pa.array(
                 [id_arr[j] for j in pick], type=pa.int32()
             )
@@ -221,19 +199,11 @@ def rp_lsh_search(
     bucket is small (the ANN recall trade, same as ef_search capping
     HNSW's candidate pool)."""
     c = corpus.withColumn("__bucket", rp_bucket(as_double_array(F.col(vec_col)), planes))
-    q = F.broadcast(
-        query.select(
-            as_double_array(F.col(vec_col)).alias("__q_vec"),
-        ).withColumn("__bucket", rp_bucket(F.col("__q_vec"), planes))
+    q = query_vec(query, vec_col).withColumn(
+        "__bucket", rp_bucket(F.col("__q_vec"), planes)
     )
-    return (
-        c.join(q, "__bucket")
-        .select(
-            F.col(id_col),
-            F.round(squared_l2(as_double_array(F.col(vec_col)), F.col("__q_vec")), 6).alias("dist"),
-        )
-        .orderBy(F.col("dist").asc(), F.col(id_col).asc())
-        .limit(k)
+    return exact_rerank(
+        c.join(q, "__bucket"), [F.col(id_col)], k, id_col=id_col, vec_col=vec_col
     )
 
 
@@ -291,19 +261,15 @@ def ivf_search(
     selection stays in the plan (``_probe_cells``) with the same rounded
     arithmetic as the oracle — nothing order-dependent crosses the
     engine boundary."""
-    q = F.broadcast(query.select(as_double_array(F.col(vec_col)).alias("__q_vec")))
+    q = query_vec(query, vec_col)
     probe = _probe_cells(q, centroids, nprobe)
     c = with_cells(corpus, centroids, vec_col)
-    return (
-        c.join(probe, "__cell")
-        .crossJoin(q)
-        .select(
-            F.col(id_col),
-            F.col("__cell").alias("cell"),
-            F.round(squared_l2(as_double_array(F.col(vec_col)), F.col("__q_vec")), 6).alias("dist"),
-        )
-        .orderBy(F.col("dist").asc(), F.col(id_col).asc())
-        .limit(k)
+    return exact_rerank(
+        c.join(probe, "__cell").crossJoin(q),
+        [F.col(id_col), F.col("__cell").alias("cell")],
+        k,
+        id_col=id_col,
+        vec_col=vec_col,
     )
 
 
@@ -340,20 +306,15 @@ def ivf_probe_partitioned(
     directories — the literal IN-filter reaches the scan as
     PartitionFilters, so IO is nprobe/ncells of the corpus.  Exact
     re-rank within the probed cells; same output as ivf_search."""
-    q = F.broadcast(query.select(as_double_array(F.col(vec_col)).alias("__q_vec")))
+    q = query_vec(query, vec_col)
     probe = [r["__cell"] for r in _probe_cells(q, centroids, nprobe).collect()]
     idx = spark.read.parquet(path).filter(F.col("cell").isin(probe))
-    return (
-        idx.crossJoin(q)
-        .select(
-            F.col(id_col),
-            F.col("cell").cast("int").alias("cell"),
-            F.round(
-                squared_l2(as_double_array(F.col(vec_col)), F.col("__q_vec")), 6
-            ).alias("dist"),
-        )
-        .orderBy(F.col("dist").asc(), F.col(id_col).asc())
-        .limit(k)
+    return exact_rerank(
+        idx.crossJoin(q),
+        [F.col(id_col), F.col("cell").cast("int").alias("cell")],
+        k,
+        id_col=id_col,
+        vec_col=vec_col,
     )
 
 
@@ -556,11 +517,25 @@ def pq_adc_search(
     a materialized 8-byte column and ADC reads ONLY that.  Table
     entries and the sum are DECIMAL(18,6) so the 8-term fold is exact
     and order-insensitive in both engines."""
-    tab = adc_distance_table(query, codebooks, vec_col)
     enc = corpus.select(
         F.col(id_col),
         pq_encode(as_double_array(F.col(vec_col)), codebooks).alias("__codes"),
     )
+    return _adc_topk(enc, query, codebooks, k, id_col, vec_col)
+
+
+def _adc_topk(
+    enc: DataFrame,
+    query: DataFrame,
+    codebooks: list[list[tuple[int, list[float]]]],
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(id, adc_dist) top-``k`` of ``enc`` (id, ``__codes``) by
+    (ADC distance, id): the distance is the DECIMAL(20,6) sum of one
+    :func:`adc_distance_table` entry per subspace."""
+    tab = adc_distance_table(query, codebooks, vec_col)
     adc = F.aggregate(
         F.zip_with(
             F.lit(list(range(1, len(codebooks) + 1))),
@@ -775,10 +750,8 @@ def ivfpq_rerank_search(
     touches.  Stage 2 fetches `shortlist` full vectors by id (a
     broadcast semi-join against a request-sized id list) — float
     vectors for exactly R rows, never the corpus."""
-    q = F.broadcast(query.select(as_double_array(F.col(vec_col)).alias("__q_vec")))
+    q = query_vec(query, vec_col)
     probe = _probe_cells(q, centroids, nprobe)
-    tab = adc_distance_table(query, codebooks, vec_col)
-    m = len(codebooks)
     # Stage 1: codes-only ADC over probed cells.
     enc = (
         with_cells(corpus, centroids, vec_col)
@@ -788,33 +761,14 @@ def ivfpq_rerank_search(
             pq_encode(as_double_array(F.col(vec_col)), codebooks).alias("__codes"),
         )
     )
-    adc = F.aggregate(
-        F.zip_with(
-            F.lit(list(range(1, m + 1))),
-            F.col("__codes"),
-            lambda s, c: F.element_at(F.element_at(tab, s), c),
-        ),
-        F.lit(0).cast("decimal(20,6)"),
-        lambda acc, v: (acc + v).cast("decimal(20,6)"),
-    )
-    short = (
-        enc.select(F.col(id_col), adc.cast("double").alias("adc_dist"))
-        .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
-        .limit(shortlist)
-        .select(id_col)
-    )
+    short = _adc_topk(enc, query, codebooks, shortlist, id_col, vec_col).select(id_col)
     # Stage 2: exact rerank of the R-row shortlist only.
-    return (
-        corpus.join(F.broadcast(short), id_col)
-        .crossJoin(q)
-        .select(
-            F.col(id_col),
-            F.round(
-                squared_l2(as_double_array(F.col(vec_col)), F.col("__q_vec")), 6
-            ).alias("dist"),
-        )
-        .orderBy(F.col("dist").asc(), F.col(id_col).asc())
-        .limit(k)
+    return exact_rerank(
+        corpus.join(F.broadcast(short), id_col).crossJoin(q),
+        [F.col(id_col)],
+        k,
+        id_col=id_col,
+        vec_col=vec_col,
     )
 
 
@@ -954,7 +908,7 @@ def ivf_recall_curve(
     for the largest budget (localCheckpoint) and each curve point is
     just a filter on the cell's probe rank + top-k + intersect with
     the exact answer — no re-scan per point."""
-    q = F.broadcast(query.select(as_double_array(F.col(vec_col)).alias("__q_vec")))
+    q = query_vec(query, vec_col)
     w = Window.orderBy(F.col("cdist").asc(), F.col("__cell").asc())
     cellrank = F.broadcast(
         _cell_dists(q, centroids)
@@ -962,21 +916,12 @@ def ivf_recall_curve(
         .filter(F.col("pr") <= max(nprobes))
         .select("__cell", "pr")
     )
-    cand = (
-        with_cells(corpus, centroids, vec_col)
-        .join(cellrank, "__cell")
-        .crossJoin(q)
-        .select(
-            F.col(id_col),
-            F.col("pr"),
-            F.round(
-                squared_l2(as_double_array(F.col(vec_col)), F.col("__q_vec")), 6
-            ).alias("dist"),
-        )
-        .localCheckpoint()
+    cand, name, asc = exact_scores(
+        with_cells(corpus, centroids, vec_col).join(cellrank, "__cell").crossJoin(q),
+        [F.col(id_col), F.col("pr")],
+        vec_col=vec_col,
     )
-    from .knn import knn_topk
-
+    cand = cand.localCheckpoint()
     # k-row exact answer pinned once (r08): un-checkpointed it re-ran
     # the exact corpus top-k inside every curve point's join
     exact_ids = (
@@ -986,7 +931,7 @@ def ivf_recall_curve(
     for np_ in nprobes:
         topk = (
             cand.filter(F.col("pr") <= np_)
-            .orderBy(F.col("dist").asc(), F.col(id_col).asc())
+            .orderBy(*rank_order(name, asc, id_col))
             .limit(k)
         )
         row = (
@@ -1126,30 +1071,22 @@ def adaptive_filtered_search(
     ``strategy`` so callers (and the oracle, which replays the same
     CASE over the same count) can see which plan served the request.
     Both branches: f64 math, ROUND 6, id tiebreak."""
-    from .knn import knn_topk
-
     pred = F.col("label") == label_value
     n_match = corpus.filter(pred).count()
     if n_match <= sel_threshold:
         return knn_topk(corpus, query, k, "sqL2", pred=pred).select(
             id_col, "dist", F.lit("prefilter_exact").alias("strategy")
         )
-    q = F.broadcast(query.select(as_double_array(F.col(vec_col)).alias("__q_vec")))
+    q = query_vec(query, vec_col)
     probe = _probe_cells(q, centroids, nprobe)
     c = with_cells(corpus, centroids, vec_col)
-    return (
-        c.join(probe, "__cell")
-        .filter(pred)
-        .crossJoin(q)
-        .select(
-            F.col(id_col),
-            F.round(
-                squared_l2(as_double_array(F.col(vec_col)), F.col("__q_vec")), 6
-            ).alias("dist"),
-            F.lit("ivf_postfilter").alias("strategy"),
-        )
-        .orderBy(F.col("dist").asc(), F.col(id_col).asc())
-        .limit(k)
+    return exact_rerank(
+        c.join(probe, "__cell").filter(pred).crossJoin(q),
+        [F.col(id_col)],
+        k,
+        id_col=id_col,
+        vec_col=vec_col,
+        extra=(F.lit("ivf_postfilter").alias("strategy"),),
     )
 
 
@@ -1342,8 +1279,6 @@ def matryoshka_recall(
     per-partition heaps; the rerank joins the corpus against a
     BROADCAST shortlist (mult*k rows), so full vectors are fetched for
     only the shortlist."""
-    from .knn import knn_topk
-
     # k-row exact answer pinned once (r08): both recall rows join it,
     # and un-checkpointed each re-ran the exact corpus top-k
     exact = knn_topk(
@@ -1672,6 +1607,28 @@ GRAPH_BEAM = 4  # frontier width per hop (the ef_search analog)
 GRAPH_HOPS = 3  # fixed traversal depth — deterministic, oracle-unrollable
 
 
+def _cell_topg(g: int):
+    """applyInPandas kernel over one cell's members (``_gid``, ``_gv``):
+    every member's ``g`` nearest other members by (ROUND-6 squared L2,
+    id) as (src, nbr, dist) — the NumPy twins of the expression, so the
+    edges equal the pair-join form's."""
+
+    def cell_topg(pdf):
+        import pandas as pd
+
+        ids = pdf["_gid"].to_numpy()
+        if len(ids) < 2:
+            return pd.DataFrame({"src": [], "nbr": [], "dist": []}).astype(
+                {"src": "int64", "nbr": "int64", "dist": "float64"}
+            )
+        X = vector_matrix(pdf["_gv"])
+        R = round6(squared_l2_np(X[:, None], X[None]))
+        si, ni = topk_np(R, ids, g, self_ids=ids)
+        return pd.DataFrame({"src": ids[si], "nbr": ids[ni], "dist": R[si, ni]})
+
+    return cell_topg
+
+
 def knn_graph_navigable(
     emb: DataFrame,
     cents: list[tuple[int, list[float]]],
@@ -1689,16 +1646,14 @@ def knn_graph_navigable(
 
     Scale: membership is |corpus| x assign rows; the pair space is
     sum(cell_multiset²) — never n² — and it is scored INSIDE a per-cell
-    applyInPandas kernel (dimension-ordered NumPy accumulation, same
-    bit-parity contract as cells_arrow), so the only
+    applyInPandas kernel (:func:`_cell_topg`, the expression's NumPy
+    twins), so the only
     rows that ever cross an exchange are memberships in and per-source
     top-g candidate edges out — the vector-carrying pair join that
     would otherwise move sum(cell²) x 2 arrays never materializes.
     Shuffle keys: cell id, then src for the final top-g rank-limit
     window over <= assign*g candidates per source.  Output edge table
     (src vec_id, nbr_id, dist, rnk) is the graph-ANN index artifact."""
-    from ..functions.vector import as_double_array, squared_l2
-
     spark = emb.sparkSession
     cdf = F.broadcast(
         local_frame(
@@ -1722,44 +1677,8 @@ def knn_graph_navigable(
         .select("_gid", F.col("cid").alias("_gcell"), "_gv")
     )
 
-    def cell_topg(pdf):
-        import numpy as np
-        import pandas as pd
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q6 = Decimal("0.000001")
-        ids = pdf["_gid"].to_numpy()
-        n = len(ids)
-        if n < 2:
-            return pd.DataFrame({"src": [], "nbr": [], "dist": []}).astype(
-                {"src": "int64", "nbr": "int64", "dist": "float64"}
-            )
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_gv"]])
-        D = np.zeros((n, n), dtype=np.float64)
-        for d in range(X.shape[1]):
-            diff = X[:, d][:, None] - X[None, :, d]
-            D += diff * diff
-        scaled = D * 1e6
-        R = np.floor(scaled + 0.5) / 1e6
-        frac = np.abs(scaled - np.floor(scaled) - 0.5)
-        for i, j in zip(*np.nonzero(frac < 1e-8)):
-            R[i, j] = float(
-                Decimal(repr(float(D[i, j]))).quantize(q6, ROUND_HALF_UP)
-            )
-        keep = min(g, n - 1)
-        src, nbr, dist = [], [], []
-        for i in range(n):
-            row = R[i]
-            cand = [(row[j], ids[j]) for j in range(n) if j != i]
-            cand.sort()
-            for dv, jid in cand[:keep]:
-                src.append(ids[i])
-                nbr.append(jid)
-                dist.append(dv)
-        return pd.DataFrame({"src": src, "nbr": nbr, "dist": dist})
-
     cell_edges = member.groupBy("_gcell").applyInPandas(
-        cell_topg, schema="src long, nbr long, dist double"
+        _cell_topg(g), schema="src long, nbr long, dist double"
     )
     # a pair sharing BOTH cells appears once per shared cell — collapse
     # by key (dist identical; min is just the dedupe), then the global
@@ -2216,8 +2135,6 @@ def graph_index_upsert_audit(
     # assign_cells(base) below stands in for reading the stored
     # assignment table of the built index — a real system reads state,
     # it does not rescore (same caveat ivf_index_upsert_audit states).
-    from ..functions.vector import as_double_array
-
     def assign_cells(df: DataFrame) -> DataFrame:
         return graph_cell_assignments(
             df, cents, assign=assign, id_col=id_col, vec_col=vec_col
@@ -2261,38 +2178,9 @@ def graph_index_upsert_audit(
                 as_double_array(F.col(vec_col)).alias("_gv"))
     )
 
-    def cell_topg(pdf):
-        import numpy as np
-        import pandas as pd
-        from ..operators.knn import _round6_np
-
-        ids = pdf["_gid"].to_numpy()
-        n = len(ids)
-        if n < 2:
-            return pd.DataFrame({"src": [], "nbr": [], "dist": []}).astype(
-                {"src": "int64", "nbr": "int64", "dist": "float64"}
-            )
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_gv"]])
-        D = np.zeros((n, n), dtype=np.float64)
-        for d in range(X.shape[1]):
-            diff = X[:, d][:, None] - X[None, :, d]
-            D += diff * diff
-        R = _round6_np(D)
-        keep = min(g, n - 1)
-        src, nbr, dist = [], [], []
-        for i in range(n):
-            row = R[i]
-            cand = [(row[j], ids[j]) for j in range(n) if j != i]
-            cand.sort()
-            for dv, jid in cand[:keep]:
-                src.append(ids[i])
-                nbr.append(jid)
-                dist.append(dv)
-        return pd.DataFrame({"src": src, "nbr": nbr, "dist": dist})
-
     fresh = (
         members.groupBy("cell")
-        .applyInPandas(cell_topg, schema="src long, nbr long, dist double")
+        .applyInPandas(_cell_topg(g), schema="src long, nbr long, dist double")
         .groupBy("src", "nbr")
         .agg(F.min("dist").alias("dist"))
     )
@@ -2378,15 +2266,11 @@ def rp_multiprobe_search(
     Plan: bucket assignment stays a zero-shuffle scan expression; the
     probe set is a broadcast (|planes|+1)-row frame; candidates
     re-rank exactly, TakeOrdered top-k."""
-    from ..functions.vector import as_double_array, squared_l2
-
     c = corpus.withColumn(
         "__bucket", rp_bucket(as_double_array(F.col(vec_col)), planes)
     )
-    q = F.broadcast(
-        query.select(as_double_array(F.col(vec_col)).alias("__q_vec")).withColumn(
-            "__qb", rp_bucket(F.col("__q_vec"), planes)
-        )
+    q = query_vec(query, vec_col).withColumn(
+        "__qb", rp_bucket(F.col("__q_vec"), planes)
     )
     flips = F.array(
         F.col("__qb"),
@@ -2398,18 +2282,12 @@ def rp_multiprobe_search(
     probes = q.select(
         "__q_vec", F.explode(flips).alias("__probe")
     )
-    return (
-        c.join(F.broadcast(probes), F.col("__bucket") == F.col("__probe"))
-        .select(
-            F.col(id_col),
-            F.round(
-                squared_l2(as_double_array(F.col(vec_col)), F.col("__q_vec")), 6
-            ).alias("dist"),
-        )
-        .distinct()
-        .orderBy(F.col("dist").asc(), F.col(id_col).asc())
-        .limit(k)
+    scored, name, asc = exact_scores(
+        c.join(F.broadcast(probes), F.col("__bucket") == F.col("__probe")),
+        [F.col(id_col)],
+        vec_col=vec_col,
     )
+    return scored.distinct().orderBy(*rank_order(name, asc, id_col)).limit(k)
 
 
 CKA_DIM_FULL = 64

@@ -30,14 +30,19 @@ Physical plan at scale (the 100-TB design point):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import (
     as_double_array,
     cosine_similarity,
+    cosine_similarity_np,
     dot_product,
+    round6,
     squared_l2,
+    squared_l2_np,
+    vector_matrix,
 )
 
 # metric -> (score expression, ascending?)  Squared-L2 is a distance
@@ -63,9 +68,51 @@ def ne_filter(field: str, value) -> Column:
     return F.col(field).isNotNull() & (F.col(field) != F.lit(value))
 
 
-def score_col(metric: str, vec_a: Column, vec_b: Column) -> tuple[Column, bool]:
+def query_vec(query: DataFrame, vec_col: str = "embedding", *keys: Column) -> DataFrame:
+    """The broadcast query side of every exact scorer: ``keys`` and the
+    query vector as ``array<double>`` column ``__q_vec``."""
+    return F.broadcast(
+        query.select(*keys, as_double_array(F.col(vec_col)).alias("__q_vec"))
+    )
+
+
+def exact_scores(
+    joined: DataFrame,
+    keep: list[Column],
+    metric: str = "sqL2",
+    vec_col: str = "embedding",
+    extra: tuple[Column, ...] = (),
+) -> tuple[DataFrame, str, bool]:
+    """``keep``, then ``ROUND(score(vec_col, __q_vec), 6)`` named
+    ``dist`` (ascending metrics) or ``sim``, then ``extra``, for a
+    frame joined to :func:`query_vec`.  Returns the frame, the score
+    name and whether it ranks ascending."""
     fn, asc = METRICS[metric]
-    return fn(vec_a, vec_b), asc
+    name = "dist" if asc else "sim"
+    score = F.round(fn(as_double_array(F.col(vec_col)), F.col("__q_vec")), 6)
+    return joined.select(*keep, score.alias(name), *extra), name, asc
+
+
+def rank_order(name: str, asc: bool, id_col: str = "vec_id") -> list[Column]:
+    """Rank on the ROUNDED score, id tiebreak (FIXTURES.md §C)."""
+    return [F.col(name).asc() if asc else F.col(name).desc(), F.col(id_col).asc()]
+
+
+def exact_rerank(
+    joined: DataFrame,
+    keep: list[Column],
+    k: int,
+    metric: str = "sqL2",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    extra: tuple[Column, ...] = (),
+) -> DataFrame:
+    """The exact re-rank every search ends in: :func:`exact_scores`,
+    then the top ``k`` by :func:`rank_order`.  ``orderBy().limit(k)``
+    plans as ``TakeOrderedAndProject``: per-partition heaps, no corpus
+    shuffle."""
+    scored, name, asc = exact_scores(joined, keep, metric, vec_col, extra)
+    return scored.orderBy(*rank_order(name, asc, id_col)).limit(k)
 
 
 def knn_topk(
@@ -86,21 +133,14 @@ def knn_topk(
     (FIXTURES.md §C).
     """
     df = corpus.filter(pred) if pred is not None else corpus
-    q = F.broadcast(query.select(as_double_array(F.col(vec_col)).alias("__q_vec")))
-    score, asc = score_col(metric, as_double_array(F.col(vec_col)), F.col("__q_vec"))
-    name = "dist" if asc else "sim"
-    scored = df.crossJoin(q).select(
-        F.col(id_col),
-        F.col("label"),
-        F.round(score, 6).alias(name),
+    return exact_rerank(
+        df.crossJoin(query_vec(query, vec_col)),
+        [F.col(id_col), F.col("label")],
+        k,
+        metric,
+        id_col,
+        vec_col,
     )
-    order = [F.col(name).asc(), F.col(id_col).asc()] if asc else [
-        F.col(name).desc(),
-        F.col(id_col).asc(),
-    ]
-    # orderBy().limit(k) => TakeOrderedAndProject: per-partition heaps,
-    # no corpus shuffle.
-    return scored.orderBy(*order).limit(k)
 
 
 def knn_join(
@@ -123,28 +163,76 @@ def knn_join(
     Output: (query_id, vec_id, dist|sim, rnk).
     """
     df = corpus.filter(pred) if pred is not None else corpus
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias(query_id_col),
-            as_double_array(F.col(vec_col)).alias("__q_vec"),
-        )
+    q = query_vec(queries, vec_col, F.col(id_col).alias(query_id_col))
+    scored, name, asc = exact_scores(
+        df.crossJoin(q), [F.col(query_id_col), F.col(id_col)], metric, vec_col
     )
-    score, asc = score_col(metric, as_double_array(F.col(vec_col)), F.col("__q_vec"))
-    name = "dist" if asc else "sim"
-    scored = df.crossJoin(q).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(score, 6).alias(name),
-    )
-    order = [F.col(name).asc(), F.col(id_col).asc()] if asc else [
-        F.col(name).desc(),
-        F.col(id_col).asc(),
-    ]
-    w = Window.partitionBy(query_id_col).orderBy(*order)
+    w = Window.partitionBy(query_id_col).orderBy(*rank_order(name, asc, id_col))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
     )
+
+
+def topk_np(R, ids, k: int, self_ids=None):
+    """Per row of a rounded score block ``R`` (rows x len(ids)): the
+    ``k`` columns with the smallest (score, id), skipping the column
+    whose id is the row's ``self_ids`` entry when given.  Returns flat
+    (row, column) index arrays, rows in order.  Rounding comes before
+    selection, so per-block top-k then a global re-rank on (score, id)
+    is exactly the global top-k."""
+    rows, cols = [], []
+    for i in range(R.shape[0]):
+        cand = (
+            np.arange(len(ids))
+            if self_ids is None
+            else np.flatnonzero(ids != self_ids[i])
+        )
+        sel = cand[np.lexsort((ids[cand], R[i, cand]))[:k]]
+        rows.append(np.full(len(sel), i))
+        cols.append(sel)
+    return np.concatenate(rows), np.concatenate(cols)
+
+
+def _shard_candidates(
+    corpus: DataFrame,
+    qmat: list[list[float]],
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str | None = None,
+    qids: list[int] | None = None,
+) -> DataFrame:
+    """The NumPy scan shared by the shard k-NN paths: per Arrow batch of
+    the corpus, each query's local top-k by (ROUND-6 squared L2, id), so
+    at most k * #batches rows per query leave the scan stage.  The
+    query matrix rides in the task closure (request-sized, like the
+    reference's one JSON body, src/faiss_index.cc:35-47).  Rows are
+    ``(query_id_col,) id_col, dist``; the query id column is present
+    only when ``query_id_col`` is given."""
+    import pandas as pd
+
+    from ..sources.loaders import fan_out
+
+    def local_topk(it):
+        Q = np.asarray(qmat, dtype=np.float64)[:, None, :]  # (nq, 1, d)
+        qid = np.asarray(qids)
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            ids = pdf[id_col].to_numpy()
+            M = vector_matrix(pdf[vec_col])
+            R = round6(squared_l2_np(Q, M[None, :, :]))  # (nq, n)
+            qi, ci = topk_np(R, ids, k)
+            out = {id_col: ids[ci], "dist": R[qi, ci]}
+            if query_id_col:
+                out = {query_id_col: qid[qi], **out}
+            yield pd.DataFrame(out)
+
+    schema = f"{id_col} long, dist double"
+    if query_id_col:
+        schema = f"{query_id_col} long, " + schema
+    return fan_out(corpus.select(id_col, vec_col)).mapInPandas(local_topk, schema)
 
 
 def knn_shard_topk(
@@ -159,39 +247,17 @@ def knn_shard_topk(
     is compute-bound.
 
     Physical shape: the corpus is scanned shard-by-shard; each Arrow
-    batch computes all its squared-L2 distances in one vectorized
-    ``((M - q)**2).sum(axis=1)`` and forwards only its local top-k, so
-    at most k * #batches candidate rows leave the scan stage; a final
-    ``TakeOrderedAndProject`` merges them.  Exactly the reference's
-    FLAT search (src/faiss_index.cc:32-58) — FAISS's SIMD kernel
-    becomes a NumPy kernel per shard, its result heap becomes the
-    global top-k merge.  Semantics (and the oracle) are identical to
-    knn_topk: ascending rounded distance, id tiebreak.
-
-    The query vector rides in the task closure (request-sized, like an
-    MLlib model broadcast) — the corpus is never collected."""
-    import numpy as np
-    import pandas as pd
-
-    from ..sources.loaders import fan_out
-
-    qrow = query.select(vec_col).head()
-    qv = [float(x) for x in qrow[0]]
-
-    def local_topk(it):
-        q = np.asarray(qv, dtype=np.float64)
-        for pdf in it:
-            m = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            d = np.round(((m - q) ** 2).sum(axis=1), 6)
-            ids = pdf[id_col].to_numpy()
-            sel = np.lexsort((ids, d))[:k]
-            yield pd.DataFrame({id_col: ids[sel], "dist": d[sel]})
-
-    local = fan_out(corpus.select(id_col, vec_col)).mapInPandas(
-        local_topk, schema=f"{id_col} long, dist double"
-    )
+    batch scores all its rows at once (:func:`_shard_candidates`) and
+    forwards only its local top-k; a final ``TakeOrderedAndProject``
+    merges them.  Exactly the reference's FLAT search
+    (src/faiss_index.cc:32-58) — FAISS's SIMD kernel becomes a NumPy
+    kernel per shard, its result heap becomes the global top-k merge.
+    The kernel folds and rounds with the NumPy twins of the expression
+    (``functions.vector``), so rows and distances equal knn_topk's:
+    ascending rounded distance, id tiebreak.  The corpus is never
+    collected."""
+    qv = [float(x) for x in query.select(vec_col).head()[0]]
+    local = _shard_candidates(corpus, [qv], k, id_col, vec_col)
     return local.orderBy(F.col("dist").asc(), F.col(id_col).asc()).limit(k)
 
 
@@ -207,44 +273,21 @@ def knn_shard_join(
     form of knn_join for when the query batch is large enough that the
     per-pair expression path is compute-bound.
 
-    Per Arrow batch: one ``((M[:,None,:] - Q)**2).sum(-1)`` computes
-    the full batch-x-queries distance block (the direct subtract-square
-    form, NOT the |x|^2+|y|^2-2xy expansion, so the floating-point
-    terms match the expression form and the oracle); each query column
-    forwards its local top-k.  Measured 2.2x faster than the
-    expression form at 64 queries x 100k vectors x dim 64 on
-    local[32]; the gap widens with the query count.  Global: rank-limit window per query —
-    only k * #batches rows per query ever shuffle.  The query matrix
-    rides in the task closure (request-sized, like the reference's one
-    JSON body, src/faiss_index.cc:35-47)."""
-    import numpy as np
-    import pandas as pd
-
-    from ..sources.loaders import fan_out
-
+    Per Arrow batch, :func:`_shard_candidates` scores the whole
+    batch-x-queries block with the expression's NumPy twins and
+    forwards each query's local top-k.  Measured 2.2x faster than the
+    expression form at 64 queries x 100k vectors x dim 64 on local[32];
+    the gap widens with the query count.  Global: rank-limit window per
+    query — only k * #batches rows per query ever shuffle."""
     qrows = queries.select(id_col, vec_col).collect()
-    qids = [int(r[0]) for r in qrows]
-    qmat = [[float(x) for x in r[1]] for r in qrows]
-
-    def local_topk(it):
-        q = np.asarray(qmat, dtype=np.float64)  # (nq, d)
-        qid = np.asarray(qids)
-        for pdf in it:
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            d = np.round(((m[:, None, :] - q[None, :, :]) ** 2).sum(-1), 6)  # (n, nq)
-            ids = pdf[id_col].to_numpy()
-            out_q, out_i, out_d = [], [], []
-            for j in range(d.shape[1]):
-                sel = np.lexsort((ids, d[:, j]))[:k]
-                out_q.extend([qid[j]] * len(sel))
-                out_i.extend(ids[sel])
-                out_d.extend(d[sel, j])
-            yield pd.DataFrame(
-                {query_id_col: out_q, id_col: out_i, "dist": out_d}
-            )
-
-    local = fan_out(corpus.select(id_col, vec_col)).mapInPandas(
-        local_topk, schema=f"{query_id_col} long, {id_col} long, dist double"
+    local = _shard_candidates(
+        corpus,
+        [[float(x) for x in r[1]] for r in qrows],
+        k,
+        id_col,
+        vec_col,
+        query_id_col,
+        [int(r[0]) for r in qrows],
     )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("dist").asc(), F.col(id_col).asc()
@@ -320,11 +363,11 @@ def radius_search(
     Plan: broadcast 1-row query x corpus scan -> filter; no shuffle,
     no sort — strictly cheaper than top-k at scale."""
     df = corpus.filter(pred) if pred is not None else corpus
-    q = F.broadcast(query.select(as_double_array(F.col(vec_col)).alias("__q_vec")))
-    score, asc = score_col(metric, as_double_array(F.col(vec_col)), F.col("__q_vec"))
-    name = "dist" if asc else "sim"
-    scored = df.crossJoin(q).select(
-        F.col(id_col), F.col("label"), F.round(score, 6).alias(name)
+    scored, name, asc = exact_scores(
+        df.crossJoin(query_vec(query, vec_col)),
+        [F.col(id_col), F.col("label")],
+        metric,
+        vec_col,
     )
     keep = F.col(name) <= radius if asc else F.col(name) >= radius
     return scored.filter(keep)
@@ -351,11 +394,10 @@ def label_maxsim_topk(
     per-group index probe.  The mean folds DECIMAL-cast rounded sims
     (exact, order-insensitive); max needs no such care (same winner in
     any order)."""
-    q = F.broadcast(query.select(as_double_array(F.col(vec_col)).alias("__q_vec")))
     sim = F.round(
         cosine_similarity(as_double_array(F.col(vec_col)), F.col("__q_vec")), 6
     )
-    scored = corpus.crossJoin(q).select(
+    scored = corpus.crossJoin(query_vec(query, vec_col)).select(
         F.col(label_col), sim.cast("decimal(10,6)").alias("_sim")
     )
     return (
@@ -727,26 +769,6 @@ ALLPAIRS_SAMPLE_CAP = 65536  # decimate corpora above this before all-pairs
 ALLPAIRS_BLOCK_ROWS = 1024  # target corpus rows per block-pair task
 
 
-def _round6_np(D):
-    """ROUND(x, 6) over a float64 ndarray with the bit-parity contract
-    of Spark's java BigDecimal HALF_UP: floor(x*1e6+0.5)/1e6 fast path,
-    Decimal(repr(x)) fallback within 1e-8 of a .5 boundary (the same
-    recipe as :func:`ann.cells_arrow`)."""
-    import numpy as np
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q6 = Decimal("0.000001")
-    scaled = D * 1e6
-    R = np.floor(scaled + 0.5) / 1e6
-    frac = scaled - np.floor(scaled)
-    risky = np.abs(frac - 0.5) < 1e-8
-    for i, j in zip(*np.nonzero(risky)):
-        R[i, j] = float(
-            Decimal(repr(float(D[i, j]))).quantize(q6, ROUND_HALF_UP)
-        )
-    return R
-
-
 def _decimated(corpus: DataFrame, cols: list[str]) -> tuple[DataFrame, int]:
     """Deterministic decimation cap for the all-pairs diagnostic family
     (VERDICT r02 item 2): exact all-pairs is quadratic, so corpora over
@@ -763,92 +785,118 @@ def _decimated(corpus: DataFrame, cols: list[str]) -> tuple[DataFrame, int]:
     return src, n
 
 
+def _tile_pairs(
+    src: DataFrame, n: int, tile, schema: str, *extra: Column
+) -> DataFrame:
+    """The blocked all-pairs plan every tile kernel runs on: ``src``
+    (``vec_id``, ``embedding``, ...) splits into ``nb = ceil(n / 1024)``
+    blocks on ``pmod(vec_id, nb)`` (sign-safe for any id), and every
+    (query-block, corpus-block) pair is one cogrouped
+    ``applyInPandas(tile, schema)`` task over a ~1024 x 1024 tile.  The
+    inputs shuffle nb-replicated rows — left ``(qid, qemb)``, right
+    ``(cid, cemb, *extra)`` — and only the tile's output (candidates,
+    partials or a count, never vectors) reaches the next exchange.  No
+    driver collect and no full-matrix task closures (VERDICT r02 item
+    2)."""
+    nb = max(1, -(-n // ALLPAIRS_BLOCK_ROWS))
+    bids = src.sparkSession.range(nb)
+
+    def side(me: str, other: str, *cols: Column) -> DataFrame:
+        return src.select(
+            F.col("vec_id").alias(f"{me}id"),
+            F.col("embedding").alias(f"{me}emb"),
+            *cols,
+            F.pmod(F.col("vec_id"), nb).alias(f"{me}b"),
+        ).crossJoin(F.broadcast(bids.select(F.col("id").alias(f"{other}b"))))
+
+    return (
+        side("q", "c")
+        .groupBy("qb", "cb")
+        .cogroup(side("c", "q", *extra).groupBy("qb", "cb"))
+        .applyInPandas(tile, schema)
+    )
+
+
+def _tile_block(left, right):
+    """A tile's two vector blocks, shaped to broadcast into the (left x
+    right) pair block: ``(nq, 1, d)`` and ``(1, nc, d)``."""
+    return vector_matrix(left["qemb"])[:, None, :], vector_matrix(right["cemb"])[None]
+
+
 def allpairs_topk_arrow(corpus: DataFrame, k: int) -> DataFrame:
     """Distributed BRUTE-FORCE all-pairs top-k for the evaluation suite
     (LOO accuracy, two-NN ID, kNN-OOD, hubness) — a blocked k-NN
-    self-join: the corpus is split into ``nb = ceil(n / 1024)`` blocks
-    on ``pmod(vec_id, nb)``, every (query-block, corpus-block) pair is one
-    cogrouped applyInPandas task scoring a ~1024 x 1024 tile at BLAS
-    speed, per-tile top-k candidates shuffle (ids + distances only,
-    never vectors), and a per-qid rank window merges the nb*k
-    candidates into the exact global top-k.  No driver collect and no
-    full-matrix task closures (VERDICT r02 item 2); the quadratic tile
-    grid is bounded by the deterministic :func:`_decimated` stride cap,
-    which both engines' oracle SQL states.
+    self-join on :func:`_tile_pairs`: each tile keeps every query's
+    top-k candidates (ids + distances only), and a per-qid rank window
+    merges the nb*k candidates into the exact global top-k.  The
+    quadratic tile grid is bounded by the deterministic
+    :func:`_decimated` stride cap, which both engines' oracle SQL
+    states.
 
     Bit-parity contract with the expression form (crossJoin +
-    zip_with/aggregate + ROUND 6 + (d, cid) row_number):
-
-    - distances accumulate dimension-by-dimension left-to-right in
-      f64 — identical doubles to Spark's aggregate() fold;
-    - ROUND(d, 6) via :func:`_round6_np`;
-    - top-k by (rounded d, cid) lexicographic — identical tiebreak,
-      and per-tile top-k then re-rank is exactly the global top-k
-      because rounding happens before any selection.
+    zip_with/aggregate + ROUND 6 + (d, cid) row_number): the tile
+    scores with the NumPy twins ``squared_l2_np`` and ``round6``, and
+    :func:`topk_np` selects by (rounded d, cid).
 
     Returns (qid, cid, d, rnk) with rnk in 1..k, self-pairs excluded.
     """
-    import numpy as np
     import pandas as pd
 
-    spark = corpus.sparkSession
     src, n = _decimated(corpus, ["vec_id", "embedding"])
-    nb = max(1, -(-n // ALLPAIRS_BLOCK_ROWS))
-    bids = spark.range(nb).select(F.col("id").alias("_b"))
-    q = src.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qemb"),
-        F.pmod(F.col("vec_id"), nb).alias("qb"),
-    ).crossJoin(F.broadcast(bids.select(F.col("_b").alias("cb"))))
-    c = src.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cemb"),
-        F.pmod(F.col("vec_id"), nb).alias("cb"),
-    ).crossJoin(F.broadcast(bids.select(F.col("_b").alias("qb"))))
 
     def score_tile(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"qid": [], "cid": [], "d": []})
         if len(left) == 0 or len(right) == 0:
-            return empty.astype({"qid": "int64", "cid": "int64", "d": "float64"})
-        right = right.sort_values("cid")
-        ids_np = right["cid"].to_numpy(dtype=np.int64)
-        mat = np.stack(right["cemb"].to_numpy()).astype(np.float64)
-        qid_arr = left["qid"].to_numpy(dtype=np.int64)
-        X = np.stack(left["qemb"].to_numpy()).astype(np.float64)
-        nq = len(qid_arr)
-        D = np.zeros((nq, len(ids_np)), dtype=np.float64)
-        for d_ in range(mat.shape[1]):
-            diff = X[:, d_ : d_ + 1] - mat[None, :, d_]
-            D += diff * diff
-        R = _round6_np(D)
-        qs, cs, ds = [], [], []
-        for i in range(nq):
-            qid = int(qid_arr[i])
-            mask = ids_np != qid
-            cand_ids = ids_np[mask]
-            cand_d = R[i, mask]
-            order = np.lexsort((cand_ids, cand_d))[:k]
-            for oi in order:
-                qs.append(qid)
-                cs.append(int(cand_ids[oi]))
-                ds.append(float(cand_d[oi]))
-        return pd.DataFrame(
-            {
-                "qid": np.asarray(qs, dtype=np.int64),
-                "cid": np.asarray(cs, dtype=np.int64),
-                "d": np.asarray(ds, dtype=np.float64),
-            }
-        )
+            return pd.DataFrame({"qid": [], "cid": [], "d": []}).astype(
+                {"qid": "int64", "cid": "int64", "d": "float64"}
+            )
+        qids = left["qid"].to_numpy(dtype=np.int64)
+        cids = right["cid"].to_numpy(dtype=np.int64)
+        R = round6(squared_l2_np(*_tile_block(left, right)))
+        qi, ci = topk_np(R, cids, k, self_ids=qids)
+        return pd.DataFrame({"qid": qids[qi], "cid": cids[ci], "d": R[qi, ci]})
 
-    cand = (
-        q.groupBy("qb", "cb")
-        .cogroup(c.groupBy("qb", "cb"))
-        .applyInPandas(score_tile, "qid long, cid long, d double")
-    )
+    cand = _tile_pairs(src, n, score_tile, "qid long, cid long, d double")
     w = Window.partitionBy("qid").orderBy(F.col("d").asc(), F.col("cid").asc())
     return cand.withColumn("rnk", F.row_number().over(w).cast("int")).filter(
         F.col("rnk") <= k
     )
+
+
+def _pair_scores(
+    corpus: DataFrame,
+    threshold: float,
+    metric: str,
+    id_col: str,
+    vec_col: str,
+    emit,
+    schema: str,
+) -> DataFrame:
+    """All pairs past ``threshold`` on :func:`_tile_pairs`, no
+    decimation: ``metric='euclid'`` keeps ROUND(SQRT(sqL2), 6) <
+    threshold, ``'cosine'`` keeps ROUND(cosine, 6) >= threshold — the
+    strict-less / at-least conventions of the expression forms they
+    stand in for, scored with their NumPy twins.  Each unordered pair
+    counts once (qid < cid).  Every tile returns
+    ``emit(qids, cids, scores, hit)``."""
+    if metric not in ("euclid", "cosine"):
+        raise ValueError(f"unsupported metric: {metric}")
+    src = corpus.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+    )
+
+    def tile(left, right):
+        qids = left["qid"].to_numpy(dtype=np.int64)
+        cids = right["cid"].to_numpy(dtype=np.int64)
+        if len(qids) == 0 or len(cids) == 0:
+            S = np.empty((len(qids), len(cids)))
+        elif metric == "euclid":
+            S = round6(np.sqrt(squared_l2_np(*_tile_block(left, right))))
+        else:
+            S = round6(cosine_similarity_np(*_tile_block(left, right)))
+        hit = S < threshold if metric == "euclid" else S >= threshold
+        return emit(qids, cids, S, (qids[:, None] < cids[None, :]) & hit)
+
+    return _tile_pairs(src, src.count(), tile, schema)
 
 
 def allpairs_threshold_count_arrow(
@@ -859,81 +907,18 @@ def allpairs_threshold_count_arrow(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact COUNT of unordered pairs past a distance/similarity
-    threshold — the ground-truth side of the LSH-join and
-    blocked-recall contract checks, as the same blocked cogrouped tile
-    plan as :func:`allpairs_topk_arrow`: ceil(n/1024)-way blocks on
-    ``pmod(vec_id, nb)`` (sign-safe for arbitrary id columns), one
-    ~1024x1024 numpy tile per block pair.  The tile INPUTS shuffle
-    nb-replicated (id, vector) rows — same as
-    :func:`allpairs_topk_arrow` — but the OUTPUT side ships only one
-    long count per tile (never pairs), so the reduce stage is
-    nb^2 rows.  Replaces a broadcast-NLJ + interpreted 64-dim HOF over
-    all ~n^2/2 pairs that cost ~6s warm at sf0.1 (2000 rows).
-
-    ``metric='euclid'`` counts ROUND(SQRT(SUM((x-y)^2)), 6) <
-    threshold; ``metric='cosine'`` counts ROUND(dot/(|x||y|), 6) >=
-    threshold — matching the strict-less / at-least conventions of the
-    expression forms they stand in for.
-
-    Bit-parity contract with the expression/SQL forms: dot products and
-    squared diffs accumulate dimension-by-dimension left-to-right in
-    f64, norms/sqrt in f64, then :func:`_round6_np` — identical doubles
-    to both engines' folds.  Counting is order-insensitive, so no
-    tiebreak is needed."""
-    import numpy as np
+    threshold (:func:`_pair_scores`) — the ground-truth side of the
+    LSH-join and blocked-recall contract checks.  Each tile ships one
+    long count (never pairs), so the reduce stage is nb^2 rows.
+    Replaces a broadcast-NLJ + interpreted 64-dim HOF over all ~n^2/2
+    pairs that cost ~6s warm at sf0.1 (2000 rows).  Counting is
+    order-insensitive, so no tiebreak is needed."""
     import pandas as pd
 
-    if metric not in ("euclid", "cosine"):
-        raise ValueError(f"unsupported metric: {metric}")
-    spark = corpus.sparkSession
-    src = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-    )
-    n = src.count()
-    nb = max(1, -(-n // ALLPAIRS_BLOCK_ROWS))
-    bids = spark.range(nb).select(F.col("id").alias("_b"))
-    a = src.select(
-        F.col("vec_id").alias("ia"),
-        F.col("embedding").alias("va"),
-        F.pmod(F.col("vec_id"), nb).alias("ab"),
-    ).crossJoin(F.broadcast(bids.select(F.col("_b").alias("bb"))))
-    b = src.select(
-        F.col("vec_id").alias("ib"),
-        F.col("embedding").alias("vb"),
-        F.pmod(F.col("vec_id"), nb).alias("bb"),
-    ).crossJoin(F.broadcast(bids.select(F.col("_b").alias("ab"))))
+    def count(qids, cids, S, hit):
+        return pd.DataFrame({"c": [int(hit.sum())]}, dtype="int64")
 
-    def count_tile(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({"c": pd.array([], dtype="int64")})
-        ia = left["ia"].to_numpy(dtype=np.int64)
-        X = np.stack(left["va"].to_numpy()).astype(np.float64)
-        ib = right["ib"].to_numpy(dtype=np.int64)
-        Y = np.stack(right["vb"].to_numpy()).astype(np.float64)
-        D = np.zeros((len(ia), len(ib)), dtype=np.float64)
-        if metric == "euclid":
-            for d_ in range(X.shape[1]):
-                diff = X[:, d_ : d_ + 1] - Y[None, :, d_]
-                D += diff * diff
-            E = _round6_np(np.sqrt(D))
-            hit = (ia[:, None] < ib[None, :]) & (E < threshold)
-        else:  # cosine
-            for d_ in range(X.shape[1]):
-                D += X[:, d_ : d_ + 1] * Y[None, :, d_]
-            nx = np.zeros(len(ia), dtype=np.float64)
-            ny = np.zeros(len(ib), dtype=np.float64)
-            for d_ in range(X.shape[1]):
-                nx += X[:, d_] * X[:, d_]
-                ny += Y[:, d_] * Y[:, d_]
-            S = _round6_np(D / (np.sqrt(nx)[:, None] * np.sqrt(ny)[None, :]))
-            hit = (ia[:, None] < ib[None, :]) & (S >= threshold)
-        return pd.DataFrame({"c": np.asarray([int(hit.sum())], dtype=np.int64)})
-
-    counts = (
-        a.groupBy("ab", "bb")
-        .cogroup(b.groupBy("ab", "bb"))
-        .applyInPandas(count_tile, "c long")
-    )
+    counts = _pair_scores(corpus, threshold, metric, id_col, vec_col, count, "c long")
     return counts.agg(
         F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_true_pairs")
     )
@@ -948,68 +933,17 @@ def allpairs_cosine_pairs_arrow(
     """All pairs with ROUND(cosine, 6) >= threshold, EMITTED as
     (ia, ib, sim) — the pair-set sibling of
     :func:`allpairs_threshold_count_arrow` for the brute-force
-    near-dup baseline: same blocked cogrouped tile plan, but each tile
-    ships its (sparse — near-dups are rare by construction) matching
-    pairs instead of a count.  Same bit-parity contract as the
-    expression form it replaces (dot and norms accumulate
-    dimension-by-dimension in f64, HALF_UP round-6 via
-    :func:`_round6_np`)."""
-    import numpy as np
+    near-dup baseline: each tile ships its (sparse — near-dups are rare
+    by construction) matching pairs instead of a count."""
     import pandas as pd
 
-    spark = corpus.sparkSession
-    src = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-    )
-    n = src.count()
-    nb = max(1, -(-n // ALLPAIRS_BLOCK_ROWS))
-    bids = spark.range(nb).select(F.col("id").alias("_b"))
-    a = src.select(
-        F.col("vec_id").alias("ia"),
-        F.col("embedding").alias("va"),
-        F.pmod(F.col("vec_id"), nb).alias("ab"),
-    ).crossJoin(F.broadcast(bids.select(F.col("_b").alias("bb"))))
-    b = src.select(
-        F.col("vec_id").alias("ib"),
-        F.col("embedding").alias("vb"),
-        F.pmod(F.col("vec_id"), nb).alias("bb"),
-    ).crossJoin(F.broadcast(bids.select(F.col("_b").alias("ab"))))
+    def pairs(qids, cids, S, hit):
+        ii, jj = hit.nonzero()
+        return pd.DataFrame({"ia": qids[ii], "ib": cids[jj], "sim": S[ii, jj]})
 
-    def pair_tile(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "ia": pd.array([], dtype="int64"),
-                "ib": pd.array([], dtype="int64"),
-                "sim": pd.array([], dtype="float64"),
-            }
-        )
-        if len(left) == 0 or len(right) == 0:
-            return empty
-        ia = left["ia"].to_numpy(dtype=np.int64)
-        X = np.stack(left["va"].to_numpy()).astype(np.float64)
-        ib = right["ib"].to_numpy(dtype=np.int64)
-        Y = np.stack(right["vb"].to_numpy()).astype(np.float64)
-        D = np.zeros((len(ia), len(ib)), dtype=np.float64)
-        for d_ in range(X.shape[1]):
-            D += X[:, d_ : d_ + 1] * Y[None, :, d_]
-        nx = np.zeros(len(ia), dtype=np.float64)
-        ny = np.zeros(len(ib), dtype=np.float64)
-        for d_ in range(X.shape[1]):
-            nx += X[:, d_] * X[:, d_]
-            ny += Y[:, d_] * Y[:, d_]
-        S = _round6_np(D / (np.sqrt(nx)[:, None] * np.sqrt(ny)[None, :]))
-        hit = (ia[:, None] < ib[None, :]) & (S >= threshold)
-        ii, jj = np.nonzero(hit)
-        if len(ii) == 0:
-            return empty
-        return pd.DataFrame(
-            {"ia": ia[ii], "ib": ib[jj], "sim": S[ii, jj].astype(np.float64)}
-        )
-
-    return (
-        a.groupBy("ab", "bb")
-        .cogroup(b.groupBy("ab", "bb"))
-        .applyInPandas(pair_tile, "ia long, ib long, sim double")
+    return _pair_scores(
+        corpus, threshold, "cosine", id_col, vec_col, pairs,
+        "ia long, ib long, sim double",
     )
 
 
@@ -1024,8 +958,8 @@ def label_silhouette(corpus: DataFrame) -> DataFrame:
     LOO accuracy is the behavioral check, silhouette the geometric
     one.
 
-    Same blocked plan as :func:`allpairs_topk_arrow` (no driver
-    collect): each (query-block, corpus-block) tile reduces to
+    Same blocked plan as :func:`allpairs_topk_arrow` (:func:`_tile_pairs`,
+    no driver collect): each (query-block, corpus-block) tile reduces to
     per-(qid, label) partial, so the shuffle carries |rows| x |labels|
     partials, never pairs; a keyed aggregation folds tiles, then
     per-qid a = own-label mean, b = min other-label mean.
@@ -1038,24 +972,9 @@ def label_silhouette(corpus: DataFrame) -> DataFrame:
     nondeterministic partition order near rounding boundaries.  The
     per-(qid,label) mean is then an exact integer half-up on the
     micros sum (the ``_mean6_exact`` recipe), never a double ROUND."""
-    import numpy as np
     import pandas as pd
 
-    spark = corpus.sparkSession
     src, n = _decimated(corpus, ["vec_id", "embedding", "label"])
-    nb = max(1, -(-n // ALLPAIRS_BLOCK_ROWS))
-    bids = spark.range(nb).select(F.col("id").alias("_b"))
-    q = src.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qemb"),
-        F.pmod(F.col("vec_id"), nb).alias("qb"),
-    ).crossJoin(F.broadcast(bids.select(F.col("_b").alias("cb"))))
-    c = src.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cemb"),
-        F.col("label").alias("clabel"),
-        F.pmod(F.col("vec_id"), nb).alias("cb"),
-    ).crossJoin(F.broadcast(bids.select(F.col("_b").alias("qb"))))
 
     def tile_partials(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"qid": [], "lb": [], "s": [], "c": []})
@@ -1063,19 +982,13 @@ def label_silhouette(corpus: DataFrame) -> DataFrame:
             return empty.astype(
                 {"qid": "int64", "lb": "int32", "s": "int64", "c": "int64"}
             )
-        right = right.sort_values("cid")
         ids_np = right["cid"].to_numpy(dtype=np.int64)
         labs_np = right["clabel"].to_numpy(dtype=np.int64)
-        mat = np.stack(right["cemb"].to_numpy()).astype(np.float64)
         labels = sorted(set(int(x) for x in labs_np))
         lab_cols = {lb: (labs_np == lb) for lb in labels}
         qid_arr = left["qid"].to_numpy(dtype=np.int64)
-        X = np.stack(left["qemb"].to_numpy()).astype(np.float64)
         nq = len(qid_arr)
-        D = np.zeros((nq, len(ids_np)), dtype=np.float64)
-        for d_ in range(mat.shape[1]):
-            diff = X[:, d_ : d_ + 1] - mat[None, :, d_]
-            D += diff * diff
+        D = squared_l2_np(*_tile_block(left, right))
         # per-pair quantization to integer micros: floor(d*1e6 + 0.5)
         # on the identical f64 both engines compute, so the cross-tile
         # fold below is an exact (order-insensitive) int64 sum
@@ -1102,10 +1015,12 @@ def label_silhouette(corpus: DataFrame) -> DataFrame:
             }
         )
 
-    partials = (
-        q.groupBy("qb", "cb")
-        .cogroup(c.groupBy("qb", "cb"))
-        .applyInPandas(tile_partials, "qid long, lb int, s long, c long")
+    partials = _tile_pairs(
+        src,
+        n,
+        tile_partials,
+        "qid long, lb int, s long, c long",
+        F.col("label").alias("clabel"),
     )
     folded = partials.groupBy("qid", "lb").agg(
         F.sum("s").alias("s"), F.sum("c").alias("c")

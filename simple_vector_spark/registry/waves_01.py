@@ -970,28 +970,23 @@ FROM u GROUP BY vec_id
 def embedding_norms_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mapInArrow surface: per-vector L2 norm computed with pyarrow +
     NumPy directly on Arrow record batches — no pandas conversion at
-    all, the leanest Python-side path Spark offers.  Same result as
-    the JVM expression form (sqrt of the in-order component sum is
-    deterministic), hash-checked against the SQL oracle."""
-    import numpy as np
+    all, the leanest Python-side path Spark offers.  ``l2_norm_np`` and
+    ``round6`` are the NumPy twins of ``ROUND(l2_norm(v), 6)``, so the
+    values equal the JVM expression form's; hash-checked against the
+    SQL oracle."""
     import pyarrow as pa
 
+    from ..functions.vector import l2_norm_np, round6, vector_matrix
     from ..sources.loaders import fan_out
 
     def norms(it):
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            ids = batch.column("vec_id")
-            embs = batch.column("embedding")
-            # flatten() respects list offsets; equal-length vectors
-            # reshape to an (n, dim) matrix — one vectorized kernel
-            # per Arrow batch, no per-row Python.
-            flat = embs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-            mat = flat.reshape(batch.num_rows, -1)
-            out = np.round(np.sqrt((mat * mat).sum(axis=1)), 6)
+            out = round6(l2_norm_np(vector_matrix(batch.column("embedding"))))
             yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(out, type=pa.float64())], ["vec_id", "l2_norm"]
+                [batch.column("vec_id"), pa.array(out, type=pa.float64())],
+                ["vec_id", "l2_norm"],
             )
 
     emb = fan_out(load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding"))

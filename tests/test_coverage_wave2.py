@@ -12,14 +12,60 @@ from simple_vector_spark.operators import text_analysis as T
 from simple_vector_spark.sources.loaders import load_table
 
 
+def _tie_corpus(spark):
+    """Four array<double> rows whose squared distances to row 0 are
+    half-micro ties (5e-07, 1.25e-05, 2.5e-06): Spark's ROUND takes them
+    up, a round-half-even kernel down."""
+    return spark.createDataFrame(
+        [
+            (0, 0, [0.0, 0.0]),
+            (1, 0, [0.0005, 0.0005]),
+            (2, 0, [0.0005, 0.0035]),
+            (3, 0, [0.0015, 0.0005]),
+        ],
+        "vec_id long, label int, embedding array<double>",
+    )
+
+
+TIE_DISTS = {0: 0.0, 1: 1e-06, 2: 1.3e-05, 3: 3e-06}
+
+
 def test_knn_shard_topk_equals_expression_form(spark, sf_dir):
     """The NumPy shard path is exact: identical ids+distances to the
-    expression form."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0)
-    expr = {(r.vec_id, r.dist) for r in K.knn_topk(emb, q, 10, "sqL2").collect()}
-    shard = {(r.vec_id, r.dist) for r in K.knn_shard_topk(emb, q, 10).collect()}
-    assert shard == expr
+    expression form, on the fixture and on rounding ties."""
+    fixture = load_table(spark, sf_dir, "embeddings")
+    for emb, k in ((fixture, 10), (_tie_corpus(spark), 4)):
+        q = emb.filter(F.col("vec_id") == 0)
+        expr = {(r.vec_id, r.dist) for r in K.knn_topk(emb, q, k, "sqL2").collect()}
+        shard = {(r.vec_id, r.dist) for r in K.knn_shard_topk(emb, q, k).collect()}
+        assert shard == expr
+    assert expr == set(TIE_DISTS.items())
+
+
+def test_embedding_norms_arrow_rounds_like_spark(spark, tmp_path):
+    """The Arrow norm kernel equals ROUND(l2_norm(v), 6) on half-micro
+    norms, where round-half-even would give 0.0 and 2e-06."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from simple_vector_spark.functions.vector import as_double_array, l2_norm
+    from simple_vector_spark.registry import queries
+
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([0, 1], pa.int64()),
+                "embedding": pa.array([[5e-07], [2.5e-06]], pa.list_(pa.float64())),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    got = queries()["embedding_norms_arrow"](spark, str(tmp_path))
+    expr = load_table(spark, str(tmp_path), "embeddings").select(
+        "vec_id", F.round(l2_norm(as_double_array("embedding")), 6).alias("l2_norm")
+    )
+    assert sorted(got.collect()) == sorted(expr.collect())
+    assert sorted(r.l2_norm for r in got.collect()) == [1e-06, 3e-06]
 
 
 def test_wal_replay_drops_tombstoned_keys(spark):
@@ -127,17 +173,19 @@ def test_stateful_user_totals_matches_batch(spark, sf_dir):
 
 
 def test_knn_shard_join_equals_expression_form(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 8)
-    expr = {
-        (r.query_id, r.vec_id, r.dist, r.rnk)
-        for r in K.knn_join(emb, qs, 5, "sqL2").collect()
-    }
-    shard = {
-        (r.query_id, r.vec_id, r.dist, r.rnk)
-        for r in K.knn_shard_join(emb, qs, 5).collect()
-    }
-    assert shard == expr
+    fixture = load_table(spark, sf_dir, "embeddings")
+    for emb, nq, k in ((fixture, 8, 5), (_tie_corpus(spark), 1, 4)):
+        qs = emb.filter(F.col("vec_id") < nq)
+        expr = {
+            (r.query_id, r.vec_id, r.dist, r.rnk)
+            for r in K.knn_join(emb, qs, k, "sqL2").collect()
+        }
+        shard = {
+            (r.query_id, r.vec_id, r.dist, r.rnk)
+            for r in K.knn_shard_join(emb, qs, k).collect()
+        }
+        assert shard == expr
+    assert {(v, d) for _, v, d, _ in expr} == set(TIE_DISTS.items())
 
 
 def test_salted_join_equals_plain_join(spark):

@@ -75,6 +75,19 @@ def test_ivf_partitioned_probe_prunes_directories(spark, sf_dir):
     assert "PartitionFilters: [cell" in scan and " IN " in scan
 
 
+def test_ivf_probe_feeds_broadcast_cell_join(spark, sf_dir):
+    """ann_ivf: the nprobe-cell probe is a 3-row heap feeding a
+    broadcast hash join on ``__cell``, and the exact re-rank is a
+    10-row heap — no sort-merge join anywhere."""
+    lines = plan_of(spark, sf_dir, "ann_ivf").splitlines()
+    join = next(i for i, l in enumerate(lines) if "BroadcastHashJoin [__cell" in l)
+    probe = next(i for i, l in enumerate(lines) if "TakeOrderedAndProject(limit=3" in l)
+    depth = [len(l) - len(l.lstrip(" :|+-")) for l in lines]
+    assert probe > join and depth[probe] > depth[join]  # probe feeds the join
+    assert "TakeOrderedAndProject(limit=10" in lines[1]  # re-rank at the root
+    assert not any("SortMergeJoin" in l for l in lines)
+
+
 def test_q5_single_fact_shuffle_dims_broadcast(spark, sf_dir):
     """Q5's only exchange pair should feed lineitem⋈orders; the four
     dims (customer, supplier, nation, region) must all broadcast."""
