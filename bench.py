@@ -53,7 +53,7 @@ def prepare(spark, qs: dict, sf_dir: str) -> None:
     # distance exprs, window rank, hash agg) at the smallest scale
     # factor, so draws measure the operators rather than one-time
     # JIT/codegen compilation.  knn_shard_topk also pre-spawns the
-    # Python worker pool for every later mapInPandas/pandas-UDF query;
+    # Python worker pool for every later Arrow-UDF query;
     # vocab_top100 pre-compiles the tokenize/explode codegen the text
     # family shares (~5s on first use in a session); the rest cover the
     # heavy kernel families: cogrouped tile kNN (loo), per-cell graph

@@ -1,6 +1,6 @@
-"""User-defined extension surface beyond scalar pandas UDFs: a Python
+"""User-defined extension surface beyond scalar Arrow UDFs: a Python
 UDTF (table function, used via SQL LATERAL) and a grouped-aggregate
-pandas UDAF.
+Arrow UDAF.
 
 The reference has no extension surface at all (SURVEY.md §2.2 UDF
 row); these are north-star additions that exercise the remaining two
@@ -9,17 +9,17 @@ UDF shapes Spark offers:
 - UDTF: one input row -> many output rows, schema declared up front.
   Runs as a Python worker per partition — the per-row fan-out happens
   distributed, never on the driver.
-- GROUPED_AGG pandas UDF: the whole group's column arrives as ONE
-  pandas Series per group (no partial aggregation) — use only when the
+- GROUPED_AGG Arrow UDF: the whole group's column arrives as ONE
+  Arrow array per group (no partial aggregation) — use only when the
   aggregate genuinely can't be expressed with built-ins, and keep the
   kernel order-insensitive (here: a median over integers, exact).
 """
 
 from __future__ import annotations
 
-import pandas
-
-from pyspark.sql.functions import pandas_udf, udtf
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql.functions import arrow_udf, udtf
 
 
 @udtf(returnType="start int, chunk_tok int")
@@ -43,10 +43,10 @@ class ChunkUDTF:
             start += self.STRIDE
 
 
-@pandas_udf("double")
-def median_agg(v: pandas.Series) -> float:
-    """Exact median as a grouped-agg pandas UDF.  Order-insensitive by
+@arrow_udf("double")
+def median_agg(v: pa.Array) -> float:
+    """Exact median as a grouped-agg Arrow UDF.  Order-insensitive by
     construction (sorting is internal to the median), exact over
     integer inputs — safe to hash-compare against a SQL oracle's
     median()."""
-    return float(v.median())
+    return pc.quantile(v, q=0.5)[0].as_py()

@@ -17,7 +17,7 @@ terms; results are compared rounded to 6 decimals (FIXTURES.md §C).
 
 The distance expressions and ``ROUND(x, 6)`` have NumPy twins
 (``*_np``, :func:`round6`; :func:`vector_matrix` stacks their input)
-for the Arrow/pandas kernels.  The twins repeat the expressions'
+for the Arrow kernels.  The twins repeat the expressions'
 arithmetic exactly: one f64 term per dimension, added left to right
 from 0.0 as ``aggregate`` does, and Spark's ``ROUND`` (HALF_UP on the
 shortest decimal repr).  A NumPy value that the oracle sees, or that a
@@ -35,6 +35,7 @@ from __future__ import annotations
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -137,20 +138,18 @@ def round6(D) -> np.ndarray:
 
 
 def vector_matrix(vectors) -> np.ndarray:
-    """A column of equal-length vectors as one float64 (n, d) matrix: a
-    pandas Series of arrays (pandas UDFs) or an Arrow list array
-    (``mapInArrow``, flattened without a per-row copy)."""
+    """An Arrow list column of equal-length vectors (``ListArray`` or
+    ``ChunkedArray``) as one float64 (n, d) matrix, flattened without a
+    per-row copy."""
     if len(vectors) == 0:
         return np.empty((0, 0))
-    if hasattr(vectors, "combine_chunks"):  # pyarrow ChunkedArray
+    if isinstance(vectors, pa.ChunkedArray):
         vectors = vectors.combine_chunks()
-    if hasattr(vectors, "flatten"):  # pyarrow ListArray
-        flat = vectors.flatten().to_numpy(zero_copy_only=False)
-        return flat.astype(np.float64).reshape(len(vectors), -1)
-    return np.stack(list(vectors)).astype(np.float64)
+    flat = vectors.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(vectors), -1)
 
 
-def cosine_pandas_udf():
+def cosine_arrow_udf():
     """Arrow-batched cosine kernel for the SQL UDF surface (the
     reference has no extension point at all — SURVEY.md §2.2 UDF row).
     Whole batches cross the JVM/Python boundary as Arrow arrays and the
@@ -158,19 +157,10 @@ def cosine_pandas_udf():
     per-row Python call.  Built-in zip_with/aggregate (cosine_similarity
     above) stays the default hot path; this is the escape hatch users
     register for kernels Catalyst can't express."""
-    import pandas
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    # NOTE: the annotations below must reference a module-level name
-    # ("pandas.Series", not an alias imported into this closure) —
-    # PEP 563 turns them into strings and pyspark resolves them against
-    # the function's __globals__ when inferring the UDF eval type.
-    globals()["pandas"] = pandas
-
-    @pandas_udf("double")
-    def cos_sim(a: pandas.Series, b: pandas.Series) -> pandas.Series:
-        return pandas.Series(
-            cosine_similarity_np(vector_matrix(a), vector_matrix(b))
-        )
+    @arrow_udf("double")
+    def cos_sim(a: pa.Array, b: pa.Array) -> pa.Array:
+        return pa.array(cosine_similarity_np(vector_matrix(a), vector_matrix(b)))
 
     return cos_sim

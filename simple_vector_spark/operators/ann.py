@@ -1607,26 +1607,24 @@ GRAPH_BEAM = 4  # frontier width per hop (the ef_search analog)
 GRAPH_HOPS = 3  # fixed traversal depth — deterministic, oracle-unrollable
 
 
-def _cell_topg(g: int):
-    """applyInPandas kernel over one cell's members (``_gid``, ``_gv``):
-    every member's ``g`` nearest other members by (ROUND-6 squared L2,
-    id) as (src, nbr, dist) — the NumPy twins of the expression, so the
-    edges equal the pair-join form's."""
+def _cell_edges(members: DataFrame, cell_col: str, g: int) -> DataFrame:
+    """One ``applyInArrow`` task per cell of ``members`` (``cell_col``,
+    ``_gid``, ``_gv``): every member's ``g`` nearest other members by
+    (ROUND-6 squared L2, id) as (src, nbr, dist) — the NumPy twins of
+    the expression, so the edges equal the pair-join form's.  A
+    one-member cell has no edges."""
+    from ..sources.loaders import apply_in_arrow
 
-    def cell_topg(pdf):
-        import pandas as pd
-
-        ids = pdf["_gid"].to_numpy()
-        if len(ids) < 2:
-            return pd.DataFrame({"src": [], "nbr": [], "dist": []}).astype(
-                {"src": "int64", "nbr": "int64", "dist": "float64"}
-            )
-        X = vector_matrix(pdf["_gv"])
+    def cell_topg(cell):
+        ids = cell.column("_gid").to_numpy()
+        X = vector_matrix(cell.column("_gv"))
         R = round6(squared_l2_np(X[:, None], X[None]))
         si, ni = topk_np(R, ids, g, self_ids=ids)
-        return pd.DataFrame({"src": ids[si], "nbr": ids[ni], "dist": R[si, ni]})
+        return [ids[si], ids[ni], R[si, ni]]
 
-    return cell_topg
+    return apply_in_arrow(
+        members.groupBy(cell_col), cell_topg, "src long, nbr long, dist double"
+    )
 
 
 def knn_graph_navigable(
@@ -1646,7 +1644,7 @@ def knn_graph_navigable(
 
     Scale: membership is |corpus| x assign rows; the pair space is
     sum(cell_multiset²) — never n² — and it is scored INSIDE a per-cell
-    applyInPandas kernel (:func:`_cell_topg`, the expression's NumPy
+    applyInArrow kernel (:func:`_cell_edges`, the expression's NumPy
     twins), so the only
     rows that ever cross an exchange are memberships in and per-source
     top-g candidate edges out — the vector-carrying pair join that
@@ -1677,9 +1675,7 @@ def knn_graph_navigable(
         .select("_gid", F.col("cid").alias("_gcell"), "_gv")
     )
 
-    cell_edges = member.groupBy("_gcell").applyInPandas(
-        _cell_topg(g), schema="src long, nbr long, dist double"
-    )
+    cell_edges = _cell_edges(member, "_gcell", g)
     # a pair sharing BOTH cells appears once per shared cell — collapse
     # by key (dist identical; min is just the dedupe), then the global
     # per-source top-g over <= assign*g candidates per source.
@@ -1906,9 +1902,8 @@ def graph_recall_vs_beam(
 
     Output: (beam, n_hit, recall) per beam, recall against the exact
     (ROUND-6, id-tiebreak) top-k."""
-    import pandas as pd
-
     from ..functions.vector import as_double_array, squared_l2
+    from ..sources.loaders import arrow_schema, arrow_table
 
     spark = emb.sparkSession
     if edges is None:
@@ -1961,7 +1956,10 @@ def graph_recall_vs_beam(
     beam_list = [int(b) for b in beams]
     n_hops = int(hops)
 
-    def walk_all(nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
+    walk_schema = "beam int, vec_id long"
+    walk_out = arrow_schema(walk_schema)
+
+    def walk_all(nodes_t, edges_t):
         """All beam walks over the bounded ball subgraph, replicating
         the unrolled oracle CTEs: per hop candidates = frontier UNION
         out-neighbors, next frontier = top-beam by (dist, id), visited
@@ -1969,15 +1967,11 @@ def graph_recall_vs_beam(
         ids.  Python tuple sort on (float64, int) IS ORDER BY d, id on
         the identical round-6 doubles."""
         dist = dict(
-            zip(
-                nodes_pdf["_id"].astype("int64").tolist(),
-                nodes_pdf["dist"].astype("float64").tolist(),
-            )
+            zip(nodes_t.column("_id").to_pylist(), nodes_t.column("dist").to_pylist())
         )
         adj: dict[int, list[int]] = {}
         for s_, d_ in zip(
-            edges_pdf["_src"].astype("int64").tolist(),
-            edges_pdf["_dst"].astype("int64").tolist(),
+            edges_t.column("_src").to_pylist(), edges_t.column("_dst").to_pylist()
         ):
             adj.setdefault(s_, []).append(d_)
         s0 = sorted((dist[i], i) for i in seed_list if i in dist)
@@ -1995,18 +1989,13 @@ def graph_recall_vs_beam(
             top = sorted((dist[i], i) for i in visited)[:k]
             out_beam.extend([b] * len(top))
             out_id.extend(i for _, i in top)
-        return pd.DataFrame(
-            {
-                "beam": pd.array(out_beam, dtype="int32"),
-                "vec_id": pd.array(out_id, dtype="int64"),
-            }
-        )
+        return arrow_table([out_beam, out_id], walk_out)
 
     topk = (
         nodes.withColumn("_g", F.lit(0))
         .groupBy("_g")
         .cogroup(sub_edges.withColumn("_g", F.lit(0)).groupBy("_g"))
-        .applyInPandas(walk_all, "beam int, vec_id long")
+        .applyInArrow(walk_all, walk_schema)
     )
     hits = (
         topk.join(exact, "vec_id", "left_semi")
@@ -2179,8 +2168,7 @@ def graph_index_upsert_audit(
     )
 
     fresh = (
-        members.groupBy("cell")
-        .applyInPandas(_cell_topg(g), schema="src long, nbr long, dist double")
+        _cell_edges(members, "cell", g)
         .groupBy("src", "nbr")
         .agg(F.min("dist").alias("dist"))
     )

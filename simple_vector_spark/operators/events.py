@@ -2645,7 +2645,7 @@ def rate_limit_audit(events: DataFrame) -> DataFrame:
     Scale: ONE user-keyed shuffle; the fold runs inside each user's
     collected event array (bounded by per-user activity — at heavy
     per-user volume the same integer recursion drops into an
-    applyInPandas kernel unchanged)."""
+    applyInArrow kernel unchanged)."""
     cap, rf = RL_CAP, RL_REFILL_SECONDS
     per = events.groupBy("user_id").agg(
         F.array_sort(

@@ -209,30 +209,24 @@ def _shard_candidates(
     query matrix rides in the task closure (request-sized, like the
     reference's one JSON body, src/faiss_index.cc:35-47).  Rows are
     ``(query_id_col,) id_col, dist``; the query id column is present
-    only when ``query_id_col`` is given."""
-    import pandas as pd
+    only when ``query_id_col`` is given.  No queries, no rows."""
+    from ..sources.loaders import fan_out, map_in_arrow
 
-    from ..sources.loaders import fan_out
+    Q = np.asarray(qmat, dtype=np.float64)[:, None, :] if qmat else None  # (nq, 1, d)
+    qid = np.asarray(qids)
 
-    def local_topk(it):
-        Q = np.asarray(qmat, dtype=np.float64)[:, None, :]  # (nq, 1, d)
-        qid = np.asarray(qids)
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            M = vector_matrix(pdf[vec_col])
-            R = round6(squared_l2_np(Q, M[None, :, :]))  # (nq, n)
-            qi, ci = topk_np(R, ids, k)
-            out = {id_col: ids[ci], "dist": R[qi, ci]}
-            if query_id_col:
-                out = {query_id_col: qid[qi], **out}
-            yield pd.DataFrame(out)
+    def local_topk(batch):
+        ids = batch.column(id_col).to_numpy()
+        R = round6(squared_l2_np(Q, vector_matrix(batch.column(vec_col))[None]))
+        qi, ci = topk_np(R, ids, k)  # R: (nq, n)
+        cols = [ids[ci], R[qi, ci]]
+        return [qid[qi], *cols] if query_id_col else cols
 
     schema = f"{id_col} long, dist double"
     if query_id_col:
         schema = f"{query_id_col} long, " + schema
-    return fan_out(corpus.select(id_col, vec_col)).mapInPandas(local_topk, schema)
+    src = corpus.select(id_col, vec_col)
+    return map_in_arrow(fan_out(src if qmat else src.limit(0)), local_topk, schema)
 
 
 def knn_shard_topk(
@@ -256,8 +250,9 @@ def knn_shard_topk(
     (``functions.vector``), so rows and distances equal knn_topk's:
     ascending rounded distance, id tiebreak.  The corpus is never
     collected."""
-    qv = [float(x) for x in query.select(vec_col).head()[0]]
-    local = _shard_candidates(corpus, [qv], k, id_col, vec_col)
+    head = query.select(vec_col).head()
+    qmat = [[float(x) for x in head[0]]] if head else []
+    local = _shard_candidates(corpus, qmat, k, id_col, vec_col)
     return local.orderBy(F.col("dist").asc(), F.col(id_col).asc()).limit(k)
 
 
@@ -791,13 +786,17 @@ def _tile_pairs(
     """The blocked all-pairs plan every tile kernel runs on: ``src``
     (``vec_id``, ``embedding``, ...) splits into ``nb = ceil(n / 1024)``
     blocks on ``pmod(vec_id, nb)`` (sign-safe for any id), and every
-    (query-block, corpus-block) pair is one cogrouped
-    ``applyInPandas(tile, schema)`` task over a ~1024 x 1024 tile.  The
-    inputs shuffle nb-replicated rows — left ``(qid, qemb)``, right
-    ``(cid, cemb, *extra)`` — and only the tile's output (candidates,
-    partials or a count, never vectors) reaches the next exchange.  No
-    driver collect and no full-matrix task closures (VERDICT r02 item
-    2)."""
+    (query-block, corpus-block) pair is one cogrouped ``applyInArrow``
+    task over a ~1024 x 1024 tile: ``tile(left, right)`` gets the two
+    blocks as Arrow tables and returns the output columns in ``schema``
+    order; a pair with an empty block returns no rows
+    (:func:`~..sources.loaders.apply_in_arrow`).  The inputs shuffle
+    nb-replicated rows — left ``(qid, qemb)``, right ``(cid, cemb,
+    *extra)`` — and only the tile's output (candidates, partials or a
+    count, never vectors) reaches the next exchange.  No driver collect
+    and no full-matrix task closures (VERDICT r02 item 2)."""
+    from ..sources.loaders import apply_in_arrow
+
     nb = max(1, -(-n // ALLPAIRS_BLOCK_ROWS))
     bids = src.sparkSession.range(nb)
 
@@ -809,18 +808,21 @@ def _tile_pairs(
             F.pmod(F.col("vec_id"), nb).alias(f"{me}b"),
         ).crossJoin(F.broadcast(bids.select(F.col("id").alias(f"{other}b"))))
 
-    return (
+    grouped = (
         side("q", "c")
         .groupBy("qb", "cb")
         .cogroup(side("c", "q", *extra).groupBy("qb", "cb"))
-        .applyInPandas(tile, schema)
     )
+    return apply_in_arrow(grouped, tile, schema)
 
 
 def _tile_block(left, right):
     """A tile's two vector blocks, shaped to broadcast into the (left x
     right) pair block: ``(nq, 1, d)`` and ``(1, nc, d)``."""
-    return vector_matrix(left["qemb"])[:, None, :], vector_matrix(right["cemb"])[None]
+    return (
+        vector_matrix(left.column("qemb"))[:, None, :],
+        vector_matrix(right.column("cemb"))[None],
+    )
 
 
 def allpairs_topk_arrow(corpus: DataFrame, k: int) -> DataFrame:
@@ -840,20 +842,14 @@ def allpairs_topk_arrow(corpus: DataFrame, k: int) -> DataFrame:
 
     Returns (qid, cid, d, rnk) with rnk in 1..k, self-pairs excluded.
     """
-    import pandas as pd
-
     src, n = _decimated(corpus, ["vec_id", "embedding"])
 
-    def score_tile(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({"qid": [], "cid": [], "d": []}).astype(
-                {"qid": "int64", "cid": "int64", "d": "float64"}
-            )
-        qids = left["qid"].to_numpy(dtype=np.int64)
-        cids = right["cid"].to_numpy(dtype=np.int64)
+    def score_tile(left, right):
+        qids = left.column("qid").to_numpy()
+        cids = right.column("cid").to_numpy()
         R = round6(squared_l2_np(*_tile_block(left, right)))
         qi, ci = topk_np(R, cids, k, self_ids=qids)
-        return pd.DataFrame({"qid": qids[qi], "cid": cids[ci], "d": R[qi, ci]})
+        return [qids[qi], cids[ci], R[qi, ci]]
 
     cand = _tile_pairs(src, n, score_tile, "qid long, cid long, d double")
     w = Window.partitionBy("qid").orderBy(F.col("d").asc(), F.col("cid").asc())
@@ -885,11 +881,9 @@ def _pair_scores(
     )
 
     def tile(left, right):
-        qids = left["qid"].to_numpy(dtype=np.int64)
-        cids = right["cid"].to_numpy(dtype=np.int64)
-        if len(qids) == 0 or len(cids) == 0:
-            S = np.empty((len(qids), len(cids)))
-        elif metric == "euclid":
+        qids = left.column("qid").to_numpy()
+        cids = right.column("cid").to_numpy()
+        if metric == "euclid":
             S = round6(np.sqrt(squared_l2_np(*_tile_block(left, right))))
         else:
             S = round6(cosine_similarity_np(*_tile_block(left, right)))
@@ -913,10 +907,9 @@ def allpairs_threshold_count_arrow(
     Replaces a broadcast-NLJ + interpreted 64-dim HOF over all ~n^2/2
     pairs that cost ~6s warm at sf0.1 (2000 rows).  Counting is
     order-insensitive, so no tiebreak is needed."""
-    import pandas as pd
 
     def count(qids, cids, S, hit):
-        return pd.DataFrame({"c": [int(hit.sum())]}, dtype="int64")
+        return [[int(hit.sum())]]
 
     counts = _pair_scores(corpus, threshold, metric, id_col, vec_col, count, "c long")
     return counts.agg(
@@ -935,11 +928,10 @@ def allpairs_cosine_pairs_arrow(
     :func:`allpairs_threshold_count_arrow` for the brute-force
     near-dup baseline: each tile ships its (sparse — near-dups are rare
     by construction) matching pairs instead of a count."""
-    import pandas as pd
 
     def pairs(qids, cids, S, hit):
         ii, jj = hit.nonzero()
-        return pd.DataFrame({"ia": qids[ii], "ib": cids[jj], "sim": S[ii, jj]})
+        return [qids[ii], cids[jj], S[ii, jj]]
 
     return _pair_scores(
         corpus, threshold, "cosine", id_col, vec_col, pairs,
@@ -972,21 +964,14 @@ def label_silhouette(corpus: DataFrame) -> DataFrame:
     nondeterministic partition order near rounding boundaries.  The
     per-(qid,label) mean is then an exact integer half-up on the
     micros sum (the ``_mean6_exact`` recipe), never a double ROUND."""
-    import pandas as pd
-
     src, n = _decimated(corpus, ["vec_id", "embedding", "label"])
 
-    def tile_partials(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"qid": [], "lb": [], "s": [], "c": []})
-        if len(left) == 0 or len(right) == 0:
-            return empty.astype(
-                {"qid": "int64", "lb": "int32", "s": "int64", "c": "int64"}
-            )
-        ids_np = right["cid"].to_numpy(dtype=np.int64)
-        labs_np = right["clabel"].to_numpy(dtype=np.int64)
+    def tile_partials(left, right):
+        ids_np = right.column("cid").to_numpy()
+        labs_np = right.column("clabel").to_numpy()
         labels = sorted(set(int(x) for x in labs_np))
         lab_cols = {lb: (labs_np == lb) for lb in labels}
-        qid_arr = left["qid"].to_numpy(dtype=np.int64)
+        qid_arr = left.column("qid").to_numpy()
         nq = len(qid_arr)
         D = squared_l2_np(*_tile_block(left, right))
         # per-pair quantization to integer micros: floor(d*1e6 + 0.5)
@@ -1006,14 +991,7 @@ def label_silhouette(corpus: DataFrame) -> DataFrame:
                 lbs.append(lb)
                 ss.append(int(EM[i, m].sum()))
                 cs.append(cnt)
-        return pd.DataFrame(
-            {
-                "qid": np.asarray(qs, dtype=np.int64),
-                "lb": np.asarray(lbs, dtype=np.int32),
-                "s": np.asarray(ss, dtype=np.int64),
-                "c": np.asarray(cs, dtype=np.int64),
-            }
-        )
+        return [qs, lbs, ss, cs]
 
     partials = _tile_pairs(
         src,

@@ -3,7 +3,9 @@
 North-star extension: at 100 TB a training-data table carries
 image/audio/video as ``binary`` columns with typed metadata alongside.
 The Spark-side plumbing here is real — schemas, Arrow-batched
-mapInPandas decode pipeline, partition-friendly metadata extraction.
+mapInArrow decode pipeline, partition-friendly metadata extraction.
+Each kernel maps one Arrow record batch to its output columns, typed
+by the pipeline's DDL (``sources.loaders.map_in_arrow``).
 
 Codec status by modality:
 
@@ -24,11 +26,10 @@ operators, synthesized PNGs for the image decode path.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..sources.loaders import fan_out, map_in_arrow
 
 DECODED_SCHEMA = (
     "doc_id long, byte_len long, width int, height int, checksum long, feat array<double>"
@@ -107,38 +108,35 @@ def decode_payload(
     return _fake_decode(payload)
 
 
-def decode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: Arrow batches in, decoded metadata +
+def decode_batch(batch):
+    """mapInArrow kernel: one Arrow batch in, decoded metadata +
     fixed-dim feature vector out.  This is the real 100-TB shape:
     per-partition batched decode, no driver involvement, output schema
     fixed so downstream joins/aggregations stay columnar."""
-    for pdf in it:
-        rows = []
-        mimes = (
-            pdf["mime"]
-            if "mime" in pdf.columns
-            else ["application/octet-stream"] * len(pdf)
-        )
-        for doc_id, payload, mime in zip(pdf["doc_id"], pdf["payload"], mimes):
-            w, h, ck = decode_payload(bytes(payload), mime)
-            feat = [float((ck >> i) & 0xFF) / 255.0 for i in range(0, FEAT_DIM * 8, 8)]
-            rows.append((doc_id, len(payload), w, h, ck, feat))
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "byte_len", "width", "height", "checksum", "feat"]
-        )
+    ids = batch.column("doc_id").to_pylist()
+    payloads = batch.column("payload").to_pylist()
+    mimes = (
+        batch.column("mime").to_pylist()
+        if "mime" in batch.schema.names
+        else ["application/octet-stream"] * len(ids)
+    )
+    rows = []
+    for doc_id, payload, mime in zip(ids, payloads, mimes):
+        w, h, ck = decode_payload(payload, mime)
+        feat = [float((ck >> i) & 0xFF) / 255.0 for i in range(0, FEAT_DIM * 8, 8)]
+        rows.append((doc_id, len(payload), w, h, ck, feat))
+    return zip(*rows)
 
 
 def decode_features(docs_with_payload: DataFrame) -> DataFrame:
     """Decode + feature-extract pipeline over the binary column.
     Fanned out first: decode cost is per-row Python work, so the
     pipeline's parallelism is exactly the input partition count."""
-    from ..sources.loaders import fan_out
-
     cols = ["doc_id", "payload"]
     if "mime" in docs_with_payload.columns:
         cols.append("mime")
-    return fan_out(docs_with_payload.select(*cols)).mapInPandas(
-        decode_batch, schema=DECODED_SCHEMA
+    return map_in_arrow(
+        fan_out(docs_with_payload.select(*cols)), decode_batch, DECODED_SCHEMA
     )
 
 
@@ -151,7 +149,7 @@ def decode_features(docs_with_payload: DataFrame) -> DataFrame:
 # computed from the DECODED raster only, and the DuckDB oracle
 # recomputes them from the closed-form pixel formula: any encode or
 # decode defect (filter reversal, zlib framing, CRC, row order) breaks
-# value parity.  At 100 TB the same mapInPandas shape decodes stored
+# value parity.  At 100 TB the same mapInArrow shape decodes stored
 # payload bytes instead of synthesizing them.
 # ---------------------------------------------------------------------------
 
@@ -199,8 +197,8 @@ def decode_png_payload(payload: bytes) -> tuple[int, int, bytes]:
     return decode_png(payload)
 
 
-def png_stats_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: per doc_id, synthesize the closed-form
+def png_stats_batch(batch):
+    """mapInArrow kernel: per doc_id, synthesize the closed-form
     raster, ENCODE it as a real PNG (zlib, per-row filters cycling all
     five types, CRC framing), then DECODE the bytes back through the
     codec dispatch and emit statistics computed from the decoded
@@ -209,34 +207,23 @@ def png_stats_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
     from ..functions.png import encode_png
 
-    for pdf in it:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            doc_id = int(doc_id)
-            w, h, raster = synth_raster(doc_id)
-            payload = encode_png(w, h, raster)
-            dw, dh, decoded = decode_png_payload(payload)
-            arr = np.frombuffer(decoded, dtype=np.uint8).astype(np.int64)
-            rows.append(
-                (doc_id, dw, dh, int(arr.sum()), int(arr[0]), int(arr[-1]))
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height", "pixel_sum", "px_first", "px_last",
-            ],
-        )
+    rows = []
+    for doc_id in batch.column("doc_id").to_pylist():
+        w, h, raster = synth_raster(doc_id)
+        payload = encode_png(w, h, raster)
+        dw, dh, decoded = decode_png_payload(payload)
+        arr = np.frombuffer(decoded, dtype=np.uint8).astype(np.int64)
+        rows.append((doc_id, dw, dh, int(arr.sum()), int(arr[0]), int(arr[-1])))
+    return zip(*rows)
 
 
 def png_decode_stats(docs: DataFrame) -> DataFrame:
     """Decode pipeline over the (synthesized) PNG column: Arrow-batched
-    mapInPandas, parallelism = input partition count, only (doc_id)
+    mapInArrow, parallelism = input partition count, only (doc_id)
     enters and fixed-width stats leave — the 100-TB decode shape where
     payload bytes never cross an exchange."""
-    from ..sources.loaders import fan_out
-
-    return fan_out(docs.select("doc_id")).mapInPandas(
-        png_stats_batch, schema=PNG_STATS_SCHEMA
+    return map_in_arrow(
+        fan_out(docs.select("doc_id")), png_stats_batch, PNG_STATS_SCHEMA
     )
 
 
@@ -249,8 +236,8 @@ FRAMES_SCHEMA = (
 THUMB = 32
 
 
-def sample_frame_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker for video frame-sampling: each payload is
+def sample_frame_batch(batch):
+    """mapInArrow kernel for video frame-sampling: each payload is
     treated as a container of FRAME_BYTES-sized frames; every
     FRAME_STRIDE-th frame is 'decoded' (STUB: checksum + fixed thumb
     dims — a real build calls the codec per frame here) and emitted as
@@ -259,33 +246,26 @@ def sample_frame_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     100 TB, where a row explodes into its sampled frames without any
     driver involvement.  Audio windowing is this same operator with
     FRAME_BYTES = the sample window."""
-    for pdf in it:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(payload)
-            n_frames = (len(b) + FRAME_BYTES - 1) // FRAME_BYTES
-            for fi in range(0, n_frames, FRAME_STRIDE):
-                off = fi * FRAME_BYTES
-                frame = b[off : off + FRAME_BYTES]
-                rows.append(
-                    (doc_id, fi, off, sum(frame) % 2_147_483_647, THUMB, THUMB)
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "frame_idx", "frame_off", "frame_checksum", "thumb_w", "thumb_h",
-            ],
-        )
+    rows = []
+    for doc_id, b in zip(
+        batch.column("doc_id").to_pylist(), batch.column("payload").to_pylist()
+    ):
+        n_frames = (len(b) + FRAME_BYTES - 1) // FRAME_BYTES
+        for fi in range(0, n_frames, FRAME_STRIDE):
+            off = fi * FRAME_BYTES
+            frame = b[off : off + FRAME_BYTES]
+            rows.append((doc_id, fi, off, sum(frame) % 2_147_483_647, THUMB, THUMB))
+    return zip(*rows)
 
 
 def sample_frames(docs_with_payload: DataFrame) -> DataFrame:
     """Frame-sampling pipeline over the binary column (rows-only: the
     per-frame checksum is stub-codec territory; the COUNTS are
     oracle-checked by frame_audit and cross-checked in tests)."""
-    from ..sources.loaders import fan_out
-
-    return fan_out(docs_with_payload.select("doc_id", "payload")).mapInPandas(
-        sample_frame_batch, schema=FRAMES_SCHEMA
+    return map_in_arrow(
+        fan_out(docs_with_payload.select("doc_id", "payload")),
+        sample_frame_batch,
+        FRAMES_SCHEMA,
     )
 
 
@@ -365,25 +345,19 @@ def _phash_from_bytes(payload: bytes) -> int:
     return h
 
 
-def phash_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: payload bytes -> 64-bit perceptual hash."""
-    for pdf in it:
-        out = pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "phash": [
-                    _phash_from_bytes(bytes(p)) for p in pdf["payload"]
-                ],
-            }
-        )
-        yield out
+def phash_batch(batch):
+    """mapInArrow kernel: payload bytes -> 64-bit perceptual hash."""
+    return [
+        batch.column("doc_id"),
+        [_phash_from_bytes(p) for p in batch.column("payload").to_pylist()],
+    ]
 
 
 def phash_neardup_pairs(
     docs_with_payload: DataFrame, max_hamming: int = PHASH_MAX_HAMMING
 ) -> DataFrame:
     """Perceptual near-dup candidates over the opaque media column:
-    64-bit pHash per payload (Arrow-batched mapInPandas), banded into
+    64-bit pHash per payload (Arrow-batched mapInArrow), banded into
     {PHASH_BANDS} 16-bit LSH buckets — a pair agreeing on ANY band is
     a candidate (Hamming <= {PHASH_MAX_HAMMING} guarantees >= one
     clean band by pigeonhole when errors spread; near-identical media
@@ -392,11 +366,11 @@ def phash_neardup_pairs(
     Oracle: rows-only (the hash is computed in Python over binary
     payloads — not SQL-expressible); the pair contract is pytest-held
     on planted duplicates."""
-    hashed = (
-        docs_with_payload.select("doc_id", "payload")
-        .mapInPandas(phash_batch, "doc_id long, phash long")
-        .localCheckpoint()
-    )
+    hashed = map_in_arrow(
+        docs_with_payload.select("doc_id", "payload"),
+        phash_batch,
+        "doc_id long, phash long",
+    ).localCheckpoint()
     bands = hashed.select(
         "doc_id",
         "phash",

@@ -642,31 +642,33 @@ def misra_gries_heavy_users(events: DataFrame, k: int = MG_K) -> DataFrame:
     the two-pass shape (candidates -> exact recount of candidates
     only) makes the final answer exact and partitioning-independent.
 
-    Pass 1: a mergeable MG summary per partition (mapInPandas, batch
+    Pass 1: a mergeable MG summary per partition (mapInArrow, batch
     counts merged with the subtract-k-th-largest rule of Agarwal et
     al.'s mergeable summaries) — bounded memory however large the
     partition.  Pass 2: semi-join the candidate set (tiny) back and
     count exactly; keep f*k > n.  The candidate SET may vary with
     partitioning, but the thresholded output cannot — which is what
     the DuckDB oracle (plain GROUP BY ... HAVING) checks."""
-    import pandas as pd
+    import pyarrow.compute as pc
+
+    from ..sources.loaders import arrow_schema, arrow_table
 
     cap = k - 1
+    schema = "user_id long"
+    out = arrow_schema(schema)
 
     def mg(batches):
         counters: dict = {}
-        for pdf in batches:
-            vc = pdf["user_id"].value_counts()
-            for u, c in vc.items():
-                counters[u] = counters.get(u, 0) + int(c)
+        for batch in batches:
+            vc = pc.value_counts(batch.column("user_id").drop_null()).to_pylist()
+            for d in vc:
+                counters[d["values"]] = counters.get(d["values"], 0) + d["counts"]
             if len(counters) > cap:
                 kth = sorted(counters.values(), reverse=True)[cap]
                 counters = {u: c - kth for u, c in counters.items() if c > kth}
-        yield pd.DataFrame({"user_id": list(counters.keys())})
+        yield from arrow_table([list(counters)], out).to_batches()
 
-    candidates = (
-        events.select("user_id").mapInPandas(mg, "user_id long").distinct()
-    )
+    candidates = events.select("user_id").mapInArrow(mg, schema).distinct()
     tot = F.broadcast(events.agg(F.count(F.lit(1)).cast("long").alias("n")))
     exact = (
         events.join(candidates, "user_id", "leftsemi")

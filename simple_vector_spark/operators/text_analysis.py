@@ -1239,46 +1239,23 @@ def zlib_ratio_quality(docs: DataFrame) -> DataFrame:
     implementation detail no SQL oracle can replay; the invariants
     (repetitive text compresses harder; ratios in (0, ~1.1)) are
     pytest-held instead."""
-    import pyarrow as pa
+    import zlib
 
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    from ..sources.loaders import map_in_arrow
+
+    def kernel(batch):
+        ratios, lens = [], []
+        for t in batch.column("text").to_pylist():
+            raw = (t or "").encode("utf-8")
+            lens.append(len(raw))
+            ratios.append(len(zlib.compress(raw, 6)) / len(raw) if raw else None)
+        return [batch.column("source"), ratios, lens]
+
+    per_doc = map_in_arrow(
+        docs.select("source", "text"),
+        kernel,
+        "source string, ratio double, n_bytes long",
     )
-
-    out_schema = StructType(
-        [
-            StructField("source", StringType(), True),
-            StructField("ratio", DoubleType(), True),
-            StructField("n_bytes", LongType(), True),
-        ]
-    )
-
-    def kernel(batches):
-        import zlib
-
-        for batch in batches:
-            texts = batch.column("text").to_pylist()
-            sources = batch.column("source").to_pylist()
-            ratios, lens = [], []
-            for t in texts:
-                raw = (t or "").encode("utf-8")
-                comp = zlib.compress(raw, 6)
-                lens.append(len(raw))
-                ratios.append(len(comp) / len(raw) if raw else None)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(sources, type=pa.string()),
-                    pa.array(ratios, type=pa.float64()),
-                    pa.array(lens, type=pa.int64()),
-                ],
-                names=["source", "ratio", "n_bytes"],
-            )
-
-    per_doc = docs.select("source", "text").mapInArrow(kernel, out_schema)
     return per_doc.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.round(F.avg("ratio"), 6).alias("mean_ratio"),

@@ -127,16 +127,16 @@ def knn_filtered_ne(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("knn_udf_cosine_sql", _single_query_oracle(_PAIR_COS, "sim DESC"))
 def knn_udf_cosine_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UDF/extension surface (SURVEY.md §2.2 UDF row — the
-    reference has none): an Arrow-batched pandas UDF registered into
+    reference has none): a scalar Arrow UDF registered into
     the SQL namespace and invoked from raw SQL.  Same result set as
     knn_cosine_topk's built-in-expression path; the two routes differ
     only in where the kernel runs (JVM codegen vs NumPy per Arrow
     batch)."""
-    from ..functions.vector import cosine_pandas_udf
+    from ..functions.vector import cosine_arrow_udf
     from ..sources.loaders import register_views
 
     register_views(spark, sf_dir)
-    spark.udf.register("cos_sim", cosine_pandas_udf())
+    spark.udf.register("cos_sim", cosine_arrow_udf())
     return spark.sql(
         f"""
         SELECT e.vec_id, e.label,

@@ -70,7 +70,7 @@ def multimodal_decode(spark, sf_dir):
     actual PNG (zlib scanlines, all five row filters, CRC framing) and
     decoded back through the codec dispatch — PIL when present, else
     the pure-Python decoder in functions/png.py — inside an
-    Arrow-batched mapInPandas.  Emitted stats come from the DECODED
+    Arrow-batched mapInArrow.  Emitted stats come from the DECODED
     raster only; the oracle recomputes them from the pixel formula, so
     any filter-reversal/zlib/framing defect breaks value parity."""
     return MM.png_decode_stats(load_table(spark, sf_dir, "documents"))

@@ -702,7 +702,7 @@ def events_range_join_follow(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # Wave 7: remaining UDF shapes — Python UDTF (LATERAL) and grouped-agg
-# pandas UDAF.
+# Arrow UDAF.
 # --------------------------------------------------------------------------
 @query(
     "doc_chunks_udtf",
@@ -743,7 +743,7 @@ FROM documents GROUP BY source, lang
 """,
 )
 def doc_median_chars(spark, sf_dir):
-    """Grouped-agg pandas UDAF surface: exact median over integer
+    """Grouped-agg Arrow UDAF surface: exact median over integer
     n_chars per (source, lang) — the whole group arrives as one Arrow
     batch, kernel is order-insensitive, result hash-matches SQL
     median()."""
@@ -837,7 +837,7 @@ def orders_quantile_sketch_audit(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # Wave 9: multimodal frame-sampling plumbing (video/audio container
-# stand-in): mapInPandas one-to-many fan-out + oracle-checked audit.
+# stand-in): mapInArrow one-to-many fan-out + oracle-checked audit.
 # --------------------------------------------------------------------------
 @query(
     "multimodal_frame_audit",
@@ -892,7 +892,7 @@ GROUP BY fb.doc_id, fb.fi
 """,
 )
 def multimodal_frames(spark, sf_dir):
-    """Video frame-sampling via mapInPandas one-to-many fan-out: every
+    """Video frame-sampling via mapInArrow one-to-many fan-out: every
     4th 256-byte frame of each payload becomes a row.  Oracle-checked
     since round 4: the per-frame checksum is byte arithmetic on the
     manufactured payload, which DuckDB recomputes from hex-pair
@@ -974,23 +974,15 @@ def embedding_norms_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``round6`` are the NumPy twins of ``ROUND(l2_norm(v), 6)``, so the
     values equal the JVM expression form's; hash-checked against the
     SQL oracle."""
-    import pyarrow as pa
-
     from ..functions.vector import l2_norm_np, round6, vector_matrix
-    from ..sources.loaders import fan_out
+    from ..sources.loaders import fan_out, map_in_arrow
 
-    def norms(it):
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            out = round6(l2_norm_np(vector_matrix(batch.column("embedding"))))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("vec_id"), pa.array(out, type=pa.float64())],
-                ["vec_id", "l2_norm"],
-            )
+    def norms(batch):
+        emb = vector_matrix(batch.column("embedding"))
+        return [batch.column("vec_id"), round6(l2_norm_np(emb))]
 
     emb = fan_out(load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
-    return emb.mapInArrow(norms, schema="vec_id long, l2_norm double")
+    return map_in_arrow(emb, norms, "vec_id long, l2_norm double")
 
 
 # --------------------------------------------------------------------------

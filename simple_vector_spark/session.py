@@ -5,7 +5,7 @@ so the same code is correct on a real cluster: AQE on (runtime re-plan,
 skew-join handling), shuffle partitions sized to cores locally (on a
 cluster you would size to ~2-3x total cores), UTC session timezone so
 timestamps compare exactly against the DuckDB oracle, and Arrow enabled
-for the Pandas-UDF paths.  Python workers fork from
+for ``toPandas``.  Python workers fork from
 ``worker_daemon`` (``spark.python.daemon.module``), which imports the
 interpreter's unpacked pyspark instead of Spark's ``pyspark.zip``.
 """

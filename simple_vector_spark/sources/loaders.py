@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, GroupedData, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -96,6 +96,69 @@ def fan_out(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
     return df.repartition(target)
 
 
+def arrow_schema(schema: str | StructType):
+    """The Arrow schema of a DDL string or StructType.  Resolve it on the
+    driver (DDL parsing needs the JVM) and hand it to worker kernels."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(
+        StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    )
+
+
+def arrow_table(columns, schema):
+    """A ``pyarrow.Table`` typed by the Arrow ``schema``, built per
+    column: ``columns`` holds one sequence (list or NumPy array) per
+    field, in field order.  No columns at all (``zip(*rows)`` of no
+    rows) gives the empty table.  Not via pandas, so an int column
+    holding ``None`` stays an int column."""
+    import pyarrow as pa
+
+    columns = list(columns) or [()] * len(schema)
+    return pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(columns, schema)], schema=schema
+    )
+
+
+def map_in_arrow(df: DataFrame, kernel, schema: str) -> DataFrame:
+    """``df.mapInArrow`` over a per-batch kernel: ``kernel(batch)``
+    returns the output columns in ``schema`` order, typed here by the
+    one DDL.  Empty input batches are skipped."""
+    out = arrow_schema(schema)
+
+    def run(batches):
+        for batch in batches:
+            if batch.num_rows:
+                yield from arrow_table(kernel(batch), out).to_batches()
+
+    run.__name__ = kernel.__name__  # the plan names the kernel
+    return df.mapInArrow(run, schema)
+
+
+def apply_in_arrow(grouped, kernel, schema: str) -> DataFrame:
+    """``applyInArrow`` on a grouped or cogrouped frame over
+    ``kernel(*tables)``: each group arrives as one Arrow table per side,
+    and the kernel returns the output columns in ``schema`` order, typed
+    here by the one DDL.  A group with an empty side (a cogroup key only
+    one side holds) gives no rows without calling the kernel."""
+    out = arrow_schema(schema)
+
+    def run(*tables):
+        if not all(t.num_rows for t in tables):
+            return out.empty_table()
+        return arrow_table(kernel(*tables), out)
+
+    def one(table):
+        return run(table)
+
+    def two(left, right):
+        return run(left, right)
+
+    fn = one if isinstance(grouped, GroupedData) else two
+    fn.__name__ = kernel.__name__  # the plan names the kernel
+    return grouped.applyInArrow(fn, schema)
+
+
 def local_frame(
     spark: SparkSession, rows: list[tuple], schema: str | StructType
 ) -> DataFrame:
@@ -105,16 +168,9 @@ def local_frame(
     ``createDataFrame`` on a Python list parallelizes the rows through an
     identity map, so every execution of the literal runs
     ``defaultParallelism`` Python-worker tasks.  An Arrow table goes to the JVM as a local
-    relation instead: no Python task.  It is built per column, not via
-    pandas, so an int column holding ``None`` stays an int column."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+    relation instead: no Python task (:func:`arrow_table`)."""
     struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
-    arrow_schema = to_arrow_schema(struct)
-    cols = list(zip(*rows)) or [()] * len(arrow_schema)
-    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)]
-    return spark.createDataFrame(pa.table(arrays, schema=arrow_schema), struct)
+    return spark.createDataFrame(arrow_table(zip(*rows), arrow_schema(struct)), struct)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

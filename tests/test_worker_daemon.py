@@ -98,7 +98,7 @@ def test_live_worker_runs_unpacked_pyspark(spark):
         import sys
         import zipimport
 
-        import pandas as pd
+        import pyarrow as pa
         import pyspark
 
         for _ in batches:
@@ -106,7 +106,7 @@ def test_live_worker_runs_unpacked_pyspark(spark):
         zipimporters = [
             k for k, v in sys.path_importer_cache.items() if isinstance(v, zipimport.zipimporter)
         ]
-        yield pd.DataFrame(
+        yield pa.RecordBatch.from_pydict(
             {
                 "file": [pyspark.__file__],
                 "version": [pyspark.__version__],
@@ -117,7 +117,7 @@ def test_live_worker_runs_unpacked_pyspark(spark):
 
     row = (
         spark.range(1, numPartitions=1)
-        .mapInPandas(probe, "file string, version string, zipimporters int, frozen int")
+        .mapInArrow(probe, "file string, version string, zipimporters long, frozen long")
         .collect()[0]
     )
     assert ".zip" not in row.file and ".jar" not in row.file, row.file

@@ -23,7 +23,7 @@ HEADLINERS = [
     ("tpch_q5_local_supplier", "four broadcast dims; lineitem-orders is the only shuffle"),
     ("orders_with_returns", "EXISTS as left-semi; returnflag filter at lineitem scan"),
     ("events_rolling_1h_avg", "time-RANGE frame window, one shuffle on user_id"),
-    ("knn_udf_cosine_sql", "ArrowEvalPython stage for the pandas-UDF kernel"),
+    ("knn_udf_cosine_sql", "ArrowEvalPython stage for the scalar Arrow-UDF kernel"),
     ("ann_ivfpq_rerank", "two TakeOrderedAndProject stages: codes-only ADC shortlist, then exact rerank of R rows"),
     ("dedup_embedding_blocked", "equi-join on IVF cell id — no nested-loop cross join"),
     ("decontaminate_ngram", "benchmark side broadcast; only matching rows shuffled"),
@@ -85,11 +85,11 @@ HEADLINERS = [
     ("lineitem_spearman_corr", "two chained avg_rank2 passes; value-partitioned tie windows; one DECIMAL moment aggregate"),
     ("nation_trade_hits", "one fact shuffle builds edges; hub/authority half-steps on the checkpointed aggregate"),
     ("observed_scan_metrics", "CollectMetrics rides the workload scan — profiling with zero extra passes"),
-    ("embedding_knn_loo_accuracy", "blocked exact kNN self-join: cogrouped tile pairs in FlatMapCoGroupsInPandas, ids+dists shuffle, per-qid rank merge — no driver collect"),
+    ("embedding_knn_loo_accuracy", "blocked exact kNN self-join: cogrouped tile pairs in FlatMapCoGroupsInArrow, ids+dists shuffle, per-qid rank merge — no driver collect"),
     ("part_covisit_recs", "hash-rank basket cap window, customer-keyed pair self-join, broadcast supports, rank-limit window"),
     ("graph_index_upsert_audit", "incremental edge repair: batch-only assignment, affected-cell cogroup kernel, anti-join stale drop, per-src rerank"),
     ("ann_recall_vs_beam", "ball-kernel walk (round 5): one materialized corpus-distance pass + cached seed-set BFS ball; all beam walks in one cogrouped Arrow task, recall join per beam"),
-    ("multimodal_decode", "real PNG encode/decode round-trip in one mapInPandas stage; only doc_id enters, fixed-width pixel stats leave"),
+    ("multimodal_decode", "real PNG encode/decode round-trip in one mapInArrow stage; only doc_id enters, fixed-width pixel stats leave"),
 ]
 
 
