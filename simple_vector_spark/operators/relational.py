@@ -257,22 +257,92 @@ def local_supplier_volume(
     )
 
 
+# Spark's shuffle sends a row to pmod(murmur3(join keys), partitions):
+# Murmur3_x86_32 with seed 42, chained over the keys in order.  These
+# are its integer steps, for placing salts (see salted_join).
+_M32 = (1 << 32) - 1
+
+
+def _rotl32(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & _M32
+
+
+def _mix_h1(h1: int, k1: int) -> int:
+    return (_rotl32(h1 ^ k1, 13) * 5 + 0xE6546B64) & _M32
+
+
+def _fmix(h1: int, length: int) -> int:
+    h1 ^= length
+    h1 ^= h1 >> 16
+    h1 = h1 * 0x85EBCA6B & _M32
+    h1 ^= h1 >> 13
+    h1 = h1 * 0xC2B2AE35 & _M32
+    return h1 ^ (h1 >> 16)
+
+
+def _salt_partition(w: int, n_part: int) -> int:
+    """Shuffle partition of a (key, salt) row whose bigint salt has a
+    zero high word and a low word that murmur3's k1-mix turns into
+    ``seed ^ w`` (seed = the key's hash): the seed cancels, whatever
+    the key."""
+    h = _fmix(_mix_h1(_mix_h1(0, w), 0), 8)
+    return (h - ((h >> 31) << 32)) % n_part
+
+
+def _mul32(name: str, m: int) -> Column:
+    """(column * m) mod 2^32 for a column in [0, 2^32), in 16-bit
+    halves of m so no bigint product overflows (ANSI raises)."""
+    x = F.col(name)
+    return (x * (m & 0xFFFF) + F.shiftleft((x * (m >> 16)).bitwiseAND(F.lit(0xFFFF)), 16)
+            ).bitwiseAND(F.lit(_M32))
+
+
 def salted_join(
     big: DataFrame, small: DataFrame, on: str, n_salt: int = 8
 ) -> DataFrame:
-    """Skew-buster inner equi-join: the big side gets a deterministic
-    salt (row-hash mod n_salt) appended to the key; the small side is
-    replicated n_salt times.  A hot key's rows then spread over n_salt
-    reducers instead of one.  Use when AQE's skew split isn't enough
-    (single-key skew inside one partition); identical results to the
-    plain join (asserted in tests)."""
-    salted_big = big.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(n_salt))
-    )
-    replicated = small.withColumn(
-        "__salt",
-        F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)).cast("array<bigint>")),
-    )
+    """Skew-buster inner equi-join: each big-side row draws a salt index
+    i (row-hash mod n_salt); the small side is replicated once per i;
+    the join key is (key, salt(key, i)).  A hot key's rows then spread
+    over n_salt reducers instead of one.  Use when AQE's skew split
+    isn't enough (single-key skew inside one partition); identical
+    results to the plain join (asserted in tests).
+
+    The salts are placed, not hashed at random: salt(key, i) inverts
+    the last murmur3 step so that (key, salt) lands on partition
+    (pmod(hash(key), P) + i) mod P of the session's P shuffle
+    partitions.  Every key's n_salt slices then cover n_salt
+    consecutive partitions, round-robin, so a hot key's largest slice
+    is ceil(n_salt / P) / n_salt of it."""
+    n_part = int(big.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_rank = -(-n_salt // n_part)  # salts per partition for one key
+    ws: list[list[int]] = [[] for _ in range(n_part)]
+    w = 0
+    while min(map(len, ws)) < n_rank:
+        ws[_salt_partition(w, n_part)].append(w)
+        w += 1
+    table = F.array(*[F.lit(w) for per_part in ws for w in per_part[:n_rank]])
+    # the join hashes both keys in their common type, as a union widens
+    key_type = big.select(on).union(small.select(on)).schema[0].dataType
+
+    def salted(df: DataFrame) -> DataFrame:  # "__salt" holds i on entry
+        i, seed = F.col("__salt"), F.hash(F.col(on).cast(key_type))
+        slot = F.pmod(F.pmod(seed, F.lit(n_part)) + i, F.lit(n_part)) * n_rank
+        w = F.element_at(table, (slot + F.floor(i / n_part) + 1).cast("int"))
+        # low word = the inverse of murmur3's k1-mix applied to seed ^ w
+        df = df.withColumn(
+            "__salt", F.pmod(seed.cast("bigint"), F.lit(1 << 32)).bitwiseXOR(w))
+        df = df.withColumn("__salt", _mul32("__salt", pow(0x1B873593, -1, 1 << 32)))
+        df = df.withColumn("__salt", F.shiftright("__salt", 15).bitwiseOR(
+            F.shiftleft("__salt", 17).bitwiseAND(F.lit(_M32))))
+        # coalesce: a non-null salt gets no inferred isnotnull filter,
+        # which would be pushed below these steps and inline them all
+        return df.withColumn("__salt", F.coalesce(
+            _mul32("__salt", pow(0xCC9E2D51, -1, 1 << 32)), F.lit(0)))
+
+    salted_big = salted(
+        big.withColumn("__salt", F.pmod(F.xxhash64(*big.columns), F.lit(n_salt))))
+    replicated = salted(
+        small.withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))))
     return salted_big.join(replicated, [on, "__salt"]).drop("__salt")
 
 

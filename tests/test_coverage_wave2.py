@@ -199,3 +199,28 @@ def test_salted_join_equals_plain_join(spark):
     plain = {(r.k, r.v, r.name) for r in big.join(small, "k").collect()}
     salted = {(r.k, r.v, r.name) for r in R.salted_join(big, small, "k", 8).collect()}
     assert salted == plain
+
+
+def test_salted_join_places_each_key_on_consecutive_partitions(spark):
+    """Every key's n_salt slices land on n_salt distinct shuffle
+    partitions (all P of them when n_salt >= P), also when the two key
+    columns differ in type."""
+    from simple_vector_spark.operators import relational as R
+
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    big = spark.range(4000).select(
+        (F.col("id") % 7).cast("int").alias("k"), F.col("id").alias("v"))
+    small = spark.range(7).select(F.col("id").alias("k"), F.col("id").alias("name"))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plain = sorted(map(tuple, big.join(small, "k").collect()))
+        for n_salt in (3, 2 * n_part):
+            salted = R.salted_join(big, small, "k", n_salt)
+            assert sorted(map(tuple, salted.collect())) == plain
+            spread = (salted.select("k", F.spark_partition_id().alias("p"))
+                      .distinct().groupBy("k").count().collect())
+            assert {r["count"] for r in spread} == {min(n_salt, n_part)}
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -535,7 +535,8 @@ def test_aqe_skew_join_splits_hot_partition(spark):
 # lists, k-smallest-hash sketches) and documented in its docstring; any
 # NEW site must either justify itself onto this list or use the
 # two-phase helpers in operators/ranking.py.  The matching plan-level
-# audit is tools/window_sweep.py (slow; run per-round).
+# audit is the orderby_only_windows count of tools/plan_scan.py (slow;
+# run per change).
 # --------------------------------------------------------------------------
 
 ORDERBY_ONLY_WINDOW_ALLOWLIST = {
