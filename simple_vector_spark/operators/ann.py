@@ -83,13 +83,9 @@ def fit_vectors(emb: DataFrame, ids: list[int], id_col: str = "vec_id", vec_col:
     """Model-parameter extraction: the plane/centroid vectors (a few
     rows), ordered by id.  float32 -> Python float is exact, so the
     literals below reproduce the oracle's f64 arithmetic bit-for-bit."""
-    rows = (
-        emb.filter(F.col(id_col).isin(ids))
-        .select(id_col, vec_col)
-        .orderBy(id_col)
-        .collect()
-    )
-    return [(r[0], [float(x) for x in r[1]]) for r in rows]
+    rows = emb.filter(F.col(id_col).isin(ids)).select(id_col, vec_col).collect()
+    # sorted here, not by an orderBy: a sort runs two more Spark jobs
+    return sorted(((r[0], [float(x) for x in r[1]]) for r in rows), key=lambda r: r[0])
 
 
 def rp_bucket(vec: Column, planes: list[tuple[int, list[float]]]) -> Column:
@@ -778,22 +774,22 @@ def ivf_cell_stats(emb: DataFrame, cents: list[tuple[int, list[float]]]) -> Data
     Imbalance is WHY ivf probes skew at scale — a hot cell turns
     nprobe=3 into a scan of half the corpus; this audit is the
     rebalance trigger (re-train centroids when max share drifts).
-    One scan + one tiny shuffle on cell id; the total rides a window
-    over the per-cell aggregate (n_cells rows), not a second scan."""
-    from pyspark.sql import Window
-
+    One scan + one tiny shuffle on cell id; the total is a one-row
+    aggregate of the per-cell rows (n_cells of them, the shuffle reused),
+    broadcast back to them: not a second scan, and not a whole-table
+    window, which would move every row to one task."""
     n_cells = len(cents)
     per_cell = (
         emb.select(ivf_cell(F.col("embedding"), cents).alias("cell"))
         .groupBy(F.col("cell").cast("int").alias("cell"))
         .agg(F.count("*").cast("bigint").alias("n_vecs"))
     )
-    total = F.sum("n_vecs").over(Window.partitionBy())
-    return per_cell.select(
+    total = per_cell.agg(F.sum("n_vecs").cast("double").alias("_total"))
+    return per_cell.crossJoin(F.broadcast(total)).select(
         "cell",
         "n_vecs",
-        F.round(F.col("n_vecs") / total.cast("double"), 6).alias("share"),
-        F.round(F.col("n_vecs") * F.lit(float(n_cells)) / total.cast("double"), 6)
+        F.round(F.col("n_vecs") / F.col("_total"), 6).alias("share"),
+        F.round(F.col("n_vecs") * F.lit(float(n_cells)) / F.col("_total"), 6)
         .alias("skew_vs_uniform"),
     )
 

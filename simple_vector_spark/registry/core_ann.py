@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table
+from ..sources.loaders import load_table, scratch_path, session_cached
 
 from . import _ORACLES, query
 from .core_knn import KNN_K
@@ -30,13 +30,40 @@ _PLANES_SQL = ", ".join(str(i) for i in A.PLANE_IDS)
 _CENTS_SQL = ", ".join(str(i) for i in A.CENTROID_IDS)
 TRAIN_ITERS = 2  # fixed Lloyd iterations — deterministic, oracle-unrollable
 
-# Trained-codebook cache: model parameters (k rows of floats) keyed by
-# fixture dir.  Training is deterministic (fixed seeds, fixed
-# iterations), so recomputing it per query only re-pays ~5s of codegen
-# + actions; a real system trains once and serves many searches.  Keyed
-# by (sf_dir, iters) so different fixtures never cross-contaminate.
-_TRAINED_CENTS_CACHE: dict[tuple[str, int], list] = {}
-_TRAINED_PQ_CACHE: dict[tuple[str, int], list] = {}
+
+def _seed_codebook(spark, sf_dir: str, ids: list[int]):
+    """The seed vectors ``ids`` (``A.CENTROID_IDS`` or ``A.PLANE_IDS``)
+    of the fixture's corpus: model parameters, collected once per
+    session like the trained codebooks."""
+    return session_cached(
+        spark, sf_dir, f"seed_codebook_{'_'.join(map(str, ids))}",
+        lambda: A.fit_vectors(load_table(spark, sf_dir, "embeddings"), ids),
+    )
+
+
+def _trained_centroids(spark, sf_dir: str):
+    """``TRAIN_ITERS`` Lloyd steps from the seed centroids, trained once
+    per session.  Training is deterministic (fixed seeds, fixed
+    iterations), so recomputing it per query only re-pays ~5s of
+    codegen + actions; a real system trains once and serves many
+    searches."""
+    return session_cached(
+        spark, sf_dir, "trained_centroids",
+        lambda: A.train_centroids(
+            load_table(spark, sf_dir, "embeddings"), A.CENTROID_IDS, TRAIN_ITERS
+        ),
+    )
+
+
+def _trained_pq(spark, sf_dir: str):
+    """The PQ codebooks after ``TRAIN_ITERS`` steps, trained once per
+    session."""
+    return session_cached(
+        spark, sf_dir, "trained_pq",
+        lambda: A.train_pq_codebooks(
+            load_table(spark, sf_dir, "embeddings"), iters=TRAIN_ITERS
+        ),
+    )
 
 
 def _emb_with_cells(spark, sf_dir: str, trained: bool = False) -> DataFrame:
@@ -46,22 +73,18 @@ def _emb_with_cells(spark, sf_dir: str, trained: bool = False) -> DataFrame:
     the same codebook, so it is computed once per (fixture, codebook)
     and checkpointed; all IVF search paths accept it via
     A.with_cells' passthrough."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = (
-        _trained_centroids(emb, sf_dir)
-        if trained
-        else A.fit_vectors(emb, A.CENTROID_IDS)
-    )
     from ..sources.loaders import fan_out
 
+    def build() -> DataFrame:
+        cents = (
+            _trained_centroids(spark, sf_dir)
+            if trained
+            else _seed_codebook(spark, sf_dir, A.CENTROID_IDS)
+        )
+        return A.cells_arrow(fan_out(load_table(spark, sf_dir, "embeddings")), cents)
+
     return _cached_index(
-        spark, sf_dir, f"ivf_cells_{'trained' if trained else 'seed'}",
-        lambda: A.cells_arrow(fan_out(emb), cents),
-        # corpus-sized AND vector-bearing: same-cell self-joins
-        # (knn_graph_blocked, dedup_embedding_blocked) do quadratic
-        # scoring straight off these partitions — compacting to one
-        # block serializes that compute (r05 bench: 0.85 -> 3.6 s)
-        compact=False,
+        spark, sf_dir, f"ivf_cells_{'trained' if trained else 'seed'}", build
     )
 
 
@@ -73,7 +96,7 @@ def _graph_edges(spark, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return _cached_index(
         spark, sf_dir, "graph_edges",
-        lambda: A.knn_graph_navigable(emb, A.fit_vectors(emb, A.CENTROID_IDS)),
+        lambda: A.knn_graph_navigable(emb, _seed_codebook(spark, sf_dir, A.CENTROID_IDS)),
     )
 
 
@@ -87,7 +110,7 @@ def _graph_cells(spark, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return _cached_index(
         spark, sf_dir, "graph_cells",
-        lambda: A.graph_cell_assignments(emb, A.fit_vectors(emb, A.CENTROID_IDS)),
+        lambda: A.graph_cell_assignments(emb, _seed_codebook(spark, sf_dir, A.CENTROID_IDS)),
     )
 
 
@@ -105,20 +128,6 @@ def _graph_ball(spark, sf_dir: str) -> DataFrame:
         return A.graph_ball(edges, A.CENTROID_IDS, A.GRAPH_HOPS)
 
     return _cached_index(spark, sf_dir, "graph_ball", build)
-
-
-def _trained_centroids(emb: DataFrame, sf_dir: str, iters: int = None):
-    key = (sf_dir, iters if iters is not None else TRAIN_ITERS)
-    if key not in _TRAINED_CENTS_CACHE:
-        _TRAINED_CENTS_CACHE[key] = A.train_centroids(emb, A.CENTROID_IDS, key[1])
-    return _TRAINED_CENTS_CACHE[key]
-
-
-def _trained_pq(emb: DataFrame, sf_dir: str, iters: int = None):
-    key = (sf_dir, iters if iters is not None else TRAIN_ITERS)
-    if key not in _TRAINED_PQ_CACHE:
-        _TRAINED_PQ_CACHE[key] = A.train_pq_codebooks(emb, iters=key[1])
-    return _TRAINED_PQ_CACHE[key]
 
 
 def _mean6_sql(sum_e: str, cnt_e: str) -> str:
@@ -226,7 +235,7 @@ def ann_rp_lsh(spark, sf_dir):
     hyperplanes -> 16 buckets), exact re-rank.  Zero-shuffle bucket
     assignment; recall < 1 by construction (like HNSW ef_search)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    planes = A.fit_vectors(emb, A.PLANE_IDS)
+    planes = _seed_codebook(spark, sf_dir, A.PLANE_IDS)
     return A.rp_lsh_search(emb, emb.filter(F.col("vec_id") == ANN_QUERY_ID), planes, ANN_K)
 
 
@@ -279,7 +288,7 @@ def ann_ivf(spark, sf_dir):
     the Parquet analog of FAISS inverted lists.  The raw-seed variant
     survives as ann_ivf_seed_baseline."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = _trained_centroids(emb, sf_dir)
+    cents = _trained_centroids(spark, sf_dir)
     return A.ivf_search(
         _emb_with_cells(spark, sf_dir, trained=True),
         emb.filter(F.col("vec_id") == ANN_QUERY_ID), cents, ANN_K, IVF_NPROBE
@@ -301,7 +310,7 @@ def ann_ivf_seed_baseline(spark, sf_dir):
     Lloyd training) — kept to quantify what training buys; the
     recall comparison is asserted in tests/test_ann.py."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = A.fit_vectors(emb, A.CENTROID_IDS)
+    cents = _seed_codebook(spark, sf_dir, A.CENTROID_IDS)
     return A.ivf_search(
         _emb_with_cells(spark, sf_dir),
         emb.filter(F.col("vec_id") == ANN_QUERY_ID), cents, ANN_K, IVF_NPROBE
@@ -336,7 +345,7 @@ def ann_recall_report(spark, sf_dir):
     trade, fully oracle-checked because both sides are deterministic."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == ANN_QUERY_ID)
-    planes = A.fit_vectors(emb, A.PLANE_IDS)
+    planes = _seed_codebook(spark, sf_dir, A.PLANE_IDS)
     ann_hits = A.rp_lsh_search(emb, q, planes, ANN_K)
     exact_hits = K.knn_topk(emb, q, ANN_K, "sqL2")
     return A.recall_report(ann_hits, exact_hits, ANN_K)
@@ -414,12 +423,9 @@ def ann_ivf_partitioned(spark, sf_dir):
     """O4 at its 100-TB layout: bulk-build the IVF index as Parquet
     partitioned by cell, probe via partition-pruned scan — identical
     results to ann_ivf (same oracle)."""
-    import os
-
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = _trained_centroids(emb, sf_dir)  # trained default (round 3)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/ivf_index_{tag}"
+    cents = _trained_centroids(spark, sf_dir)  # trained default (round 3)
+    path = scratch_path("ivf_index", sf_dir)
     A.build_ivf_index(emb, cents, path)
     return A.ivf_probe_partitioned(
         spark, path, emb.filter(F.col("vec_id") == ANN_QUERY_ID), cents, ANN_K, IVF_NPROBE
@@ -542,7 +548,7 @@ def ann_pq_adc(spark, sf_dir):
     compressed scan path of a PQ index (FAISS IndexPQ analog), fully
     oracle-checked."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cbs = _trained_pq(emb, sf_dir)
+    cbs = _trained_pq(spark, sf_dir)
     return A.pq_adc_search(emb, emb.filter(F.col("vec_id") == 0), cbs, KNN_K)
 
 
@@ -568,7 +574,7 @@ def ann_pq_recall(spark, sf_dir):
     ranking quality (compare ann_quantized_recall's 4x int8 point)."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0)
-    cbs = _trained_pq(emb, sf_dir)
+    cbs = _trained_pq(spark, sf_dir)
     pq_hits = A.pq_adc_search(emb, q, cbs, KNN_K)
     exact_hits = K.knn_topk(emb, q, KNN_K, "sqL2")
     return A.recall_report(pq_hits, exact_hits, KNN_K)

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table
+from ..sources.loaders import load_table, scratch_path
 
 from . import _ORACLES, query
 
@@ -452,11 +452,8 @@ def snapshot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     label predicate after restore prunes at the directory level.
     Values must round-trip losslessly — checked by the oracle reading
     the ORIGINAL table."""
-    import os
-
     emb = load_table(spark, sf_dir, "embeddings")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/snap_embeddings_{tag}"
+    path = scratch_path("snap_embeddings", sf_dir)
     M.snapshot(emb, path, partition_by=["label"])
     back = M.restore(spark, path)
     return (
@@ -483,11 +480,8 @@ def json_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     an explicit schema (schema inference is a full extra pass at
     100 TB — never rely on it), aggregate; the oracle reads the
     ORIGINAL parquet, so the check proves lossless JSON round-trip."""
-    import os
-
     docs = load_table(spark, sf_dir, "documents")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/docs_json_{tag}"
+    path = scratch_path("docs_json", sf_dir)
     docs.write.mode("overwrite").json(path)
     back = spark.read.schema(
         "doc_id long, text string, lang string, source string, n_chars long"
@@ -509,11 +503,8 @@ def csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle reading the ORIGINAL parquet — the fixture text contains
     commas).  Explicit schema, never inferSchema (a full extra pass at
     100 TB)."""
-    import os
-
     docs = load_table(spark, sf_dir, "documents")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/docs_csv_{tag}"
+    path = scratch_path("docs_csv", sf_dir)
     docs.write.mode("overwrite").option("header", True).csv(path)
     back = (
         spark.read.schema(
@@ -540,11 +531,8 @@ def orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     after Parquet/JSON/CSV; same predicate-pushdown/column-pruning
     contract as Parquet).  Oracle reads the ORIGINAL parquet, proving
     the round-trip lossless."""
-    import os
-
     docs = load_table(spark, sf_dir, "documents")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/docs_orc_{tag}"
+    path = scratch_path("docs_orc", sf_dir)
     docs.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("lang", "source").agg(

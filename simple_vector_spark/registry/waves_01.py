@@ -9,13 +9,13 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table
+from ..sources.loaders import load_table, scratch_path
 
 from . import finalize_double, query
 from .core_knn import PLANT_MOD, PLANT_SHIFT, WAU_WINDOW_DAYS, _PAIR_COS
 from .core_relational import E, R, _DEC_DISC_SQL, _DEC_PRICE_SQL
 from .core_dedup import COSINE_DUP_THRESHOLD, D, MINHASH_A, MINHASH_B, MINHASH_P, _DOCS_PLUS_SQL, _SIG_COLS_SQL, _TOKS_SQL, _docs_plus_spark, _minhash_pairs
-from .core_ann import A, ANN_K, ANN_QUERY_ID, IVF_NPROBE, T, _CENTS_SQL, _TRAINED_CTES, _emb_with_cells, _mean6_sql, _trained_centroids
+from .core_ann import A, ANN_K, ANN_QUERY_ID, IVF_NPROBE, T, _CENTS_SQL, _TRAINED_CTES, _emb_with_cells, _mean6_sql, _seed_codebook, _trained_centroids
 from .core_text import _TK_SQL
 from .core_multimodal_streaming import MM
 
@@ -483,7 +483,7 @@ def ann_ivfpq_rerank(spark, sf_dir):
     shortlist only.  Stage 1 touches the 8-byte code column of probed
     cells; stage 2 fetches 50 full vectors by broadcast id join."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = A.fit_vectors(emb, A.CENTROID_IDS)
+    cents = _seed_codebook(spark, sf_dir, A.CENTROID_IDS)
     cbs = A.pq_codebooks(emb, cents=cents)
     q = emb.filter(F.col("vec_id") == ANN_QUERY_ID)
     return A.ivfpq_rerank_search(
@@ -506,7 +506,7 @@ def dedup_embedding_blocked(spark, sf_dir):
     in-scan, shuffle join on the cell id — sum(cell^2) pair space
     instead of n^2 (the 100 TB path; recall measured below)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = A.fit_vectors(emb, A.CENTROID_IDS)
+    cents = _seed_codebook(spark, sf_dir, A.CENTROID_IDS)
     return D.embedding_cosine_pairs_blocked(emb, cents, COSINE_DUP_THRESHOLD)
 
 
@@ -536,7 +536,7 @@ def embedding_blocked_recall(spark, sf_dir):
     the same threshold (blocked is a strict subset — same sim
     expression, fewer candidates)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = A.fit_vectors(emb, A.CENTROID_IDS)
+    cents = _seed_codebook(spark, sf_dir, A.CENTROID_IDS)
     blocked = D.embedding_cosine_pairs_blocked(emb, cents, COSINE_DUP_THRESHOLD)
     # brute-force denominator is a COUNT only — the blocked cogrouped
     # tile kernel (per-tile counts shuffle, numpy at BLAS speed)
@@ -923,11 +923,8 @@ def text_source_logparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     Newlines inside text are escaped before framing (a log line IS the
     record boundary — at 100 TB this framing is what makes the format
     splittable)."""
-    import os
-
     docs = load_table(spark, sf_dir, "documents")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/docs_log_{tag}"
+    path = scratch_path("docs_log", sf_dir)
     esc = F.regexp_replace(
         F.regexp_replace(F.col("text"), r"\\", r"\\\\"), "\n", r"\\n"
     )
@@ -1387,7 +1384,7 @@ def ann_ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs the uniform share — the rebalance trigger for the coarse
     quantizer (a hot cell turns nprobe=3 into a half-corpus scan)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = A.fit_vectors(emb, A.CENTROID_IDS)
+    cents = _seed_codebook(spark, sf_dir, A.CENTROID_IDS)
     return A.ivf_cell_stats(emb, cents)
 
 
@@ -2098,7 +2095,7 @@ def ann_recall_vs_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the measured answer to the reference's ef_search recall dial
     (src/hnswlib_index.cc:16)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = _trained_centroids(emb, sf_dir)
+    cents = _trained_centroids(spark, sf_dir)
     return A.ivf_recall_curve(
         _emb_with_cells(spark, sf_dir, trained=True),
         emb.filter(F.col("vec_id") == ANN_QUERY_ID), cents, ANN_K, (1, 2, 3)
@@ -2120,7 +2117,7 @@ def ann_recall_vs_nprobe_seed_baseline(spark: SparkSession, sf_dir: str) -> Data
     seed-row codebook (no training) — kept so the training lift is a
     measured number, not a claim."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = A.fit_vectors(emb, A.CENTROID_IDS)
+    cents = _seed_codebook(spark, sf_dir, A.CENTROID_IDS)
     return A.ivf_recall_curve(
         _emb_with_cells(spark, sf_dir),
         emb.filter(F.col("vec_id") == ANN_QUERY_ID), cents, ANN_K, (1, 2, 3)

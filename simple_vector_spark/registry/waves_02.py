@@ -9,13 +9,13 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table
+from ..sources.loaders import load_table, scratch_path, session_cached
 
 from . import finalize_double, query
 from .core_knn import PLANT_MOD, PLANT_SHIFT
 from .core_relational import E, R
 from .core_dedup import D, _CLUSTER_LABELS_CTES, _DOCS_PLUS_SQL, _SIG_COLS_SQL, _TOKS_SQL, _docs_plus_spark, _dup_cluster_labels, _minhash_pairs
-from .core_ann import A, ANN_K, ANN_QUERY_ID, IVF_NPROBE, T, _CENTS_SQL, _emb_with_cells
+from .core_ann import A, ANN_K, ANN_QUERY_ID, IVF_NPROBE, T, _CENTS_SQL, _emb_with_cells, _seed_codebook
 from .core_text import _QUALITY_SCORED_SQL, _TK_SQL, _quality_scored_sql
 from .core_multimodal_streaming import MM, SJ
 from .waves_01 import CU, SK, _ASSIGN_SQL, _BLOCKED_PAIRS_SQL, _UNIGRAM_SCORED_SQL
@@ -647,7 +647,7 @@ def ann_adaptive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return A.adaptive_filtered_search(
         emb,
         emb.filter(F.col("vec_id") == ANN_QUERY_ID),
-        A.fit_vectors(emb, A.CENTROID_IDS),
+        _seed_codebook(spark, sf_dir, A.CENTROID_IDS),
         ANN_K,
         ADAPTIVE_LABEL,
         ADAPTIVE_THRESH_SPARSE,
@@ -669,7 +669,7 @@ def ann_adaptive_filter_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     return A.adaptive_filtered_search(
         emb,
         emb.filter(F.col("vec_id") == ANN_QUERY_ID),
-        A.fit_vectors(emb, A.CENTROID_IDS),
+        _seed_codebook(spark, sf_dir, A.CENTROID_IDS),
         ANN_K,
         ADAPTIVE_LABEL,
         ADAPTIVE_THRESH_DENSE,
@@ -784,9 +784,8 @@ def ivf_index_upsert_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest-wins, per-cell population before/after + delta — the
     reference's on-mutation filter-index upkeep (O14) recast as cell
     stats maintenance."""
-    emb = load_table(spark, sf_dir, "embeddings")
     return A.ivf_index_upsert_audit(
-        _emb_with_cells(spark, sf_dir), A.fit_vectors(emb, A.CENTROID_IDS)
+        _emb_with_cells(spark, sf_dir), _seed_codebook(spark, sf_dir, A.CENTROID_IDS)
     )
 
 
@@ -1317,7 +1316,7 @@ def split_embedding_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = embedding_cosine_pairs_blocked(
-        emb, A.fit_vectors(emb, A.CENTROID_IDS), SPLIT_LEAK_SIM
+        emb, _seed_codebook(spark, sf_dir, A.CENTROID_IDS), SPLIT_LEAK_SIM
     )
 
     def gate(c):
@@ -1940,11 +1939,8 @@ def gzip_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back (codec decompression is transparent to the reader;
     explicit schema, never inference).  Oracle reads the ORIGINAL
     parquet — the check proves a lossless compressed round-trip."""
-    import os
-
     docs = load_table(spark, sf_dir, "documents")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/docs_json_gz_{tag}"
+    path = scratch_path("docs_json_gz", sf_dir)
     docs.write.mode("overwrite").option("compression", "gzip").json(path)
     back = spark.read.schema(
         "doc_id long, text string, lang string, source string, n_chars long"
@@ -1994,8 +1990,6 @@ def wal_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     boot loop, src/persistence.cc:84-135) and replay latest-wins with
     tombstone drop.  The oracle recomputes the same state from the
     original table, proving the binary round-trip lossless."""
-    import os
-
     from ..sources.wal_source import WalDataSource, write_wal_segments
 
     if "simple_vector_wal" not in getattr(spark, "_wal_source_registered", set()):
@@ -2016,20 +2010,19 @@ def wal_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("doc"),
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/wal_{tag}"
+
+    def write() -> str:
+        import shutil
+
+        path = scratch_path("wal", sf_dir)
+        shutil.rmtree(path, ignore_errors=True)
+        write_wal_segments(log.repartition(4, "log_id"), path)
+        return path
+
     # the framed log is deterministic per fixture: write it once per
     # session (the binary encode costs ~2s; a real system writes its
     # WAL as a side effect of ingest, not per read)
-    written = getattr(spark, "_wal_written", set())
-    if path not in written:
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        write_wal_segments(log.repartition(4, "log_id"), path)
-        written.add(path)
-        spark._wal_written = written
-
+    path = session_cached(spark, sf_dir, "wal_segments", write)
     wal = spark.read.format("simple_vector_wal").option("path", path).load()
     parsed = wal.select(
         "log_id",
@@ -2063,11 +2056,8 @@ def partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate that must prune to ONE partition directory
     (PartitionFilters, asserted in tests/test_plans.py).  Oracle reads
     the original parquet — lossless layout round-trip."""
-    import os
-
     docs = load_table(spark, sf_dir, "documents")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/docs_by_lang_{tag}"
+    path = scratch_path("docs_by_lang", sf_dir)
     (
         docs.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -2285,8 +2275,7 @@ def stream_wal_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("doc"),
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/wal_stream_{tag}"
+    path = scratch_path("wal_stream", sf_dir)
     ck = f"{path}_ck"
     shutil.rmtree(path, ignore_errors=True)
     shutil.rmtree(ck, ignore_errors=True)

@@ -9,13 +9,13 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table, local_frame
+from ..sources.loaders import load_table, local_frame, scratch_path
 
 from . import _ORACLES, finalize_double, query
 from .core_knn import KNN_K
 from .core_relational import E, R
 from .core_events import _SESSION_ORACLE
-from .core_dedup import D, _CLUSTER_LABELS_CTES, _DOCS_PLUS_SQL, _SIG_COLS_SQL, _TOKS_SQL, _cached_index, _docs_plus_spark, _dup_cluster_labels, _minhash_pairs
+from .core_dedup import D, _CLUSTER_LABELS_CTES, _DOCS_PLUS_SQL, _SIG_COLS_SQL, _TOKS_SQL, _docs_plus_spark, _dup_cluster_labels, _minhash_pairs
 from .core_ann import A, ANN_K, ANN_QUERY_ID, T
 from .core_text import BM25_TERMS, _BM25_CTES, _BM25_TERMS_SQL, _TK_SQL
 from .waves_01 import CU, SK
@@ -265,7 +265,6 @@ def stream_live_index_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     search result proven equal to a batch replay oracle.  Search cost
     shape is unchanged (semi-join of the corpus against the live-id
     state, then the usual heap top-k)."""
-    import os
     import shutil
 
     from ..sources.wal_source import WalDataSource, write_wal_segments
@@ -283,8 +282,7 @@ def stream_live_index_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
         F.to_json(F.struct((F.col("vec_id") % WAL_DOC_MOD).alias("id"))).alias("doc"),
     )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/wal_live_{tag}"
+    path = scratch_path("wal_live", sf_dir)
     ck, raw = f"{path}_ck", f"{path}_raw"
     for p in (path, ck, raw):
         shutil.rmtree(p, ignore_errors=True)
@@ -614,12 +612,7 @@ def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle census + global clustering coefficient of the MinHash
     pair graph — clique-like clusters (true re-posts) vs chain-like
     drift families, via the oriented wedge join (two key shuffles)."""
-    return D.pair_graph_triangles(
-        _cached_index(
-            spark, sf_dir, "minhash_pairs",
-            lambda: D.minhash_candidate_pairs(_docs_plus_spark(spark, sf_dir)),
-        )
-    )
+    return D.pair_graph_triangles(_minhash_pairs(spark, sf_dir))
 
 
 @query(
@@ -885,11 +878,8 @@ def xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass at 100 TB — never rely on it), aggregate.  The oracle reads
     the ORIGINAL parquet, so a hash match proves the XML round-trip is
     lossless including entity-escaping of markup characters."""
-    import os
-
     nation = load_table(spark, sf_dir, "nation")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/nation_xml_{tag}"
+    path = scratch_path("nation_xml", sf_dir)
     (
         nation.write.mode("overwrite")
         .option("rootTag", "nations")
@@ -2242,8 +2232,6 @@ def json_malformed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     columnNameOfCorruptRecord — corrupt rows surface as quarantine
     rows instead of failing the job, the production ingest posture.
     Oracle recomputes the same partition from the corruption rule."""
-    import os
-
     docs = load_table(spark, sf_dir, "documents")
     line = F.to_json(F.struct("doc_id", "lang", "n_chars"))
     mangled = F.when(
@@ -2253,8 +2241,7 @@ def json_malformed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "length(to_json(struct(doc_id, lang, n_chars))) - 1)"
         ),
     ).otherwise(line)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/docs_malformed_{tag}"
+    path = scratch_path("docs_malformed", sf_dir)
     docs.select(mangled.alias("value")).write.mode("overwrite").text(path)
     back = (
         spark.read.schema(

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table, local_frame
+from ..sources.loaders import load_table, local_frame, scratch_path
 
 from . import _ORACLES, finalize_double, query
 from .core_knn import PLANT_MOD, PLANT_SHIFT
@@ -889,8 +889,6 @@ def arrow_ipc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     InputPartition per file, reader yields RecordBatches — Arrow in,
     Arrow out, no per-row Python.  Oracle reads the ORIGINAL parquet,
     proving the interchange lossless."""
-    import os
-
     from ..sources.arrow_ipc_source import ArrowIpcDataSource, write_arrow_ipc
 
     if "arrow_ipc" not in getattr(spark, "_arrow_ipc_registered", set()):
@@ -898,8 +896,7 @@ def arrow_ipc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark._arrow_ipc_registered = {"arrow_ipc"}
 
     emb = load_table(spark, sf_dir, "embeddings")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/emb_arrow_{tag}"
+    path = scratch_path("emb_arrow", sf_dir)
     import shutil
 
     shutil.rmtree(path, ignore_errors=True)

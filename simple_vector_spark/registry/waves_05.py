@@ -14,7 +14,7 @@ from ..sources.loaders import load_table
 from . import finalize_double, query
 from .core_relational import E, R
 from .core_dedup import D, MINHASH_A, _DOCS_PLUS_SQL, _SIG_COLS_SQL, _TOKS_SQL, _cached_index, _docs_plus_spark, _minhash_pairs
-from .core_ann import A, ANN_K, ANN_QUERY_ID, T, _CENTS_SQL, _PQ_SQL, _graph_edges, _trained_pq
+from .core_ann import A, ANN_K, ANN_QUERY_ID, T, _CENTS_SQL, _PQ_SQL, _graph_edges, _seed_codebook, _trained_pq
 from .core_text import _PROFILE_SQL, _TK_SQL
 from .core_multimodal_streaming import MM
 from .waves_01 import CU, SK
@@ -55,7 +55,7 @@ def ann_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     loses, corpus mean/max and share of mean norm² — the quantization
     QA number before trusting ADC shortlists."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return A.pq_distortion_audit(emb, _trained_pq(emb, sf_dir))
+    return A.pq_distortion_audit(emb, _trained_pq(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -389,7 +389,7 @@ def knn_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge table; answer = top-{ANN_K} of everything visited."""
     emb = load_table(spark, sf_dir, "embeddings")
     return A.knn_graph_greedy_search(
-        emb, A.fit_vectors(emb, A.CENTROID_IDS), ANN_QUERY_ID, ANN_K,
+        emb, _seed_codebook(spark, sf_dir, A.CENTROID_IDS), ANN_QUERY_ID, ANN_K,
         edges=_graph_edges(spark, sf_dir),
     )
 

@@ -9,11 +9,11 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table, local_frame
+from ..sources.loaders import load_table, local_frame, scratch_path
 
 from . import finalize_double, query
 from .core_relational import E, R
-from .core_ann import A, ANN_K, ANN_QUERY_ID, T, _PLANES_SQL, _graph_edges
+from .core_ann import A, ANN_K, ANN_QUERY_ID, T, _PLANES_SQL, _graph_edges, _seed_codebook
 from .core_text import _PROFILE_SQL, _TK_SQL
 from .waves_01 import CU
 from .waves_05 import _NAV_EDGES_SQL
@@ -175,7 +175,7 @@ def knn_graph_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     build."""
     emb = load_table(spark, sf_dir, "embeddings")
     return A.knn_graph_health(
-        emb, A.fit_vectors(emb, A.CENTROID_IDS),
+        emb, _seed_codebook(spark, sf_dir, A.CENTROID_IDS),
         edges_in=_graph_edges(spark, sf_dir),
     )
 
@@ -232,7 +232,7 @@ def ann_rp_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|planes|+1)x candidate cost, no extra hash tables; zero-shuffle
     buckets, broadcast probe set, exact rerank."""
     emb = load_table(spark, sf_dir, "embeddings")
-    planes = A.fit_vectors(emb, A.PLANE_IDS)
+    planes = _seed_codebook(spark, sf_dir, A.PLANE_IDS)
     return A.rp_multiprobe_search(
         emb, emb.filter(F.col("vec_id") == ANN_QUERY_ID), planes, ANN_K
     )
@@ -1484,8 +1484,7 @@ def dpp_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     orders = load_table(spark, sf_dir, "orders")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/orders_by_month_{tag}"
+    path = scratch_path("orders_by_month", sf_dir)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             orders.withColumn(

@@ -9,14 +9,14 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table
+from ..sources.loaders import load_table, scratch_path
 
 from . import _ORACLES, query
 from .core_relational import E, R
 from .core_dedup import _H_SQL
 from .core_ann import (
     A, ANN_K, ANN_QUERY_ID, T, _CENTS_SQL, _graph_ball, _graph_cells,
-    _graph_edges,
+    _graph_edges, _seed_codebook,
 )
 from .core_text import _TK_SQL
 from .waves_05 import _NAV_EDGES_SQL, _graph_walk_sql
@@ -2277,7 +2277,7 @@ def ann_recall_vs_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k baseline shared across walks, each walk frontier-sized."""
     emb = load_table(spark, sf_dir, "embeddings")
     return A.graph_recall_vs_beam(
-        emb, A.fit_vectors(emb, A.CENTROID_IDS), ANN_QUERY_ID, ANN_K,
+        emb, _seed_codebook(spark, sf_dir, A.CENTROID_IDS), ANN_QUERY_ID, ANN_K,
         edges=_graph_edges(spark, sf_dir),
         ball=_graph_ball(spark, sf_dir),
     )
@@ -2385,7 +2385,7 @@ def graph_index_upsert_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(affected cells), never O(corpus)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return A.graph_index_upsert_audit(
-        emb, A.fit_vectors(emb, A.CENTROID_IDS),
+        emb, _seed_codebook(spark, sf_dir, A.CENTROID_IDS),
         edges_before=_graph_edges(spark, sf_dir),
         base_cells=_graph_cells(spark, sf_dir),
     )
@@ -2401,12 +2401,9 @@ def graph_index_persist_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     search over the RELOADED edges.  Result equals knn_graph_search
     (shared oracle), proving the round trip lossless — the graph twin
     of ann_ivf_partitioned's persisted IVF layout."""
-    import os
-
     emb = load_table(spark, sf_dir, "embeddings")
     edges = _graph_edges(spark, sf_dir)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/_scratch/graph_index_{tag}"
+    path = scratch_path("graph_index", sf_dir)
     (
         edges.withColumn("bucket", (F.col("vec_id") % 16).cast("int"))
         .write.mode("overwrite")
@@ -2417,7 +2414,7 @@ def graph_index_persist_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
         "vec_id", "nbr_id", "dist", "rnk"
     )
     return A.knn_graph_greedy_search(
-        emb, A.fit_vectors(emb, A.CENTROID_IDS), ANN_QUERY_ID, ANN_K,
+        emb, _seed_codebook(spark, sf_dir, A.CENTROID_IDS), ANN_QUERY_ID, ANN_K,
         edges=reloaded,
     )
 

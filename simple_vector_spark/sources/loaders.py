@@ -32,6 +32,42 @@ TABLES = (
 )
 
 
+# The directory the write-path queries write under: ``_scratch`` in the
+# checkout this package was imported from.  It stays one absolute
+# string literal so that an importer can point it elsewhere by
+# rewriting the source (perfbench moves it into its work directory).
+_SCRATCH = "/__checkout__/_scratch/"
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def scratch_path(kind: str, sf_dir: str) -> str:
+    """Where a write-path query puts its ``kind`` output for the fixture
+    ``sf_dir``: one directory per (kind, fixture name)."""
+    tag = os.path.basename(sf_dir.rstrip("/"))
+    return _SCRATCH.replace("/__checkout__", _CHECKOUT, 1) + f"{kind}_{tag}"
+
+
+def session_cached(spark: SparkSession, sf_dir: str, name: str, build):
+    """The session's one store for build-once state: ``build()``'s
+    value for (``name``, fixture dir), built on the first call and
+    returned as is after that.  Holds the loaded tables, the index
+    relations and the codebooks; a real system builds its index once
+    and serves every search from it.
+
+    The fixture tables are immutable for a session's lifetime and a
+    DataFrame is an immutable logical plan, so sharing is safe, but only
+    within one session: a DataFrame is bound to the SQLConf of the
+    session that created it, and ``spark.newSession()`` twins (same
+    application, private conf; bloom_filter_join uses one) must not see
+    each other's entries.  So the store is an attribute of the session
+    object and dies with it."""
+    cache = spark.__dict__.setdefault("_sv_relation_cache", {})
+    key = (name, os.path.abspath(sf_dir))
+    if key not in cache:
+        cache[key] = build()
+    return cache[key]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # The engine's timestamp semantics are UTC (FIXTURES.md §C: the
     # DuckDB oracle sees naive/UTC timestamps).  The driver brings its
@@ -39,45 +75,42 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # query loads through this function.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    # Resolved-relation cache, stored ON the session object: every
-    # spark.read.parquet re-lists the directory and re-reads footers for
-    # schema — a driver-side job worth ~50-150 ms that the bench pays
-    # ~2000x (514 queries x ~2 tables x 2 laps).  The fixture tables are
-    # immutable for a session's lifetime and a DataFrame is an immutable
-    # logical plan, so sharing is safe — but only WITHIN one session: a
-    # DataFrame is bound to the SQLConf of the session that created it,
-    # and spark.newSession() twins (same applicationId, private conf —
-    # bloom_filter_join uses one) must not see each other's relations,
-    # so the cache lives as an attribute that dies with its session.
-    cache = getattr(spark, "_sv_relation_cache", None)
-    if cache is None:
-        cache = {}
-        spark._sv_relation_cache = cache
-    key = os.path.abspath(path)
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
-    df = _read_table(spark, path, name)
-    cache[key] = df
-    return df
+    return session_cached(spark, sf_dir, name, lambda: _read_table(spark, path, name))
+
+
+def _footer_schema(path: str) -> StructType:
+    """The Spark schema of a Parquet file, read from its footer on the
+    driver: a read that infers the schema runs one Spark job.
+    Timestamps without a time zone are TIMESTAMP_NTZ, as Spark infers
+    them; nanosecond ones are longs, as Spark reads them under
+    ``spark.sql.legacy.parquet.nanosAsLong``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    schema = pq.read_schema(path)
+    for i, f in enumerate(schema):
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
+            schema = schema.set(i, f.with_type(pa.int64()))
+    return from_arrow_schema(schema, prefer_timestamp_ntz=True)
 
 
 def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
-    if name == "events":
-        # Fixture vintages differ on events.ts: some are nanosecond
-        # parquet timestamps (which the Spark reader rejects — read as a
-        # raw long and INTEGER-truncate to micros, matching DuckDB's
-        # ns->us truncation), newer ones are plain us timestamps the
-        # reader handles natively.  Adapt to whichever is on disk.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        # native-us fixtures arrive as TIMESTAMP_NTZ; normalize to the
-        # session-UTC TimestampType every downstream operator was built
-        # against (identical instants under the pinned UTC session tz)
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(path)
+    if name != "events":
+        return spark.read.schema(_footer_schema(path)).parquet(path)
+    # Fixture vintages differ on events.ts: some are nanosecond parquet
+    # timestamps (which the Spark reader rejects — read as a raw long
+    # and INTEGER-truncate to micros, matching DuckDB's ns->us
+    # truncation), newer ones are plain us timestamps the reader handles
+    # natively.  Adapt to whichever is on disk.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.schema(_footer_schema(path)).parquet(path)
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    # native-us fixtures arrive as TIMESTAMP_NTZ; normalize to the
+    # session-UTC TimestampType every downstream operator was built
+    # against (identical instants under the pinned UTC session tz)
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def fan_out(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:

@@ -67,9 +67,17 @@ def test_mask_orders_distinct_aggregate_groups():
     # nested parentheses in a partition expression
     ("windowspecdefinition(pmod(hash(k#1, 42), 4), v#2 ASC NULLS FIRST, "
      "specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$()))", []),
+    # unpartitioned and unordered (OVER ()): the first argument is the frame
+    ("windowspecdefinition(specifiedwindowframe(RowFrame, "
+     "unboundedpreceding$(), unboundedfollowing$()))",
+     ["specifiedwindowframe(RowFrame, unboundedpreceding$(), unboundedfollowing$())"]),
+    # partitioned and unordered
+    ("windowspecdefinition(cell#3, specifiedwindowframe(RowFrame, "
+     "unboundedpreceding$(), unboundedfollowing$()))", []),
 ])
 def test_orderby_only_detector(window, hits):
-    assert plan_scan.orderby_only(f"Window [rank() {window} AS r#9]") == hits
+    """Named for its first form; flags every window with no PARTITION BY."""
+    assert plan_scan.global_windows(f"Window [rank() {window} AS r#9]") == hits
 
 
 def test_single_partition_exchange_not_under_aggregate():

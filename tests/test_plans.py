@@ -528,18 +528,19 @@ def test_aqe_skew_join_splits_hot_partition(spark):
 
 
 # --------------------------------------------------------------------------
-# Round-3 guard (VERDICT r02 item 8): orderBy-only windows funnel every
-# row through ONE task — the single plan shape that cannot survive a
-# 100x scale-up.  Every existing site is bounded-cardinality by
+# Round-3 guard (VERDICT r02 item 8): windows with no PARTITION BY,
+# ordered (orderBy-only) or not (``OVER ()``), funnel every row through
+# ONE task — the single plan shape that cannot survive a 100x
+# scale-up.  Every existing site is bounded-cardinality by
 # construction (calendar months/quarters/days, probe grids, feature
 # lists, k-smallest-hash sketches) and documented in its docstring; any
 # NEW site must either justify itself onto this list or use the
-# two-phase helpers in operators/ranking.py.  The matching plan-level
-# audit is the orderby_only_windows count of tools/plan_scan.py (slow;
-# run per change).
+# two-phase helpers in operators/ranking.py (a whole-table total is a
+# broadcast one-row aggregate).  The matching plan-level audit is the
+# global_windows count of tools/plan_scan.py (slow; run per change).
 # --------------------------------------------------------------------------
 
-ORDERBY_ONLY_WINDOW_ALLOWLIST = {
+GLOBAL_WINDOW_ALLOWLIST = {
     ("operators/ann.py", "ivf_recall_curve"),          # probe-count grid
     ("operators/events.py", "monthly_value_growth"),   # months
     ("operators/events.py", "watermark_late_audit"),   # micro-batch ids
@@ -560,10 +561,12 @@ ORDERBY_ONLY_WINDOW_ALLOWLIST = {
 }
 
 
-def _orderby_only_window_sites():
-    """AST scan: every `Window.orderBy(...)` or
-    `Window.partitionBy().orderBy(...)` call (code, not docstrings),
-    keyed by (relative file, innermost enclosing function)."""
+def _global_window_sites():
+    """AST scan: every window spec built with no partition columns --
+    ``Window.orderBy(...)``, ``Window.rowsBetween(...)``,
+    ``Window.rangeBetween(...)`` or ``Window.partitionBy()`` (code, not
+    docstrings) -- keyed by (relative file, innermost enclosing
+    function)."""
     import ast
     import pathlib
 
@@ -586,31 +589,25 @@ def _orderby_only_window_sites():
         for node in ast.walk(tree):
             if not (isinstance(node, ast.Call)
                     and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == "orderBy"):
+                    and isinstance(node.func.value, ast.Name)
+                    and node.func.value.id == "Window"):
                 continue
-            base = node.func.value
-            bare = isinstance(base, ast.Name) and base.id == "Window"
-            empty_pb = (
-                isinstance(base, ast.Call)
-                and isinstance(base.func, ast.Attribute)
-                and base.func.attr == "partitionBy"
-                and isinstance(base.func.value, ast.Name)
-                and base.func.value.id == "Window"
-                and not base.args
-                and not base.keywords
-            )
-            if bare or empty_pb:
+            attr = node.func.attr
+            if attr in ("orderBy", "rowsBetween", "rangeBetween") or (
+                attr == "partitionBy" and not node.args and not node.keywords
+            ):
                 rel = str(f.relative_to(root))
                 sites.add((rel, enclosing(node.lineno)))
     return sites
 
 
 def test_orderby_only_windows_allowlisted():
-    sites = _orderby_only_window_sites()
-    new = sites - ORDERBY_ONLY_WINDOW_ALLOWLIST
-    stale = ORDERBY_ONLY_WINDOW_ALLOWLIST - sites
+    """Covers every window with no PARTITION BY, ordered or not."""
+    sites = _global_window_sites()
+    new = sites - GLOBAL_WINDOW_ALLOWLIST
+    stale = GLOBAL_WINDOW_ALLOWLIST - sites
     assert not new, (
-        f"NEW orderBy-only window(s) {sorted(new)} — either use the "
+        f"NEW unpartitioned window(s) {sorted(new)} — either use the "
         "two-phase helpers in operators/ranking.py or justify the "
         "bounded cardinality and add to the allowlist"
     )

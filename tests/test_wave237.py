@@ -435,19 +435,21 @@ def test_recall_vs_beam_cached_ball_equals_fallback(spark):
 
 def test_cached_index_compaction_is_size_aware(spark):
     """_cached_index compacts a many-partition small index to one
-    block (scan-cost contract) but leaves vector-bearing relations
-    partitioned when compact=False (compute-parallelism contract)."""
+    block (scan-cost contract) but leaves a relation with an array
+    column (vector-bearing) partitioned (compute-parallelism
+    contract)."""
     from simple_vector_spark.registry.core_dedup import _cached_index
 
     def build():
         return spark.range(0, 1000, 1, 16).select(F.col("id").alias("k"))
 
+    def build_vectors():
+        return build().select("k", F.array(F.col("k").cast("double")).alias("v"))
+
     compacted = _cached_index(spark, "/tmp/x", "t_compact_on", build)
     assert compacted.rdd.getNumPartitions() == 1
     assert compacted.count() == 1000
-    kept = _cached_index(
-        spark, "/tmp/x", "t_compact_off", build, compact=False
-    )
+    kept = _cached_index(spark, "/tmp/x", "t_compact_off", build_vectors)
     assert kept.rdd.getNumPartitions() == 16
     # cache hit returns the same object, no rebuild
     assert _cached_index(spark, "/tmp/x", "t_compact_on", build) is compacted

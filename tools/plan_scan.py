@@ -14,8 +14,8 @@ bench.py, one record per query:
   its DataFrame (the build runs under its own job group);
 - ``existing_rdd``: ``ExistingRDD`` leaves (checkpointed or
   RDD-backed inputs) in the executed plan, whose work the plan hides;
-- ``orderby_only_windows``: windows in the optimized plan with an
-  ORDER BY but no PARTITION BY, which move every row to one task;
+- ``global_windows``: windows in the optimized plan with no
+  PARTITION BY (ordered or not), which move every row to one task;
 - ``single_partition``: ``Exchange SinglePartition`` nodes that do not
   feed an aggregate's final step;
 - ``plan``: the executed plan, masked for the ids, temporary names and
@@ -47,7 +47,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-COUNTS = ("eager_jobs", "existing_rdd", "orderby_only_windows", "single_partition")
+COUNTS = ("eager_jobs", "existing_rdd", "global_windows", "single_partition")
 FIELDS = (*COUNTS, "plan", "error")
 MASKS = (
     (re.compile(r"#\d+"), "#N"),                    # expression ids
@@ -86,12 +86,14 @@ def first_arg(s: str) -> str:
     return s
 
 
-def orderby_only(plan: str) -> list[str]:
+def global_windows(plan: str) -> list[str]:
+    """Window specs with no PARTITION BY: their first argument is a
+    sort order or, for ``OVER ()``, the frame itself."""
     out = []
     for m in re.finditer(r"windowspecdefinition\(", plan):
-        arg = first_arg(plan[m.end():])
-        if " ASC" in arg or " DESC" in arg:
-            out.append(arg.strip())
+        arg = first_arg(plan[m.end():]).strip()
+        if " ASC" in arg or " DESC" in arg or arg.startswith("specifiedwindowframe("):
+            out.append(arg)
     return out
 
 
@@ -138,7 +140,7 @@ def build(spark, name: str, fn, sf_dir: str) -> tuple[dict, str]:
     rec.update(
         eager_jobs=len(sc.statusTracker().getJobIdsForGroup(group)),
         existing_rdd=raw.count("ExistingRDD"),
-        orderby_only_windows=len(orderby_only(optimized)),
+        global_windows=len(global_windows(optimized)),
         single_partition=single_partition_exchanges(raw),
         plan=mask(raw),
     )
