@@ -432,17 +432,12 @@ PQ_M = 8  # subspaces; 64-dim fixture -> 8 dims per subspace
 
 
 def pq_codebooks(
-    emb: DataFrame,
-    centroid_ids: list[int] | None = None,
-    m: int = PQ_M,
-    cents: list[tuple[int, list[float]]] | None = None,
+    cents: list[tuple[int, list[float]]], m: int = PQ_M
 ) -> list[list[tuple[int, list[float]]]]:
-    """One codebook per subspace: [(cid, codeword[dsub]), ...] in cid
-    order.  Model-sized (m × ncode × dsub floats) — rides into
-    expressions as literals, like the IVF centroid matrix.  Pass
-    `cents` to reuse already-fetched centroid rows (IVF-PQ shares one
-    fit between the coarse quantizer and the codebooks)."""
-    cents = cents or fit_vectors(emb, centroid_ids or CENTROID_IDS)
+    """One codebook per subspace, sliced from the seed rows ``cents``:
+    [(cid, codeword[dsub]), ...] in cid order.  Model-sized (m × ncode
+    × dsub floats) — rides into expressions as literals, like the IVF
+    centroid matrix."""
     dsub = len(cents[0][1]) // m
     return [
         [(cid, cv[s * dsub : (s + 1) * dsub]) for cid, cv in cents]
@@ -552,10 +547,9 @@ def _adc_topk(
 
 def train_pq_codebooks(
     emb: DataFrame,
-    seed_ids: list[int] | None = None,
+    cents: list[tuple[int, list[float]]],
     iters: int = 2,
     m: int = PQ_M,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[list[tuple[int, list[float]]]]:
     """PER-SUBSPACE Lloyd training for the PQ codebooks — the real PQ
@@ -574,7 +568,7 @@ def train_pq_codebooks(
     m*ncode*dsub-row collect (model-sized, like an MLlib fit)."""
     from ..sources.loaders import fan_out
 
-    cbs = pq_codebooks(emb, seed_ids, m)
+    cbs = pq_codebooks(cents, m)
     dsub = len(cbs[0][0][1])
     cids = [cid for cid, _ in cbs[0]]
     v = as_double_array(F.col(vec_col))
@@ -623,9 +617,8 @@ def train_pq_codebooks(
 
 def train_centroids(
     emb: DataFrame,
-    seed_ids: list[int] | None = None,
+    cents: list[tuple[int, list[float]]],
     iters: int = 2,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
     """Full-dimension Lloyd training for the IVF/PQ codebooks — the
@@ -651,7 +644,6 @@ def train_centroids(
     planifies in milliseconds and shuffles the same bytes."""
     from ..sources.loaders import fan_out
 
-    cents = fit_vectors(emb, seed_ids or CENTROID_IDS, id_col, vec_col)
     dim = len(cents[0][1])
     v = as_double_array(F.col(vec_col))
     src = fan_out(emb)
@@ -683,9 +675,8 @@ def train_centroids(
 
 def kmeans_step(
     emb: DataFrame,
-    centroid_ids: list[int] | None = None,
+    cents: list[tuple[int, list[float]]],
     report_dims: int = 4,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """One Lloyd iteration of k-means as pure DataFrame ops: assign
@@ -702,7 +693,6 @@ def kmeans_step(
     and could not hash-match a single-threaded oracle.)"""
     from ..sources.loaders import fan_out
 
-    cents = fit_vectors(emb, centroid_ids or CENTROID_IDS, id_col, vec_col)
     v = as_double_array(F.col(vec_col))
     assigned = fan_out(emb).select(
         ivf_cell(v, cents).alias("cluster_id"),
@@ -945,7 +935,7 @@ def ivf_recall_curve(
 
 def kmeans_drift(
     emb: DataFrame,
-    centroid_ids: list[int] | None = None,
+    cents: list[tuple[int, list[float]]],
     report_dims: int = 4,
 ) -> DataFrame:
     """Convergence monitor for the Lloyd loop: squared distance (over
@@ -954,9 +944,7 @@ def kmeans_drift(
     distributed k-means driver polls instead of collecting centroids.
     Reuses kmeans_step's exact-DECIMAL means; the drift is a single
     deterministic f64 expression off those."""
-    ids = centroid_ids or CENTROID_IDS
-    step = kmeans_step(emb, ids, report_dims)
-    cents = fit_vectors(emb, ids)
+    step = kmeans_step(emb, cents, report_dims)
     spark = emb.sparkSession
     cdf = local_frame(
         spark,

@@ -50,7 +50,8 @@ def _trained_centroids(spark, sf_dir: str):
     return session_cached(
         spark, sf_dir, "trained_centroids",
         lambda: A.train_centroids(
-            load_table(spark, sf_dir, "embeddings"), A.CENTROID_IDS, TRAIN_ITERS
+            load_table(spark, sf_dir, "embeddings"),
+            _seed_codebook(spark, sf_dir, A.CENTROID_IDS), TRAIN_ITERS,
         ),
     )
 
@@ -61,7 +62,8 @@ def _trained_pq(spark, sf_dir: str):
     return session_cached(
         spark, sf_dir, "trained_pq",
         lambda: A.train_pq_codebooks(
-            load_table(spark, sf_dir, "embeddings"), iters=TRAIN_ITERS
+            load_table(spark, sf_dir, "embeddings"),
+            _seed_codebook(spark, sf_dir, A.CENTROID_IDS), TRAIN_ITERS,
         ),
     )
 
@@ -604,7 +606,7 @@ def ann_pq_seed_recall(spark, sf_dir):
     number; asserted in tests/test_wave237.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0)
-    cbs = A.pq_codebooks(emb)
+    cbs = A.pq_codebooks(_seed_codebook(spark, sf_dir, A.CENTROID_IDS))
     pq_hits = A.pq_adc_search(emb, q, cbs, KNN_K)
     exact_hits = K.knn_topk(emb, q, KNN_K, "sqL2")
     return A.recall_report(pq_hits, exact_hits, KNN_K)

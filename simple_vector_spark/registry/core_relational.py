@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table
+from ..sources.loaders import load_table, scoped_conf
 
 from . import query
 
@@ -320,9 +320,7 @@ def bucketed_join_revenue(spark, sf_dir):
             # saveAsTable refuses with LOCATION_ALREADY_EXISTS
             shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
             df.write.bucketBy(8, key).sortBy(key).mode("overwrite").saveAsTable(name)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         out = (
             spark.table(to_)
             .join(
@@ -342,8 +340,6 @@ def bucketed_join_revenue(spark, sf_dir):
         # is lazy, and restoring the conf first would let the planner
         # broadcast the dim and bypass the bucketed layout
         return out.localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 @query(

@@ -377,7 +377,9 @@ FROM vals GROUP BY cluster_id
 def embeddings_kmeans_step(spark, sf_dir):
     """One k-means Lloyd iteration (assign + recompute means) with
     order-insensitive DECIMAL component sums."""
-    return A.kmeans_step(load_table(spark, sf_dir, "embeddings"))
+    return A.kmeans_step(
+        load_table(spark, sf_dir, "embeddings"), _seed_codebook(spark, sf_dir, A.CENTROID_IDS)
+    )
 
 
 # --------------------------------------------------------------------------
@@ -484,7 +486,7 @@ def ann_ivfpq_rerank(spark, sf_dir):
     cells; stage 2 fetches 50 full vectors by broadcast id join."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = _seed_codebook(spark, sf_dir, A.CENTROID_IDS)
-    cbs = A.pq_codebooks(emb, cents=cents)
+    cbs = A.pq_codebooks(cents)
     q = emb.filter(F.col("vec_id") == ANN_QUERY_ID)
     return A.ivfpq_rerank_search(
         _emb_with_cells(spark, sf_dir), q, cents, cbs, ANN_K, IVF_NPROBE,
@@ -2325,7 +2327,9 @@ def embeddings_kmeans_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd-loop convergence monitor: squared centroid-to-new-mean
     drift per cluster off the exact-DECIMAL step means — the
     stop-criterion statistic, no centroids collected."""
-    return A.kmeans_drift(load_table(spark, sf_dir, "embeddings"))
+    return A.kmeans_drift(
+        load_table(spark, sf_dir, "embeddings"), _seed_codebook(spark, sf_dir, A.CENTROID_IDS)
+    )
 
 
 # --------------------------------------------------------------------------

@@ -1960,6 +1960,33 @@ WAL_DOC_MOD = 50  # log records fold onto doc ids vec_id % 50 (dup keys)
 WAL_DELETE_MOD = 10  # every 10th log record is a tombstone
 
 
+def _wal_log(emb: DataFrame) -> DataFrame:
+    """The fixture's op log as WAL records (``WAL_SCHEMA``): one per
+    embedding row, folded onto doc id ``vec_id % WAL_DOC_MOD``, every
+    ``WAL_DELETE_MOD``-th a tombstone; ``doc`` is the JSON
+    ``{"id", "label"}``."""
+    return emb.select(
+        F.col("vec_id").alias("log_id"),
+        (F.col("vec_id") % 3).alias("version"),
+        F.when(F.col("vec_id") % WAL_DELETE_MOD == 0, "delete")
+        .otherwise("upsert")
+        .alias("op"),
+        F.to_json(
+            F.struct(
+                (F.col("vec_id") % WAL_DOC_MOD).alias("id"),
+                F.col("label").alias("label"),
+            )
+        ).alias("doc"),
+    )
+
+
+def _wal_docs(wal: DataFrame) -> DataFrame:
+    """``log_id``, ``op`` and the parsed ``doc`` (``id``, ``label``) of
+    WAL records."""
+    doc = F.from_json("doc", "id long, label int")
+    return wal.select("log_id", "op", doc["id"].alias("id"), doc["label"].alias("label"))
+
+
 @query(
     "wal_source_scan",
     f"""
@@ -1990,30 +2017,13 @@ def wal_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     boot loop, src/persistence.cc:84-135) and replay latest-wins with
     tombstone drop.  The oracle recomputes the same state from the
     original table, proving the binary round-trip lossless."""
-    from ..sources.wal_source import WalDataSource, write_wal_segments
+    import shutil
 
-    if "simple_vector_wal" not in getattr(spark, "_wal_source_registered", set()):
-        spark.dataSource.register(WalDataSource)
-        spark._wal_source_registered = {"simple_vector_wal"}
+    from ..sources.wal_source import read_wal, write_wal_segments
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    log = emb.select(
-        F.col("vec_id").alias("log_id"),
-        (F.col("vec_id") % 3).alias("version"),
-        F.when(F.col("vec_id") % WAL_DELETE_MOD == 0, "delete")
-        .otherwise("upsert")
-        .alias("op"),
-        F.to_json(
-            F.struct(
-                (F.col("vec_id") % WAL_DOC_MOD).alias("id"),
-                F.col("label").alias("label"),
-            )
-        ).alias("doc"),
-    )
+    log = _wal_log(load_table(spark, sf_dir, "embeddings"))
 
     def write() -> str:
-        import shutil
-
         path = scratch_path("wal", sf_dir)
         shutil.rmtree(path, ignore_errors=True)
         write_wal_segments(log.repartition(4, "log_id"), path)
@@ -2023,13 +2033,7 @@ def wal_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session (the binary encode costs ~2s; a real system writes its
     # WAL as a side effect of ingest, not per read)
     path = session_cached(spark, sf_dir, "wal_segments", write)
-    wal = spark.read.format("simple_vector_wal").option("path", path).load()
-    parsed = wal.select(
-        "log_id",
-        "op",
-        F.get_json_object("doc", "$.id").cast("long").alias("id"),
-        F.get_json_object("doc", "$.label").cast("int").alias("label"),
-    )
+    parsed = _wal_docs(read_wal(spark, path))
     from ..operators.mutation import wal_replay
 
     state = wal_replay(parsed, ["id"], ["log_id"], "op", "delete")
@@ -2255,72 +2259,36 @@ def stream_wal_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from ..sources.wal_source import WalDataSource, write_wal_segment, write_wal_segments
-
-    if "simple_vector_wal" not in getattr(spark, "_wal_source_registered", set()):
-        spark.dataSource.register(WalDataSource)
-        spark._wal_source_registered = {"simple_vector_wal"}
+    from ..sources.wal_source import read_wal, write_wal_segment, write_wal_segments
 
     emb = load_table(spark, sf_dir, "embeddings")
-    log = emb.select(
-        F.col("vec_id").alias("log_id"),
-        (F.col("vec_id") % 3).alias("version"),
-        F.when(F.col("vec_id") % WAL_DELETE_MOD == 0, "delete")
-        .otherwise("upsert")
-        .alias("op"),
-        F.to_json(
-            F.struct(
-                (F.col("vec_id") % WAL_DOC_MOD).alias("id"),
-                F.col("label").alias("label"),
-            )
-        ).alias("doc"),
-    )
     path = scratch_path("wal_stream", sf_dir)
-    ck = f"{path}_ck"
-    shutil.rmtree(path, ignore_errors=True)
-    shutil.rmtree(ck, ignore_errors=True)
-    write_wal_segments(log.repartition(2, "log_id"), path)
+    ck, out_dir = f"{path}_ck", f"{path}_out"
+    for p in (path, ck, out_dir):
+        shutil.rmtree(p, ignore_errors=True)
+    write_wal_segments(_wal_log(emb).repartition(2, "log_id"), path)
 
-    out_dir = f"{path}_out"
-    shutil.rmtree(out_dir, ignore_errors=True)
+    # memory sink cannot recover from a checkpoint; the foreachBatch
+    # parquet-append sink is the recoverable accumulate-all-batches shape
+    def sink(batch_df, batch_id):
+        batch_df.write.mode("append").parquet(out_dir)
 
     def run_once():
-        wal = spark.readStream.format("simple_vector_wal").option("path", path).load()
-
-        # memory sink cannot recover from a checkpoint; the
-        # foreachBatch parquet-append sink is the recoverable
-        # accumulate-all-batches shape
-        def sink(batch_df, batch_id):
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (
-            wal.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ck)
-            .start()
-        )
-        q.awaitTermination()
+        wal = read_wal(spark, path, stream=True)
+        SJ.run_available_now(wal.writeStream.foreachBatch(sink).outputMode("append"), ck)
 
     run_once()
     # late upsert wave lands as a NEW segment after the first drain
-    extra = [
-        (r["vec_id"] + 1_000_000, 9, "upsert",
-         '{"id":%d,"label":%d}' % (r["vec_id"] % WAL_DOC_MOD, r["label"]))
-        for r in emb.filter(F.col("vec_id") < 10)
-        .select("vec_id", "label")
-        .collect()
-    ]
-    write_wal_segment(os.path.join(path, "segment-zzlate.wal"), extra)
+    extra = _wal_log(emb.filter(F.col("vec_id") < 10)).select(
+        (F.col("log_id") + 1_000_000).alias("log_id"),
+        F.lit(9).alias("version"),
+        F.lit("upsert").alias("op"),
+        "doc",
+    )
+    write_wal_segment(os.path.join(path, "segment-zzlate.wal"), extra.collect())
     run_once()
 
-    acc = spark.read.parquet(out_dir)
-    parsed = acc.select(
-        "log_id",
-        "op",
-        F.get_json_object("doc", "$.id").cast("long").alias("id"),
-        F.get_json_object("doc", "$.label").cast("int").alias("label"),
-    )
+    parsed = _wal_docs(spark.read.parquet(out_dir))
     from ..operators.mutation import wal_replay
 
     state = wal_replay(parsed, ["id"], ["log_id"], "op", "delete")

@@ -19,7 +19,8 @@ from .core_dedup import D, _CLUSTER_LABELS_CTES, _DOCS_PLUS_SQL, _SIG_COLS_SQL, 
 from .core_ann import A, ANN_K, ANN_QUERY_ID, T
 from .core_text import BM25_TERMS, _BM25_CTES, _BM25_TERMS_SQL, _TK_SQL
 from .waves_01 import CU, SK
-from .waves_02 import WAL_DELETE_MOD, WAL_DOC_MOD
+from .core_multimodal_streaming import SJ
+from .waves_02 import WAL_DELETE_MOD, WAL_DOC_MOD, _wal_docs, _wal_log
 
 
 
@@ -267,45 +268,24 @@ def stream_live_index_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, then the usual heap top-k)."""
     import shutil
 
-    from ..sources.wal_source import WalDataSource, write_wal_segments
-
-    if "simple_vector_wal" not in getattr(spark, "_wal_source_registered", set()):
-        spark.dataSource.register(WalDataSource)
-        spark._wal_source_registered = {"simple_vector_wal"}
+    from ..sources.wal_source import read_wal, write_wal_segments
 
     emb = load_table(spark, sf_dir, "embeddings")
-    log = emb.select(
-        F.col("vec_id").alias("log_id"),
-        F.lit(0).alias("version"),
-        F.when(F.col("vec_id") % WAL_DELETE_MOD == 0, "delete")
-        .otherwise("upsert")
-        .alias("op"),
-        F.to_json(F.struct((F.col("vec_id") % WAL_DOC_MOD).alias("id"))).alias("doc"),
-    )
     path = scratch_path("wal_live", sf_dir)
     ck, raw = f"{path}_ck", f"{path}_raw"
     for p in (path, ck, raw):
         shutil.rmtree(p, ignore_errors=True)
-    write_wal_segments(log.repartition(4, "log_id"), path)
+    write_wal_segments(_wal_log(emb).repartition(4, "log_id"), path)
 
     def sink(batch_df, batch_id):
         batch_df.write.mode("append").parquet(raw)
 
-    wal = spark.readStream.format("simple_vector_wal").option("path", path).load()
-    q = (
-        wal.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ck)
-        .start()
-    )
-    q.awaitTermination()
+    wal = read_wal(spark, path, stream=True)
+    SJ.run_available_now(wal.writeStream.foreachBatch(sink).outputMode("append"), ck)
 
     from ..operators.mutation import wal_replay
 
-    acc = spark.read.parquet(raw).select(
-        "log_id", "op", F.get_json_object("doc", "$.id").cast("long").alias("id")
-    )
+    acc = _wal_docs(spark.read.parquet(raw))
     live = wal_replay(acc, ["id"], ["log_id"], "op", "delete").select("id")
     corpus = emb.join(live, emb.vec_id == live.id, "left_semi")
     return K.knn_topk(

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table, local_frame, scratch_path
+from ..sources.loaders import data_source, load_table, local_frame, scratch_path
 
 from . import _ORACLES, finalize_double, query
 from .core_knn import PLANT_MOD, PLANT_SHIFT
@@ -889,20 +889,16 @@ def arrow_ipc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     InputPartition per file, reader yields RecordBatches — Arrow in,
     Arrow out, no per-row Python.  Oracle reads the ORIGINAL parquet,
     proving the interchange lossless."""
-    from ..sources.arrow_ipc_source import ArrowIpcDataSource, write_arrow_ipc
+    import shutil
 
-    if "arrow_ipc" not in getattr(spark, "_arrow_ipc_registered", set()):
-        spark.dataSource.register(ArrowIpcDataSource)
-        spark._arrow_ipc_registered = {"arrow_ipc"}
+    from ..sources.arrow_ipc_source import ArrowIpcDataSource, write_arrow_ipc
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = scratch_path("emb_arrow", sf_dir)
-    import shutil
-
     shutil.rmtree(path, ignore_errors=True)
     write_arrow_ipc(emb, path)
     back = (
-        spark.read.format("arrow_ipc")
+        spark.read.format(data_source(spark, ArrowIpcDataSource))
         .schema(emb.schema)
         .option("path", path)
         .load()

@@ -54,8 +54,7 @@ def write_arrow_ipc(df: DataFrame, out_dir: str) -> int:
 
 class ArrowIpcDataSource(DataSource):
     """``spark.read.format("arrow_ipc").schema(ddl).option("path", dir)``
-    — register once per session with
-    ``spark.dataSource.register(ArrowIpcDataSource)``.  Schema is
+    — register once per session with ``loaders.data_source``.  Schema is
     explicit (the engine's never-infer stance); it must match the files'
     Arrow schema."""
 

@@ -13,6 +13,8 @@ predicate pushdown and column pruning reach the scan via Catalyst.
 from __future__ import annotations
 
 import os
+import shutil
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, GroupedData, SparkSession
 from pyspark.sql import functions as F
@@ -68,6 +70,35 @@ def session_cached(spark: SparkSession, sf_dir: str, name: str, build):
     return cache[key]
 
 
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set the session conf ``conf`` for the body of the ``with``; on
+    the way out each key gets its previous value back, or is unset if
+    it had none, also when the body raises."""
+    prev = {key: spark.conf.get(key, None) for key in conf}
+    for key, value in conf.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
+def data_source(spark: SparkSession, source) -> str:
+    """Register the Python DataSource class ``source`` with the session
+    (once per session, through the session store) and return its format
+    name."""
+    name = source.name()
+    # a registration belongs to the session, not to a fixture: key it
+    # to the root directory
+    session_cached(spark, "/", f"data_source_{name}", lambda: spark.dataSource.register(source))
+    return name
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # The engine's timestamp semantics are UTC (FIXTURES.md §C: the
     # DuckDB oracle sees naive/UTC timestamps).  The driver brings its
@@ -98,13 +129,19 @@ def _footer_schema(path: str) -> StructType:
 def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     if name != "events":
         return spark.read.schema(_footer_schema(path)).parquet(path)
-    # Fixture vintages differ on events.ts: some are nanosecond parquet
-    # timestamps (which the Spark reader rejects — read as a raw long
-    # and INTEGER-truncate to micros, matching DuckDB's ns->us
-    # truncation), newer ones are plain us timestamps the reader handles
-    # natively.  Adapt to whichever is on disk.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.schema(_footer_schema(path)).parquet(path)
+    return events_ts(spark.read.schema(_footer_schema(path)).parquet(path))
+
+
+def events_ts(df: DataFrame) -> DataFrame:
+    """The events table ``df`` (read with its footer schema under
+    ``nanosAsLong``) with ``ts`` as a session-UTC TimestampType.
+
+    Fixture vintages differ on events.ts: some are nanosecond parquet
+    timestamps (which the Spark reader rejects — read as a raw long
+    and INTEGER-truncate to micros, matching DuckDB's ns->us
+    truncation), newer ones are plain us timestamps the reader handles
+    natively.  Adapt to whichever is on disk."""
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # native-us fixtures arrive as TIMESTAMP_NTZ; normalize to the
@@ -228,10 +265,9 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     The split is deterministic (even custkeys = v1 vintage, odd = v2)
     so the NULL pattern is oracle-expressible; the read itself proves
     the merged-footer path, not just the happy same-schema union."""
-    import tempfile
-
     cust = load_table(spark, sf_dir, "customer")
-    base = tempfile.mkdtemp(prefix="svs_evo_")
+    base = scratch_path("schema_evo", sf_dir)
+    shutil.rmtree(base, ignore_errors=True)
     cust.filter(F.col("c_custkey") % 2 == 0).select(
         "c_custkey", "c_nationkey"
     ).coalesce(1).write.mode("overwrite").parquet(base + "/v1")

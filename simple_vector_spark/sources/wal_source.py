@@ -19,13 +19,15 @@ from __future__ import annotations
 import os
 import struct
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
 )
+
+from .loaders import data_source
 
 WAL_SCHEMA = "log_id bigint, version bigint, op string, doc string"
 _LEN = struct.Struct("<Q")
@@ -99,10 +101,17 @@ def write_wal_segments(df: DataFrame, out_dir: str) -> None:
     df.foreachPartition(_write)
 
 
+def read_wal(spark: SparkSession, path: str, stream: bool = False) -> DataFrame:
+    """The WAL directory ``path`` as a ``WAL_SCHEMA`` frame: a batch scan
+    of every segment, or with ``stream`` a tail that picks up new
+    segments.  Registers the source once per session."""
+    reader = spark.readStream if stream else spark.read
+    return reader.format(data_source(spark, WalDataSource)).option("path", path).load()
+
+
 class WalDataSource(DataSource):
-    """``spark.read.format("simple_vector_wal").option("path", dir)`` —
-    register once per session with
-    ``spark.dataSource.register(WalDataSource)``."""
+    """``spark.read.format("simple_vector_wal").option("path", dir)``,
+    registered by :func:`read_wal`."""
 
     @classmethod
     def name(cls) -> str:

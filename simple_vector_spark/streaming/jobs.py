@@ -5,8 +5,8 @@ consumed at boot (src/persistence.cc:84-135, doc/wal.md).  The Spark
 engine treats the log as a live stream: ``readStream`` over the events
 table, watermarks for late data, windowed aggregation, stateful dedup.
 
-Each job runs with ``trigger(availableNow=True)`` into a memory sink
-and drains synchronously, so its result equals the corresponding batch
+Each job runs through the one availableNow runner (``run_available_now``)
+into a memory sink and drains synchronously, so its result equals the corresponding batch
 query (events_tumbling_1h / distinct events) — which is exactly how the
 DuckDB oracle checks it.  In production the same code points at a file/
 Kafka source with a durable checkpointLocation; the checkpoint replaces
@@ -19,74 +19,71 @@ in rate-limited batches — the same plan a 100-TB backfill would run.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators.events import TS_FMT
-from ..sources.loaders import local_frame
+from ..sources.loaders import (
+    _footer_schema, events_ts, load_table, local_frame, scoped_conf, scratch_path,
+)
+
+# shuffle partitions of a drained stream, and so its state-store count
+STATE_PARTITIONS = "8"
+
 
 def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming scan of the events table.  Same ts handling as the
-    batch loader: adapt to long-nanos vs native-us fixture vintages.
-
-    The streaming file source needs an explicit schema, so probe the
-    on-disk ts type with a zero-cost batch schema read first."""
-    import os
-
+    """Streaming scan of the events table, typed like ``load_table``'s:
+    the streaming file source needs an explicit schema, which comes
+    from the Parquet footer on the driver (no Spark job)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probe = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    ts_is_long = dict(probe.dtypes).get("ts") == "bigint"
-    ts_type = "long" if ts_is_long else "timestamp_ntz"
-    schema = (
-        f"event_id long, ts {ts_type}, user_id long, event_type string, "
-        "value double, props string"
-    )
+    schema = _footer_schema(os.path.join(sf_dir, "events.parquet"))
     # the streaming file source wants a directory; glob-filter the
     # events file out of the fixture dir
-    raw = (
+    return events_ts(
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if ts_is_long:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def _drain(stream: DataFrame, mode: str, state_partitions: int = 8) -> DataFrame:
+def run_available_now(writer: DataStreamWriter, ckpt: str | None = None) -> None:
+    """Start ``writer`` with ``trigger(availableNow=True)`` and wait for
+    it to drain its backlog.  ``ckpt`` is the checkpoint location; with
+    none, the run gets a throwaway checkpoint dir that is removed
+    afterwards."""
+    tmp = ckpt is None
+    ckpt = tempfile.mkdtemp(prefix="svs_ckpt_") if tmp else ckpt
+    try:
+        writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start().awaitTermination()
+    finally:
+        if tmp:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _drain(stream: DataFrame, mode: str) -> DataFrame:
     """Run to completion (availableNow) into a memory sink; return the
     sink as a batch DataFrame.
 
     The streaming plan captures spark.sql.shuffle.partitions at start()
-    and creates one state store per partition; the fixture backlog
-    needs nowhere near the batch session's count, so it is lowered for
-    the stream and restored immediately (on a production cluster this
-    is sized to state volume / HDFS-backed store throughput, and is
-    fixed for the checkpoint's lifetime)."""
+    and creates one state store per partition.  The stream runs with
+    the fixed width ``STATE_PARTITIONS``, whatever the batch session's
+    setting (``get_spark`` sizes that to the cores: 8 is above it on a
+    4-core host, below it on a 32-core one), and the session's value
+    comes back once the stream has drained (on a production cluster
+    this is sized to state volume / HDFS-backed store throughput, and
+    is fixed for the checkpoint's lifetime)."""
     spark = stream.sparkSession
     name = f"snk_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    ckpt = tempfile.mkdtemp(prefix="svs_ckpt_")
-    try:
-        q = (
-            stream.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # throwaway per-call checkpoint; the memory sink stays readable
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": STATE_PARTITIONS}):
+        run_available_now(stream.writeStream.outputMode(mode).format("memory").queryName(name))
+    # the throwaway checkpoint is gone; the memory sink stays readable
     return spark.table(name)
 
 
@@ -243,8 +240,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     The static side is planned per micro-batch (broadcast here), no
     state needed for the join itself — the standard dimension-
     enrichment shape for a streaming ingest pipeline."""
-    from ..sources.loaders import load_table
-
     ev = _read_events_stream(spark, sf_dir)
     nation = load_table(spark, sf_dir, "nation")
     joined = ev.join(
@@ -280,35 +275,16 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _foreach_batch(stream: DataFrame, fn) -> None:
-    """Run ``stream`` to completion (availableNow) through the
-    foreachBatch sink ``fn(batch_df, batch_id)``, against a throwaway
-    checkpoint dir that is removed afterwards."""
-    ckpt = tempfile.mkdtemp(prefix="svs_ckpt_")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(fn)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def _merge_sink(ev: DataFrame) -> str:
+def _merge_sink(ev: DataFrame, base: str) -> str:
     """Merge each micro-batch of ``ev`` latest-wins per ``user_id`` on
     ``(ts, event_id)`` into the previous snapshot (the first batch has
     none: it is its own latest-wins), written to a NEW versioned dir
-    that becomes current once its write commits.  Returns the final
-    snapshot's path."""
-    import os
-
+    under ``base`` that becomes current once its write commits.
+    Returns the final snapshot's path."""
     from ..operators.mutation import apply_upserts, latest_wins, restore, snapshot
 
     keys, seq = ["user_id"], ["ts", "event_id"]
-    base = tempfile.mkdtemp(prefix="svs_merge_")
+    shutil.rmtree(base, ignore_errors=True)
     state = {"path": None}
 
     def merge(batch_df, batch_id):
@@ -321,7 +297,7 @@ def _merge_sink(ev: DataFrame) -> str:
         snapshot(cur, nxt)
         state["path"] = nxt
 
-    _foreach_batch(ev, merge)
+    run_available_now(ev.writeStream.foreachBatch(merge))
     return state["path"]
 
 
@@ -339,7 +315,7 @@ def foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _read_events_stream(spark, sf_dir).select(
         "user_id", "event_id", "ts", "value"
     )
-    return restore(spark, _merge_sink(ev)).select(
+    return restore(spark, _merge_sink(ev, scratch_path("stream_merge", sf_dir))).select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
         F.round(F.col("value"), 6).alias("last_value"),
@@ -361,22 +337,16 @@ def watermark_append_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     late row survives iff its window end is beyond that, and the
     emitted set is every window closed by the final watermark.  The
     oracle states those rules as batch SQL."""
-    import os
-
-    from ..sources.loaders import load_table
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
-    base = tempfile.mkdtemp(prefix="svs_wm_")
+    base = scratch_path("stream_wm", sf_dir)
+    shutil.rmtree(base, ignore_errors=True)
     src, ckpt, out = (os.path.join(base, d) for d in ("src", "ckpt", "out"))
     on_time = ev.filter(F.col("event_id") % 37 != 0)
     late = ev.filter(F.col("event_id") % 37 == 0)
     on_time.coalesce(1).write.mode("overwrite").parquet(src)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-
     def run_once():
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": STATE_PARTITIONS}):
             stream = (
                 spark.readStream.schema("event_id long, ts timestamp, value double")
                 .parquet(src)
@@ -392,17 +362,10 @@ def watermark_append_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("_sv").cast("string").alias("sv"),
                 )
             )
-            q = (
-                stream.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            run_available_now(
+                stream.writeStream.outputMode("append").format("parquet").option("path", out),
+                ckpt,
             )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     run_once()
     late.coalesce(1).write.mode("append").parquet(src)
@@ -482,17 +445,12 @@ def transform_with_state_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transformWithStateInPandas needs google.protobuf, which is "
             "not installed in this runtime"
         )
-    # The RocksDB provider is required only for this query; snapshot
-    # and restore the session conf so later streaming queries in the
-    # same session keep their own provider (ADVICE r02).
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    # The RocksDB provider is required only for this query; later
+    # streaming queries in the same session keep their own provider.
+    with scoped_conf(spark, {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    }):
         proc = _make_totals_processor()()
         ev = _read_events_stream(spark, sf_dir)
         out = (
@@ -506,11 +464,6 @@ def transform_with_state_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         drained = _drain(out, "update")
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev_provider)
     return drained.groupBy("user_id").agg(
         F.max("n").alias("n"),
         F.round(F.max_by("total", "n"), 6).alias("sum_value"),
@@ -525,7 +478,6 @@ def stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch, so a dim refresh is picked up between batches).  availableNow
     + complete aggregation == the batch PIT query (same oracle)."""
     from ..operators.events import user_state_scd2
-    from ..sources.loaders import load_table
 
     batch_events = load_table(spark, sf_dir, "events")
     dim = user_state_scd2(
@@ -559,7 +511,6 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     and each micro-batch picks up the latest).  availableNow + complete
     aggregation == the batch value_anomaly_zscore (same oracle)."""
     from ..operators.events import value_anomaly_zscore  # noqa: F401 - contract ref
-    from ..sources.loaders import load_table
 
     batch = load_table(spark, sf_dir, "events")
     v = F.round(F.col("value"), 6).cast("decimal(21,6)")
@@ -686,7 +637,7 @@ def cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
     )
     return (
-        restore(spark, _merge_sink(ev))
+        restore(spark, _merge_sink(ev, scratch_path("stream_cdc", sf_dir)))
         .filter(F.col("op") != "d")
         .select(
             "user_id",
@@ -748,7 +699,7 @@ def dead_letter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         per_batch[batch_id] = counts  # last-write-wins per batch_id
 
-    _foreach_batch(parsed, split)
+    run_available_now(parsed.writeStream.foreachBatch(split))
     acc: dict = {"valid": {}, "dlq": {}}
     for counts in per_batch.values():
         for side in ("valid", "dlq"):

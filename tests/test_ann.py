@@ -86,7 +86,7 @@ def test_pq_adc_recall_and_code_range(emb):
     declared ann_pq_recall query records the exact number)."""
     from simple_vector_spark.operators import knn as K
 
-    cbs = A.pq_codebooks(emb)
+    cbs = A.pq_codebooks(A.fit_vectors(emb, A.CENTROID_IDS))
     q = emb.filter(F.col("vec_id") == 0)
     enc = emb.select(
         A.pq_encode(
@@ -123,8 +123,8 @@ def test_train_centroids_deterministic_and_moves_from_seeds(emb):
     """Fixed-iteration Lloyd training is bit-deterministic across runs
     (the oracle-checkability contract) and actually moves the
     centroids off the seed rows."""
-    a = A.train_centroids(emb, A.CENTROID_IDS, iters=2)
-    b = A.train_centroids(emb, A.CENTROID_IDS, iters=2)
+    a = A.train_centroids(emb, A.fit_vectors(emb, A.CENTROID_IDS), iters=2)
+    b = A.train_centroids(emb, A.fit_vectors(emb, A.CENTROID_IDS), iters=2)
     assert a == b
     seeds = A.fit_vectors(emb, A.CENTROID_IDS)
     assert [cid for cid, _ in a] == [cid for cid, _ in seeds]
@@ -138,7 +138,7 @@ def test_trained_recall_beats_fixed_at_equal_probe_budget(emb):
     qid = 9
     q = emb.filter(F.col("vec_id") == qid)
     fixed = A.fit_vectors(emb, A.CENTROID_IDS)
-    trained = A.train_centroids(emb, A.CENTROID_IDS, iters=2)
+    trained = A.train_centroids(emb, A.fit_vectors(emb, A.CENTROID_IDS), iters=2)
     fc = {r.nprobe: r.recall for r in A.ivf_recall_curve(emb, q, fixed, 10, (1, 2, 3)).collect()}
     tc = {r.nprobe: r.recall for r in A.ivf_recall_curve(emb, q, trained, 10, (1, 2, 3)).collect()}
     assert all(tc[p] >= fc[p] for p in (1, 2, 3))

@@ -97,8 +97,9 @@ def test_kmeans_step_partitioning_invariant(spark, sf_dir):
     from simple_vector_spark.sources.loaders import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    one = {r["cluster_id"]: r.asDict() for r in A.kmeans_step(emb.coalesce(1)).collect()}
-    many = {r["cluster_id"]: r.asDict() for r in A.kmeans_step(emb.repartition(17)).collect()}
+    cents = A.fit_vectors(emb, A.CENTROID_IDS)
+    one = {r["cluster_id"]: r.asDict() for r in A.kmeans_step(emb.coalesce(1), cents).collect()}
+    many = {r["cluster_id"]: r.asDict() for r in A.kmeans_step(emb.repartition(17), cents).collect()}
     assert one == many
     assert sum(r["n"] for r in one.values()) == emb.count()
 

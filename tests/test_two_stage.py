@@ -17,7 +17,7 @@ def test_ivfpq_equals_ivf_when_shortlist_covers_cells(spark, sf_dir):
     cannot drop a true neighbor, so IVF-PQ == plain IVF exact rerank."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = A.fit_vectors(emb, A.CENTROID_IDS)
-    cbs = A.pq_codebooks(emb)
+    cbs = A.pq_codebooks(cents)
     q = emb.filter(F.col("vec_id") == ANN_QUERY_ID)
     big = emb.count()
     ivfpq = A.ivfpq_rerank_search(emb, q, cents, cbs, ANN_K, IVF_NPROBE, shortlist=big)
@@ -30,7 +30,7 @@ def test_ivfpq_equals_ivf_when_shortlist_covers_cells(spark, sf_dir):
 def test_ivfpq_shortlist_is_subset_of_probed_cells(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     cents = A.fit_vectors(emb, A.CENTROID_IDS)
-    cbs = A.pq_codebooks(emb)
+    cbs = A.pq_codebooks(cents)
     q = emb.filter(F.col("vec_id") == ANN_QUERY_ID)
     hits = A.ivfpq_rerank_search(emb, q, cents, cbs, ANN_K, IVF_NPROBE, 50).collect()
     assert 0 < len(hits) <= ANN_K

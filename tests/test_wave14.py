@@ -377,7 +377,7 @@ def test_kmeans_drift_zero_at_fixpoint(spark):
         ],
         "vec_id long, embedding array<float>",
     )
-    out = A.kmeans_drift(emb, centroid_ids=[0, 1]).collect()
+    out = A.kmeans_drift(emb, A.fit_vectors(emb, [0, 1])).collect()
     assert len(out) == 2
     for r in out:
         assert r["drift_sq"] == 0.0

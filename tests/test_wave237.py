@@ -117,9 +117,9 @@ def _dist_mean(spark, emb, cbs):
 def test_pq_training_reduces_distortion(spark):
     # per-subspace Lloyd must not increase the quantization objective
     emb = _clustered_emb(spark, n_clusters=4, per=40, dim=16, seed=11)
-    seed_cbs = A.pq_codebooks(emb, centroid_ids=[0, 40, 80, 120], m=4)
+    seed_cbs = A.pq_codebooks(A.fit_vectors(emb, [0, 40, 80, 120]), m=4)
     trained = A.train_pq_codebooks(
-        emb, seed_ids=[0, 40, 80, 120], iters=2, m=4
+        emb, A.fit_vectors(emb, [0, 40, 80, 120]), iters=2, m=4
     )
     d_seed = _dist_mean(spark, emb, seed_cbs)
     d_trained = _dist_mean(spark, emb, trained)
@@ -128,7 +128,7 @@ def test_pq_training_reduces_distortion(spark):
 
 def test_pq_training_keeps_shape(spark):
     emb = _clustered_emb(spark, n_clusters=2, per=20, dim=8, seed=3)
-    trained = A.train_pq_codebooks(emb, seed_ids=[0, 20], iters=1, m=2)
+    trained = A.train_pq_codebooks(emb, A.fit_vectors(emb, [0, 20]), iters=1, m=2)
     assert len(trained) == 2  # m subspaces
     for cb in trained:
         assert len(cb) == 2  # ncode codewords

@@ -424,7 +424,7 @@ def test_pq_distortion_zero_when_corpus_is_codebook(spark):
     # corpus vectors == centroid rows -> perfect reconstruction
     rows = [(i, [float(i)] * 64) for i in A.CENTROID_IDS]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cbs = A.pq_codebooks(emb)
+    cbs = A.pq_codebooks(A.fit_vectors(emb, A.CENTROID_IDS))
     r = A.pq_distortion_audit(emb, cbs).collect()[0]
     assert r["mean_distortion"] == 0.0
     assert r["max_distortion"] == 0.0
