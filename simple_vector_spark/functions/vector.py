@@ -32,6 +32,7 @@ corpus scan stage (map-side); nothing here shuffles.
 
 from __future__ import annotations
 
+import math
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
@@ -44,6 +45,36 @@ def as_double_array(col: Column | str) -> Column:
     """Cast array<float> -> array<double> so all arithmetic is f64."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("array<double>")
+
+
+def vector_literal(values) -> Column:
+    """``values`` (a vector, or a list of vectors) as ONE typed SQL
+    literal: ``array<double>``, nested lists as ``array<array<double>>``,
+    Python ints as ints.  A double is written as its ``repr`` with the
+    ``D`` suffix; ``repr`` round-trips every f64, and float32 -> Python
+    float is exact, so the literal holds the very doubles of the column
+    the vector came from.  The JVM parses it in one call, where
+    ``F.lit(list)`` makes one py4j call per element.  A NaN or infinite
+    component raises ``ValueError`` naming its index."""
+    return F.expr(_sql_array(values, ()))
+
+
+def _sql_array(values, at: tuple[int, ...]) -> str:
+    parts = []
+    for i, x in enumerate(values):
+        if isinstance(x, (list, tuple)):
+            parts.append(_sql_array(x, at + (i,)))
+        elif isinstance(x, int):
+            parts.append(str(x))
+        else:
+            f = float(x)
+            if not math.isfinite(f):
+                index = ", ".join(map(str, at + (i,)))
+                raise ValueError(
+                    f"vector component [{index}] is {f!r}; a vector literal must be finite"
+                )
+            parts.append(repr(f) + "D")
+    return "array(" + ", ".join(parts) + ")"
 
 
 def squared_l2(a: Column, b: Column) -> Column:

@@ -32,18 +32,21 @@ model; the corpus itself is never collected.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import (
     as_double_array,
+    dot_product_np,
     round6,
     squared_l2,
     squared_l2_np,
+    vector_literal,
     vector_matrix,
 )
 from ..sources.loaders import local_frame
-from .knn import exact_rerank, exact_scores, knn_topk, query_vec, rank_order, topk_np
+from .knn import exact_rerank, exact_scores, knn_topk, rank_order, topk_np, with_query
 
 PLANE_IDS = [0, 1, 2, 3]
 CENTROID_IDS = [0, 50, 100, 150, 200, 250, 300, 350, 400, 450]
@@ -94,12 +97,23 @@ def rp_bucket(vec: Column, planes: list[tuple[int, list[float]]]) -> Column:
     bucket = F.lit(0).cast("long")
     for i, (_, pv) in enumerate(planes):
         dot = F.aggregate(
-            F.zip_with(vec, F.lit(pv).cast("array<double>"), lambda x, y: x * y),
+            F.zip_with(vec, vector_literal(pv), lambda x, y: x * y),
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
         bucket = bucket + F.when(dot > 0, F.lit(2 ** i).cast("long")).otherwise(F.lit(0).cast("long"))
     return bucket
+
+
+def query_bucket(qvec: list[float] | None, planes: list[tuple[int, list[float]]]) -> int:
+    """:func:`rp_bucket` of the query vector, computed on the driver:
+    the signs of ``dot_product_np``, the expression's fold bit for bit.
+    No query: -1, a bucket no row has."""
+    if qvec is None:
+        return -1
+    P = np.asarray([pv for _, pv in planes], dtype=np.float64)
+    dots = dot_product_np(np.asarray(qvec, dtype=np.float64)[None], P)
+    return sum(2**i for i, d in enumerate(dots) if d > 0)
 
 
 def ivf_cell(vec: Column, centroids: list[tuple[int, list[float]]]) -> Column:
@@ -112,8 +126,8 @@ def ivf_cell(vec: Column, centroids: list[tuple[int, list[float]]]) -> Column:
     by a single transform lambda — inlining one distance expression
     per centroid instead would multiply the generated code by
     #centroids (measured ~2s of codegen at 10x64 dims)."""
-    ids = F.lit([cid for cid, _ in centroids])
-    mat = F.lit([cv for _, cv in centroids]).cast("array<array<double>>")
+    ids = vector_literal([cid for cid, _ in centroids])
+    mat = vector_literal([cv for _, cv in centroids])
     entries = F.transform(
         mat,
         lambda cv, i: F.struct(
@@ -184,22 +198,21 @@ def cells_arrow(
 
 def rp_lsh_search(
     corpus: DataFrame,
-    query: DataFrame,
+    qvec: list[float] | None,
     planes: list[tuple[int, list[float]]],
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN search: same-bucket candidates, exact squared-L2 re-rank.
-    Returns (vec_id, dist) ascending — may return < k rows if the
-    bucket is small (the ANN recall trade, same as ef_search capping
-    HNSW's candidate pool)."""
-    c = corpus.withColumn("__bucket", rp_bucket(as_double_array(F.col(vec_col)), planes))
-    q = query_vec(query, vec_col).withColumn(
-        "__bucket", rp_bucket(F.col("__q_vec"), planes)
-    )
+    The query's bucket is picked on the driver (:func:`query_bucket`)
+    and reaches the scan as a literal filter.  Returns (vec_id, dist)
+    ascending — may return < k rows if the bucket is small (the ANN
+    recall trade, same as ef_search capping HNSW's candidate pool)."""
+    bucket = rp_bucket(as_double_array(F.col(vec_col)), planes)
+    c = corpus.filter(bucket == query_bucket(qvec, planes))
     return exact_rerank(
-        c.join(q, "__bucket"), [F.col(id_col)], k, id_col=id_col, vec_col=vec_col
+        with_query(c, qvec), [F.col(id_col)], k, id_col=id_col, vec_col=vec_col
     )
 
 
@@ -220,32 +233,23 @@ def with_cells(
     )
 
 
-def _cell_dists(q: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
-    """``(__cell, cdist)``: the oracle's rounded squared-L2 from the
-    broadcast query ``q`` (column ``__q_vec``) to every centroid."""
-    cdf = local_frame(q.sparkSession, centroids, "cid int, cvec array<double>")
-    return cdf.crossJoin(q).select(
-        F.col("cid").alias("__cell"),
-        F.round(squared_l2(F.col("cvec"), F.col("__q_vec")), 6).alias("cdist"),
-    )
-
-
-def _probe_cells(
-    q: DataFrame, centroids: list[tuple[int, list[float]]], nprobe: int
-) -> DataFrame:
-    """The ``nprobe`` cells nearest the query (ties by cell id), as a
-    broadcast one-column ``__cell`` relation."""
-    return F.broadcast(
-        _cell_dists(q, centroids)
-        .orderBy(F.col("cdist").asc(), F.col("__cell").asc())
-        .limit(nprobe)
-        .select("__cell")
-    )
+def nearest_cells(
+    qvec: list[float] | None, centroids: list[tuple[int, list[float]]], n: int
+) -> list[int]:
+    """The ``n`` cells nearest the query, nearest first, picked on the
+    driver: ascending ROUND-6 squared L2 (``round6(squared_l2_np)``, the
+    oracle's arithmetic bit for bit), ties by cell id.  No query: no
+    cells."""
+    if qvec is None:
+        return []
+    C = np.asarray([cv for _, cv in centroids], dtype=np.float64)
+    d = round6(squared_l2_np(np.asarray(qvec, dtype=np.float64)[None], C))
+    return [cid for _, cid in sorted(zip(d.tolist(), (cid for cid, _ in centroids)))][:n]
 
 
 def ivf_search(
     corpus: DataFrame,
-    query: DataFrame,
+    qvec: list[float] | None,
     centroids: list[tuple[int, list[float]]],
     k: int,
     nprobe: int = 3,
@@ -253,15 +257,14 @@ def ivf_search(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF ANN search: rank cells by centroid distance to the query,
-    take nprobe cells, exact re-rank within them.  The probe-cell
-    selection stays in the plan (``_probe_cells``) with the same rounded
-    arithmetic as the oracle — nothing order-dependent crosses the
-    engine boundary."""
-    q = query_vec(query, vec_col)
-    probe = _probe_cells(q, centroids, nprobe)
-    c = with_cells(corpus, centroids, vec_col)
+    take nprobe cells, exact re-rank within them.  The probe is picked
+    on the driver (:func:`nearest_cells`, the oracle's rounded
+    arithmetic) and reaches the scan as the literal filter
+    ``__cell IN (...)``: one stage, no join."""
+    probe = nearest_cells(qvec, centroids, nprobe)
+    c = with_cells(corpus, centroids, vec_col).filter(F.col("__cell").isin(probe))
     return exact_rerank(
-        c.join(probe, "__cell").crossJoin(q),
+        with_query(c, qvec),
         [F.col(id_col), F.col("__cell").alias("cell")],
         k,
         id_col=id_col,
@@ -281,32 +284,32 @@ def build_ivf_index(
     cell.  The directory layout IS the inverted-list structure —
     FAISS's `invlists` become `cell=N/` directories
     (src/faiss_index.cc / IndexIVF analog), and a probe becomes a
-    partition-pruned scan."""
-    corpus.withColumn(
+    partition-pruned scan.  Returns the index as a relation over
+    ``path``, read with the written schema (inferring it runs a job)."""
+    indexed = corpus.withColumn(
         "cell", ivf_cell(as_double_array(F.col(vec_col)), centroids)
-    ).write.mode("overwrite").partitionBy("cell").parquet(path)
+    )
+    indexed.write.mode("overwrite").partitionBy("cell").parquet(path)
+    return corpus.sparkSession.read.schema(indexed.schema).parquet(path)
 
 
 def ivf_probe_partitioned(
-    spark,
-    path: str,
-    query: DataFrame,
+    index: DataFrame,
+    qvec: list[float] | None,
     centroids: list[tuple[int, list[float]]],
     k: int,
     nprobe: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Probe a built IVF index: collect the ``_probe_cells`` ids (the
-    same cells ivf_search probes), then scan ONLY those `cell=`
-    directories — the literal IN-filter reaches the scan as
+    """Probe a built IVF index (:func:`build_ivf_index`): scan ONLY the
+    `cell=` directories of the query's :func:`nearest_cells` (the same
+    cells ivf_search probes) — the literal IN-filter reaches the scan as
     PartitionFilters, so IO is nprobe/ncells of the corpus.  Exact
     re-rank within the probed cells; same output as ivf_search."""
-    q = query_vec(query, vec_col)
-    probe = [r["__cell"] for r in _probe_cells(q, centroids, nprobe).collect()]
-    idx = spark.read.parquet(path).filter(F.col("cell").isin(probe))
+    idx = index.filter(F.col("cell").isin(nearest_cells(qvec, centroids, nprobe)))
     return exact_rerank(
-        idx.crossJoin(q),
+        with_query(idx, qvec),
         [F.col(id_col), F.col("cell").cast("int").alias("cell")],
         k,
         id_col=id_col,
@@ -456,7 +459,7 @@ def pq_encode(vec: Column, codebooks: list[list[tuple[int, list[float]]]]) -> Co
     dsub = len(codebooks[0][0][1])
     codes = []
     for s, cb in enumerate(codebooks):
-        mat = F.lit([cw for _, cw in cb]).cast("array<array<double>>")
+        mat = vector_literal([cw for _, cw in cb])
         sub = F.slice(vec, s * dsub + 1, dsub)
         entries = F.transform(
             mat,
@@ -470,18 +473,15 @@ def pq_encode(vec: Column, codebooks: list[list[tuple[int, list[float]]]]) -> Co
 
 
 def adc_distance_table(
-    query: DataFrame, codebooks: list[list[tuple[int, list[float]]]], vec_col: str = "embedding"
+    qvec: list[float], codebooks: list[list[tuple[int, list[float]]]]
 ) -> Column:
     """The ADC lookup table as ONE literal: exact query-to-codeword
     distances per subspace (m × ncode DECIMAL(18,6) entries).  Model-
-    sized, computed driver-side from the single query row — the PQ
-    analog of fit_vectors."""
-    qrow = query.select(as_double_array(F.col(vec_col)).alias("v")).head()
-    qv = [float(x) for x in qrow[0]]
+    sized, computed driver-side from the query vector."""
     dsub = len(codebooks[0][0][1])
     dtab = []
     for s, cb in enumerate(codebooks):
-        qs = qv[s * dsub : (s + 1) * dsub]
+        qs = qvec[s * dsub : (s + 1) * dsub]
         row = []
         for _, cw in cb:
             d = 0.0
@@ -489,12 +489,12 @@ def adc_distance_table(
                 d += (x - y) * (x - y)
             row.append(round(d, 6))
         dtab.append(row)
-    return F.lit(dtab).cast("array<array<decimal(18,6)>>")
+    return vector_literal(dtab).cast("array<array<decimal(18,6)>>")
 
 
 def pq_adc_search(
     corpus: DataFrame,
-    query: DataFrame,
+    qvec: list[float] | None,
     codebooks: list[list[tuple[int, list[float]]]],
     k: int,
     id_col: str = "vec_id",
@@ -512,24 +512,25 @@ def pq_adc_search(
         F.col(id_col),
         pq_encode(as_double_array(F.col(vec_col)), codebooks).alias("__codes"),
     )
-    return _adc_topk(enc, query, codebooks, k, id_col, vec_col)
+    return _adc_topk(enc, qvec, codebooks, k, id_col)
 
 
 def _adc_topk(
     enc: DataFrame,
-    query: DataFrame,
+    qvec: list[float] | None,
     codebooks: list[list[tuple[int, list[float]]]],
     k: int,
     id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """(id, adc_dist) top-``k`` of ``enc`` (id, ``__codes``) by
     (ADC distance, id): the distance is the DECIMAL(20,6) sum of one
-    :func:`adc_distance_table` entry per subspace."""
-    tab = adc_distance_table(query, codebooks, vec_col)
+    :func:`adc_distance_table` entry per subspace.  No query, no rows."""
+    if qvec is None:
+        enc, qvec = enc.filter(F.lit(False)), [0.0] * len(codebooks) * len(codebooks[0][0][1])
+    tab = adc_distance_table(qvec, codebooks)
     adc = F.aggregate(
         F.zip_with(
-            F.lit(list(range(1, len(codebooks) + 1))),
+            vector_literal(range(1, len(codebooks) + 1)),
             F.col("__codes"),
             lambda s, c: F.element_at(F.element_at(tab, s), c),
         ),
@@ -715,7 +716,7 @@ def kmeans_step(
 
 def ivfpq_rerank_search(
     corpus: DataFrame,
-    query: DataFrame,
+    qvec: list[float] | None,
     centroids: list[tuple[int, list[float]]],
     codebooks: list[list[tuple[int, list[float]]]],
     k: int,
@@ -736,21 +737,20 @@ def ivfpq_rerank_search(
     touches.  Stage 2 fetches `shortlist` full vectors by id (a
     broadcast semi-join against a request-sized id list) — float
     vectors for exactly R rows, never the corpus."""
-    q = query_vec(query, vec_col)
-    probe = _probe_cells(q, centroids, nprobe)
     # Stage 1: codes-only ADC over probed cells.
+    probe = nearest_cells(qvec, centroids, nprobe)
     enc = (
         with_cells(corpus, centroids, vec_col)
-        .join(probe, "__cell")
+        .filter(F.col("__cell").isin(probe))
         .select(
             F.col(id_col),
             pq_encode(as_double_array(F.col(vec_col)), codebooks).alias("__codes"),
         )
     )
-    short = _adc_topk(enc, query, codebooks, shortlist, id_col, vec_col).select(id_col)
+    short = _adc_topk(enc, qvec, codebooks, shortlist, id_col).select(id_col)
     # Stage 2: exact rerank of the R-row shortlist only.
     return exact_rerank(
-        corpus.join(F.broadcast(short), id_col).crossJoin(q),
+        with_query(corpus.join(F.broadcast(short), id_col), qvec),
         [F.col(id_col)],
         k,
         id_col=id_col,
@@ -878,7 +878,7 @@ def norm_outlier_audit(emb: DataFrame, z_cut: float = 2.0, vec_col: str = "embed
 
 def ivf_recall_curve(
     corpus: DataFrame,
-    query: DataFrame,
+    qvec: list[float] | None,
     centroids: list[tuple[int, list[float]]],
     k: int,
     nprobes: tuple[int, ...] = (1, 2, 3),
@@ -890,33 +890,28 @@ def ivf_recall_curve(
     FAISS nprobe sweep, done as relational ops).
 
     Cost discipline: probe cells for nprobe=1 nest inside nprobe=2
-    inside nprobe=3, so candidates are scored ONCE against the query
-    for the largest budget (localCheckpoint) and each curve point is
-    just a filter on the cell's probe rank + top-k + intersect with
-    the exact answer — no re-scan per point."""
-    q = query_vec(query, vec_col)
-    w = Window.orderBy(F.col("cdist").asc(), F.col("__cell").asc())
-    cellrank = F.broadcast(
-        _cell_dists(q, centroids)
-        .withColumn("pr", F.row_number().over(w))
-        .filter(F.col("pr") <= max(nprobes))
-        .select("__cell", "pr")
-    )
+    inside nprobe=3 (one driver-side :func:`nearest_cells` ranking), so
+    candidates are scored ONCE against the query for the largest budget
+    (localCheckpoint) and each curve point is just a literal filter on
+    the first nprobe cells + top-k + intersect with the exact answer —
+    no re-scan per point."""
+    cells = nearest_cells(qvec, centroids, max(nprobes))
+    probed = with_cells(corpus, centroids, vec_col).filter(F.col("__cell").isin(cells))
     cand, name, asc = exact_scores(
-        with_cells(corpus, centroids, vec_col).join(cellrank, "__cell").crossJoin(q),
-        [F.col(id_col), F.col("pr")],
+        with_query(probed, qvec),
+        [F.col(id_col), F.col("__cell")],
         vec_col=vec_col,
     )
     cand = cand.localCheckpoint()
     # k-row exact answer pinned once (r08): un-checkpointed it re-ran
     # the exact corpus top-k inside every curve point's join
     exact_ids = (
-        knn_topk(corpus, query, k, "sqL2").select(id_col).localCheckpoint()
+        knn_topk(corpus, qvec, k, "sqL2").select(id_col).localCheckpoint()
     )
     out = None
     for np_ in nprobes:
         topk = (
-            cand.filter(F.col("pr") <= np_)
+            cand.filter(F.col("__cell").isin(cells[:np_]))
             .orderBy(*rank_order(name, asc, id_col))
             .limit(k)
         )
@@ -1027,7 +1022,7 @@ def label_balance_audit(emb: DataFrame, label_col: str = "label") -> DataFrame:
 
 def adaptive_filtered_search(
     corpus: DataFrame,
-    query: DataFrame,
+    qvec: list[float] | None,
     centroids: list[tuple[int, list[float]]],
     k: int,
     label_value: int,
@@ -1058,14 +1053,13 @@ def adaptive_filtered_search(
     pred = F.col("label") == label_value
     n_match = corpus.filter(pred).count()
     if n_match <= sel_threshold:
-        return knn_topk(corpus, query, k, "sqL2", pred=pred).select(
+        return knn_topk(corpus, qvec, k, "sqL2", pred=pred).select(
             id_col, "dist", F.lit("prefilter_exact").alias("strategy")
         )
-    q = query_vec(query, vec_col)
-    probe = _probe_cells(q, centroids, nprobe)
-    c = with_cells(corpus, centroids, vec_col)
+    probe = nearest_cells(qvec, centroids, nprobe)
+    c = with_cells(corpus, centroids, vec_col).filter(F.col("__cell").isin(probe))
     return exact_rerank(
-        c.join(probe, "__cell").filter(pred).crossJoin(q),
+        with_query(c.filter(pred), qvec),
         [F.col(id_col)],
         k,
         id_col=id_col,
@@ -1245,7 +1239,7 @@ MATRYOSHKA_SHORTLIST_MULT = 3
 
 def matryoshka_recall(
     emb: DataFrame,
-    query: DataFrame,
+    qvec: list[float] | None,
     k: int,
     prefix_dims: int = MATRYOSHKA_PREFIX,
     shortlist_mult: int = MATRYOSHKA_SHORTLIST_MULT,
@@ -1266,19 +1260,19 @@ def matryoshka_recall(
     # k-row exact answer pinned once (r08): both recall rows join it,
     # and un-checkpointed each re-ran the exact corpus top-k
     exact = knn_topk(
-        emb, query, k, "sqL2", id_col=id_col, vec_col=vec_col
+        emb, qvec, k, "sqL2", id_col=id_col, vec_col=vec_col
     ).localCheckpoint()
     pre_emb = emb.select(
         F.col(id_col), "label", F.slice(F.col(vec_col), 1, prefix_dims).alias(vec_col)
     )
-    pre_q = query.select(F.slice(F.col(vec_col), 1, prefix_dims).alias(vec_col))
+    pre_q = None if qvec is None else qvec[:prefix_dims]
     pre_top = knn_topk(pre_emb, pre_q, k, "sqL2", id_col=id_col, vec_col=vec_col)
     shortlist = knn_topk(
         pre_emb, pre_q, k * shortlist_mult, "sqL2", id_col=id_col, vec_col=vec_col
     ).select(id_col)
     rerank = knn_topk(
         emb.join(F.broadcast(shortlist), id_col),
-        query,
+        qvec,
         k,
         "sqL2",
         id_col=id_col,
@@ -1439,9 +1433,20 @@ def sign_pack_bits(v: Column, offset: int, nbits: int = 32) -> Column:
     )
 
 
+def sign_pack_np(qvec: list[float] | None) -> tuple[int, int]:
+    """:func:`sign_pack_bits` of dims 1-32 and 33-64 of the query
+    vector, computed on the driver.  No query: (0, 0)."""
+    if qvec is None:
+        return 0, 0
+    return tuple(
+        sum(1 << d for d in range(32) if float(qvec[offset + d]) > 0)
+        for offset in (0, 32)
+    )
+
+
 def binary_hamming_search(
     emb: DataFrame,
-    query_vec: list[float],
+    qvec: list[float] | None,
     k: int,
     shortlist: int = HAMMING_SHORTLIST,
     vec_col: str = "embedding",
@@ -1456,17 +1461,13 @@ def binary_hamming_search(
     columns); the scan never touches the float vectors until the
     ``shortlist`` rows survive."""
     v = as_double_array(F.col(vec_col))
-    qlo = sum(
-        (1 << (d - 1)) for d in range(1, 33) if float(query_vec[d - 1]) > 0
-    )
-    qhi = sum(
-        (1 << (d - 1)) for d in range(1, 33) if float(query_vec[d + 31]) > 0
-    )
-    packed = emb.select(
+    qlo, qhi = sign_pack_np(qvec)
+    packed = with_query(emb, qvec).select(
         "vec_id",
         vec_col,
         sign_pack_bits(v, 0).alias("lo"),
         sign_pack_bits(v, 32).alias("hi"),
+        "__q_vec",
     )
     ham = (
         F.bit_count(F.col("lo").bitwiseXOR(F.lit(qlo)))
@@ -1477,12 +1478,11 @@ def binary_hamming_search(
         .orderBy(F.col("hamming").asc(), F.col("vec_id").asc())
         .limit(shortlist)
     )
-    qv = F.lit([float(x) for x in query_vec]).cast("array<double>")
     return (
         short.select(
             "vec_id",
             "hamming",
-            F.round(squared_l2(v, qv), 6).alias("dist"),
+            F.round(squared_l2(v, F.col("__q_vec")), 6).alias("dist"),
         )
         .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
         .limit(k)
@@ -1557,7 +1557,7 @@ def pq_distortion_audit(
     dsub = len(codebooks[0][0][1])
     subs = []
     for s, cb in enumerate(codebooks):
-        mat = F.lit([cw for _, cw in cb]).cast("array<array<double>>")
+        mat = vector_literal([cw for _, cw in cb])
         sub = F.slice(v, s * dsub + 1, dsub)
         dists = F.transform(mat, lambda cw: F.round(squared_l2(sub, cw), 6))
         subs.append(F.array_min(dists).cast("decimal(18,6)"))
@@ -2025,10 +2025,8 @@ def graph_cell_assignments(
     way the edge table is cached."""
     from ..functions.vector import as_double_array, squared_l2
 
-    ids = F.lit([int(cid) for cid, _ in cents])
-    mat = F.lit([[float(x) for x in cv] for _, cv in cents]).cast(
-        "array<array<double>>"
-    )
+    ids = vector_literal([int(cid) for cid, _ in cents])
+    mat = vector_literal([cv for _, cv in cents])
     vec = as_double_array(F.col(vec_col))
     entries = F.transform(
         mat,
@@ -2222,7 +2220,7 @@ def graph_index_upsert_audit(
 
 def rp_multiprobe_search(
     corpus: DataFrame,
-    query: DataFrame,
+    qvec: list[float] | None,
     planes: list[tuple[int, list[float]]],
     k: int,
     id_col: str = "vec_id",
@@ -2236,30 +2234,19 @@ def rp_multiprobe_search(
     misses at (|planes|+1)x the candidate cost.
 
     Plan: bucket assignment stays a zero-shuffle scan expression; the
-    probe set is a broadcast (|planes|+1)-row frame; candidates
+    probe set is the query's bucket (:func:`query_bucket`, on the
+    driver) and its |planes| flips, a literal IN filter; candidates
     re-rank exactly, TakeOrdered top-k."""
-    c = corpus.withColumn(
-        "__bucket", rp_bucket(as_double_array(F.col(vec_col)), planes)
-    )
-    q = query_vec(query, vec_col).withColumn(
-        "__qb", rp_bucket(F.col("__q_vec"), planes)
-    )
-    flips = F.array(
-        F.col("__qb"),
-        *[
-            F.col("__qb").bitwiseXOR(F.lit(2 ** i).cast("long"))
-            for i in range(len(planes))
-        ],
-    )
-    probes = q.select(
-        "__q_vec", F.explode(flips).alias("__probe")
-    )
-    scored, name, asc = exact_scores(
-        c.join(F.broadcast(probes), F.col("__bucket") == F.col("__probe")),
+    qb = query_bucket(qvec, planes)
+    probes = [qb] + [qb ^ 2**i for i in range(len(planes))]
+    bucket = rp_bucket(as_double_array(F.col(vec_col)), planes)
+    return exact_rerank(
+        with_query(corpus.filter(bucket.isin(probes)), qvec),
         [F.col(id_col)],
+        k,
+        id_col=id_col,
         vec_col=vec_col,
     )
-    return scored.distinct().orderBy(*rank_order(name, asc, id_col)).limit(k)
 
 
 CKA_DIM_FULL = 64

@@ -17,9 +17,14 @@ declarative filter-before-rank ordering IS pre-filter semantics, and
 Catalyst pushes the predicate into the Parquet scan (PushedFilters).
 
 Physical plan at scale (the 100-TB design point):
-- Single query: ``orderBy(dist, id).limit(k)`` compiles to
-  ``TakeOrderedAndProject`` — per-partition top-k heaps, only k rows per
-  partition move to the driver-side merge.  No shuffle of the corpus.
+- Single query: the query vector is the request, as in the reference
+  (a float array in the JSON body, src/http_server.cc:104-107).  It
+  enters the plan as one ``array<double>`` literal column
+  (:func:`with_query`), so the score is computed in the corpus scan
+  stage with no join and no broadcast, and ``orderBy(dist, id).limit(k)``
+  compiles to ``TakeOrderedAndProject`` — per-partition top-k heaps,
+  only k rows per partition move to the driver-side merge.  One stage,
+  no shuffle of the corpus.
 - Batch of queries: broadcast the (small) query side, evaluate the
   distance inside the corpus scan stage, then a
   ``Window.partitionBy(query_id)`` rank-limit.  Spark >= 3.5 inserts
@@ -42,6 +47,7 @@ from ..functions.vector import (
     round6,
     squared_l2,
     squared_l2_np,
+    vector_literal,
     vector_matrix,
 )
 
@@ -68,9 +74,22 @@ def ne_filter(field: str, value) -> Column:
     return F.col(field).isNotNull() & (F.col(field) != F.lit(value))
 
 
+def with_query(df: DataFrame, qvec: list[float] | None) -> DataFrame:
+    """``df`` with the single query vector ``qvec`` as the column
+    ``__q_vec``: one ``array<double>`` literal (:func:`vector_literal`),
+    so :func:`exact_scores` scores in the scan stage.  ``qvec`` None (a
+    query id absent from the corpus) gives no rows, same columns."""
+    if qvec is None:
+        return df.filter(F.lit(False)).withColumn(
+            "__q_vec", F.lit(None).cast("array<double>")
+        )
+    return df.withColumn("__q_vec", vector_literal(qvec))
+
+
 def query_vec(query: DataFrame, vec_col: str = "embedding", *keys: Column) -> DataFrame:
-    """The broadcast query side of every exact scorer: ``keys`` and the
-    query vector as ``array<double>`` column ``__q_vec``."""
+    """The broadcast query side of the batch scorer (:func:`knn_join`):
+    ``keys`` and each query vector as ``array<double>`` column
+    ``__q_vec``."""
     return F.broadcast(
         query.select(*keys, as_double_array(F.col(vec_col)).alias("__q_vec"))
     )
@@ -85,7 +104,8 @@ def exact_scores(
 ) -> tuple[DataFrame, str, bool]:
     """``keep``, then ``ROUND(score(vec_col, __q_vec), 6)`` named
     ``dist`` (ascending metrics) or ``sim``, then ``extra``, for a
-    frame joined to :func:`query_vec`.  Returns the frame, the score
+    frame carrying ``__q_vec`` (:func:`with_query`, or joined to
+    :func:`query_vec`).  Returns the frame, the score
     name and whether it ranks ascending."""
     fn, asc = METRICS[metric]
     name = "dist" if asc else "sim"
@@ -117,7 +137,7 @@ def exact_rerank(
 
 def knn_topk(
     corpus: DataFrame,
-    query: DataFrame,
+    qvec: list[float] | None,
     k: int,
     metric: str = "sqL2",
     pred: Column | None = None,
@@ -126,15 +146,15 @@ def knn_topk(
 ) -> DataFrame:
     """Single-query exact k-NN (O3/O9): pre-filter -> score -> top-k.
 
-    ``query`` is a ONE-row DataFrame holding the query vector (the
-    reference's request body as a relation) — broadcast, never
-    collected.  Output: (vec_id, label, dist|sim) ranked ascending for
-    distances, descending for similarities, vec_id tiebreak
-    (FIXTURES.md §C).
+    ``qvec`` is the query vector (the reference's request body), a
+    literal in the plan (:func:`with_query`): one stage, scan -> score
+    -> ``TakeOrderedAndProject``.  Output: (vec_id, label, dist|sim)
+    ranked ascending for distances, descending for similarities,
+    vec_id tiebreak (FIXTURES.md §C).
     """
     df = corpus.filter(pred) if pred is not None else corpus
     return exact_rerank(
-        df.crossJoin(query_vec(query, vec_col)),
+        with_query(df, qvec),
         [F.col(id_col), F.col("label")],
         k,
         metric,
@@ -231,7 +251,7 @@ def _shard_candidates(
 
 def knn_shard_topk(
     corpus: DataFrame,
-    query: DataFrame,
+    qvec: list[float] | None,
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -249,10 +269,9 @@ def knn_shard_topk(
     The kernel folds and rounds with the NumPy twins of the expression
     (``functions.vector``), so rows and distances equal knn_topk's:
     ascending rounded distance, id tiebreak.  The corpus is never
-    collected."""
-    head = query.select(vec_col).head()
-    qmat = [[float(x) for x in head[0]]] if head else []
-    local = _shard_candidates(corpus, qmat, k, id_col, vec_col)
+    collected, and the query vector ``qvec`` rides in the task closure:
+    building the plan runs no Spark job."""
+    local = _shard_candidates(corpus, [] if qvec is None else [qvec], k, id_col, vec_col)
     return local.orderBy(F.col("dist").asc(), F.col(id_col).asc()).limit(k)
 
 
@@ -342,7 +361,7 @@ def point_lookup(corpus: DataFrame, ids: list[int], id_col: str = "vec_id") -> D
 
 def radius_search(
     corpus: DataFrame,
-    query: DataFrame,
+    qvec: list[float] | None,
     radius: float,
     metric: str = "sqL2",
     pred: Column | None = None,
@@ -355,11 +374,11 @@ def radius_search(
     Distances: ascending metrics keep dist <= radius; similarity
     metrics keep sim >= radius.  The compare runs on the ROUNDed
     score so no sub-1e-6 residue can flip membership vs the oracle.
-    Plan: broadcast 1-row query x corpus scan -> filter; no shuffle,
-    no sort — strictly cheaper than top-k at scale."""
+    Plan: corpus scan scored against the query literal -> filter; no
+    join, no shuffle, no sort — strictly cheaper than top-k at scale."""
     df = corpus.filter(pred) if pred is not None else corpus
     scored, name, asc = exact_scores(
-        df.crossJoin(query_vec(query, vec_col)),
+        with_query(df, qvec),
         [F.col(id_col), F.col("label")],
         metric,
         vec_col,
@@ -370,7 +389,7 @@ def radius_search(
 
 def label_maxsim_topk(
     corpus: DataFrame,
-    query: DataFrame,
+    qvec: list[float] | None,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -382,8 +401,8 @@ def label_maxsim_topk(
     cosine any member reaches against the query, with the group mean
     as a diagnostic.  Top-k labels by (max_sim desc, label asc).
 
-    Plan: the one-row query is broadcast and every corpus row is
-    scored inside the scan stage (no shuffle); the grouped max/mean is
+    Plan: every corpus row is scored against the query literal inside
+    the scan stage (no join, no shuffle); the grouped max/mean is
     one tiny agg on label; top-k rides TakeOrderedAndProject.  At
     100 TB this is the grouped-max retrieval shape that replaces a
     per-group index probe.  The mean folds DECIMAL-cast rounded sims
@@ -392,7 +411,7 @@ def label_maxsim_topk(
     sim = F.round(
         cosine_similarity(as_double_array(F.col(vec_col)), F.col("__q_vec")), 6
     )
-    scored = corpus.crossJoin(query_vec(query, vec_col)).select(
+    scored = with_query(corpus, qvec).select(
         F.col(label_col), sim.cast("decimal(10,6)").alias("_sim")
     )
     return (

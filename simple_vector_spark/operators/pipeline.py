@@ -38,7 +38,7 @@ def exact_dedup_keepers(docs: DataFrame, text_col: str = "text", id_col: str = "
 def hybrid_rrf(
     docs: DataFrame,
     emb: DataFrame,
-    query: DataFrame,
+    qvec: list[float] | None,
     terms: list[str],
     k: int = 20,
     pool: int = 100,
@@ -59,7 +59,7 @@ def hybrid_rrf(
 
     from .ranking import ranked_global
 
-    vec = knn_topk(emb, query, pool, "sqL2")
+    vec = knn_topk(emb, qvec, pool, "sqL2")
     vecrank = ranked_global(
         vec, [F.col("dist").asc(), F.col("vec_id").asc()], rank_name="rv"
     ).select(F.col("vec_id").alias("id"), "rv")

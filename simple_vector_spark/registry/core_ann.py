@@ -12,7 +12,7 @@ from ..operators import mutation as M
 from ..sources.loaders import load_table, scratch_path, session_cached
 
 from . import _ORACLES, query
-from .core_knn import KNN_K
+from .core_knn import KNN_K, _query_vector, _seed_codebook
 from .core_dedup import _cached_index
 
 
@@ -29,16 +29,6 @@ IVF_NPROBE = 3
 _PLANES_SQL = ", ".join(str(i) for i in A.PLANE_IDS)
 _CENTS_SQL = ", ".join(str(i) for i in A.CENTROID_IDS)
 TRAIN_ITERS = 2  # fixed Lloyd iterations — deterministic, oracle-unrollable
-
-
-def _seed_codebook(spark, sf_dir: str, ids: list[int]):
-    """The seed vectors ``ids`` (``A.CENTROID_IDS`` or ``A.PLANE_IDS``)
-    of the fixture's corpus: model parameters, collected once per
-    session like the trained codebooks."""
-    return session_cached(
-        spark, sf_dir, f"seed_codebook_{'_'.join(map(str, ids))}",
-        lambda: A.fit_vectors(load_table(spark, sf_dir, "embeddings"), ids),
-    )
 
 
 def _trained_centroids(spark, sf_dir: str):
@@ -238,7 +228,7 @@ def ann_rp_lsh(spark, sf_dir):
     assignment; recall < 1 by construction (like HNSW ef_search)."""
     emb = load_table(spark, sf_dir, "embeddings")
     planes = _seed_codebook(spark, sf_dir, A.PLANE_IDS)
-    return A.rp_lsh_search(emb, emb.filter(F.col("vec_id") == ANN_QUERY_ID), planes, ANN_K)
+    return A.rp_lsh_search(emb, _query_vector(spark, sf_dir, ANN_QUERY_ID), planes, ANN_K)
 
 
 # IVF search body written against a `cents(cid, cv)` CTE — shared by
@@ -293,7 +283,7 @@ def ann_ivf(spark, sf_dir):
     cents = _trained_centroids(spark, sf_dir)
     return A.ivf_search(
         _emb_with_cells(spark, sf_dir, trained=True),
-        emb.filter(F.col("vec_id") == ANN_QUERY_ID), cents, ANN_K, IVF_NPROBE
+        _query_vector(spark, sf_dir, ANN_QUERY_ID), cents, ANN_K, IVF_NPROBE
     )
 
 
@@ -315,7 +305,7 @@ def ann_ivf_seed_baseline(spark, sf_dir):
     cents = _seed_codebook(spark, sf_dir, A.CENTROID_IDS)
     return A.ivf_search(
         _emb_with_cells(spark, sf_dir),
-        emb.filter(F.col("vec_id") == ANN_QUERY_ID), cents, ANN_K, IVF_NPROBE
+        _query_vector(spark, sf_dir, ANN_QUERY_ID), cents, ANN_K, IVF_NPROBE
     )
 
 
@@ -346,7 +336,7 @@ def ann_recall_report(spark, sf_dir):
     """Recall@10 of RP-LSH vs the exact top-10 — the measured ANN
     trade, fully oracle-checked because both sides are deterministic."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == ANN_QUERY_ID)
+    q = _query_vector(spark, sf_dir, ANN_QUERY_ID)
     planes = _seed_codebook(spark, sf_dir, A.PLANE_IDS)
     ann_hits = A.rp_lsh_search(emb, q, planes, ANN_K)
     exact_hits = K.knn_topk(emb, q, ANN_K, "sqL2")
@@ -414,7 +404,7 @@ def ann_quantized_recall(spark, sf_dir):
     full-precision exact top-10 — what the 4x compression costs in
     ranking quality, fully oracle-checked."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0)
+    q = _query_vector(spark, sf_dir)
     deq_hits = K.knn_topk(A.dequantized_view(emb), q, KNN_K, "sqL2")
     exact_hits = K.knn_topk(emb, q, KNN_K, "sqL2")
     return A.recall_report(deq_hits, exact_hits, KNN_K)
@@ -425,12 +415,15 @@ def ann_ivf_partitioned(spark, sf_dir):
     """O4 at its 100-TB layout: bulk-build the IVF index as Parquet
     partitioned by cell, probe via partition-pruned scan — identical
     results to ann_ivf (same oracle)."""
-    emb = load_table(spark, sf_dir, "embeddings")
     cents = _trained_centroids(spark, sf_dir)  # trained default (round 3)
-    path = scratch_path("ivf_index", sf_dir)
-    A.build_ivf_index(emb, cents, path)
+    index = session_cached(
+        spark, sf_dir, "ivf_index_trained",
+        lambda: A.build_ivf_index(
+            load_table(spark, sf_dir, "embeddings"), cents, scratch_path("ivf_index", sf_dir)
+        ),
+    )
     return A.ivf_probe_partitioned(
-        spark, path, emb.filter(F.col("vec_id") == ANN_QUERY_ID), cents, ANN_K, IVF_NPROBE
+        index, _query_vector(spark, sf_dir, ANN_QUERY_ID), cents, ANN_K, IVF_NPROBE
     )
 
 
@@ -551,7 +544,7 @@ def ann_pq_adc(spark, sf_dir):
     oracle-checked."""
     emb = load_table(spark, sf_dir, "embeddings")
     cbs = _trained_pq(spark, sf_dir)
-    return A.pq_adc_search(emb, emb.filter(F.col("vec_id") == 0), cbs, KNN_K)
+    return A.pq_adc_search(emb, _query_vector(spark, sf_dir), cbs, KNN_K)
 
 
 @query(
@@ -575,7 +568,7 @@ def ann_pq_recall(spark, sf_dir):
     """Recall@10 of PQ-ADC vs exact — what 32x compression costs in
     ranking quality (compare ann_quantized_recall's 4x int8 point)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0)
+    q = _query_vector(spark, sf_dir)
     cbs = _trained_pq(spark, sf_dir)
     pq_hits = A.pq_adc_search(emb, q, cbs, KNN_K)
     exact_hits = K.knn_topk(emb, q, KNN_K, "sqL2")
@@ -605,7 +598,7 @@ def ann_pq_seed_recall(spark, sf_dir):
     (distortion -26%, avg recall +0.06 on the fixture) is a measured
     number; asserted in tests/test_wave237.py."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0)
+    q = _query_vector(spark, sf_dir)
     cbs = A.pq_codebooks(_seed_codebook(spark, sf_dir, A.CENTROID_IDS))
     pq_hits = A.pq_adc_search(emb, q, cbs, KNN_K)
     exact_hits = K.knn_topk(emb, q, KNN_K, "sqL2")

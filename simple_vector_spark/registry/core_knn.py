@@ -9,10 +9,10 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table, scratch_path
+from ..operators.ann import fit_vectors
+from ..sources.loaders import load_table, scratch_path, session_cached
 
 from . import _ORACLES, query
-
 
 
 # --------------------------------------------------------------------------
@@ -27,6 +27,24 @@ DELETE_MOD = 10  # tombstones: vec_id % 10 == 0
 PLANT_MOD = 100  # planted duplicates: doc_id % 100 == 0 ...
 PLANT_SHIFT = 1_000_000  # ... copied to doc_id + 1e6
 WAU_WINDOW_DAYS = 7  # rolling-WAU window, shared by operator + oracle SQL
+
+
+def _seed_codebook(spark, sf_dir: str, ids: list[int]):
+    """The seed vectors ``ids`` (``A.CENTROID_IDS`` or ``A.PLANE_IDS``)
+    of the fixture's corpus: model parameters, collected once per
+    session like the trained codebooks."""
+    return session_cached(
+        spark, sf_dir, f"seed_codebook_{'_'.join(map(str, ids))}",
+        lambda: fit_vectors(load_table(spark, sf_dir, "embeddings"), ids),
+    )
+
+
+def _query_vector(spark, sf_dir: str, qid: int = 0) -> list[float] | None:
+    """The declared query: the vector of corpus row ``qid``, collected
+    once per session like the seed codebooks, as the request a search
+    receives.  None when the corpus has no row ``qid``."""
+    rows = _seed_codebook(spark, sf_dir, [qid])
+    return rows[0][1] if rows else None
 
 # DuckDB fragment: per-(corpus row, query row) parallel-unnest of the two
 # double-cast vectors; DuckDB zips parallel unnests positionally, giving
@@ -63,9 +81,10 @@ SELECT * FROM d ORDER BY {order}, vec_id LIMIT {KNN_K}
 @query("knn_exact_topk", _single_query_oracle(_PAIR_L2, "dist ASC"))
 def knn_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O3/O9: brute-force squared-L2 top-k, query = embedding of vec_id 0.
-    Plan: broadcast 1-row query x corpus scan -> TakeOrderedAndProject."""
+    Plan: one stage, corpus scan scored against the query literal ->
+    TakeOrderedAndProject."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return K.knn_topk(emb, emb.filter(F.col("vec_id") == 0), KNN_K, "sqL2")
+    return K.knn_topk(emb, _query_vector(spark, sf_dir), KNN_K, "sqL2")
 
 
 @query("knn_ip_topk", _single_query_oracle(_PAIR_IP, "sim DESC"))
@@ -73,14 +92,14 @@ def knn_ip_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O5: inner-product metric — similarity, larger=better, DESC order
     (FAISS METRIC_INNER_PRODUCT convention)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return K.knn_topk(emb, emb.filter(F.col("vec_id") == 0), KNN_K, "ip")
+    return K.knn_topk(emb, _query_vector(spark, sf_dir), KNN_K, "ip")
 
 
 @query("knn_cosine_topk", _single_query_oracle(_PAIR_COS, "sim DESC"))
 def knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extension of O5: cosine = IP / norms, computed directly."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return K.knn_topk(emb, emb.filter(F.col("vec_id") == 0), KNN_K, "cosine")
+    return K.knn_topk(emb, _query_vector(spark, sf_dir), KNN_K, "cosine")
 
 
 # --------------------------------------------------------------------------
@@ -96,7 +115,7 @@ def knn_filtered_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return K.knn_topk(
         emb,
-        emb.filter(F.col("vec_id") == 0),
+        _query_vector(spark, sf_dir),
         KNN_K,
         "sqL2",
         pred=K.eq_filter("label", FILTER_LABEL),
@@ -117,7 +136,7 @@ def knn_filtered_ne(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return K.knn_topk(
         emb,
-        emb.filter(F.col("vec_id") == 0),
+        _query_vector(spark, sf_dir),
         KNN_K,
         "sqL2",
         pred=K.ne_filter("label", FILTER_LABEL),
@@ -165,7 +184,7 @@ def knn_filtered_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return K.knn_topk(
         emb,
-        emb.filter(F.col("vec_id") == 0),
+        _query_vector(spark, sf_dir),
         KNN_K,
         "sqL2",
         pred=F.col("label").between(3, 12) & (F.col("vec_id") % 2 == 1),
@@ -226,7 +245,7 @@ def knn_shard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     global TakeOrderedAndProject merge — exact, same oracle as the
     expression form."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return K.knn_shard_topk(emb, emb.filter(F.col("vec_id") == 0), KNN_K)
+    return K.knn_shard_topk(emb, _query_vector(spark, sf_dir), KNN_K)
 
 
 @query("knn_shard_join", _ORACLES["knn_batch_join"])

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table, scoped_conf
+from ..sources.loaders import load_table, scoped_conf, scratch_path
 
 from . import query
 
@@ -302,24 +302,25 @@ def bucketed_join_revenue(spark, sf_dir):
     side (asserted in tests/test_scale_patterns.py on the same
     mechanism).  At 100 TB this is how the corpus<->metadata join
     avoids shuffling the fact table every query: pay the bucketed
-    write once, join shuffle-free forever after."""
+    write once, join shuffle-free forever after.  The tables are
+    external, under ``scratch_path``: nothing lands in the warehouse
+    directory, which defaults to the launch directory."""
     import os
+    import shutil
 
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     to_, tc = f"orders_b_{tag}", f"customer_b_{tag}"
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
-    import shutil
-    from urllib.parse import urlparse
-
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for name, df, key in ((to_, orders, "o_custkey"), (tc, customer, "c_custkey")):
-        if not spark.catalog.tableExists(name):
+    for kind, df, key in (("orders_b", orders, "o_custkey"), ("customer_b", customer, "c_custkey")):
+        if not spark.catalog.tableExists(f"{kind}_{tag}"):
             # the in-memory catalog forgets tables between sessions but
-            # their managed location survives; clear the orphan or
-            # saveAsTable refuses with LOCATION_ALREADY_EXISTS
-            shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
-            df.write.bucketBy(8, key).sortBy(key).mode("overwrite").saveAsTable(name)
+            # their files survive; clear the orphan before the rewrite
+            path = scratch_path(kind, sf_dir)
+            shutil.rmtree(path, ignore_errors=True)
+            df.write.bucketBy(8, key).sortBy(key).mode("overwrite").option(
+                "path", path
+            ).saveAsTable(f"{kind}_{tag}")
     with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         out = (
             spark.table(to_)

@@ -12,6 +12,7 @@ from ..operators import mutation as M
 from ..sources.loaders import load_table
 
 from . import query
+from .core_knn import _query_vector
 from .core_dedup import _DOCS_PLUS_SQL, _docs_plus_spark
 from .core_ann import T
 
@@ -275,7 +276,7 @@ def hybrid_rrf_search(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    return P.hybrid_rrf(docs, emb, emb.filter(F.col("vec_id") == 0), BM25_TERMS)
+    return P.hybrid_rrf(docs, emb, _query_vector(spark, sf_dir), BM25_TERMS)
 
 
 QUALITY_FLOOR = 0.15

@@ -12,7 +12,7 @@ from ..operators import mutation as M
 from ..sources.loaders import load_table, scratch_path
 
 from . import finalize_double, query
-from .core_knn import PLANT_MOD, PLANT_SHIFT, WAU_WINDOW_DAYS, _PAIR_COS
+from .core_knn import PLANT_MOD, PLANT_SHIFT, WAU_WINDOW_DAYS, _PAIR_COS, _query_vector
 from .core_relational import E, R, _DEC_DISC_SQL, _DEC_PRICE_SQL
 from .core_dedup import COSINE_DUP_THRESHOLD, D, MINHASH_A, MINHASH_B, MINHASH_P, _DOCS_PLUS_SQL, _SIG_COLS_SQL, _TOKS_SQL, _docs_plus_spark, _minhash_pairs
 from .core_ann import A, ANN_K, ANN_QUERY_ID, IVF_NPROBE, T, _CENTS_SQL, _TRAINED_CTES, _emb_with_cells, _mean6_sql, _seed_codebook, _trained_centroids
@@ -487,7 +487,7 @@ def ann_ivfpq_rerank(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     cents = _seed_codebook(spark, sf_dir, A.CENTROID_IDS)
     cbs = A.pq_codebooks(cents)
-    q = emb.filter(F.col("vec_id") == ANN_QUERY_ID)
+    q = _query_vector(spark, sf_dir, ANN_QUERY_ID)
     return A.ivfpq_rerank_search(
         _emb_with_cells(spark, sf_dir), q, cents, cbs, ANN_K, IVF_NPROBE,
         _IVFPQ_SHORTLIST
@@ -1358,10 +1358,10 @@ SELECT * FROM d WHERE dist <= {RADIUS_SQ_L2}
 def knn_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range query (FAISS range_search analog, surface the reference's
     FLAT/HNSW top-k API lacks): all vectors within squared-L2 radius
-    of the query — broadcast query x scan -> filter, no sort/shuffle
+    of the query — scan scored against the query literal -> filter, no sort/shuffle
     at all, strictly cheaper than top-k at scale."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return K.radius_search(emb, emb.filter(F.col("vec_id") == 0), RADIUS_SQ_L2, "sqL2")
+    return K.radius_search(emb, _query_vector(spark, sf_dir), RADIUS_SQ_L2, "sqL2")
 
 
 @query(
@@ -1723,10 +1723,10 @@ ORDER BY max_sim DESC, label ASC LIMIT 5
 )
 def knn_maxsim_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-vector MaxSim (ColBERT-style) retrieval: label groups
-    scored by their best member cosine vs the query — broadcast query,
+    scored by their best member cosine vs the query — query literal,
     in-scan scoring, one tiny label agg, TakeOrderedAndProject."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return K.label_maxsim_topk(emb, emb.filter(F.col("vec_id") == 0), 5)
+    return K.label_maxsim_topk(emb, _query_vector(spark, sf_dir), 5)
 
 
 @query(
@@ -2100,7 +2100,7 @@ def ann_recall_vs_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _trained_centroids(spark, sf_dir)
     return A.ivf_recall_curve(
         _emb_with_cells(spark, sf_dir, trained=True),
-        emb.filter(F.col("vec_id") == ANN_QUERY_ID), cents, ANN_K, (1, 2, 3)
+        _query_vector(spark, sf_dir, ANN_QUERY_ID), cents, ANN_K, (1, 2, 3)
     )
 
 
@@ -2122,7 +2122,7 @@ def ann_recall_vs_nprobe_seed_baseline(spark: SparkSession, sf_dir: str) -> Data
     cents = _seed_codebook(spark, sf_dir, A.CENTROID_IDS)
     return A.ivf_recall_curve(
         _emb_with_cells(spark, sf_dir),
-        emb.filter(F.col("vec_id") == ANN_QUERY_ID), cents, ANN_K, (1, 2, 3)
+        _query_vector(spark, sf_dir, ANN_QUERY_ID), cents, ANN_K, (1, 2, 3)
     )
 
 

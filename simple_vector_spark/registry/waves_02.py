@@ -12,7 +12,7 @@ from ..operators import mutation as M
 from ..sources.loaders import load_table, scratch_path, session_cached
 
 from . import finalize_double, query
-from .core_knn import PLANT_MOD, PLANT_SHIFT
+from .core_knn import PLANT_MOD, PLANT_SHIFT, _query_vector
 from .core_relational import E, R
 from .core_dedup import D, _CLUSTER_LABELS_CTES, _DOCS_PLUS_SQL, _SIG_COLS_SQL, _TOKS_SQL, _docs_plus_spark, _dup_cluster_labels, _minhash_pairs
 from .core_ann import A, ANN_K, ANN_QUERY_ID, IVF_NPROBE, T, _CENTS_SQL, _emb_with_cells, _seed_codebook
@@ -646,7 +646,7 @@ def ann_adaptive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return A.adaptive_filtered_search(
         emb,
-        emb.filter(F.col("vec_id") == ANN_QUERY_ID),
+        _query_vector(spark, sf_dir, ANN_QUERY_ID),
         _seed_codebook(spark, sf_dir, A.CENTROID_IDS),
         ANN_K,
         ADAPTIVE_LABEL,
@@ -668,7 +668,7 @@ def ann_adaptive_filter_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return A.adaptive_filtered_search(
         emb,
-        emb.filter(F.col("vec_id") == ANN_QUERY_ID),
+        _query_vector(spark, sf_dir, ANN_QUERY_ID),
         _seed_codebook(spark, sf_dir, A.CENTROID_IDS),
         ANN_K,
         ADAPTIVE_LABEL,
@@ -1600,7 +1600,7 @@ def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact full-dim top-k — the coarse-to-fine bandwidth saver."""
     emb = load_table(spark, sf_dir, "embeddings")
     return A.matryoshka_recall(
-        emb, emb.filter(F.col("vec_id") == ANN_QUERY_ID), ANN_K
+        emb, _query_vector(spark, sf_dir, ANN_QUERY_ID), ANN_K
     )
 
 

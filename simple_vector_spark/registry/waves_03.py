@@ -12,7 +12,7 @@ from ..operators import mutation as M
 from ..sources.loaders import load_table, local_frame, scratch_path
 
 from . import _ORACLES, finalize_double, query
-from .core_knn import KNN_K
+from .core_knn import KNN_K, _query_vector
 from .core_relational import E, R
 from .core_events import _SESSION_ORACLE
 from .core_dedup import D, _CLUSTER_LABELS_CTES, _DOCS_PLUS_SQL, _SIG_COLS_SQL, _TOKS_SQL, _docs_plus_spark, _dup_cluster_labels, _minhash_pairs
@@ -289,7 +289,7 @@ def stream_live_index_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     live = wal_replay(acc, ["id"], ["log_id"], "op", "delete").select("id")
     corpus = emb.join(live, emb.vec_id == live.id, "left_semi")
     return K.knn_topk(
-        corpus, emb.filter(F.col("vec_id") == ANN_QUERY_ID), KNN_K, "sqL2"
+        corpus, _query_vector(spark, sf_dir, ANN_QUERY_ID), KNN_K, "sqL2"
     )
 
 
@@ -1814,8 +1814,7 @@ def ann_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_count(xor) Hamming shortlist + exact f64 rerank — the
     1-bit-per-dim ANN path, 32x smaller than f32 storage."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = A.fit_vectors(emb, [ANN_QUERY_ID])[0][1]
-    return A.binary_hamming_search(emb, qv, ANN_K)
+    return A.binary_hamming_search(emb, _query_vector(spark, sf_dir, ANN_QUERY_ID), ANN_K)
 
 
 @query(

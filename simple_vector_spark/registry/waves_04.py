@@ -12,7 +12,7 @@ from ..operators import mutation as M
 from ..sources.loaders import data_source, load_table, local_frame, scratch_path
 
 from . import _ORACLES, finalize_double, query
-from .core_knn import PLANT_MOD, PLANT_SHIFT
+from .core_knn import PLANT_MOD, PLANT_SHIFT, _query_vector
 from .core_relational import E, R
 from .core_dedup import D, _CLUSTER_LABELS_CTES, _DOCS_PLUS_SQL, _TOKS_SQL, _docs_plus_spark, _dup_cluster_labels, _minhash_pairs
 from .core_ann import A, ANN_K, ANN_QUERY_ID, T, _mean6_sql
@@ -975,24 +975,22 @@ def ann_hamming_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-bit quantization: candidates ranked once at the largest budget,
     each point a rank filter + exact rerank + intersect."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = A.fit_vectors(emb, [ANN_QUERY_ID])[0][1]
+    qv = _query_vector(spark, sf_dir, ANN_QUERY_ID)
     v = A.as_double_array(F.col("embedding"))
-    qlo = sum((1 << (d - 1)) for d in range(1, 33) if float(qv[d - 1]) > 0)
-    qhi = sum((1 << (d - 1)) for d in range(1, 33) if float(qv[d + 31]) > 0)
+    qlo, qhi = A.sign_pack_np(qv)
     ham = (
         F.bit_count(F.col("lo").bitwiseXOR(F.lit(qlo)))
         + F.bit_count(F.col("hi").bitwiseXOR(F.lit(qhi)))
     ).cast("int")
-    qcol = F.lit([float(x) for x in qv]).cast("array<double>")
     # shortlist via TakeOrderedAndProject (per-partition heaps — never a
     # global window over the corpus), then ranks from a triangle join
     # on the <= max(R)-row table
     short = (
-        emb.select(
+        K.with_query(emb, qv).select(
             "vec_id",
             A.sign_pack_bits(v, 0).alias("lo"),
             A.sign_pack_bits(v, 32).alias("hi"),
-            F.round(A.squared_l2(v, qcol), 6).alias("dist"),
+            F.round(A.squared_l2(v, F.col("__q_vec")), 6).alias("dist"),
         )
         .withColumn("hamming", ham)
         .orderBy(F.col("hamming").asc(), F.col("vec_id").asc())
@@ -1015,15 +1013,7 @@ def ann_hamming_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("int").alias("hrnk"))
         .localCheckpoint()
     )
-    exact_top = (
-        emb.select(
-            "vec_id", F.round(A.squared_l2(v, qcol), 6).alias("dist")
-        )
-        .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-        .limit(ANN_K)
-        .select("vec_id")
-        .localCheckpoint()
-    )
+    exact_top = K.knn_topk(emb, qv, ANN_K, "sqL2").select("vec_id").localCheckpoint()
     parts = []
     for r in HAMMING_CURVE_RS:
         cand = (

@@ -9,9 +9,10 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table, local_frame, scratch_path
+from ..sources.loaders import load_table, local_frame, scratch_path, session_cached
 
 from . import finalize_double, query
+from .core_knn import _query_vector
 from .core_relational import E, R
 from .core_ann import A, ANN_K, ANN_QUERY_ID, T, _PLANES_SQL, _graph_edges, _seed_codebook
 from .core_text import _PROFILE_SQL, _TK_SQL
@@ -234,7 +235,7 @@ def ann_rp_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     planes = _seed_codebook(spark, sf_dir, A.PLANE_IDS)
     return A.rp_multiprobe_search(
-        emb, emb.filter(F.col("vec_id") == ANN_QUERY_ID), planes, ANN_K
+        emb, _query_vector(spark, sf_dir, ANN_QUERY_ID), planes, ANN_K
     )
 
 
@@ -1480,21 +1481,22 @@ def dpp_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     month directories are read at runtime.  The static sibling is
     partitioned_write_prune (literal predicate); this is the join-
     driven case that matters for star schemas at 100 TB.  Oracle
-    recomputes from the unpartitioned base table."""
-    import os
-
-    orders = load_table(spark, sf_dir, "orders")
+    recomputes from the unpartitioned base table.  The partitioned
+    copy is written once per session, so a session never joins the
+    copy another fixture of the same name left behind."""
     path = scratch_path("orders_by_month", sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def write() -> DataFrame:
         (
-            orders.withColumn(
-                "o_month", F.date_format("o_orderdate", "yyyy-MM")
-            )
+            load_table(spark, sf_dir, "orders")
+            .withColumn("o_month", F.date_format("o_orderdate", "yyyy-MM"))
             .write.mode("overwrite")
             .partitionBy("o_month")
             .parquet(path)
         )
-    fact = spark.read.parquet(path)
+        return spark.read.parquet(path)
+
+    fact = session_cached(spark, sf_dir, "orders_by_month", write)
     dim = local_frame(
         spark,
         [

@@ -17,13 +17,13 @@ def emb(spark, sf_dir):
 
 
 def _exact_ids(emb, qid, k):
-    q = emb.filter(F.col("vec_id") == qid)
+    q = A.fit_vectors(emb, [qid])[0][1]
     return [r.vec_id for r in K.knn_topk(emb, q, k, "sqL2").collect()]
 
 
 def test_rp_lsh_results_subset_of_corpus_and_sorted(emb):
     planes = A.fit_vectors(emb, A.PLANE_IDS)
-    q = emb.filter(F.col("vec_id") == 9)
+    q = A.fit_vectors(emb, [9])[0][1]
     out = A.rp_lsh_search(emb, q, planes, 10).collect()
     assert 0 < len(out) <= 10
     dists = [r.dist for r in out]
@@ -36,7 +36,7 @@ def test_ivf_probe_recall(emb):
     """nprobe cells must contain the query's own cell -> self-match,
     and IVF top-k should overlap heavily with exact top-k."""
     cents = A.fit_vectors(emb, A.CENTROID_IDS)
-    q = emb.filter(F.col("vec_id") == 9)
+    q = A.fit_vectors(emb, [9])[0][1]
     out = A.ivf_search(emb, q, cents, 10, nprobe=3).collect()
     assert out[0].vec_id == 9 and out[0].dist == 0.0
     got = {r.vec_id for r in out}
@@ -87,7 +87,7 @@ def test_pq_adc_recall_and_code_range(emb):
     from simple_vector_spark.operators import knn as K
 
     cbs = A.pq_codebooks(A.fit_vectors(emb, A.CENTROID_IDS))
-    q = emb.filter(F.col("vec_id") == 0)
+    q = A.fit_vectors(emb, [0])[0][1]
     enc = emb.select(
         A.pq_encode(
             F.expr("transform(embedding, x -> cast(x as double))"), cbs
@@ -136,7 +136,7 @@ def test_trained_recall_beats_fixed_at_equal_probe_budget(emb):
     analog): at every nprobe the trained curve's recall@10 is >= the
     fixed-centroid curve, and strictly better overall."""
     qid = 9
-    q = emb.filter(F.col("vec_id") == qid)
+    q = A.fit_vectors(emb, [qid])[0][1]
     fixed = A.fit_vectors(emb, A.CENTROID_IDS)
     trained = A.train_centroids(emb, A.fit_vectors(emb, A.CENTROID_IDS), iters=2)
     fc = {r.nprobe: r.recall for r in A.ivf_recall_curve(emb, q, fixed, 10, (1, 2, 3)).collect()}

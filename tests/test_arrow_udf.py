@@ -154,12 +154,19 @@ def test_multimodal_kernels_on_empty_input(spark):
     assert sorted((r.doc_id, r.frame_idx) for r in frames.collect()) == [(2, 0)]
 
 
+def _single(queries):
+    """A single-query operator's request: the first query's vector, or
+    None when there is none."""
+    row = queries.head()
+    return None if row is None else row.embedding
+
+
 @pytest.mark.parametrize(
     "search",
     [
-        lambda c, q: knn.knn_topk(c, q.select("embedding"), 3),
+        lambda c, q: knn.knn_topk(c, _single(q), 3),
         lambda c, q: knn.knn_join(c, q, 3),
-        lambda c, q: knn.knn_shard_topk(c, q.select("embedding"), 3),
+        lambda c, q: knn.knn_shard_topk(c, _single(q), 3),
         lambda c, q: knn.knn_shard_join(c, q, 3),
     ],
     ids=["knn_topk", "knn_join", "knn_shard_topk", "knn_shard_join"],

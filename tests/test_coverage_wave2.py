@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from simple_vector_spark.operators import ann as A
 from simple_vector_spark.operators import events as E
 from simple_vector_spark.operators import knn as K
 from simple_vector_spark.operators import mutation as M
@@ -35,7 +36,7 @@ def test_knn_shard_topk_equals_expression_form(spark, sf_dir):
     expression form, on the fixture and on rounding ties."""
     fixture = load_table(spark, sf_dir, "embeddings")
     for emb, k in ((fixture, 10), (_tie_corpus(spark), 4)):
-        q = emb.filter(F.col("vec_id") == 0)
+        q = A.fit_vectors(emb, [0])[0][1]
         expr = {(r.vec_id, r.dist) for r in K.knn_topk(emb, q, k, "sqL2").collect()}
         shard = {(r.vec_id, r.dist) for r in K.knn_shard_topk(emb, q, k).collect()}
         assert shard == expr

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from simple_vector_spark.operators import ann as A
 from simple_vector_spark.operators import dedup as D
 from simple_vector_spark.operators import events as E
 from simple_vector_spark.operators import knn as K
@@ -19,9 +20,7 @@ def _empty_emb(spark):
 
 
 def test_knn_on_empty_corpus(spark):
-    q = spark.createDataFrame(
-        [(0, [0.0, 0.0])], "vec_id long, embedding array<float>"
-    )
+    q = [0.0, 0.0]
     assert K.knn_topk(_empty_emb(spark), q, 5, "sqL2").count() == 0
     assert K.knn_shard_topk(_empty_emb(spark), q, 5).count() == 0
 
@@ -30,7 +29,7 @@ def test_knn_filter_eliminates_everything(spark):
     emb = spark.createDataFrame(
         [(1, [0.1], 2), (2, [0.2], 2)], "vec_id long, embedding array<float>, label int"
     )
-    q = emb.filter(F.col("vec_id") == 1)
+    q = A.fit_vectors(emb, [1])[0][1]
     out = K.knn_topk(emb, q, 5, "sqL2", pred=K.eq_filter("label", 99))
     assert out.count() == 0
 
@@ -39,7 +38,7 @@ def test_knn_k_larger_than_corpus(spark):
     emb = spark.createDataFrame(
         [(1, [0.1], 0), (2, [0.2], 0)], "vec_id long, embedding array<float>, label int"
     )
-    q = emb.filter(F.col("vec_id") == 1)
+    q = A.fit_vectors(emb, [1])[0][1]
     # reference pads with -1 ids (dropped at the HTTP layer); we return
     # what exists — 2 rows, not 5
     assert K.knn_topk(emb, q, 5, "sqL2").count() == 2

@@ -27,9 +27,9 @@ def ref_corpus(spark):
 
 
 @pytest.fixture(scope="module")
-def ref_query(spark):
+def ref_query():
     # the reference's search_normal.json queries [0] with k=5
-    return spark.createDataFrame([(0, [0.0])], "vec_id long, embedding array<float>")
+    return [0.0]
 
 
 def test_search_equal(ref_corpus, ref_query):
@@ -70,9 +70,8 @@ def test_search_normal_ascending_distance(ref_corpus, ref_query):
     assert dists[0] == pytest.approx(0.01, abs=1e-6)  # squared, not plain L2
 
 
-def test_ip_orders_descending(ref_corpus, spark):
-    q = spark.createDataFrame([(0, [1.0])], "vec_id long, embedding array<float>")
-    out = K.knn_topk(ref_corpus, q, 5, "ip").collect()
+def test_ip_orders_descending(ref_corpus):
+    out = K.knn_topk(ref_corpus, [1.0], 5, "ip").collect()
     assert [r.vec_id for r in out] == [6, 4, 3, 2, 1]  # larger IP first
     sims = [r.sim for r in out]
     assert sims == sorted(sims, reverse=True)
@@ -108,7 +107,8 @@ def test_single_knn_take_ordered(spark, sf_dir):
     from simple_vector_spark.sources.loaders import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    out = K.knn_topk(emb, emb.filter(F.col("vec_id") == 0), 10, "sqL2")
+    qvec = emb.filter(F.col("vec_id") == 0).head().embedding
+    out = K.knn_topk(emb, qvec, 10, "sqL2")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
 
@@ -131,11 +131,8 @@ def test_radius_search_empty_and_filtered(ref_corpus, ref_query):
 
 def test_radius_search_similarity_metric_keeps_geq(ref_corpus, ref_query):
     # cosine vs [0] is undefined (zero query) — use IP vs a unit query.
-    q = ref_query.sparkSession.createDataFrame(
-        [(0, [1.0])], "vec_id long, embedding array<float>"
-    )
     got = sorted(r.vec_id for r in
-                 K.radius_search(ref_corpus, q, 0.3, "ip").collect())
+                 K.radius_search(ref_corpus, [1.0], 0.3, "ip").collect())
     assert got == [3, 4, 6]  # ip >= 0.3
 
 

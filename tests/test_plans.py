@@ -75,17 +75,15 @@ def test_ivf_partitioned_probe_prunes_directories(spark, sf_dir):
     assert "PartitionFilters: [cell" in scan and " IN " in scan
 
 
-def test_ivf_probe_feeds_broadcast_cell_join(spark, sf_dir):
-    """ann_ivf: the nprobe-cell probe is a 3-row heap feeding a
-    broadcast hash join on ``__cell``, and the exact re-rank is a
-    10-row heap — no sort-merge join anywhere."""
+def test_ivf_probe_is_literal_cell_filter(spark, sf_dir):
+    """ann_ivf: the nprobe cells are picked on the driver and reach the
+    scan as the literal filter ``__cell IN (...)``; the exact re-rank is
+    a 10-row heap at the root — one stage, no join, no exchange."""
     lines = plan_of(spark, sf_dir, "ann_ivf").splitlines()
-    join = next(i for i, l in enumerate(lines) if "BroadcastHashJoin [__cell" in l)
-    probe = next(i for i, l in enumerate(lines) if "TakeOrderedAndProject(limit=3" in l)
-    depth = [len(l) - len(l.lstrip(" :|+-")) for l in lines]
-    assert probe > join and depth[probe] > depth[join]  # probe feeds the join
-    assert "TakeOrderedAndProject(limit=10" in lines[1]  # re-rank at the root
-    assert not any("SortMergeJoin" in l for l in lines)
+    assert lines[0].startswith("TakeOrderedAndProject(limit=10")  # re-rank at the root
+    cell_filter = next(l for l in lines if "Filter" in l and "__cell#" in l)
+    assert " IN (" in cell_filter
+    assert not any("Join" in l or "Exchange" in l for l in lines)
 
 
 def test_q5_single_fact_shuffle_dims_broadcast(spark, sf_dir):
@@ -149,12 +147,18 @@ def test_ivfpq_stage1_reads_codes_not_vectors(spark, sf_dir):
 
 
 def test_maxsim_no_shuffle_before_label_agg(spark, sf_dir):
-    """MaxSim scores every row in the scan stage; the only exchange is
-    the tiny label aggregate + the broadcast of the one-row query."""
+    """MaxSim scores every row in the scan stage against the query
+    literal; the only exchange is the tiny label aggregate's, and
+    nothing is broadcast."""
     plan = plan_of(spark, sf_dir, "knn_maxsim_labels")
     assert "TakeOrderedAndProject" in plan
-    assert "BroadcastNestedLoopJoin" in plan  # broadcast query side
-    assert "SortMergeJoin" not in plan
+    assert "BroadcastExchange" not in plan and "BroadcastNestedLoopJoin" not in plan
+    assert "Join" not in plan
+    exchanges = [l for l in plan.splitlines() if "Exchange" in l]
+    assert len(exchanges) == 1 and "hashpartitioning(label" in exchanges[0]
+    # the score is a partial max/sum below that exchange, in the scan stage
+    below = plan.split(exchanges[0], 1)[1]
+    assert "partial_max" in below and "FileScan parquet" in below
 
 
 def test_zorder_audit_single_partial_agg_shuffle(spark, sf_dir):
@@ -541,7 +545,6 @@ def test_aqe_skew_join_splits_hot_partition(spark):
 # --------------------------------------------------------------------------
 
 GLOBAL_WINDOW_ALLOWLIST = {
-    ("operators/ann.py", "ivf_recall_curve"),          # probe-count grid
     ("operators/events.py", "monthly_value_growth"),   # months
     ("operators/events.py", "watermark_late_audit"),   # micro-batch ids
     ("operators/events.py", "changepoint_detect"),     # days

@@ -166,7 +166,7 @@ def test_adaptive_filter_picks_strategy_by_selectivity(spark, sf_dir):
     from simple_vector_spark.operators import knn as K
 
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 9)
+    q = A.fit_vectors(emb, [9])[0][1]
     cents = A.fit_vectors(emb, A.CENTROID_IDS)
     n7 = emb.filter(F.col("label") == 7).count()
 

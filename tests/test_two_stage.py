@@ -18,7 +18,7 @@ def test_ivfpq_equals_ivf_when_shortlist_covers_cells(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     cents = A.fit_vectors(emb, A.CENTROID_IDS)
     cbs = A.pq_codebooks(cents)
-    q = emb.filter(F.col("vec_id") == ANN_QUERY_ID)
+    q = A.fit_vectors(emb, [ANN_QUERY_ID])[0][1]
     big = emb.count()
     ivfpq = A.ivfpq_rerank_search(emb, q, cents, cbs, ANN_K, IVF_NPROBE, shortlist=big)
     ivf = A.ivf_search(emb, q, cents, ANN_K, IVF_NPROBE)
@@ -31,7 +31,7 @@ def test_ivfpq_shortlist_is_subset_of_probed_cells(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     cents = A.fit_vectors(emb, A.CENTROID_IDS)
     cbs = A.pq_codebooks(cents)
-    q = emb.filter(F.col("vec_id") == ANN_QUERY_ID)
+    q = A.fit_vectors(emb, [ANN_QUERY_ID])[0][1]
     hits = A.ivfpq_rerank_search(emb, q, cents, cbs, ANN_K, IVF_NPROBE, 50).collect()
     assert 0 < len(hits) <= ANN_K
     probed_ids = {

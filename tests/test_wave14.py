@@ -153,7 +153,7 @@ def test_maxsim_best_member_wins(spark):
         ],
         "vec_id long, embedding array<float>, label int",
     )
-    out = K.label_maxsim_topk(emb, emb.filter("vec_id = 0"), 5).collect()
+    out = K.label_maxsim_topk(emb, A.fit_vectors(emb, [0])[0][1], 5).collect()
     assert [r["label"] for r in out] == [1, 2]
     assert out[0]["max_sim"] == 1.0
     assert out[0]["mean_sim"] == 0.5
@@ -292,7 +292,7 @@ def test_ivf_recall_curve_monotone(spark):
     out = {
         r["nprobe"]: r["recall"]
         for r in A.ivf_recall_curve(
-            emb, emb.filter("vec_id = 5"), cents, 5, (1, 2, 3)
+            emb, A.fit_vectors(emb, [5])[0][1], cents, 5, (1, 2, 3)
         ).collect()
     }
     assert set(out) == {1, 2, 3}

@@ -31,7 +31,7 @@ def _exact_topk(spark, emb, qid, k):
 def test_multiprobe_recall_dominates_single_probe(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     planes = A.fit_vectors(emb, A.PLANE_IDS)
-    q = emb.filter(F.col("vec_id") == 9)
+    q = A.fit_vectors(emb, [9])[0][1]
     exact = _exact_topk(spark, emb, 9, 10)
     single = {r.vec_id for r in A.rp_lsh_search(emb, q, planes, 10).collect()}
     multi = {r.vec_id for r in A.rp_multiprobe_search(emb, q, planes, 10).collect()}
@@ -45,6 +45,6 @@ def test_multiprobe_recall_dominates_single_probe(spark, sf_dir):
 def test_multiprobe_includes_query_itself(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     planes = A.fit_vectors(emb, A.PLANE_IDS)
-    q = emb.filter(F.col("vec_id") == 9)
+    q = A.fit_vectors(emb, [9])[0][1]
     rows = A.rp_multiprobe_search(emb, q, planes, 10).collect()
     assert rows[0].vec_id == 9 and rows[0].dist == 0.0

@@ -56,7 +56,7 @@ def test_matryoshka_rerank_recovers_prefix_loss(spark):
     out = {
         r["mode"]: r
         for r in A.matryoshka_recall(
-            emb, emb.filter(F.col("vec_id") == 0), 10
+            emb, A.fit_vectors(emb, [0])[0][1], 10
         ).collect()
     }
     assert set(out) == {"prefix_topk", "prefix_rerank"}
