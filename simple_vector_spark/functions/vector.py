@@ -8,8 +8,9 @@ similarity where larger is better; this engine standardizes on the same
 conventions (SURVEY.md §4.2) and adds cosine (= IP over normalized
 vectors) as an extension.
 
-These are pure ``pyspark.sql.functions`` higher-order-function
-compositions over ``array<double>`` columns — they run JVM-side per row
+These build SQL text over ``array<double>`` columns — Spark's
+``aggregate``/``zip_with``/``transform`` higher-order functions, made a
+Column by one ``F.expr`` per expression.  They run JVM-side per row
 with no Python in the loop, so a k-NN scan stays inside one Spark stage
 reading the Parquet corpus.  All arithmetic is double-precision so the
 DuckDB oracle (which casts ``FLOAT[] -> DOUBLE[]``) computes bit-equal
@@ -41,70 +42,106 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def as_double_array(col: Column | str) -> Column:
-    """Cast array<float> -> array<double> so all arithmetic is f64."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("array<double>")
+def sql_name(name: str) -> str:
+    """Column ``name`` as a SQL identifier: backticked, with any
+    backtick inside doubled."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def vector_literal(values) -> Column:
-    """``values`` (a vector, or a list of vectors) as ONE typed SQL
-    literal: ``array<double>``, nested lists as ``array<array<double>>``,
-    Python ints as ints.  A double is written as its ``repr`` with the
-    ``D`` suffix; ``repr`` round-trips every f64, and float32 -> Python
-    float is exact, so the literal holds the very doubles of the column
-    the vector came from.  The JVM parses it in one call, where
-    ``F.lit(list)`` makes one py4j call per element.  A NaN or infinite
-    component raises ``ValueError`` naming its index."""
-    return F.expr(_sql_array(values, ()))
+def double_array(name: str) -> str:
+    """SQL text of column ``name`` cast array<float> -> array<double>,
+    so all arithmetic is f64."""
+    return f"CAST({sql_name(name)} AS ARRAY<DOUBLE>)"
 
 
-def _sql_array(values, at: tuple[int, ...]) -> str:
+def as_double_array(name: str) -> Column:
+    """:func:`double_array` as a Column."""
+    return F.expr(double_array(name))
+
+
+def vector_literal(values) -> str:
+    """``values`` (a vector, or a list of vectors) as the SQL text of ONE
+    typed literal: ``array<double>``, nested lists as
+    ``array<array<double>>``, all-int lists as ``array<int>`` (or
+    ``array<bigint>`` past int32).  The text is ``from_json`` over the
+    JSON array of each double's ``repr``: ``repr`` round-trips every
+    f64 and the JSON parse is exact, and float32 -> Python float is
+    exact, so the literal holds the very doubles of the column the
+    vector came from.  ``FAILFAST`` makes a malformed literal raise
+    instead of reading as null.  The optimizer folds it to one
+    literal; the analyzer checks one string where an ``array(...)`` of
+    64 literals costs ~17 ms per projection, and ``F.lit(list)`` one
+    py4j call per element.  A NaN or infinite component raises
+    ``ValueError`` naming its index."""
+    leaves: list = []
+    text = _json_array(values, (), leaves)
+    if leaves and all(isinstance(x, int) for x in leaves):
+        leaf = "int" if all(-(2**31) <= x < 2**31 for x in leaves) else "bigint"
+    else:
+        leaf = "double"
+    depth = 1
+    while values and isinstance(values[0], (list, tuple)):
+        values, depth = values[0], depth + 1
+    ddl = "array<" * depth + leaf + ">" * depth
+    return f"from_json('{text}', '{ddl}', map('mode', 'FAILFAST'))"
+
+
+def _json_array(values, at: tuple[int, ...], leaves: list) -> str:
     parts = []
     for i, x in enumerate(values):
         if isinstance(x, (list, tuple)):
-            parts.append(_sql_array(x, at + (i,)))
-        elif isinstance(x, int):
-            parts.append(str(x))
-        else:
-            f = float(x)
-            if not math.isfinite(f):
+            parts.append(_json_array(x, at + (i,), leaves))
+            continue
+        if not isinstance(x, int):
+            x = float(x)
+            if not math.isfinite(x):
                 index = ", ".join(map(str, at + (i,)))
                 raise ValueError(
-                    f"vector component [{index}] is {f!r}; a vector literal must be finite"
+                    f"vector component [{index}] is {x!r}; a vector literal must be finite"
                 )
-            parts.append(repr(f) + "D")
-    return "array(" + ", ".join(parts) + ")"
+        leaves.append(x)
+        parts.append(repr(x))
+    return "[" + ",".join(parts) + "]"
 
 
-def squared_l2(a: Column, b: Column) -> Column:
+# The builders below take SQL-text operands (column names through
+# ``sql_name``/``double_array``, literals, lambda variables) and return
+# SQL text; a call site composes them and makes ONE Column of the whole
+# expression with ``F.expr``.  Each ``pyspark.sql.functions`` call or
+# Column operator costs ~1 ms and ~11 py4j round trips to capture its
+# call site, so a distance built from them cost 24-43 ms; its text
+# parses in one call.  Lambda variables end in ``_`` so they never
+# shadow a caller's column.  ``0D`` is ``F.lit(0.0)``: the fold is the
+# same Catalyst expression, so values are bit-identical.
+
+
+def _sum_sql(terms: str) -> str:
+    return f"aggregate({terms}, 0D, (acc_, t_) -> acc_ + t_)"
+
+
+def squared_l2(a: str, b: str) -> str:
     """Squared Euclidean distance (FAISS METRIC_L2 convention: no sqrt)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    return _sum_sql(f"zip_with({a}, {b}, (x_, y_) -> (x_ - y_) * (x_ - y_))")
 
 
-def dot_product(a: Column, b: Column) -> Column:
+def dot_product(a: str, b: str) -> str:
     """Inner product similarity (larger = more similar)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    return _sum_sql(f"zip_with({a}, {b}, (x_, y_) -> x_ * y_)")
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
-    )
+def squared_norm(a: str) -> str:
+    """Sum of squared components (the squared L2 norm, no sqrt)."""
+    return _sum_sql(f"transform({a}, x_ -> x_ * x_)")
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
+def l2_norm(a: str) -> str:
+    return f"SQRT({squared_norm(a)})"
+
+
+def cosine_similarity(a: str, b: str) -> str:
     """Cosine similarity = IP / (|a||b|); the reference approximates this
     by normalizing at ingest and using IP — we compute it directly."""
-    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
+    return f"({dot_product(a, b)} / ({l2_norm(a)} * {l2_norm(b)}))"
 
 
 def _fold_np(term, X: np.ndarray, Y: np.ndarray) -> np.ndarray:

@@ -38,15 +38,20 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import (
     as_double_array,
+    dot_product,
     dot_product_np,
+    double_array,
+    l2_norm,
     round6,
+    sql_name,
     squared_l2,
     squared_l2_np,
+    squared_norm,
     vector_literal,
     vector_matrix,
 )
 from ..sources.loaders import local_frame
-from .knn import exact_rerank, exact_scores, knn_topk, rank_order, topk_np, with_query
+from .knn import Q_VEC, exact_rerank, exact_scores, knn_topk, rank_order, topk_np, with_query
 
 PLANE_IDS = [0, 1, 2, 3]
 CENTROID_IDS = [0, 50, 100, 150, 200, 250, 300, 350, 400, 450]
@@ -91,18 +96,16 @@ def fit_vectors(emb: DataFrame, ids: list[int], id_col: str = "vec_id", vec_col:
     return sorted(((r[0], [float(x) for x in r[1]]) for r in rows), key=lambda r: r[0])
 
 
-def rp_bucket(vec: Column, planes: list[tuple[int, list[float]]]) -> Column:
-    """Sign-LSH bucket id: bit i set iff dot(vec, plane_i) > 0.
-    Pure expression — evaluated inside the scan, no shuffle."""
-    bucket = F.lit(0).cast("long")
-    for i, (_, pv) in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(vec, vector_literal(pv), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(dot > 0, F.lit(2 ** i).cast("long")).otherwise(F.lit(0).cast("long"))
-    return bucket
+def rp_bucket(vec: str, planes: list[tuple[int, list[float]]]) -> str:
+    """Sign-LSH bucket id of the SQL array ``vec``, as SQL text: bit i
+    set iff dot(vec, plane_i) > 0.  Pure expression — evaluated inside
+    the scan, no shuffle."""
+    bits = [
+        f"CASE WHEN {dot_product(vec, vector_literal(pv))} > 0"
+        f" THEN CAST({2 ** i} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for i, (_, pv) in enumerate(planes)
+    ]
+    return "(" + " + ".join(["CAST(0 AS BIGINT)", *bits]) + ")"
 
 
 def query_bucket(qvec: list[float] | None, planes: list[tuple[int, list[float]]]) -> int:
@@ -116,11 +119,12 @@ def query_bucket(qvec: list[float] | None, planes: list[tuple[int, list[float]]]
     return sum(2**i for i, d in enumerate(dots) if d > 0)
 
 
-def ivf_cell(vec: Column, centroids: list[tuple[int, list[float]]]) -> Column:
-    """IVF cell assignment: argmin over centroid distances (rounded to
-    6, ties to the smaller centroid id — struct ordering).  Pure
-    expression, no shuffle; at 100 TB, write the table partitioned by
-    this column so probes prune at the file level.
+def ivf_cell(vec: str, centroids: list[tuple[int, list[float]]]) -> str:
+    """IVF cell assignment of the SQL array ``vec``, as SQL text: argmin
+    over centroid distances (rounded to 6, ties to the smaller centroid
+    id — struct ordering).  Pure expression, no shuffle; at 100 TB,
+    write the table partitioned by this column so probes prune at the
+    file level.
 
     The centroid matrix is ONE array<array<double>> literal iterated
     by a single transform lambda — inlining one distance expression
@@ -128,14 +132,20 @@ def ivf_cell(vec: Column, centroids: list[tuple[int, list[float]]]) -> Column:
     #centroids (measured ~2s of codegen at 10x64 dims)."""
     ids = vector_literal([cid for cid, _ in centroids])
     mat = vector_literal([cv for _, cv in centroids])
-    entries = F.transform(
-        mat,
-        lambda cv, i: F.struct(
-            F.round(squared_l2(vec, cv), 6).alias("dist"),
-            F.element_at(ids, i + 1).alias("cid"),
-        ),
+    return _argmin_field(
+        mat, "cv_", f"ROUND({squared_l2(vec, 'cv_')}, 6)", f"element_at({ids}, i_ + 1)", "cid"
     )
-    return F.array_min(entries).getField("cid")
+
+
+def _argmin_field(mat: str, var: str, dist: str, value: str, field: str) -> str:
+    """SQL text: over the rows ``var`` (index ``i_``) of the literal
+    matrix ``mat``, the ``value`` of the row with the least ``dist``,
+    ties to the first row (struct ordering).  ONE transform lambda over
+    the literal, not one expression per row."""
+    return (
+        f"array_min(transform({mat}, ({var}, i_) ->"
+        f" struct({dist} AS dist, {value} AS {field}))).{field}"
+    )
 
 
 def cells_arrow(
@@ -209,8 +219,8 @@ def rp_lsh_search(
     and reaches the scan as a literal filter.  Returns (vec_id, dist)
     ascending — may return < k rows if the bucket is small (the ANN
     recall trade, same as ef_search capping HNSW's candidate pool)."""
-    bucket = rp_bucket(as_double_array(F.col(vec_col)), planes)
-    c = corpus.filter(bucket == query_bucket(qvec, planes))
+    bucket = rp_bucket(double_array(vec_col), planes)
+    c = corpus.filter(f"{bucket} = {query_bucket(qvec, planes)}")
     return exact_rerank(
         with_query(c, qvec), [F.col(id_col)], k, id_col=id_col, vec_col=vec_col
     )
@@ -228,9 +238,7 @@ def with_cells(
     search path can accept either a raw corpus or a prebuilt index."""
     if "__cell" in corpus.columns:
         return corpus
-    return corpus.withColumn(
-        "__cell", ivf_cell(as_double_array(F.col(vec_col)), centroids)
-    )
+    return corpus.withColumn("__cell", F.expr(ivf_cell(double_array(vec_col), centroids)))
 
 
 def nearest_cells(
@@ -265,7 +273,7 @@ def ivf_search(
     c = with_cells(corpus, centroids, vec_col).filter(F.col("__cell").isin(probe))
     return exact_rerank(
         with_query(c, qvec),
-        [F.col(id_col), F.col("__cell").alias("cell")],
+        [id_col, F.expr("__cell AS cell")],
         k,
         id_col=id_col,
         vec_col=vec_col,
@@ -286,9 +294,7 @@ def build_ivf_index(
     (src/faiss_index.cc / IndexIVF analog), and a probe becomes a
     partition-pruned scan.  Returns the index as a relation over
     ``path``, read with the written schema (inferring it runs a job)."""
-    indexed = corpus.withColumn(
-        "cell", ivf_cell(as_double_array(F.col(vec_col)), centroids)
-    )
+    indexed = corpus.withColumn("cell", F.expr(ivf_cell(double_array(vec_col), centroids)))
     indexed.write.mode("overwrite").partitionBy("cell").parquet(path)
     return corpus.sparkSession.read.schema(indexed.schema).parquet(path)
 
@@ -328,19 +334,15 @@ def quantize_int8_report(
     inside the scan (zero shuffle; the quantized column is what a
     built index would persist).  Zero vectors quantize to zeros with
     scale 0."""
-    e = as_double_array(F.col(vec_col))
-    amax = F.array_max(F.transform(e, lambda x: F.abs(x)))
-    scale = amax / F.lit(127.0)
-    qv = F.transform(e, lambda x: F.round(x / scale, 0).cast("tinyint"))
-    err = F.array_max(
-        F.zip_with(
-            e, qv, lambda x, q: F.abs(x - q.cast("double") * scale)
-        )
-    )
+    e = double_array(vec_col)
+    amax = f"array_max(transform({e}, x_ -> ABS(x_)))"
+    scale = f"({amax} / 127.0D)"
+    qv = f"transform({e}, x_ -> CAST(ROUND(x_ / {scale}, 0) AS TINYINT))"
+    err = f"array_max(zip_with({e}, {qv}, (x_, q_) -> ABS(x_ - CAST(q_ AS DOUBLE) * {scale})))"
     return emb.select(
         F.col(id_col),
-        F.round(scale, 6).alias("scale"),
-        F.when(amax == 0, F.lit(0.0)).otherwise(F.round(err, 6)).alias("max_err"),
+        F.expr(f"ROUND({scale}, 6) AS scale"),
+        F.expr(f"CASE WHEN {amax} = 0 THEN 0.0D ELSE ROUND({err}, 6) END AS max_err"),
     )
 
 
@@ -353,20 +355,16 @@ def dequantized_view(
     quantize_int8_report for the code layout)."""
     passthrough = [c for c in emb.columns if c != vec_col]
     staged = emb.select(
-        *passthrough, as_double_array(F.col(vec_col)).alias("__e")
-    ).withColumn(
-        "__scale",
-        F.array_max(F.transform(F.col("__e"), lambda x: F.abs(x))) / F.lit(127.0),
-    )
+        *passthrough, as_double_array(vec_col).alias("__e")
+    ).withColumn("__scale", F.expr("array_max(transform(__e, x_ -> ABS(x_))) / 127.0D"))
     # scale materialized in its own projection: inlining it into the
     # per-element lambda would recompute the array_max per element
     # (the HOF codegen-CSE gap — see functions/text.minhash_from_hashes)
-    deq = F.transform(
-        F.col("__e"),
-        lambda x: F.round(x / F.col("__scale"), 0).cast("tinyint").cast("double")
-        * F.col("__scale"),
+    deq = F.expr(
+        "transform(__e, x_ -> CAST(CAST(ROUND(x_ / __scale, 0) AS TINYINT) AS DOUBLE)"
+        f" * __scale) AS {sql_name(vec_col)}"
     )
-    return staged.select(*passthrough, deq.alias(vec_col))
+    return staged.select(*passthrough, deq)
 
 
 def recall_report(
@@ -407,7 +405,7 @@ def mllib_lsh_join(
     from pyspark.ml.functions import array_to_vector
 
     feat = emb.select(
-        F.col(id_col), array_to_vector(as_double_array(F.col(vec_col))).alias("features")
+        F.col(id_col), array_to_vector(as_double_array(vec_col)).alias("features")
     )
     model = BucketedRandomProjectionLSH(
         inputCol="features",
@@ -448,10 +446,11 @@ def pq_codebooks(
     ]
 
 
-def pq_encode(vec: Column, codebooks: list[list[tuple[int, list[float]]]]) -> Column:
-    """PQ encode: per subspace, the 1-based index of the nearest
-    codeword (rounded dist, smaller index on ties — array_min struct
-    ordering).  Pure expression, evaluated inside the corpus scan: the
+def pq_encode(vec: str, codebooks: list[list[tuple[int, list[float]]]]) -> str:
+    """PQ encode of the SQL array ``vec``, as SQL text: per subspace,
+    the 1-based index of the nearest codeword (rounded dist, smaller
+    index on ties — array_min struct ordering).  Pure expression,
+    evaluated inside the corpus scan: the
     8-byte code column is the 32x-compressed corpus a PQ index stores.
     Per-subspace codebooks are single array<array<double>> literals
     iterated by one transform each (the literal-tree codegen rule —
@@ -460,24 +459,19 @@ def pq_encode(vec: Column, codebooks: list[list[tuple[int, list[float]]]]) -> Co
     codes = []
     for s, cb in enumerate(codebooks):
         mat = vector_literal([cw for _, cw in cb])
-        sub = F.slice(vec, s * dsub + 1, dsub)
-        entries = F.transform(
-            mat,
-            lambda cw, i: F.struct(
-                F.round(squared_l2(sub, cw), 6).alias("dist"),
-                (i + F.lit(1)).alias("idx"),
-            ),
-        )
-        codes.append(F.array_min(entries).getField("idx"))
-    return F.array(*codes)
+        sub = f"slice({vec}, {s * dsub + 1}, {dsub})"
+        dist = f"ROUND({squared_l2(sub, 'cw_')}, 6)"
+        codes.append(_argmin_field(mat, "cw_", dist, "i_ + 1", "idx"))
+    return f"array({', '.join(codes)})"
 
 
 def adc_distance_table(
     qvec: list[float], codebooks: list[list[tuple[int, list[float]]]]
-) -> Column:
-    """The ADC lookup table as ONE literal: exact query-to-codeword
-    distances per subspace (m × ncode DECIMAL(18,6) entries).  Model-
-    sized, computed driver-side from the query vector."""
+) -> str:
+    """The ADC lookup table as the SQL text of ONE literal: exact
+    query-to-codeword distances per subspace (m × ncode DECIMAL(18,6)
+    entries).  Model-sized, computed driver-side from the query
+    vector."""
     dsub = len(codebooks[0][0][1])
     dtab = []
     for s, cb in enumerate(codebooks):
@@ -489,7 +483,7 @@ def adc_distance_table(
                 d += (x - y) * (x - y)
             row.append(round(d, 6))
         dtab.append(row)
-    return vector_literal(dtab).cast("array<array<decimal(18,6)>>")
+    return f"CAST({vector_literal(dtab)} AS ARRAY<ARRAY<DECIMAL(18,6)>>)"
 
 
 def pq_adc_search(
@@ -510,7 +504,7 @@ def pq_adc_search(
     and order-insensitive in both engines."""
     enc = corpus.select(
         F.col(id_col),
-        pq_encode(as_double_array(F.col(vec_col)), codebooks).alias("__codes"),
+        F.expr(f"{pq_encode(double_array(vec_col), codebooks)} AS __codes"),
     )
     return _adc_topk(enc, qvec, codebooks, k, id_col)
 
@@ -526,21 +520,18 @@ def _adc_topk(
     (ADC distance, id): the distance is the DECIMAL(20,6) sum of one
     :func:`adc_distance_table` entry per subspace.  No query, no rows."""
     if qvec is None:
-        enc, qvec = enc.filter(F.lit(False)), [0.0] * len(codebooks) * len(codebooks[0][0][1])
+        enc, qvec = enc.filter("false"), [0.0] * len(codebooks) * len(codebooks[0][0][1])
     tab = adc_distance_table(qvec, codebooks)
-    adc = F.aggregate(
-        F.zip_with(
-            vector_literal(range(1, len(codebooks) + 1)),
-            F.col("__codes"),
-            lambda s, c: F.element_at(F.element_at(tab, s), c),
-        ),
-        F.lit(0).cast("decimal(20,6)"),
-        # decimal + widens precision each step; cast back so the fold
-        # lambda returns the accumulator's type (aggregate() requires it)
-        lambda acc, v: (acc + v).cast("decimal(20,6)"),
+    subspaces = vector_literal(range(1, len(codebooks) + 1))
+    # decimal + widens precision each step; cast back so the fold
+    # lambda returns the accumulator's type (aggregate() requires it)
+    adc = (
+        f"aggregate(zip_with({subspaces}, __codes, (s_, c_) ->"
+        f" element_at(element_at({tab}, s_), c_)), CAST(0 AS DECIMAL(20,6)),"
+        " (acc_, t_) -> CAST(acc_ + t_ AS DECIMAL(20,6)))"
     )
     return (
-        enc.select(F.col(id_col), adc.cast("double").alias("adc_dist"))
+        enc.select(F.col(id_col), F.expr(f"CAST({adc} AS DOUBLE) AS adc_dist"))
         .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -572,23 +563,19 @@ def train_pq_codebooks(
     cbs = pq_codebooks(cents, m)
     dsub = len(cbs[0][0][1])
     cids = [cid for cid, _ in cbs[0]]
-    v = as_double_array(F.col(vec_col))
+    v = double_array(vec_col)
     src = fan_out(emb)
     for _ in range(iters):
-        enc = src.select(
-            v.alias("_v"), pq_encode(v, cbs).alias("_c")
-        )
+        enc = src.select(F.expr(f"{v} AS _v"), F.expr(f"{pq_encode(v, cbs)} AS _c"))
         comp = (
             enc.select(F.posexplode("_c").alias("_s", "_idx"), "_v")
             .select(
                 "_s",
                 "_idx",
-                F.posexplode(
-                    F.transform(
-                        F.slice(F.col("_v"), F.col("_s") * dsub + 1, dsub),
-                        lambda x: F.round(x, 3).cast("decimal(12,3)"),
-                    )
-                ).alias("_d", "_x"),
+                F.expr(
+                    f"posexplode(transform(slice(_v, _s * {dsub} + 1, {dsub}),"
+                    " x_ -> CAST(ROUND(x_, 3) AS DECIMAL(12,3)))) AS (_d, _x)"
+                ),
             )
         )
         rows = (
@@ -646,17 +633,14 @@ def train_centroids(
     from ..sources.loaders import fan_out
 
     dim = len(cents[0][1])
-    v = as_double_array(F.col(vec_col))
+    vd = F.expr(
+        f"transform({double_array(vec_col)}, x_ -> CAST(ROUND(x_, 3) AS DECIMAL(12,3))) AS _vd"
+    )
     src = fan_out(emb)
     for _ in range(iters):
         comp = (
             cells_arrow(src, cents)
-            .select(
-                F.col("__cell").alias("cid"),
-                F.transform(
-                    v, lambda x: F.round(x, 3).cast("decimal(12,3)")
-                ).alias("_vd"),
-            )
+            .select(F.col("__cell").alias("cid"), vd)
             .select("cid", F.posexplode("_vd").alias("d", "x"))
         )
         rows = (
@@ -694,13 +678,11 @@ def kmeans_step(
     and could not hash-match a single-threaded oracle.)"""
     from ..sources.loaders import fan_out
 
-    v = as_double_array(F.col(vec_col))
+    v = double_array(vec_col)
     assigned = fan_out(emb).select(
-        ivf_cell(v, cents).alias("cluster_id"),
+        F.expr(f"{ivf_cell(v, cents)} AS cluster_id"),
         *[
-            F.round(F.element_at(v, d + 1), 3)
-            .cast("decimal(12,3)")
-            .alias(f"_d{d}")
+            F.expr(f"CAST(ROUND(element_at({v}, {d + 1}), 3) AS DECIMAL(12,3)) AS _d{d}")
             for d in range(report_dims)
         ],
     )
@@ -744,7 +726,7 @@ def ivfpq_rerank_search(
         .filter(F.col("__cell").isin(probe))
         .select(
             F.col(id_col),
-            pq_encode(as_double_array(F.col(vec_col)), codebooks).alias("__codes"),
+            F.expr(f"{pq_encode(double_array(vec_col), codebooks)} AS __codes"),
         )
     )
     short = _adc_topk(enc, qvec, codebooks, shortlist, id_col).select(id_col)
@@ -770,7 +752,7 @@ def ivf_cell_stats(emb: DataFrame, cents: list[tuple[int, list[float]]]) -> Data
     window, which would move every row to one task."""
     n_cells = len(cents)
     per_cell = (
-        emb.select(ivf_cell(F.col("embedding"), cents).alias("cell"))
+        emb.select(F.expr(f"{ivf_cell(sql_name('embedding'), cents)} AS cell"))
         .groupBy(F.col("cell").cast("int").alias("cell"))
         .agg(F.count("*").cast("bigint").alias("n_vecs"))
     )
@@ -806,15 +788,12 @@ def pca_power_iteration(
     ROUNDed to 6 decimals then cast DECIMAL(30,6) BEFORE the sum —
     exact and order-insensitive; the squared-norm likewise sums exact
     DECIMAL squares, so sqrt/divide are single identical f64 steps."""
-    v = as_double_array(F.col(vec_col))
+    v = double_array(vec_col)
     # x . v0 with v0 = ones == sum of components; fixed left-to-right
     # array fold, identical term order in both engines
-    proj = F.round(
-        F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x), 6
-    )
     terms = emb.select(
-        F.posexplode(v).alias("pos", "x"),
-        proj.alias("proj"),
+        F.expr(f"posexplode({v}) AS (pos, x)"),
+        F.expr(f"ROUND(aggregate({v}, 0D, (acc_, x_) -> acc_ + x_), 6) AS proj"),
     ).select(
         "pos",
         F.round(F.col("x") * F.col("proj"), 6).cast("decimal(30,6)").alias("term"),
@@ -840,12 +819,9 @@ def norm_outlier_audit(emb: DataFrame, z_cut: float = 2.0, vec_col: str = "embed
     first thing to gate before index build.  Single scan, one global
     agg; mean/std from exact DECIMAL power sums (order-insensitive) so
     the z boundary is bit-identical cross-engine."""
-    v = as_double_array(F.col(vec_col))
-    norm = F.round(
-        F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)), 6
-    )
-    nd = norm.cast("decimal(21,6)")
-    stats = emb.select(nd.alias("_n")).agg(
+    v = double_array(vec_col)
+    nd = f"CAST(ROUND(SQRT(aggregate({v}, 0D, (acc_, x_) -> acc_ + x_ * x_)), 6) AS DECIMAL(21,6))"
+    stats = emb.select(F.expr(f"{nd} AS _n")).agg(
         F.count("*").cast("bigint").alias("n_vecs"),
         F.sum(F.col("_n")).alias("_s1"),
         F.sum((F.col("_n") * F.col("_n")).cast("decimal(33,12)")).alias("_s2"),
@@ -858,7 +834,7 @@ def norm_outlier_audit(emb: DataFrame, z_cut: float = 2.0, vec_col: str = "embed
     std = F.sqrt(F.greatest(var, F.lit(0.0)))
     per = stats.select("n_vecs", mean.alias("_mean"), std.alias("_std"))
     return (
-        emb.select(nd.cast("double").alias("_norm"))
+        emb.select(F.expr(f"CAST({nd} AS DOUBLE) AS _norm"))
         .crossJoin(F.broadcast(per))
         .agg(
             F.max("n_vecs").alias("n_vecs"),
@@ -980,7 +956,7 @@ def dim_variance_profile(emb: DataFrame, vec_col: str = "embedding") -> DataFram
     full-scale oracle sweep, round 5)."""
     x = F.round(F.col("x"), 6).cast("decimal(12,6)")
     terms = emb.select(
-        F.posexplode(as_double_array(F.col(vec_col))).alias("pos", "x")
+        F.posexplode(as_double_array(vec_col)).alias("pos", "x")
     ).select(F.col("pos"), x.alias("_x"))
     stats = terms.groupBy("pos").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -1152,13 +1128,11 @@ def triplet_mining_audit(
     anchors = F.broadcast(
         emb.filter(F.col(id_col) % anchor_mod == 0).select(
             F.col(id_col).alias("anchor_id"),
-            as_double_array(F.col(vec_col)).alias("__a_vec"),
+            as_double_array(vec_col).alias("__a_vec"),
             F.col(label_col).alias("anchor_label"),
         )
     )
-    d = F.round(
-        squared_l2(as_double_array(F.col(vec_col)), F.col("__a_vec")), 6
-    )
+    d = F.expr(f"ROUND({squared_l2(double_array(vec_col), '__a_vec')}, 6) AS d")
     pairs = (
         emb.crossJoin(anchors)
         .filter(F.col(id_col) != F.col("anchor_id"))
@@ -1166,7 +1140,7 @@ def triplet_mining_audit(
             "anchor_id",
             "anchor_label",
             (F.col(label_col) == F.col("anchor_label")).alias("same"),
-            d.alias("d"),
+            d,
         )
     )
     return (
@@ -1203,7 +1177,7 @@ def dim_clip_bounds_audit(
     — same plan shape, sketch state), bounds broadcast back over a
     second pass of the exploded frame for the clip counts."""
     dims = emb.select(
-        F.posexplode(as_double_array(F.col(vec_col))).alias("dim", "x")
+        F.posexplode(as_double_array(vec_col)).alias("dim", "x")
     )
     bounds = dims.groupBy("dim").agg(
         F.round(F.percentile("x", F.lit(lo)), 6).alias("p_lo"),
@@ -1307,12 +1281,10 @@ def knn_graph_blocked(
     partial top-k before the exchange).  Cross-cell edges are the
     measured recall trade (cells come from the cached assignment
     table; raising nprobe-style overlap is the quality dial)."""
-    from ..functions.vector import as_double_array, squared_l2
-
     base = emb_cells.select(
         F.col(id_col).alias("_gid"),
         F.col("__cell").alias("_gcell"),
-        as_double_array(F.col(vec_col)).alias("_gv"),
+        as_double_array(vec_col).alias("_gv"),
     )
     # Materialize the assignment projection before the self-join (same
     # contract as the MinHash band table): both branches read the tiny
@@ -1338,7 +1310,7 @@ def knn_graph_blocked(
     scored = pairs.select(
         F.col("_gid").alias("src"),
         F.col("_nid").alias("nbr"),
-        F.round(squared_l2(F.col("_gv"), F.col("_nv")), 6).alias("dist"),
+        F.expr(f"ROUND({squared_l2('_gv', '_nv')}, 6) AS dist"),
     )
     w = Window.partitionBy("src").orderBy(F.col("dist").asc(), F.col("nbr").asc())
     return (
@@ -1367,7 +1339,7 @@ def grid_neighbor_pairs(
     Scale: shuffle key = cell id, pair space = sum over cells of
     |cell| * |3x3 neighborhood| — the same sum-of-squares bound as the
     IVF-cell block join, tunable by eps."""
-    v = as_double_array(F.col(vec_col))
+    v = as_double_array(vec_col)
     p = emb.select(
         "vec_id",
         F.element_at(v, 1).alias("x"),
@@ -1416,20 +1388,16 @@ def grid_neighbor_pairs(
 HAMMING_SHORTLIST = 50
 
 
-def sign_pack_bits(v: Column, offset: int, nbits: int = 32) -> Column:
-    """Pack sign bits of dims offset+1..offset+nbits into one long:
-    bit (d-1) set iff component > 0.  Pure expression; POWER-based so
-    the identical text runs in the oracle."""
-    return F.aggregate(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(nbits)),
-            lambda d: F.when(
-                F.element_at(v, d + F.lit(offset)) > 0,
-                F.pow(F.lit(2.0), d - 1).cast("long"),
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+def sign_pack_bits(v: str, offset: int, nbits: int = 32) -> str:
+    """Pack sign bits of dims offset+1..offset+nbits of the SQL array
+    ``v`` into one long, as SQL text: bit (d-1) set iff component > 0.
+    Pure expression; POWER-based so the identical text runs in the
+    oracle."""
+    return (
+        f"aggregate(transform(sequence(1, {nbits}), d_ ->"
+        f" CASE WHEN element_at({v}, d_ + {offset}) > 0"
+        " THEN CAST(POWER(2.0D, d_ - 1) AS BIGINT) ELSE CAST(0 AS BIGINT) END),"
+        " CAST(0 AS BIGINT), (acc_, t_) -> acc_ + t_)"
     )
 
 
@@ -1460,19 +1428,16 @@ def binary_hamming_search(
     Scale: the packed longs are the stored index (write them as
     columns); the scan never touches the float vectors until the
     ``shortlist`` rows survive."""
-    v = as_double_array(F.col(vec_col))
+    v = double_array(vec_col)
     qlo, qhi = sign_pack_np(qvec)
     packed = with_query(emb, qvec).select(
         "vec_id",
         vec_col,
-        sign_pack_bits(v, 0).alias("lo"),
-        sign_pack_bits(v, 32).alias("hi"),
+        F.expr(f"{sign_pack_bits(v, 0)} AS lo"),
+        F.expr(f"{sign_pack_bits(v, 32)} AS hi"),
         "__q_vec",
     )
-    ham = (
-        F.bit_count(F.col("lo").bitwiseXOR(F.lit(qlo)))
-        + F.bit_count(F.col("hi").bitwiseXOR(F.lit(qhi)))
-    ).cast("int")
+    ham = F.expr(f"CAST(bit_count(lo ^ {qlo}) + bit_count(hi ^ {qhi}) AS INT)")
     short = (
         packed.withColumn("hamming", ham)
         .orderBy(F.col("hamming").asc(), F.col("vec_id").asc())
@@ -1482,7 +1447,7 @@ def binary_hamming_search(
         short.select(
             "vec_id",
             "hamming",
-            F.round(squared_l2(v, F.col("__q_vec")), 6).alias("dist"),
+            F.expr(f"ROUND({squared_l2(v, Q_VEC)}, 6) AS dist"),
         )
         .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
         .limit(k)
@@ -1499,11 +1464,9 @@ def isotropy_audit(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     Determinism: per-dim means use the kmeans recipe (ROUND 3 ->
     DECIMAL sums -> one f64 divide -> ROUND 6); both norms fold/square
     through DECIMAL so no f64 sum ever crosses a shuffle boundary."""
-    v = as_double_array(F.col(vec_col))
+    v = double_array(vec_col)
     comp = emb.select(
-        F.posexplode(
-            F.transform(v, lambda x: F.round(x, 3).cast("decimal(12,3)"))
-        ).alias("d", "x")
+        F.expr(f"posexplode(transform({v}, x_ -> CAST(ROUND(x_, 3) AS DECIMAL(12,3)))) AS (d, x)")
     )
     dim_means = comp.groupBy("d").agg(
         _mean6_exact(F.sum("x"), F.count("*"))
@@ -1517,15 +1480,8 @@ def isotropy_audit(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
             )
         ).alias("_mn")
     )
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(v, lambda x: x * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     avg_norm = emb.select(
-        F.round(norm, 6).cast("decimal(18,6)").alias("_nrm")
+        F.expr(f"CAST(ROUND({l2_norm(v)}, 6) AS DECIMAL(18,6)) AS _nrm")
     ).agg(
         F.count("*").cast("long").alias("n_vecs"),
         (F.sum("_nrm").cast("double") / F.count("*")).alias("_an"),
@@ -1553,25 +1509,19 @@ def pq_distortion_audit(
     Per-subspace minima are the same rounded expressions pq_encode
     ranks on; per-vector sums are DECIMAL-exact, so the corpus
     aggregate is shuffle-order invariant."""
-    v = as_double_array(F.col(vec_col))
+    v = double_array(vec_col)
     dsub = len(codebooks[0][0][1])
     subs = []
     for s, cb in enumerate(codebooks):
         mat = vector_literal([cw for _, cw in cb])
-        sub = F.slice(v, s * dsub + 1, dsub)
-        dists = F.transform(mat, lambda cw: F.round(squared_l2(sub, cw), 6))
-        subs.append(F.array_min(dists).cast("decimal(18,6)"))
-    dist = subs[0]
-    for extra in subs[1:]:
-        dist = dist + extra
-    norm2 = F.round(
-        F.aggregate(
-            F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        ),
-        6,
-    ).cast("decimal(18,6)")
+        sub = f"slice({v}, {s * dsub + 1}, {dsub})"
+        dists = f"transform({mat}, cw_ -> ROUND({squared_l2(sub, 'cw_')}, 6))"
+        subs.append(f"CAST(array_min({dists}) AS DECIMAL(18,6))")
+    dist = " + ".join(subs)
+    norm2 = f"ROUND({squared_norm(v)}, 6)"
     per_vec = emb.select(
-        dist.cast("decimal(28,6)").alias("dist"), norm2.alias("n2")
+        F.expr(f"CAST({dist} AS DECIMAL(28,6)) AS dist"),
+        F.expr(f"CAST({norm2} AS DECIMAL(18,6)) AS n2"),
     )
     return per_vec.agg(
         F.count("*").cast("long").alias("n_vecs"),
@@ -1646,11 +1596,9 @@ def knn_graph_navigable(
     )
     scored = emb.crossJoin(cdf).select(
         F.col(id_col).alias("_gid"),
-        as_double_array(F.col(vec_col)).alias("_gv"),
+        as_double_array(vec_col).alias("_gv"),
         F.col("cid"),
-        F.round(squared_l2(as_double_array(F.col(vec_col)), F.col("cv")), 6).alias(
-            "_cd"
-        ),
+        F.expr(f"ROUND({squared_l2(double_array(vec_col), 'cv')}, 6) AS _cd"),
     )
     w = Window.partitionBy("_gid").orderBy(F.col("_cd").asc(), F.col("cid").asc())
     member = (
@@ -1707,8 +1655,6 @@ def knn_graph_greedy_search(
     is the edge lookup (an equi-join on src), never a full scan; only
     the coarse layer and visited candidates are ever scored against the
     query."""
-    from ..functions.vector import as_double_array, squared_l2
-
     if edges is None:
         edges = knn_graph_navigable(
             emb, cents, g=g, id_col=id_col, vec_col=vec_col
@@ -1718,7 +1664,7 @@ def knn_graph_greedy_search(
         .localCheckpoint()
     )
     corpus = emb.select(
-        F.col(id_col).alias("_cid2"), as_double_array(F.col(vec_col)).alias("_cv2")
+        F.col(id_col).alias("_cid2"), as_double_array(vec_col).alias("_cv2")
     )
     qv = corpus.filter(F.col("_cid2") == query_id).select(F.col("_cv2").alias("_qv"))
 
@@ -1728,7 +1674,7 @@ def knn_graph_greedy_search(
             .crossJoin(F.broadcast(qv))
             .select(
                 F.col("_cid2").alias("_id"),
-                F.round(squared_l2(F.col("_cv2"), F.col("_qv")), 6).alias("dist"),
+                F.expr(f"ROUND({squared_l2('_cv2', '_qv')}, 6) AS dist"),
             )
         )
 
@@ -1886,7 +1832,6 @@ def graph_recall_vs_beam(
 
     Output: (beam, n_hit, recall) per beam, recall against the exact
     (ROUND-6, id-tiebreak) top-k."""
-    from ..functions.vector import as_double_array, squared_l2
     from ..sources.loaders import arrow_schema, arrow_table
 
     spark = emb.sparkSession
@@ -1898,7 +1843,7 @@ def graph_recall_vs_beam(
         F.col("vec_id").alias("_src"), F.col("nbr_id").alias("_dst")
     )
     corpus = emb.select(
-        F.col(id_col).alias("_cid2"), as_double_array(F.col(vec_col)).alias("_cv2")
+        F.col(id_col).alias("_cid2"), as_double_array(vec_col).alias("_cv2")
     )
     qv = corpus.filter(F.col("_cid2") == query_id).select(
         F.col("_cv2").alias("_qv")
@@ -1913,7 +1858,7 @@ def graph_recall_vs_beam(
         corpus.crossJoin(F.broadcast(qv))
         .select(
             F.col("_cid2").alias("_id"),
-            F.round(squared_l2(F.col("_cv2"), F.col("_qv")), 6).alias("dist"),
+            F.expr(f"ROUND({squared_l2('_cv2', '_qv')}, 6) AS dist"),
         )
         .localCheckpoint()
     )
@@ -2023,21 +1968,16 @@ def graph_cell_assignments(
     |centroids| rows).  This is the audited "stored assignment table"
     builder; core_ann session-caches its base-corpus result the same
     way the edge table is cached."""
-    from ..functions.vector import as_double_array, squared_l2
-
     ids = vector_literal([int(cid) for cid, _ in cents])
     mat = vector_literal([cv for _, cv in cents])
-    vec = as_double_array(F.col(vec_col))
-    entries = F.transform(
-        mat,
-        lambda cv, i: F.struct(
-            F.round(squared_l2(vec, cv), 6).alias("_cd"),
-            F.element_at(ids, i + 1).alias("cid"),
-        ),
+    dist = f"ROUND({squared_l2(double_array(vec_col), 'cv_')}, 6)"
+    entries = (
+        f"transform({mat}, (cv_, i_) ->"
+        f" struct({dist} AS _cd, element_at({ids}, i_ + 1) AS cid))"
     )
-    top = F.slice(F.array_sort(entries), 1, assign)
+    top = f"slice(array_sort({entries}), 1, {int(assign)})"
     return df.select(
-        F.col(id_col), F.explode(top).alias("_e")
+        F.col(id_col), F.expr(f"explode({top}) AS _e")
     ).select(F.col(id_col), F.col("_e.cid").alias("cell"))
 
 
@@ -2146,7 +2086,7 @@ def graph_index_upsert_audit(
         .join(F.broadcast(affected), "cell", "left_semi")
         .join(after_corpus, id_col)
         .select("cell", F.col(id_col).alias("_gid"),
-                as_double_array(F.col(vec_col)).alias("_gv"))
+                as_double_array(vec_col).alias("_gv"))
     )
 
     fresh = (
@@ -2239,9 +2179,9 @@ def rp_multiprobe_search(
     re-rank exactly, TakeOrdered top-k."""
     qb = query_bucket(qvec, planes)
     probes = [qb] + [qb ^ 2**i for i in range(len(planes))]
-    bucket = rp_bucket(as_double_array(F.col(vec_col)), planes)
+    bucket = rp_bucket(double_array(vec_col), planes)
     return exact_rerank(
-        with_query(corpus.filter(bucket.isin(probes)), qvec),
+        with_query(corpus.filter(f"{bucket} IN ({', '.join(map(str, probes))})"), qvec),
         [F.col(id_col)],
         k,
         id_col=id_col,

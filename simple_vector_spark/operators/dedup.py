@@ -289,6 +289,10 @@ def keep_canonical_summary(
     )
 
 
+# cosine of a scored pair (va, na) x (vb, nb) from its stored norms
+_PAIR_COSINE = f"ROUND({dot_product('va', 'vb')} / (na * nb), 6) AS sim"
+
+
 def embedding_cosine_pairs(
     emb: DataFrame, threshold: float, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
@@ -304,22 +308,14 @@ def embedding_cosine_pairs(
     nested-loop join's parallelism equals the streamed side's partition
     count, and the fixture parquet scans as a single split."""
     a = fan_out(
-        emb.select(
-            F.col(id_col).alias("ia"), as_double_array(F.col(vec_col)).alias("va")
-        )
-    ).withColumn("na", l2_norm(F.col("va")))
+        emb.select(F.col(id_col).alias("ia"), as_double_array(vec_col).alias("va"))
+    ).withColumn("na", F.expr(l2_norm("va")))
     b = emb.select(
-        F.col(id_col).alias("ib"), as_double_array(F.col(vec_col)).alias("vb")
-    ).withColumn("nb", l2_norm(F.col("vb")))
+        F.col(id_col).alias("ib"), as_double_array(vec_col).alias("vb")
+    ).withColumn("nb", F.expr(l2_norm("vb")))
     return (
         a.join(F.broadcast(b), F.col("ia") < F.col("ib"))
-        .select(
-            "ia",
-            "ib",
-            F.round(
-                dot_product(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-            ).alias("sim"),
-        )
+        .select("ia", "ib", F.expr(_PAIR_COSINE))
         .filter(F.col("sim") >= threshold)
     )
 
@@ -347,12 +343,12 @@ def embedding_cosine_pairs_blocked(
     from .ann import ivf_cell
 
     v = (
-        fan_out(emb.select(F.col(id_col).alias("id"), as_double_array(F.col(vec_col)).alias("v")))
+        fan_out(emb.select(F.col(id_col).alias("id"), as_double_array(vec_col).alias("v")))
         .select(
             "id",
             "v",
-            ivf_cell(F.col("v"), centroids).alias("cell"),
-            l2_norm(F.col("v")).alias("n"),
+            F.expr(f"{ivf_cell('v', centroids)} AS cell"),
+            F.expr(f"{l2_norm('v')} AS n"),
         )
         .localCheckpoint()
     )
@@ -365,9 +361,7 @@ def embedding_cosine_pairs_blocked(
             "ia",
             "ib",
             F.col("cell").cast("int").alias("cell"),
-            F.round(
-                dot_product(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-            ).alias("sim"),
+            F.expr(_PAIR_COSINE),
         )
         .filter(F.col("sim") >= threshold)
     )
@@ -1000,15 +994,14 @@ def embedding_exact_dupes(emb: DataFrame) -> DataFrame:
     is storage jitter, not signal) — the cheap first pass before any
     cosine blocking; duplicate groups with keeper and copy count.
     One digest shuffle, digests computed inside the scan."""
-    from ..functions.vector import as_double_array
+    from ..functions.vector import double_array
 
-    v = as_double_array(F.col("embedding"))
-    canon = F.array_join(
-        F.transform(v, lambda x: F.format_string("%.6f", F.round(x, 6))), ","
+    canon = (
+        f"array_join(transform({double_array('embedding')},"
+        " x_ -> format_string('%.6f', ROUND(x_, 6))), ',')"
     )
-    h = F.md5(canon)
     return (
-        emb.groupBy(h.alias("vec_md5"))
+        emb.groupBy(F.expr(f"md5({canon}) AS vec_md5"))
         .agg(
             F.count("*").cast("long").alias("n_copies"),
             F.min("vec_id").alias("keeper"),

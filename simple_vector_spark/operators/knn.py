@@ -44,14 +44,16 @@ from ..functions.vector import (
     cosine_similarity,
     cosine_similarity_np,
     dot_product,
+    double_array,
     round6,
     squared_l2,
     squared_l2_np,
+    sql_name,
     vector_literal,
     vector_matrix,
 )
 
-# metric -> (score expression, ascending?)  Squared-L2 is a distance
+# metric -> (score SQL builder, ascending?)  Squared-L2 is a distance
 # (smaller better, FAISS convention); IP and cosine are similarities
 # (larger better) — SURVEY.md §4.2.
 METRICS = {
@@ -59,6 +61,8 @@ METRICS = {
     "ip": (dot_product, False),
     "cosine": (cosine_similarity, False),
 }
+# the query column of :func:`with_query` / :func:`query_vec`, as SQL text
+Q_VEC = sql_name("__q_vec")
 
 
 def eq_filter(field: str, value) -> Column:
@@ -80,24 +84,22 @@ def with_query(df: DataFrame, qvec: list[float] | None) -> DataFrame:
     so :func:`exact_scores` scores in the scan stage.  ``qvec`` None (a
     query id absent from the corpus) gives no rows, same columns."""
     if qvec is None:
-        return df.filter(F.lit(False)).withColumn(
-            "__q_vec", F.lit(None).cast("array<double>")
+        return df.filter("false").withColumn(
+            "__q_vec", F.expr("CAST(NULL AS ARRAY<DOUBLE>)")
         )
-    return df.withColumn("__q_vec", vector_literal(qvec))
+    return df.withColumn("__q_vec", F.expr(vector_literal(qvec)))
 
 
 def query_vec(query: DataFrame, vec_col: str = "embedding", *keys: Column) -> DataFrame:
     """The broadcast query side of the batch scorer (:func:`knn_join`):
     ``keys`` and each query vector as ``array<double>`` column
     ``__q_vec``."""
-    return F.broadcast(
-        query.select(*keys, as_double_array(F.col(vec_col)).alias("__q_vec"))
-    )
+    return F.broadcast(query.select(*keys, F.expr(f"{double_array(vec_col)} AS __q_vec")))
 
 
 def exact_scores(
     joined: DataFrame,
-    keep: list[Column],
+    keep: list[Column | str],
     metric: str = "sqL2",
     vec_col: str = "embedding",
     extra: tuple[Column, ...] = (),
@@ -109,18 +111,19 @@ def exact_scores(
     name and whether it ranks ascending."""
     fn, asc = METRICS[metric]
     name = "dist" if asc else "sim"
-    score = F.round(fn(as_double_array(F.col(vec_col)), F.col("__q_vec")), 6)
-    return joined.select(*keep, score.alias(name), *extra), name, asc
+    score = F.expr(f"ROUND({fn(double_array(vec_col), Q_VEC)}, 6) AS {name}")
+    return joined.select(*keep, score, *extra), name, asc
 
 
-def rank_order(name: str, asc: bool, id_col: str = "vec_id") -> list[Column]:
-    """Rank on the ROUNDED score, id tiebreak (FIXTURES.md §C)."""
-    return [F.col(name).asc() if asc else F.col(name).desc(), F.col(id_col).asc()]
+def rank_order(name: str, asc: bool, id_col: str = "vec_id") -> list[Column | str]:
+    """Rank on the ROUNDED score, id tiebreak (FIXTURES.md §C).  A bare
+    name sorts ascending, nulls first, as ``.asc()`` does."""
+    return [name if asc else F.desc(name), id_col]
 
 
 def exact_rerank(
     joined: DataFrame,
-    keep: list[Column],
+    keep: list[Column | str],
     k: int,
     metric: str = "sqL2",
     id_col: str = "vec_id",
@@ -155,7 +158,7 @@ def knn_topk(
     df = corpus.filter(pred) if pred is not None else corpus
     return exact_rerank(
         with_query(df, qvec),
-        [F.col(id_col), F.col("label")],
+        [id_col, "label"],
         k,
         metric,
         id_col,
@@ -183,15 +186,12 @@ def knn_join(
     Output: (query_id, vec_id, dist|sim, rnk).
     """
     df = corpus.filter(pred) if pred is not None else corpus
-    q = query_vec(queries, vec_col, F.col(id_col).alias(query_id_col))
-    scored, name, asc = exact_scores(
-        df.crossJoin(q), [F.col(query_id_col), F.col(id_col)], metric, vec_col
-    )
-    w = Window.partitionBy(query_id_col).orderBy(*rank_order(name, asc, id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
+    qid, vid = sql_name(query_id_col), sql_name(id_col)
+    q = query_vec(queries, vec_col, F.expr(f"{vid} AS {qid}"))
+    scored, name, asc = exact_scores(df.crossJoin(q), [query_id_col, id_col], metric, vec_col)
+    order = f"{name} {'ASC' if asc else 'DESC'}, {vid} ASC"
+    rnk = F.expr(f"row_number() OVER (PARTITION BY {qid} ORDER BY {order})")
+    return scored.withColumn("rnk", rnk).filter(f"rnk <= {int(k)}")
 
 
 def topk_np(R, ids, k: int, self_ids=None):
@@ -332,7 +332,7 @@ def label_centroid_topk(
     ex = emb.select(
         F.col(id_col),
         F.col(label_col),
-        F.posexplode(as_double_array(F.col(vec_col))).alias("pos", "x"),
+        F.posexplode(as_double_array(vec_col)).alias("pos", "x"),
     )
     cent = ex.groupBy(label_col, "pos").agg(F.avg("x").alias("c"))
     d = (
@@ -408,11 +408,9 @@ def label_maxsim_topk(
     per-group index probe.  The mean folds DECIMAL-cast rounded sims
     (exact, order-insensitive); max needs no such care (same winner in
     any order)."""
-    sim = F.round(
-        cosine_similarity(as_double_array(F.col(vec_col)), F.col("__q_vec")), 6
-    )
+    sim = cosine_similarity(double_array(vec_col), Q_VEC)
     scored = with_query(corpus, qvec).select(
-        F.col(label_col), sim.cast("decimal(10,6)").alias("_sim")
+        F.col(label_col), F.expr(f"CAST(ROUND({sim}, 6) AS DECIMAL(10,6)) AS _sim")
     )
     return (
         scored.groupBy(label_col)
@@ -447,7 +445,7 @@ def label_centroid_accuracy(
     ex = emb.select(
         F.col(id_col),
         F.col(label_col),
-        F.posexplode(as_double_array(F.col(vec_col))).alias("pos", "x"),
+        F.posexplode(as_double_array(vec_col)).alias("pos", "x"),
     ).localCheckpoint()
     cent = ex.groupBy(F.col(label_col).alias("clabel"), F.col("pos")).agg(
         F.avg("x").alias("c")
@@ -552,11 +550,10 @@ def retrieval_metrics(
         )
         .join(F.broadcast(lab_tot), "qlab")
     )
-    ideal_n = F.least(F.col("n_rel_corpus"), F.lit(k))
-    idcg = F.aggregate(
-        F.sequence(F.lit(1), ideal_n.cast("int")),
-        F.lit(0.0),
-        lambda acc, i: acc + F.lit(1.0) / log2(i.cast("double") + 1.0),
+    n_rel = sql_name("n_rel_corpus")
+    idcg = F.expr(
+        f"aggregate(sequence(1, CAST(LEAST({n_rel}, {int(k)}) AS INT)), 0D,"
+        " (acc_, i_) -> acc_ + 1.0D / LOG(2.0D, CAST(i_ AS DOUBLE) + 1.0D))"
     )
     return per_q.select(
         "query_id",

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def latest_wins(
@@ -109,22 +110,30 @@ def allocate_ids(
     )
 
 
-def snapshot(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+def snapshot(df: DataFrame, path: str, partition_by: list[str] | None = None) -> StructType:
     """O18: persist current state.  A Parquet/Delta commit is the
     snapshot — atomic at the commit level, no bespoke file format.
     ``partition_by`` lays the snapshot out for partition pruning on
-    the hot filter columns (the filter-index analog, O14)."""
+    the hot filter columns (the filter-index analog, O14).  Returns the
+    schema a reader sees: the written one, nullable, with the
+    partition columns last — hand it to :func:`restore`."""
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
+    parts = partition_by or []
+    fields = [f for f in df.schema.fields if f.name not in parts]
+    fields += [df.schema[c] for c in parts]
+    return StructType([StructField(f.name, f.dataType, True) for f in fields])
 
 
-def restore(spark, path: str) -> DataFrame:
-    """O19: load a snapshot.  Replay (O17) is unnecessary: re-running
-    the latest-wins merge from the source-of-truth log reproduces any
+def restore(spark, path: str, schema: StructType) -> DataFrame:
+    """O19: load a snapshot, read with the ``schema`` :func:`snapshot`
+    returned (inferring it, and the partition columns' types, would run
+    a Spark job).  Replay (O17) is unnecessary: re-running the
+    latest-wins merge from the source-of-truth log reproduces any
     state; streaming jobs get exactly-once from checkpointLocation."""
-    return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def compaction_audit(

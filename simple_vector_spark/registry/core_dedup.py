@@ -10,7 +10,7 @@ from pyspark.sql.types import ArrayType
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import load_table, session_cached
+from ..sources.loaders import load_table, num_partitions, session_cached
 
 from . import query
 from .core_knn import PLANT_MOD, PLANT_SHIFT
@@ -86,7 +86,7 @@ def _cached_index(spark, sf_dir: str, name: str, builder):
         if any(isinstance(f.dataType, ArrayType) for f in df.schema):
             return df
         n_rows = df.count()
-        parts = df.rdd.getNumPartitions()
+        parts = num_partitions(df)
         want = max(1, min(parts, -(-n_rows // 65536)))
         return df.coalesce(want).localCheckpoint() if want < parts else df
 

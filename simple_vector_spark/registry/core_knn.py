@@ -187,7 +187,7 @@ def knn_filtered_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         _query_vector(spark, sf_dir),
         KNN_K,
         "sqL2",
-        pred=F.col("label").between(3, 12) & (F.col("vec_id") % 2 == 1),
+        pred=F.expr("label >= 3 AND label <= 12 AND vec_id % 2 = 1"),
     )
 
 
@@ -473,8 +473,7 @@ def snapshot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ORIGINAL table."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = scratch_path("snap_embeddings", sf_dir)
-    M.snapshot(emb, path, partition_by=["label"])
-    back = M.restore(spark, path)
+    back = M.restore(spark, path, M.snapshot(emb, path, partition_by=["label"]))
     return (
         back.filter(F.col("label") < 5)
         .groupBy(F.col("label").cast("int").alias("label"))

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..operators import knn as K
 from ..operators import mutation as M
-from ..sources.loaders import data_source, load_table, local_frame, scratch_path
+from ..sources.loaders import active_session, data_source, load_table, local_frame, scratch_path
 
 from . import _ORACLES, finalize_double, query
 from .core_knn import PLANT_MOD, PLANT_SHIFT, _query_vector
@@ -897,12 +897,13 @@ def arrow_ipc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = scratch_path("emb_arrow", sf_dir)
     shutil.rmtree(path, ignore_errors=True)
     write_arrow_ipc(emb, path)
-    back = (
+    reader = (
         spark.read.format(data_source(spark, ArrowIpcDataSource))
         .schema(emb.schema)
         .option("path", path)
-        .load()
     )
+    with active_session(spark):
+        back = reader.load()
     return back.groupBy("label").agg(
         F.count("*").cast("long").alias("n"),
         F.sum("vec_id").cast("long").alias("sum_ids"),
@@ -976,21 +977,18 @@ def ann_hamming_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     each point a rank filter + exact rerank + intersect."""
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _query_vector(spark, sf_dir, ANN_QUERY_ID)
-    v = A.as_double_array(F.col("embedding"))
+    v = A.double_array("embedding")
     qlo, qhi = A.sign_pack_np(qv)
-    ham = (
-        F.bit_count(F.col("lo").bitwiseXOR(F.lit(qlo)))
-        + F.bit_count(F.col("hi").bitwiseXOR(F.lit(qhi)))
-    ).cast("int")
+    ham = F.expr(f"CAST(bit_count(lo ^ {qlo}) + bit_count(hi ^ {qhi}) AS INT)")
     # shortlist via TakeOrderedAndProject (per-partition heaps — never a
     # global window over the corpus), then ranks from a triangle join
     # on the <= max(R)-row table
     short = (
         K.with_query(emb, qv).select(
             "vec_id",
-            A.sign_pack_bits(v, 0).alias("lo"),
-            A.sign_pack_bits(v, 32).alias("hi"),
-            F.round(A.squared_l2(v, F.col("__q_vec")), 6).alias("dist"),
+            F.expr(f"{A.sign_pack_bits(v, 0)} AS lo"),
+            F.expr(f"{A.sign_pack_bits(v, 32)} AS hi"),
+            F.expr(f"ROUND({A.squared_l2(v, K.Q_VEC)}, 6) AS dist"),
         )
         .withColumn("hamming", ham)
         .orderBy(F.col("hamming").asc(), F.col("vec_id").asc())

@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .sources.loaders import scratch_root
+
 # the directory holding the ``simple_vector_spark`` package
 _PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -49,6 +51,10 @@ def get_spark(app_name: str = "simple-vector-spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # static: the session catalog creates the default database's
+        # directory on first access, so keep it out of the launch
+        # directory, under the write paths' root
+        .config("spark.sql.warehouse.dir", scratch_root() + "spark-warehouse")
     )
     # local[N] is ONE JVM: shuffle/broadcast/cached-block bytes never
     # cross a network, so LZ4 framing is pure CPU overhead here

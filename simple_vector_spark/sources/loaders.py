@@ -42,11 +42,17 @@ _SCRATCH = "/__checkout__/_scratch/"
 _CHECKOUT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def scratch_root() -> str:
+    """The directory the write paths write under (with a trailing
+    ``/``)."""
+    return _SCRATCH.replace("/__checkout__", _CHECKOUT, 1)
+
+
 def scratch_path(kind: str, sf_dir: str) -> str:
     """Where a write-path query puts its ``kind`` output for the fixture
     ``sf_dir``: one directory per (kind, fixture name)."""
     tag = os.path.basename(sf_dir.rstrip("/"))
-    return _SCRATCH.replace("/__checkout__", _CHECKOUT, 1) + f"{kind}_{tag}"
+    return scratch_root() + f"{kind}_{tag}"
 
 
 def session_cached(spark: SparkSession, sf_dir: str, name: str, build):
@@ -88,14 +94,38 @@ def scoped_conf(spark: SparkSession, conf: dict[str, str]):
                 spark.conf.set(key, value)
 
 
+@contextmanager
+def active_session(spark: SparkSession):
+    """Make ``spark`` the thread's active session for the body of the
+    ``with``; the previous one (or none) is active again on the way
+    out, also when the body raises.  Spark resolves a Python data
+    source's name through the active session, on register and on
+    ``load()``, so a ``newSession()`` twin must be active for both."""
+    jvm = spark._jvm.SparkSession
+    prev = jvm.getActiveSession()
+    jvm.setActiveSession(spark._jsparkSession)
+    try:
+        yield
+    finally:
+        if prev.isDefined():
+            jvm.setActiveSession(prev.get())
+        else:
+            jvm.clearActiveSession()
+
+
 def data_source(spark: SparkSession, source) -> str:
     """Register the Python DataSource class ``source`` with the session
     (once per session, through the session store) and return its format
-    name."""
+    name.  Load it inside :func:`active_session`."""
     name = source.name()
+
+    def register():
+        with active_session(spark):
+            spark.dataSource.register(source)
+
     # a registration belongs to the session, not to a fixture: key it
     # to the root directory
-    session_cached(spark, "/", f"data_source_{name}", lambda: spark.dataSource.register(source))
+    session_cached(spark, "/", f"data_source_{name}", register)
     return name
 
 
@@ -150,6 +180,12 @@ def events_ts(df: DataFrame) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
+def num_partitions(df: DataFrame) -> int:
+    """``df.rdd.getNumPartitions()`` without the Python RDD wrapper
+    (~20 ms of driver CPU): ``df.rdd`` maps over the same RDD."""
+    return df._jdf.queryExecution().toRdd().getNumPartitions()
+
+
 def fan_out(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
     """Round-robin repartition to full core count when the scan produced
     too few splits to keep the cluster busy.
@@ -161,7 +197,7 @@ def fan_out(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
     itself yields thousands of splits and this is a no-op (the
     ``min_ratio`` guard), so no extra shuffle is paid at scale."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= max(1, int(target * min_ratio)):
+    if num_partitions(df) >= max(1, int(target * min_ratio)):
         return df
     return df.repartition(target)
 

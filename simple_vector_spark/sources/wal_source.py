@@ -27,7 +27,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .loaders import data_source
+from .loaders import active_session, data_source
 
 WAL_SCHEMA = "log_id bigint, version bigint, op string, doc string"
 _LEN = struct.Struct("<Q")
@@ -106,7 +106,9 @@ def read_wal(spark: SparkSession, path: str, stream: bool = False) -> DataFrame:
     of every segment, or with ``stream`` a tail that picks up new
     segments.  Registers the source once per session."""
     reader = spark.readStream if stream else spark.read
-    return reader.format(data_source(spark, WalDataSource)).option("path", path).load()
+    reader = reader.format(data_source(spark, WalDataSource)).option("path", path)
+    with active_session(spark):
+        return reader.load()
 
 
 class WalDataSource(DataSource):

@@ -275,30 +275,30 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _merge_sink(ev: DataFrame, base: str) -> str:
+def _merge_sink(ev: DataFrame, base: str) -> DataFrame:
     """Merge each micro-batch of ``ev`` latest-wins per ``user_id`` on
     ``(ts, event_id)`` into the previous snapshot (the first batch has
     none: it is its own latest-wins), written to a NEW versioned dir
     under ``base`` that becomes current once its write commits.
-    Returns the final snapshot's path."""
+    Returns the final snapshot, read with its written schema."""
     from ..operators.mutation import apply_upserts, latest_wins, restore, snapshot
 
     keys, seq = ["user_id"], ["ts", "event_id"]
     shutil.rmtree(base, ignore_errors=True)
-    state = {"path": None}
+    state = {"path": None, "schema": None}
 
     def merge(batch_df, batch_id):
         if state["path"] is None:
             cur = latest_wins(batch_df, keys, seq)
         else:
-            prev = restore(batch_df.sparkSession, state["path"])
+            prev = restore(batch_df.sparkSession, state["path"], state["schema"])
             cur = apply_upserts(prev, batch_df, keys, seq)
         nxt = os.path.join(base, f"v{batch_id}")
-        snapshot(cur, nxt)
+        state["schema"] = snapshot(cur, nxt)
         state["path"] = nxt
 
     run_available_now(ev.writeStream.foreachBatch(merge))
-    return state["path"]
+    return restore(ev.sparkSession, state["path"], state["schema"])
 
 
 def foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -310,12 +310,10 @@ def foreach_batch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     write commits (the atomic-swap the reference's full-rewrite
     snapshot lacks, src/index_factory.cc:44-63 / doc/persistence.md
     todo).  Final state = latest event per user — the batch oracle."""
-    from ..operators.mutation import restore
-
     ev = _read_events_stream(spark, sf_dir).select(
         "user_id", "event_id", "ts", "value"
     )
-    return restore(spark, _merge_sink(ev, scratch_path("stream_merge", sf_dir))).select(
+    return _merge_sink(ev, scratch_path("stream_merge", sf_dir)).select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
         F.round(F.col("value"), 6).alias("last_value"),
@@ -625,8 +623,6 @@ def cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Deterministic: latest-wins on (ts, event_id) is associative across
     any batch split, so availableNow equals the batch oracle."""
-    from ..operators.mutation import restore
-
     ev = _read_events_stream(spark, sf_dir).select(
         "user_id",
         "event_id",
@@ -637,7 +633,7 @@ def cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
     )
     return (
-        restore(spark, _merge_sink(ev, scratch_path("stream_cdc", sf_dir)))
+        _merge_sink(ev, scratch_path("stream_cdc", sf_dir))
         .filter(F.col("op") != "d")
         .select(
             "user_id",

@@ -47,10 +47,10 @@ def test_ivf_probe_recall(emb):
 
 def test_ivf_cell_assignment_total(emb):
     """Every vector gets exactly one cell, and cells partition the corpus."""
-    from simple_vector_spark.functions.vector import as_double_array
+    from simple_vector_spark.functions.vector import double_array
 
     cents = A.fit_vectors(emb, A.CENTROID_IDS)
-    cells = emb.withColumn("cell", A.ivf_cell(as_double_array(F.col("embedding")), cents))
+    cells = emb.withColumn("cell", F.expr(A.ivf_cell(double_array("embedding"), cents)))
     n = emb.count()
     assert cells.filter(F.col("cell").isNotNull()).count() == n
     per_cell = cells.groupBy("cell").count().collect()
@@ -71,7 +71,7 @@ def test_mllib_lsh_join_contained_in_exact(emb):
     exact = {
         (r.ia, r.ib)
         for r in a.join(b, F.col("ia") < F.col("ib"))
-        .select("ia", "ib", F.sqrt(squared_l2(F.col("va"), F.col("vb"))).alias("d"))
+        .select("ia", "ib", F.expr(f"SQRT({squared_l2('va', 'vb')}) AS d"))
         .filter(F.col("d") < 1.2)
         .collect()
     }
@@ -89,8 +89,8 @@ def test_pq_adc_recall_and_code_range(emb):
     cbs = A.pq_codebooks(A.fit_vectors(emb, A.CENTROID_IDS))
     q = A.fit_vectors(emb, [0])[0][1]
     enc = emb.select(
-        A.pq_encode(
-            F.expr("transform(embedding, x -> cast(x as double))"), cbs
+        F.expr(
+            A.pq_encode("transform(embedding, x -> cast(x as double))", cbs)
         ).alias("codes")
     )
     rng = enc.select(

@@ -49,7 +49,7 @@ def test_embedding_norms_arrow_rounds_like_spark(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from simple_vector_spark.functions.vector import as_double_array, l2_norm
+    from simple_vector_spark.functions.vector import double_array, l2_norm
     from simple_vector_spark.registry import queries
 
     pq.write_table(
@@ -63,7 +63,7 @@ def test_embedding_norms_arrow_rounds_like_spark(spark, tmp_path):
     )
     got = queries()["embedding_norms_arrow"](spark, str(tmp_path))
     expr = load_table(spark, str(tmp_path), "embeddings").select(
-        "vec_id", F.round(l2_norm(as_double_array("embedding")), 6).alias("l2_norm")
+        "vec_id", F.expr(f"ROUND({l2_norm(double_array('embedding'))}, 6) AS l2_norm")
     )
     assert sorted(got.collect()) == sorted(expr.collect())
     assert sorted(r.l2_norm for r in got.collect()) == [1e-06, 3e-06]
@@ -98,8 +98,8 @@ def test_partitioned_snapshot_prunes_and_roundtrips(spark, tmp_path):
         [(i, i % 3) for i in range(30)], "id long, label int"
     )
     path = str(tmp_path / "snap")
-    M.snapshot(df, path, partition_by=["label"])
-    back = M.restore(spark, path).filter(F.col("label") == 1)
+    schema = M.snapshot(df, path, partition_by=["label"])
+    back = M.restore(spark, path, schema).filter(F.col("label") == 1)
     assert sorted(r.id for r in back.collect()) == [i for i in range(30) if i % 3 == 1]
     # partition pruning visible in the plan
     plan = back._jdf.queryExecution().executedPlan().toString()

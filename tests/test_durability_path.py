@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from simple_vector_spark.sources.loaders import scoped_conf
+from simple_vector_spark.sources.loaders import active_session, scoped_conf
 from simple_vector_spark.streaming.jobs import _read_events_stream
 from test_session_store import FIXTURES, ROOT, jobs_run
 
@@ -94,26 +94,39 @@ def _rows(df):
 
 
 @pytest.mark.parametrize(
-    "name", ["wal_source_scan", "stream_wal_tail", "arrow_ipc_source_roundtrip"])
+    "name",
+    ["wal_source_scan", "stream_wal_tail", "stream_live_index_knn", "arrow_ipc_source_roundtrip"],
+)
 def test_source_queries_repeat_and_run_in_a_twin_session(spark, sf_dir, name):
     """Registration goes through the session store: a second call in one
     session and a first call in a ``newSession()`` twin (which starts
     with no registered source) give the same rows.
 
     Spark resolves a Python data source's name through the thread's
-    active session, so the twin runs as the active session."""
+    active session; the twin is NOT made active here, so the queries
+    must do it themselves (``loaders.active_session``), and the first
+    session is active again afterwards."""
     from simple_vector_spark.registry import _QUERIES
 
     fn = _QUERIES[name]
     first = _rows(fn(spark, sf_dir))
     assert first
     assert _rows(fn(spark, sf_dir)) == first
+    active = spark._jvm.SparkSession.getActiveSession().get()
     twin = spark.newSession()
-    spark._jvm.SparkSession.setActiveSession(twin._jsparkSession)
-    try:
-        assert _rows(fn(twin, sf_dir)) == first
-    finally:
-        spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
+    assert _rows(fn(twin, sf_dir)) == first
+    assert spark._jvm.SparkSession.getActiveSession().get().equals(active)
+
+
+def test_active_session_restores_the_previous_one_also_on_error(spark):
+    jvm = spark._jvm.SparkSession
+    before = jvm.getActiveSession().get()
+    twin = spark.newSession()
+    with pytest.raises(RuntimeError, match="body"):
+        with active_session(twin):
+            assert jvm.getActiveSession().get().equals(twin._jsparkSession)
+            raise RuntimeError("body")
+    assert jvm.getActiveSession().get().equals(before)
 
 
 # --------------------------------------------------------------------------

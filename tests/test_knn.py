@@ -161,8 +161,7 @@ def test_allpairs_threshold_count_matches_expression_forms(spark, sf_dir):
     for thr in (0.8, 1.2, 2.0):
         expr_n = (
             pairs.select(
-                F.round(F.sqrt(squared_l2(F.col("va"), F.col("vb"))), 6)
-                .alias("e")
+                F.expr(f"ROUND(SQRT({squared_l2('va', 'vb')}), 6) AS e")
             )
             .filter(F.col("e") < thr)
             .count()
@@ -170,16 +169,13 @@ def test_allpairs_threshold_count_matches_expression_forms(spark, sf_dir):
         got = K.allpairs_threshold_count_arrow(emb, thr).head()
         assert got["n_true_pairs"] == expr_n, ("euclid", thr)
 
-    an = a.withColumn("na", l2_norm(F.col("va")))
-    bn = b.withColumn("nb", l2_norm(F.col("vb")))
+    an = a.withColumn("na", F.expr(l2_norm("va")))
+    bn = b.withColumn("nb", F.expr(l2_norm("vb")))
     cpairs = an.join(F.broadcast(bn), F.col("ia") < F.col("ib"))
     for thr in (0.95, 0.99):
         expr_n = (
             cpairs.select(
-                F.round(
-                    dot_product(F.col("va"), F.col("vb"))
-                    / (F.col("na") * F.col("nb")), 6
-                ).alias("s")
+                F.expr(f"ROUND({dot_product('va', 'vb')} / (na * nb), 6) AS s")
             )
             .filter(F.col("s") >= thr)
             .count()

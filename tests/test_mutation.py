@@ -3,9 +3,12 @@ reference's delete-old/insert-new upsert sequence."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from simple_vector_spark.operators import mutation as M
+from simple_vector_spark.sources.loaders import load_table
+from test_session_store import jobs_run
 
 
 def test_latest_wins_basic(spark):
@@ -45,7 +48,21 @@ def test_snapshot_roundtrip(spark, tmp_path):
     """O18/O19: parquet write/read IS snapshot/restore."""
     df = spark.range(100).withColumn("v", F.col("id") * 2)
     path = str(tmp_path / "snap")
-    M.snapshot(df, path)
-    back = M.restore(spark, path)
+    back = M.restore(spark, path, M.snapshot(df, path))
     assert back.count() == 100
     assert back.agg(F.sum("v")).collect()[0][0] == 9900
+
+
+@pytest.mark.parametrize("partition_by", [None, ["label"]])
+def test_restore_reads_with_the_snapshot_schema(spark, sf_dir, tmp_path, partition_by):
+    """``restore`` with the schema ``snapshot`` returns gives the rows and
+    schema of an inferring read, and runs no Spark job."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "snap")
+    schema = M.snapshot(emb, path, partition_by)
+    inferred = spark.read.parquet(path)
+    with jobs_run(spark) as ids:
+        back = M.restore(spark, path, schema)
+    assert ids == []
+    assert back.schema == inferred.schema
+    assert sorted(back.collect()) == sorted(inferred.collect())

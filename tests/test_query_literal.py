@@ -16,6 +16,7 @@ from decimal import Decimal
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from simple_vector_spark.functions.vector import (
     cosine_similarity_np,
@@ -41,7 +42,7 @@ def test_literal_round_trips_exactly(spark, sf_dir):
     f32max = float(np.finfo(np.float32).max)
     row = load_table(spark, sf_dir, "embeddings").filter("vec_id = 0").head().embedding
     for vec in ([-0.0, 5e-324, 2.5e-310, f32max, -f32max], [float(x) for x in row]):
-        got = spark.range(1).select(vector_literal(vec).alias("v")).head().v
+        got = spark.range(1).select(F.expr(vector_literal(vec)).alias("v")).head().v
         assert [_bits(x) for x in got] == [_bits(x) for x in vec]
     assert len(row) == 64
 

@@ -18,7 +18,7 @@ SF = "/root/testdata/sf0.001"
 def _legacy_window_assignments(df, cents, assign):
     """The pre-r08 crossJoin + row_number cell assignment, kept here as
     the semantic reference for graph_cell_assignments."""
-    from simple_vector_spark.functions.vector import as_double_array, squared_l2
+    from simple_vector_spark.functions.vector import double_array, squared_l2
 
     spark = df.sparkSession
     cdf = F.broadcast(
@@ -30,9 +30,7 @@ def _legacy_window_assignments(df, cents, assign):
     scored = df.crossJoin(cdf).select(
         F.col("vec_id"),
         F.col("cid"),
-        F.round(
-            squared_l2(as_double_array(F.col("embedding")), F.col("cv")), 6
-        ).alias("_cd"),
+        F.expr(f"ROUND({squared_l2(double_array('embedding'), 'cv')}, 6) AS _cd"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("_cd").asc(), F.col("cid").asc())
     return (

@@ -43,19 +43,19 @@ def test_foreach_batch_upsert_merge(spark, tmp_path):
     base = spark.createDataFrame(
         [(0, 0, "init0"), (1, 0, "init1")], "id long, seq long, payload string"
     )
-    M.snapshot(base, state_path)
+    schema = M.snapshot(base, state_path)
 
     batch = spark.createDataFrame(
         [(1, 5, "upd1"), (2, 5, "new2")], "id long, seq long, payload string"
     )
 
     def merge(batch_df, batch_id):
-        cur = M.restore(spark, state_path)
+        cur = M.restore(spark, state_path, schema)
         M.snapshot(M.apply_upserts(cur, batch_df, ["id"], ["seq"]), state_path + "_next")
 
     # simulate one micro-batch exactly as foreachBatch would invoke it
     merge(batch, 0)
-    final = {r.id: r.payload for r in M.restore(spark, state_path + "_next").collect()}
+    final = {r.id: r.payload for r in M.restore(spark, state_path + "_next", schema).collect()}
     assert final == {0: "init0", 1: "upd1", 2: "new2"}
 
 

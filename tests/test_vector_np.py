@@ -72,10 +72,10 @@ def test_twins_equal_expressions_bit_for_bit(spark):
     rows = a.crossJoin(b).select(
         "i",
         "j",
-        V.squared_l2(F.col("a"), F.col("b")).alias("l2"),
-        V.dot_product(F.col("a"), F.col("b")).alias("ip"),
-        V.cosine_similarity(F.col("a"), F.col("b")).alias("cos"),
-        V.l2_norm(F.col("a")).alias("na"),
+        F.expr(V.squared_l2("a", "b")).alias("l2"),
+        F.expr(V.dot_product("a", "b")).alias("ip"),
+        F.expr(V.cosine_similarity("a", "b")).alias("cos"),
+        F.expr(V.l2_norm("a")).alias("na"),
     ).collect()
     X, Y = A[:, None, :], B[None]
     twins = {

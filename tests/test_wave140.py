@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from simple_vector_spark.functions.vector import as_double_array, squared_l2
+from simple_vector_spark.functions.vector import as_double_array, double_array, squared_l2
 from simple_vector_spark.operators import ann as A
 from simple_vector_spark.sources.loaders import load_table
 
@@ -18,9 +18,7 @@ def _exact_topk(spark, emb, qid, k):
         for r in emb.crossJoin(F.broadcast(qv))
         .select(
             "vec_id",
-            F.round(squared_l2(as_double_array("embedding"), F.col("q")), 6).alias(
-                "d"
-            ),
+            F.expr(f"ROUND({squared_l2(double_array('embedding'), 'q')}, 6) AS d"),
         )
         .orderBy("d", "vec_id")
         .limit(k)

@@ -95,20 +95,18 @@ def test_graph_upsert_inserts_present_in_graph(spark):
 
 
 def _dist_mean(spark, emb, cbs):
-    from simple_vector_spark.functions.vector import as_double_array, squared_l2
+    from simple_vector_spark.functions.vector import (
+        double_array,
+        squared_l2,
+        vector_literal,
+    )
 
-    vv = as_double_array(F.col("embedding"))
-    mats = F.lit([[cw for _, cw in cb] for cb in cbs]).cast(
-        "array<array<array<double>>>"
-    )
-    rec = F.flatten(
-        F.transform(
-            F.col("_c"), lambda c, s: F.element_at(mats, s + 1)[c - 1]
-        )
-    )
-    enc = emb.select(vv.alias("_v"), A.pq_encode(vv, cbs).alias("_c"))
+    vv = double_array("embedding")
+    mats = vector_literal([[cw for _, cw in cb] for cb in cbs])
+    rec = f"flatten(transform(_c, (c, s) -> element_at({mats}, s + 1)[c - 1]))"
+    enc = emb.select(F.expr(f"{vv} AS _v"), F.expr(f"{A.pq_encode(vv, cbs)} AS _c"))
     return (
-        enc.select(squared_l2(F.col("_v"), rec).alias("d"))
+        enc.select(F.expr(f"{squared_l2('_v', rec)} AS d"))
         .agg(F.avg("d"))
         .collect()[0][0]
     )
@@ -366,19 +364,21 @@ def test_recall_vs_beam_fused_matches_sequential_walks(spark):
         ).collect()
     }
     # exact top-k baseline (same recipe as the operator)
-    from simple_vector_spark.functions.vector import as_double_array, squared_l2
+    from simple_vector_spark.functions.vector import (
+        as_double_array,
+        double_array,
+        squared_l2,
+    )
 
     qv = emb.filter(F.col("vec_id") == query_id).select(
-        as_double_array(F.col("embedding")).alias("qv")
+        as_double_array("embedding").alias("qv")
     )
     exact = {
         r["vec_id"]
         for r in emb.crossJoin(qv)
         .select(
             "vec_id",
-            F.round(
-                squared_l2(as_double_array(F.col("embedding")), F.col("qv")), 6
-            ).alias("d"),
+            F.expr(f"ROUND({squared_l2(double_array('embedding'), 'qv')}, 6) AS d"),
         )
         .orderBy(F.col("d").asc(), F.col("vec_id").asc())
         .limit(k)

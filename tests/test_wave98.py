@@ -7,7 +7,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from simple_vector_spark.functions.vector import as_double_array, squared_l2
+from simple_vector_spark.functions.vector import as_double_array, double_array, squared_l2
 from simple_vector_spark.operators import ann as A
 
 
@@ -47,9 +47,7 @@ def test_greedy_search_finds_planted_cluster(spark):
         emb.crossJoin(F.broadcast(qv))
         .select(
             "vec_id",
-            F.round(squared_l2(as_double_array("embedding"), F.col("q")), 6).alias(
-                "d"
-            ),
+            F.expr(f"ROUND({squared_l2(double_array('embedding'), 'q')}, 6) AS d"),
         )
         .orderBy("d", "vec_id")
         .limit(10)
@@ -93,9 +91,7 @@ def test_navigable_graph_bridges_cells(spark, sf_dir):
         .select(
             "vec_id",
             "cid",
-            F.round(squared_l2(as_double_array("embedding"), F.col("cv")), 6).alias(
-                "d"
-            ),
+            F.expr(f"ROUND({squared_l2(double_array('embedding'), 'cv')}, 6) AS d"),
         )
         .withColumn(
             "rn",
