@@ -1068,13 +1068,13 @@ def max_concurrent_sessions(events: DataFrame, gap: str = "30 minutes") -> DataF
     running sum, take the max.
 
     Scale: the running sum uses the two-phase range-partitioned prefix
-    sum (ranking.ranked_prefix_sum) over the delta events — session
+    sum (ranking.prefix_fold) over the delta events — session
     counts grow with the data, so a single-partition ordered window is
     exactly the scale-killer this avoids.  Tie semantics: at an
     instant where sessions end AND start, ends apply first (delta
     sorts (ts, delta asc)) — back-to-back sessions don't double
     count.  Output: one row (n_sessions, peak, peak_ts)."""
-    from .ranking import ranked_prefix_sum
+    from .ranking import prefix_fold
 
     sessions = events.groupBy(
         F.col("user_id"), F.session_window("ts", gap).alias("w")
@@ -1084,12 +1084,8 @@ def max_concurrent_sessions(events: DataFrame, gap: str = "30 minutes") -> DataF
     ).unionByName(
         sessions.select(F.col("w.end").alias("t"), F.lit(-1).cast("long").alias("d"))
     )
-    swept = ranked_prefix_sum(
-        deltas,
-        [F.col("t").asc(), F.col("d").asc()],
-        "d",
-        cum_name="open",
-        total_name="_tot",
+    swept = prefix_fold(
+        deltas, [F.col("t").asc(), F.col("d").asc()], sums={"d": "open"}
     )
     n_sessions = sessions.agg(F.count("*").cast("long").alias("n_sessions"))
     peak = swept.agg(F.max("open").cast("long").alias("peak"))
@@ -1249,17 +1245,15 @@ def disorder_audit(events: DataFrame) -> DataFrame:
     withWatermark should cover ~p95+ of this distribution or the
     dropped-late-rows rate is the remainder.
 
-    Scale: the running max rides the two-phase ranked_prefix_max (no
+    Scale: the running max rides the two-phase prefix_fold (no
     single-partition window); percentiles are exact over the LATE
     subset (swap for approx_percentile at 100 TB, as documented in
     order_value_percentiles)."""
-    from .ranking import ranked_prefix_max
+    from .ranking import prefix_fold
 
     ts_s = F.unix_timestamp("ts").alias("ts_s")
     base = events.select("event_id", ts_s)
-    wm = ranked_prefix_max(
-        base, [F.col("event_id").asc()], "ts_s", cum_name="wm"
-    )
+    wm = prefix_fold(base, [F.col("event_id").asc()], maxes={"ts_s": "wm"})
     late = wm.select(
         (F.col("wm") - F.col("ts_s")).alias("late_s")
     )
@@ -2761,7 +2755,7 @@ def fdr_weekend_shift(events: DataFrame, q: float = FDR_Q) -> DataFrame:
         tested,
         [F.col("_p9").asc(), F.col("event_type").asc()],
         rank_name="bh_rank",
-    ).localCheckpoint()
+    )
     thr = F.col("bh_rank").cast("double") * F.lit(q) / F.col("m").cast("double")
     flagged = ranked.withColumn("_thr", thr).withColumn(
         "_pass", (F.col("_p9") <= F.col("_thr")).cast("int")
@@ -3755,7 +3749,7 @@ def forecast_error_metrics(events: DataFrame) -> DataFrame:
     )
     ranked = ranked_global(daily, [F.col("d").asc()], rank_name="t").select(
         "t", F.col("y").cast("double").alias("y")
-    ).localCheckpoint()
+    )
     cur = ranked.select("t", F.col("y").alias("y1"))
     sn = ranked.select(
         (F.col("t") + F.lit(MASE_SEASON)).alias("t"), F.col("y").alias("yhat")

@@ -96,9 +96,9 @@ def allocate_ids(
 ) -> DataFrame:
     """O20: monotonic id allocation.  The reference hands out
     ``increaseID_++`` per WAL record (src/persistence.cc:43-48) — a
-    serial counter.  Deterministic distributed equivalent: the
-    two-phase zipWithIndex pattern (range-partition on the order key,
-    local row_number per partition + broadcast offsets) — dense,
+    serial counter.  Deterministic distributed equivalent: the rank of
+    ``ranking.prefix_fold`` (range-partition on the order key, local
+    row_number per pinned partition + broadcast offsets) — dense,
     deterministic, and never a single-partition window, so corpus-scale
     id assignment keeps every task partition-sized.  Use
     ``monotonically_increasing_id`` instead when density is not

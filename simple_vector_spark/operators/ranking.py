@@ -1,25 +1,39 @@
-"""Scale-safe global ranking: two-phase row_number / ntile without a
+"""Scale-safe global ranking: one prefix fold computes every running
+quantity (row_number, running sum, running max) without a
 single-partition window.
 
 ``Window.orderBy(...)`` with no partitionBy funnels every row through
-one task ("Moving all data to a single partition" — the one plan shape
-that cannot survive a 100x scale-up).  The distributed equivalent is
-the zipWithIndex pattern, expressed declaratively:
+one task (the one plan shape that cannot survive a 100x scale-up).
+:func:`prefix_fold` is the distributed equivalent, the zipWithIndex
+pattern expressed declaratively:
 
-1. ``repartitionByRange`` on the sort key — non-overlapping sorted
-   ranges, one per partition, each partition-sized.
-2. ``row_number`` windowed by ``spark_partition_id()`` — a local sort
-   per partition, never a global one.
-3. global rank = local rank + the summed row counts of all lower
-   partitions.  The offsets come from a broadcast triangle join over
-   the per-partition COUNT table (#groups x #partitions rows — bounded
-   by cluster layout, not data volume), so no orderBy-only window
-   appears anywhere in the plan.
+1. ``repartitionByRange`` on (groups, sort key): non-overlapping
+   sorted ranges, one per partition, each partition-sized.
+2. One window partitioned by (groups, ``spark_partition_id()``), a
+   local sort per partition, computes each quantity locally.
+3. The frame is pinned with one ``localCheckpoint``.
+4. Each partition's offset folds the per-partition count / sum / max
+   of all lower partitions of its group, through a broadcast triangle
+   join over the per-partition table (#groups x #partitions rows).
+   sum and max are associative, so offset and local value compose.
+5. Optional per-group totals join on with their own broadcast.
 
-The partitioned frame is localCheckpoint'ed: the counts branch and the
-rank branch MUST observe the same physical partitioning (AQE may
-re-coalesce a recomputed exchange differently), and the checkpoint also
-keeps the upstream lineage to a single computation.
+Group keys compare null-safely: SQL ``PARTITION BY g`` keeps NULL as
+its own group.
+
+Why the pin stays: the per-partition branch and the local-window
+branch must observe the same physical partitioning (AQE may
+re-coalesce a recomputed exchange differently), and the pin keeps the
+upstream lineage to one computation.  A pin-free variant (equal-width
+buckets over the exact min/max of an order-preserving image of the
+leading key, in place of the partition id) was correct on all 39
+queries that reach this module and cut their eager jobs from 359 to
+132 at sf0.001, but was slower at sf0.1: median total 41.6 s -> 44.4 s
+over 3 alternating runs, 17 queries faster and 21 slower.  Chained
+ranks lose most: ``orders_rfm_segments`` (three ntiles) went 1.52 s ->
+5.08 s, as each unpinned level copies its input into three branches;
+``lineitem_spearman_corr`` and ``lineitem_tail_dependence`` gained ~3 s
+each.  So dropping the pin is a per-call-site decision.
 
 Reference parity: the reference assigns ids with a serial counter
 (src/persistence.cc:43-48) and ranks results in one thread; these
@@ -28,10 +42,85 @@ helpers are the distributed equivalents of that total order.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import operator
+from collections.abc import Mapping, Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _on(gc: Sequence[str], prefix: str, *also: Column) -> Column:
+    """``also`` and null-safe equality of each group key with its twin."""
+    return reduce(operator.and_, [*also, *[F.col(g).eqNullSafe(F.col(prefix + g)) for g in gc]])
+
+
+def prefix_fold(
+    df: DataFrame,
+    sort_exprs: Sequence[Column],
+    group_cols: Sequence[str] = (),
+    rank: str | None = None,
+    sums: Mapping[str, str] | None = None,
+    maxes: Mapping[str, str] | None = None,
+    totals: Mapping[str, str] | None = None,
+) -> DataFrame:
+    """Exact running quantities over ``sort_exprs`` within each group
+    (globally when ``group_cols`` is empty).  Returns ``df`` plus:
+
+    - ``rank``: row_number (long, 1-based; ``sort_exprs`` must end in a
+      unique tiebreak for a deterministic answer);
+    - per ``value col -> name`` in ``sums`` / ``maxes``: SUM / MAX over
+      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW (NULL until the
+      first non-NULL value, like SQL).  Summed columns should be exact
+      types (long / DECIMAL) so the fold is order-insensitive;
+    - per ``name -> running name`` in ``totals``: the group's final
+      value of that quantity on every row (the row count for ``rank``).
+    """
+    gc = list(group_cols)
+    lw = Window.partitionBy(*gc, "_pid").orderBy(*sort_exprs).rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    # name -> (local running value, per-partition aggregate, fold)
+    specs: dict[str, tuple[Column, Column, str]] = {}
+    if rank is not None:
+        specs[rank] = (F.row_number().over(lw).cast("long"), F.count(F.lit(1)), "sum")
+    for c, name in (sums or {}).items():
+        specs[name] = (F.sum(c).over(lw), F.sum(c), "sum")
+    for c, name in (maxes or {}).items():
+        specs[name] = (F.max(c).over(lw), F.max(c), "max")
+    ids = {name: f"_q{i}" for i, name in enumerate(specs)}
+
+    local = (
+        df.repartitionByRange(*[F.col(g).asc() for g in gc], *sort_exprs)
+        .withColumn("_pid", F.spark_partition_id())
+        .withColumns({ids[n]: s[0] for n, s in specs.items()})
+        .localCheckpoint()
+    )
+    per = local.groupBy(*gc, "_pid").agg(*[s[1].alias(ids[n]) for n, s in specs.items()])
+    lower = per.select(*[F.col(c).alias("_lo" + c) for c in per.columns])
+    offs = (
+        per.join(F.broadcast(lower), _on(gc, "_lo", F.col("_lo_pid") < F.col("_pid")), "left")
+        .groupBy(*[F.col(k).alias("_of" + k) for k in [*gc, "_pid"]])
+        .agg(*[F.expr(f"{s[2]}(_lo{ids[n]})").alias("_of" + ids[n])
+               for n, s in specs.items()])
+    )
+
+    def folded(name: str) -> Column:
+        here, below = F.col(ids[name]), F.col("_of" + ids[name])
+        if specs[name][2] == "max":
+            return F.greatest(here, below)
+        return F.coalesce(here + below, here, below)
+
+    out = local.join(F.broadcast(offs), _on(gc, "_of", F.col("_pid") == F.col("_of_pid")))
+    out = out.withColumns({n: folded(n) for n in specs})
+    if totals:
+        tot = per.groupBy(*[F.col(g).alias("_to" + g) for g in gc]).agg(
+            *[F.expr(f"{specs[src][2]}({ids[src]})").alias(name)
+              for name, src in totals.items()]
+        )
+        out = (out.join(F.broadcast(tot), _on(gc, "_to"))
+               if gc else out.crossJoin(F.broadcast(tot)))
+    return out.drop("_pid", *offs.columns, *ids.values(), *["_to" + g for g in gc])
 
 
 def ranked_global(
@@ -41,50 +130,14 @@ def ranked_global(
     rank_name: str = "grank",
     total_name: str | None = None,
 ) -> DataFrame:
-    """Exact global (or per-group) row_number over ``sort_exprs``.
-
-    Returns ``df`` plus ``rank_name`` (long, 1-based, row_number
-    semantics — sort_exprs must include a unique tiebreak) and, when
-    ``total_name`` is given, the per-group row count (long) every row
-    of the group carries (for ntile / percentile arithmetic).
-    """
-    gc = list(group_cols)
-    part = df.repartitionByRange(
-        *[F.col(g).asc() for g in gc], *sort_exprs
-    ).withColumn("_pid", F.spark_partition_id())
-    lw = Window.partitionBy(*gc, "_pid").orderBy(*sort_exprs)
-    local = part.withColumn(
-        "_lrank", F.row_number().over(lw).cast("long")
-    ).localCheckpoint()
-
-    counts = local.groupBy(*gc, "_pid").agg(F.count("*").alias("_pn"))
-    lower = counts.select(
-        *[F.col(g).alias(f"_bg_{g}") for g in gc],
-        F.col("_pid").alias("_bpid"),
-        F.col("_pn").alias("_bpn"),
+    """Exact global (or per-group) row_number over ``sort_exprs`` as
+    ``rank_name``, plus the group's row count as ``total_name`` when
+    given (for ntile / percentile arithmetic): :func:`prefix_fold`
+    with only the rank."""
+    return prefix_fold(
+        df, sort_exprs, group_cols, rank=rank_name,
+        totals={total_name: rank_name} if total_name else None,
     )
-    cond = F.col("_bpid") < F.col("_pid")
-    for g in gc:
-        cond = cond & (F.col(g) == F.col(f"_bg_{g}"))
-    offs = (
-        counts.join(F.broadcast(lower), cond, "left")
-        .groupBy(*gc, "_pid")
-        .agg(F.coalesce(F.sum("_bpn"), F.lit(0)).cast("long").alias("_off"))
-    )
-
-    out = local.join(F.broadcast(offs), [*gc, "_pid"]).withColumn(
-        rank_name, (F.col("_off") + F.col("_lrank")).cast("long")
-    )
-    if total_name is not None:
-        if gc:
-            tot = counts.groupBy(*gc).agg(
-                F.sum("_pn").cast("long").alias(total_name)
-            )
-            out = out.join(F.broadcast(tot), gc)
-        else:
-            tot = counts.agg(F.sum("_pn").cast("long").alias(total_name))
-            out = out.crossJoin(F.broadcast(tot))
-    return out.drop("_pid", "_lrank", "_off")
 
 
 def ntile_from_rank(rank: Column, n: Column, k: int) -> Column:
@@ -126,97 +179,6 @@ def grouped_ntile(
     ).drop("_ntile_rank", "_ntile_n")
 
 
-def ranked_prefix_sum(
-    df: DataFrame,
-    sort_exprs: Sequence[Column],
-    value_col: str,
-    cum_name: str = "cum",
-    total_name: str = "total",
-) -> DataFrame:
-    """Exact global INCLUSIVE prefix sum of ``value_col`` over
-    ``sort_exprs`` — the scale-safe replacement for
-    ``SUM(v) OVER (ORDER BY ...)`` with no partition (which plans an
-    Exchange SinglePartition).  Same two-phase shape as
-    :func:`ranked_global`: range-partition on the sort key, local
-    running sum per partition, then broadcast per-partition totals as
-    offsets.  Every row also carries the grand total.
-
-    ``value_col`` should be an exact type (long / DECIMAL) so the
-    distributed fold is order-insensitive."""
-    part = df.repartitionByRange(*sort_exprs).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy(*sort_exprs)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = part.withColumn("_lcum", F.sum(value_col).over(lw)).localCheckpoint()
-
-    sums = local.groupBy("_pid").agg(F.sum(value_col).alias("_pn"))
-    lower = sums.select(
-        F.col("_pid").alias("_bpid"), F.col("_pn").alias("_bpn")
-    )
-    offs = (
-        sums.join(F.broadcast(lower), F.col("_bpid") < F.col("_pid"), "left")
-        .groupBy("_pid")
-        .agg(F.sum("_bpn").alias("_off"))
-    )
-    tot = sums.agg(F.sum("_pn").alias(total_name))
-    return (
-        local.join(F.broadcast(offs), "_pid")
-        .crossJoin(F.broadcast(tot))
-        .withColumn(
-            cum_name,
-            F.col("_lcum") + F.coalesce(F.col("_off"), F.lit(0)),
-        )
-        .drop("_pid", "_lcum", "_off")
-    )
-
-
-def ranked_prefix_max(
-    df: DataFrame,
-    sort_exprs: Sequence[Column],
-    value_col: str,
-    cum_name: str = "cum_max",
-) -> DataFrame:
-    """Exact global INCLUSIVE prefix max of ``value_col`` over
-    ``sort_exprs`` — the streaming-watermark shape (max event-time seen
-    so far in arrival order) without a single-partition window.  Same
-    two-phase recipe as :func:`ranked_prefix_sum` with max in place of
-    sum (max is associative, so partition offsets compose the same
-    way)."""
-    part = df.repartitionByRange(*sort_exprs).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy(*sort_exprs)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = part.withColumn("_lmax", F.max(value_col).over(lw)).localCheckpoint()
-
-    maxes = local.groupBy("_pid").agg(F.max(value_col).alias("_pm"))
-    lower = maxes.select(
-        F.col("_pid").alias("_bpid"), F.col("_pm").alias("_bpm")
-    )
-    offs = (
-        maxes.join(F.broadcast(lower), F.col("_bpid") < F.col("_pid"), "left")
-        .groupBy("_pid")
-        .agg(F.max("_bpm").alias("_off"))
-    )
-    return (
-        local.join(F.broadcast(offs), "_pid")
-        .withColumn(
-            cum_name,
-            F.when(
-                F.col("_off").isNull(), F.col("_lmax")
-            ).otherwise(F.greatest(F.col("_lmax"), F.col("_off"))),
-        )
-        .drop("_pid", "_lmax", "_off")
-    )
-
-
 def avg_rank2(
     df: DataFrame,
     value_col: str,
@@ -224,22 +186,14 @@ def avg_rank2(
     out_name: str = "avg2",
 ) -> DataFrame:
     """Twice the tie-averaged (fractional) rank of ``value_col``, as an
-    exact long — the quantity every rank statistic (Spearman rho,
-    Kruskal-Wallis H, Mann-Whitney U) is built from, with no
-    single-partition window anywhere in the plan.
+    exact long: 2*avg_rank(v) = 2*min_rank(v) + ties(v) - 1, the
+    integer every rank statistic (Spearman rho, Kruskal-Wallis H,
+    Mann-Whitney U) is built from, so moment sums can run in DECIMAL.
 
-    avg_rank(v) = min_rank(v) + (ties(v) - 1) / 2, so
-    2*avg_rank(v) = 2*min_rank(v) + ties(v) - 1 is an integer; keeping
-    the doubled value exact means downstream moment sums can run in
-    DECIMAL (order-insensitive) and only the final statistic touches
-    float64.
-
-    Plan shape: :func:`ranked_global` row_number over
-    (value, tiebreak) — range-partitioned two-phase rank — then one
-    window partitioned BY THE VALUE (min rank + tie count per distinct
-    value; values are hash-distributed, so no funnel).  ``tiebreak``
-    must make the sort total; it only disambiguates equal values and
-    cancels out of the tie-averaged result.
+    Plan shape: :func:`ranked_global` over (value, tiebreak), then one
+    window partitioned BY THE VALUE (min rank + tie count; values are
+    hash-distributed, so no funnel).  ``tiebreak`` must make the sort
+    total; it cancels out of the tie-averaged result.
     """
     ranked = ranked_global(
         df, [F.col(value_col).asc(), *tiebreak], rank_name="_ar_rank"
@@ -253,62 +207,3 @@ def avg_rank2(
             - F.lit(1)
         ).cast("long"),
     ).drop("_ar_rank")
-
-
-def ordered_cdf(
-    df: DataFrame,
-    sort_exprs: Sequence[Column],
-    value_cols: Sequence[str],
-    rank_name: str = "grank",
-    suffix: str = "_cum",
-) -> DataFrame:
-    """One two-phase pass producing BOTH the exact global row_number
-    (``rank_name``) and the exact inclusive prefix sum of every column
-    in ``value_cols`` (as ``<col><suffix>``) over ``sort_exprs`` — the
-    empirical-CDF primitive (sorted support + cumulative masses) with
-    no single-partition window.
-
-    Same recipe as :func:`ranked_prefix_sum`, but rank and all the
-    sums share one range partitioning, one local-window stage and one
-    broadcast offsets table, instead of N separate passes.  Sum
-    columns should be exact types (long / DECIMAL)."""
-    part = df.repartitionByRange(*sort_exprs).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy(*sort_exprs)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = part.withColumn("_lrank", F.row_number().over(lw).cast("long"))
-    for c in value_cols:
-        local = local.withColumn(f"_l_{c}", F.sum(c).over(lw))
-    local = local.localCheckpoint()
-
-    aggs = [F.count(F.lit(1)).cast("long").alias("_pn_rows")] + [
-        F.sum(c).alias(f"_pn_{c}") for c in value_cols
-    ]
-    sums = local.groupBy("_pid").agg(*aggs)
-    lower = sums.select(
-        F.col("_pid").alias("_bpid"),
-        F.col("_pn_rows").alias("_bpn_rows"),
-        *[F.col(f"_pn_{c}").alias(f"_bpn_{c}") for c in value_cols],
-    )
-    offs = (
-        sums.join(F.broadcast(lower), F.col("_bpid") < F.col("_pid"), "left")
-        .groupBy("_pid")
-        .agg(
-            F.coalesce(F.sum("_bpn_rows"), F.lit(0)).cast("long").alias("_off_rows"),
-            *[F.sum(f"_bpn_{c}").alias(f"_off_{c}") for c in value_cols],
-        )
-    )
-    out = local.join(F.broadcast(offs), "_pid").withColumn(
-        rank_name, (F.col("_off_rows") + F.col("_lrank")).cast("long")
-    )
-    for c in value_cols:
-        out = out.withColumn(
-            c + suffix, F.col(f"_l_{c}") + F.coalesce(F.col(f"_off_{c}"), F.lit(0))
-        )
-    drop = ["_pid", "_lrank", "_off_rows"]
-    drop += [f"_l_{c}" for c in value_cols] + [f"_off_{c}" for c in value_cols]
-    return out.drop(*drop)

@@ -2055,19 +2055,18 @@ def parts_abc_classification(lineitem: DataFrame) -> DataFrame:
 
     Scale: per-part revenue is one fact shuffle (DECIMAL-exact); the
     cumulative share comes from the two-phase range-partitioned prefix
-    sum (ranking.ranked_prefix_sum) — never SUM() OVER an unpartitioned
+    sum (ranking.prefix_fold) — never SUM() OVER an unpartitioned
     ORDER BY; the class rollup is 3 groups."""
-    from .ranking import ranked_prefix_sum
+    from .ranking import prefix_fold
 
     per = lineitem.groupBy("l_partkey").agg(
         F.sum(_dec("l_extendedprice")).alias("rev")
     )
-    cum = ranked_prefix_sum(
+    cum = prefix_fold(
         per,
         [F.col("rev").desc(), F.col("l_partkey").asc()],
-        "rev",
-        cum_name="cum",
-        total_name="total",
+        sums={"rev": "cum"},
+        totals={"total": "cum"},
     )
     share = F.col("cum").cast("double") / F.col("total").cast("double")
     classed = cum.select(
@@ -3294,7 +3293,7 @@ def abc_xyz_matrix(lineitem: DataFrame) -> DataFrame:
     cum/total promote to DECIMAL(29,0) instead of wrapping a LONG at
     ~9e18 total cents — DuckDB's SUM(BIGINT) promotes to HUGEINT, so
     a Spark LONG wrap would be an asymmetric silent divergence)."""
-    from .ranking import ranked_prefix_sum
+    from .ranking import prefix_fold
 
     cents = lambda c: (c.cast("decimal(15,2)") * 100).cast("long")  # noqa: E731
     monthly = lineitem.groupBy(
@@ -3314,12 +3313,11 @@ def abc_xyz_matrix(lineitem: DataFrame) -> DataFrame:
         F.sum("q").alias("s1"),
         F.sum(qd * qd).alias("s2"),
     ).localCheckpoint()
-    cum = ranked_prefix_sum(
+    cum = prefix_fold(
         per_part.withColumn("rev", F.col("rev").cast("decimal(19,0)")),
         [F.col("rev").desc(), F.col("l_partkey").asc()],
-        "rev",
-        cum_name="cum",
-        total_name="total",
+        sums={"rev": "cum"},
+        totals={"total": "cum"},
     )
     share = F.col("cum").cast("double") / F.col("total").cast("double")
     n = F.col("nm").cast("double")
@@ -3630,13 +3628,13 @@ def customers_skyline(orders: DataFrame) -> DataFrame:
     multi-objective shortlist.  2D skylines reduce to a staircase
     scan: rank by spend desc, keep each row whose order count exceeds
     the running max of everything ranked above it — both passes ride
-    the two-phase ranked_global / ranked_prefix_max helpers, so the
+    the two-phase prefix fold (ranked_global, then a running max), so the
     operator scales like any global ranking, never pairwise.
 
     Tie semantics: equal (spend, orders) pairs are mutually
     non-dominating — the staircase keeps the smallest custkey (the
     deterministic representative; stated)."""
-    from .ranking import ranked_global, ranked_prefix_max
+    from .ranking import prefix_fold, ranked_global
 
     per = orders.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(15,2)")).alias("spend"),
@@ -3655,7 +3653,7 @@ def customers_skyline(orders: DataFrame) -> DataFrame:
         ],
         rank_name="rnk",
     )
-    m = ranked_prefix_max(r, [F.col("rnk").asc()], "n_orders", cum_name="cum")
+    m = prefix_fold(r, [F.col("rnk").asc()], maxes={"n_orders": "cum"})
     first_ach = m.groupBy("cum").agg(F.min("rnk").alias("_first"))
     sky = (
         m.join(F.broadcast(first_ach), "cum")
@@ -6349,14 +6347,14 @@ def wasserstein_price_drift(
     sup-gap: W1 = integral |F_a - F_b| dx over the pooled support.
 
     Scale: groupBy distinct price (one shuffle), then ONE
-    :func:`ordered_cdf` pass (range-partitioned rank + both cumulative
+    :func:`ranking.prefix_fold` pass (range-partitioned rank + both cumulative
     masses together — no single-partition window, no LEAD over a
     global sort: the "next support point" comes from an equi-join on
     rank+1).  Per-interval terms |F_a-F_b|*dx are rounded to 9dp and
     DECIMAL-summed, so the fold is order-insensitive; both engines run
     the identical float64 expression per interval.
     """
-    from .ranking import ordered_cdf
+    from .ranking import prefix_fold
 
     v = F.col("o_totalprice").cast(DEC_PRICE)
     base = orders.select(
@@ -6370,7 +6368,9 @@ def wasserstein_price_drift(
         .cast("long")
         .alias("cb"),
     )
-    cdf = ordered_cdf(counts, [F.col("v").asc()], ["ca", "cb"], rank_name="g")
+    cdf = prefix_fold(
+        counts, [F.col("v").asc()], rank="g", sums={"ca": "ca_cum", "cb": "cb_cum"}
+    )
     tot = F.broadcast(
         counts.agg(
             F.sum("ca").cast("long").alias("na"),
@@ -7697,7 +7697,7 @@ def dickey_fuller_test(orders: DataFrame) -> DataFrame:
     ).agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y"))
     ranked = ranked_global(monthly, [F.col("m").asc()], rank_name="t").select(
         "t", F.col("y").cast("double").alias("y")
-    ).localCheckpoint()
+    )
     cur = ranked.select(F.col("t"), F.col("y").alias("y1"))
     prv = ranked.select((F.col("t") + F.lit(1)).alias("t"), F.col("y").alias("y0"))
     pairs = cur.join(prv, "t").select(
@@ -8625,9 +8625,9 @@ def concentration_ratios(orders: DataFrame, customer: DataFrame) -> DataFrame:
     and top 8 players hold, computed off the scale-safe prefix-sum
     rank (no single-partition window).
 
-    One fact aggregate, one ordered_cdf pass on the bounded
+    One fact aggregate, one prefix_fold pass on the bounded
     per-nation table."""
-    from .ranking import ordered_cdf
+    from .ranking import prefix_fold
 
     per = orders.join(
         F.broadcast(customer.select("c_custkey", "c_nationkey")),
@@ -8636,11 +8636,11 @@ def concentration_ratios(orders: DataFrame, customer: DataFrame) -> DataFrame:
         F.sum(_dec("o_totalprice")).alias("rev")
     )
     tot = F.broadcast(per.agg(F.sum("rev").alias("trev")))
-    ranked = ordered_cdf(
+    ranked = prefix_fold(
         per,
         [F.col("rev").desc(), F.col("nation").asc()],
-        ["rev"],
-        rank_name="rnk",
+        rank="rnk",
+        sums={"rev": "rev_cum"},
     )
     s = ranked.crossJoin(tot).agg(
         F.count(F.lit(1)).cast("long").alias("n_players"),

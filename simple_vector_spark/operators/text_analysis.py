@@ -2246,14 +2246,14 @@ def heaps_law_fit(docs: DataFrame) -> DataFrame:
     Construction with no per-prefix recompute: each term contributes
     only at its FIRST document (min doc_id per token), so V at doc d =
     cumulative count of first-occurrences up to d, and N = cumulative
-    token count — both from ONE :func:`ranking.ordered_cdf` pass over
+    token count — both from ONE :func:`ranking.prefix_fold` pass over
     the per-doc axis (bounded by |docs|, not |tokens|).  The log-log
     OLS runs on 9dp-rounded ln's summed in DECIMAL, so the fit is
     shuffle-order invariant; only the closed-form slope touches raw
     float64, identically in both engines.
     """
     from ..sources.loaders import fan_out
-    from .ranking import ordered_cdf
+    from .ranking import prefix_fold
 
     toks = (
         fan_out(docs.select("doc_id", "text"))
@@ -2272,8 +2272,10 @@ def heaps_law_fit(docs: DataFrame) -> DataFrame:
         "n_toks",
         F.coalesce(F.col("new_terms"), F.lit(0)).cast("long").alias("new_terms"),
     )
-    cdf = ordered_cdf(
-        axis, [F.col("doc_id").asc()], ["n_toks", "new_terms"]
+    cdf = prefix_fold(
+        axis,
+        [F.col("doc_id").asc()],
+        sums={"n_toks": "n_toks_cum", "new_terms": "new_terms_cum"},
     )
     pts = cdf.filter(
         (F.col("n_toks_cum") > 0) & (F.col("new_terms_cum") > 0)

@@ -1644,7 +1644,7 @@ def orders_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Wave 165 (round 2): exact 1-D Wasserstein drift between yearly price
-# distributions on the ordered_cdf primitive.
+# distributions on the prefix_fold primitive.
 # --------------------------------------------------------------------------
 
 
@@ -1690,7 +1690,7 @@ FROM s CROSS JOIN tot
 )
 def orders_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact earth-mover distance between 1994 and 1995 order-value
-    distributions; ordered_cdf two-phase pass, DECIMAL term sums."""
+    distributions; prefix_fold two-phase pass, DECIMAL term sums."""
     return R.wasserstein_price_drift(load_table(spark, sf_dir, "orders"))
 
 
@@ -2089,7 +2089,7 @@ FROM fit
 )
 def vocab_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps-law K*N^beta vocabulary-growth fit: first-occurrence
-    cumulative counts from one ordered_cdf pass, log-log OLS on
+    cumulative counts from one prefix_fold pass, log-log OLS on
     9dp-rounded DECIMAL sums."""
     return T.heaps_law_fit(load_table(spark, sf_dir, "documents"))
 

@@ -1,8 +1,9 @@
 """The durability path's one copy of each mechanism: the scoped session
 conf (``loaders.scoped_conf``), the footer-typed events stream, the WAL
 and Arrow IPC sources registered once per session, and an AST guard
-that every availableNow run, source registration, conf restore and
-temp directory goes through its one helper."""
+that every availableNow run, source registration, conf restore, temp
+directory and range-partitioned numbering goes through its one
+helper."""
 
 from __future__ import annotations
 
@@ -138,6 +139,8 @@ HELPERS = {
     "tempfile.mkdtemp": "streaming/jobs.py:run_available_now",
     "dataSource.register(": "sources/loaders.py:data_source",
     "conf.get then conf.set": "sources/loaders.py:scoped_conf",
+    "repartitionByRange(": "operators/ranking.py:prefix_fold",
+    "spark_partition_id(": "operators/ranking.py:prefix_fold",
 }
 
 
@@ -169,6 +172,8 @@ def _mechanisms(fn: ast.AST):
             yield "awaitTermination(", node.lineno
         elif attr == "mkdtemp":
             yield "tempfile.mkdtemp", node.lineno
+        elif attr in ("repartitionByRange", "spark_partition_id"):
+            yield attr + "(", node.lineno
         elif attr == "register" and _on(node, "dataSource"):
             yield "dataSource.register(", node.lineno
         elif attr in ("get", "set") and _on(node, "conf") and node.args:
@@ -222,6 +227,8 @@ def test_guard_names_file_and_line(tmp_path):
         "    spark.conf.set('k', '1')\n"
         "    spark.conf.set('other', prev)\n"
         "d = tempfile.mkdtemp()\n"
+        "def rank(df, F):\n"
+        "    return df.repartitionByRange('k').withColumn('p', F.spark_partition_id())\n"
     )
     sites = guarded_sites(pkg)
     assert sites == {
@@ -230,4 +237,6 @@ def test_guard_names_file_and_line(tmp_path):
         "dataSource.register(": ["m.py:run:4"],
         "conf.get then conf.set": ["m.py:conf:6"],
         "tempfile.mkdtemp": ["m.py:<module>:9"],
+        "repartitionByRange(": ["m.py:rank:11"],
+        "spark_partition_id(": ["m.py:rank:11"],
     }

@@ -209,18 +209,18 @@ prefix_rows = st.lists(
 @SET
 @given(vals=prefix_rows)
 def test_prefix_max_matches_sequential_model(spark, vals):
-    """ranked_prefix_max == a sequential running max over the sort
+    """prefix_fold's running max == a sequential running max over the sort
     order, for arbitrary values including duplicates and negatives."""
     from pyspark.sql import functions as F
 
-    from simple_vector_spark.operators.ranking import ranked_prefix_max
+    from simple_vector_spark.operators.ranking import prefix_fold
 
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "k long, v long"
     )
     got = {
         r["k"]: r["cum_max"]
-        for r in ranked_prefix_max(df, [F.col("k").asc()], "v").collect()
+        for r in prefix_fold(df, [F.col("k").asc()], maxes={"v": "cum_max"}).collect()
     }
     run = None
     for i, v in enumerate(vals):

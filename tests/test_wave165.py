@@ -1,5 +1,5 @@
-"""Wave-165 operators: exact 1-D Wasserstein drift + the ordered_cdf
-(rank + multi prefix-sum in one two-phase pass) primitive."""
+"""Wave-165 operators: exact 1-D Wasserstein drift + the prefix fold's
+rank and multi prefix-sum in one two-phase pass."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from simple_vector_spark.operators import relational as R
-from simple_vector_spark.operators.ranking import ordered_cdf
+from simple_vector_spark.operators.ranking import prefix_fold
 
 
 def _orders(spark, year_vals):
@@ -27,7 +27,9 @@ def test_ordered_cdf_rank_and_both_cumsums(spark):
     )
     out = {
         r["v"]: (r["grank"], r["a_cum"], r["b_cum"])
-        for r in ordered_cdf(df, [F.col("v").asc()], ["a", "b"]).collect()
+        for r in prefix_fold(
+            df, [F.col("v").asc()], rank="grank", sums={"a": "a_cum", "b": "b_cum"}
+        ).collect()
     }
     assert out == {1.0: (1, 2, 20), 2.0: (2, 6, 60), 3.0: (3, 7, 70)}
 

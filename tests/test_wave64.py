@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from simple_vector_spark.operators import events as E
 from simple_vector_spark.operators import relational as R
-from simple_vector_spark.operators.ranking import ranked_prefix_max
+from simple_vector_spark.operators.ranking import prefix_fold
 
 
 def test_prefix_max_matches_sequential(spark):
@@ -18,7 +18,7 @@ def test_prefix_max_matches_sequential(spark):
     )
     out = {
         r["k"]: r["cum_max"]
-        for r in ranked_prefix_max(df, [F.col("k").asc()], "v").collect()
+        for r in prefix_fold(df, [F.col("k").asc()], maxes={"v": "cum_max"}).collect()
     }
     running, expect = float("-inf"), {}
     for i, v in enumerate(vals):
